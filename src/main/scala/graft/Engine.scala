@@ -27,31 +27,26 @@ class GraftEngine(
 
   private def vectors: DataFrame = manager.scan(collection)
 
-  private def topK(q: Array[Float], k: Int): DataFrame = {
-    val spark = vectors.sparkSession
-    import spark.implicits._
-    val qdf = Seq(Tuple1(q)).toDF("qe")
-    index match {
-      case GraftEngine.BruteForce =>
-        Knn.topK(vectors, qdf, k, Knn.Cosine, idCol = "id")
-      case GraftEngine.BruteForceEuclidean =>
-        Knn.topK(vectors, qdf, k, Knn.NegEuclidean, idCol = "id")
-      case GraftEngine.LshIndex(lsh) =>
-        lsh.query(spark, lsh.index(vectors, idCol = "id"), q, k, idCol = "id")
-    }
-  }
-
-  /** Index probe + join-back, score DROPPED (src/query.rs:15-26); ids
-    * missing from storage are silently skipped (inner join). */
+  /** Top-k records, score DROPPED (src/query.rs:15-26). */
   def search(q: Array[Float], k: Int): DataFrame =
     searchWithScores(q, k).drop("score")
 
-  /** Index probe + join-back keeping (record, score), rank order
-    * preserved (src/query.rs:28-39). */
-  def searchWithScores(q: Array[Float], k: Int): DataFrame = {
-    val top = topK(q, k)
-    vectors.join(broadcast(top), Seq("id"), "inner")
-      .orderBy(col("score").desc, col("id").asc)
+  /** Top-k (record, score) in rank order (src/query.rs:28-39): columns
+    * id, embedding, metadata, ingest_seq, score. One pass over the
+    * collection scores every stored record against the query as a
+    * literal — one job per brute-force search. The LSH flavor restricts
+    * the pass to the query's bucket (every row when the bucket holds
+    * fewer than k), bucketing with the dimension from `_meta.json`. */
+  def searchWithScores(q: Array[Float], k: Int): DataFrame = index match {
+    case GraftEngine.BruteForce =>
+      Knn.searchWithScores(vectors, q, k, Knn.Cosine, idCol = "id")
+    case GraftEngine.BruteForceEuclidean =>
+      Knn.searchWithScores(vectors, q, k, Knn.NegEuclidean, idCol = "id")
+    case GraftEngine.LshIndex(lsh) =>
+      val dim = manager.collectionInfo(collection).dimension
+      val bucketed = vectors.withColumn("bucket", lsh.bucketCol(col("embedding"), dim))
+      Knn.searchWithScores(lsh.candidates(bucketed, q, k).drop("bucket"), q, k,
+        Knn.Cosine, idCol = "id")
   }
 
   /** Raw-array entry point (src/query.rs:41-52). */

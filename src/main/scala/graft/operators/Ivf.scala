@@ -170,8 +170,9 @@ class Ivf(nlist: Int, iters: Int) {
     Lsh.compactPartitioned(spark, path, "cluster")
 
   /** Probe: nearest nprobe cells (driver-side centroid scan — nlist is
-    * small), then exact cosine top-k inside them. With the assignment
-    * parquet partitioned by cluster this scans nprobe/nlist of data. */
+    * small), then exact cosine top-k inside them, scored against the
+    * query as a literal (one job). With the assignment parquet
+    * partitioned by cluster this scans nprobe/nlist of data. */
   def query(assigned: DataFrame, cents: Array[(Int, Array[Double])],
       q: Array[Float], k: Int, nprobe: Int): DataFrame = {
     val qd = q.map(_.toDouble)
@@ -181,9 +182,6 @@ class Ivf(nlist: Int, iters: Int) {
       s
     }
     val probes = cents.sortBy { case (i, c) => (d2(c), i) }.take(nprobe).map(_._1)
-    Knn.topK(
-      assigned.filter(col("cluster").isin(probes.toSeq: _*)),
-      assigned.sparkSession.range(1).select(typedLit(q.toSeq).as("qe")),
-      k, Knn.Cosine)
+    Knn.topK(assigned.filter(col("cluster").isin(probes.toSeq: _*)), q, k, Knn.Cosine)
   }
 }

@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import scala.language.implicitConversions
+
 import graft.functions.VectorOps
 
 /** Exact brute-force top-k similarity search — the reference's flagship
@@ -14,16 +16,20 @@ import graft.functions.VectorOps
   *   - cosine mode sorts by similarity DESC; euclidean mode scores by
   *     *negated* distance so the DESC sort is uniform (src/index.rs:36-38);
   *   - take k (k is clamped to n implicitly by limit);
-  *   - join-back drops ids missing from storage silently = inner join
-  *     (src/query.rs:19-23).
+  *   - search_with_scores returns the full stored record beside its
+  *     score, in rank order (src/query.rs:28-39).
   *
   * Spark-first design: the per-row score is a codegen-friendly column
   * expression; `orderBy(...).limit(k)` lets Catalyst plan
   * `TakeOrderedAndProject` — a per-partition bounded heap + driver merge,
   * NOT a global sort. On a 1000-executor cluster this is one scan with no
-  * shuffle of anything but k rows per partition. The one-row query vector
-  * rides along via a broadcast nested-loop join (a literal-sized build
-  * side), so no driver-side collect is needed anywhere in the plan.
+  * shuffle of anything but k rows per partition. A driver-held query
+  * vector is scored as a literal, so a search is that one scan and
+  * exactly one job; a query vector taken from the data (a one-row
+  * DataFrame) is broadcast cross-joined onto the scan instead. Both
+  * forms go through the same scoring tail, and `searchWithScores`
+  * carries the whole record through it rather than joining the top k
+  * back to a second scan.
   *
   * Scores are rounded to 6 decimals *before* the sort, with an id
   * tiebreaker, so the result set and order are deterministic across
@@ -52,43 +58,57 @@ object Knn {
     def score(a: Column, b: Column): Column = -VectorOps.fastManhattan(a, b)
   }
 
-  /** Top-k over `vectors` for a single query vector supplied as a one-row
-    * DataFrame with column `qe` (taken FROM the data for determinism —
-    * never a random draw). Output: (idCol, score double rounded to 6),
-    * ordered score DESC, id ASC.
-    */
-  def topK(
-      vectors: DataFrame,
-      query: DataFrame,
-      k: Int,
-      metric: Metric = Cosine,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
-    val scored = vectors
-      .crossJoin(broadcast(query.select(col("qe"))))
-      .select(
-        col(idCol),
-        stableScore(metric.score(col(vecCol), col("qe"))).as("score"))
-    scored.orderBy(col("score").desc, col(idCol).asc).limit(k)
+  /** The query side of a single-query search. An `Array[Float]` held on
+    * the driver converts to a literal; a one-row DataFrame with column
+    * `qe` (taken FROM the data for determinism — never a random draw)
+    * converts to a broadcast cross join. */
+  sealed trait Query {
+    /** `vectors` with the query attached, and the query vector column. */
+    private[Knn] def attach(vectors: DataFrame): (DataFrame, Column)
+  }
+  object Query {
+    implicit def literal(q: Array[Float]): Query = new Query {
+      private[Knn] def attach(vectors: DataFrame) = (vectors, typedLit(q.toSeq))
+    }
+    implicit def frame(query: DataFrame): Query = new Query {
+      private[Knn] def attach(vectors: DataFrame) =
+        (vectors.crossJoin(broadcast(query.select(col("qe")))), col("qe"))
+    }
   }
 
-  /** `QueryEngine::search_with_scores` parity: top-k then join back to the
-    * full record, preserving rank order (inner join ⇒ dangling ids are
-    * silently dropped, src/query.rs:19-23). The k-row top-k side is
-    * broadcast so the join-back is shuffle-free at any scale.
-    */
-  def searchWithScores(
+  /** The scoring tail: `keep` columns of `vectors` plus the rounded score,
+    * top k by (score DESC, id ASC). */
+  private def ranked(vectors: DataFrame, query: Query, k: Int, metric: Metric,
+      keep: Seq[String], idCol: String, vecCol: String): DataFrame = {
+    val (withQuery, qe) = query.attach(vectors)
+    withQuery
+      .select(keep.map(col) :+
+        stableScore(metric.score(col(vecCol), qe)).as("score"): _*)
+      .orderBy(col("score").desc, col(idCol).asc)
+      .limit(k)
+  }
+
+  /** Top-k over `vectors` for a single query vector. Output: (idCol,
+    * score double rounded to 6), ordered score DESC, id ASC. */
+  def topK(
       vectors: DataFrame,
-      query: DataFrame,
+      query: Query,
       k: Int,
       metric: Metric = Cosine,
       idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
-    val top = topK(vectors, query, k, metric, idCol, vecCol)
-    vectors
-      .join(broadcast(top), Seq(idCol), "inner")
-      .orderBy(col("score").desc, col(idCol).asc)
-  }
+      vecCol: String = "embedding"): DataFrame =
+    ranked(vectors, query, k, metric, Seq(idCol), idCol, vecCol)
+
+  /** `QueryEngine::search_with_scores` parity: every column of `vectors`
+    * plus `score`, top k in the same rank order as `topK`. */
+  def searchWithScores(
+      vectors: DataFrame,
+      query: Query,
+      k: Int,
+      metric: Metric = Cosine,
+      idCol: String = "vec_id",
+      vecCol: String = "embedding"): DataFrame =
+    ranked(vectors, query, k, metric, vectors.columns.toSeq, idCol, vecCol)
 
   /** Multi-query KNN: top-k per query row — the shape a 100-TB
     * similarity-join takes. Queries are broadcast; each partition of

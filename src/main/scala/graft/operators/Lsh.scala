@@ -212,26 +212,32 @@ class Lsh(val numPlanes: Int = 16, val seed: Long = 42L,
       .agg(map_from_entries(collect_list(struct(col("b"), col("n")))).as("m"))
       .collect()(0).getMap[Long, Long](0).toMap
 
-  /** Probe: exact cosine rerank within the query's bucket; brute-force
-    * fallback when the bucket under-fills (< k hits, src/index.rs:158-173).
+  /** The rows a probe reranks: the query's bucket, or every row of
+    * `indexDf` when that bucket holds fewer than k (src/index.rs:158-173).
     * `indexDf` is either `spark.read.parquet(builtPath)` (partition-pruned)
-    * or the in-memory `index(...)` frame. Pass `bucketSizes`
-    * (`bucketHistogram`) to decide the fallback without a count() job.
-    */
-  def query(spark: SparkSession, indexDf: DataFrame, queryVec: Array[Float], k: Int,
-            idCol: String = "vec_id", vecCol: String = "embedding",
-            bucketSizes: Option[Map[Long, Long]] = None): DataFrame = {
-    import spark.implicits._
-    val b = bucketOf(queryVec)
-    val bucketDf = indexDf.filter(col("bucket") === lit(b))
+    * or any frame with a `bucket` column. Pass `bucketSizes`
+    * (`bucketHistogram`) to decide the fallback without a count() job. */
+  def candidates(indexDf: DataFrame, queryVec: Array[Float], k: Int,
+      bucketSizes: Option[Map[Long, Long]] = None): DataFrame =
+    probed(indexDf, Seq(bucketOf(queryVec)), k, bucketSizes)
+
+  private def probed(indexDf: DataFrame, probes: Seq[Long], k: Int,
+      bucketSizes: Option[Map[Long, Long]]): DataFrame = {
+    val bucketDf = indexDf.filter(col("bucket").isin(probes: _*))
     val hits = bucketSizes match {
-      case Some(h) => h.getOrElse(b, 0L)
+      case Some(h) => probes.map(p => h.getOrElse(p, 0L)).sum
       case None => bucketDf.count()
     }
-    val candidates = if (hits < k) indexDf else bucketDf
-    val q = Seq(Tuple1(queryVec)).toDF("qe")
-    Knn.topK(candidates, q, k, Knn.Cosine, idCol, vecCol)
+    if (hits < k) indexDf else bucketDf
   }
+
+  /** Probe: exact cosine rerank of `candidates`, scored against the query
+    * as a literal — one job when `bucketSizes` is given. */
+  def query(spark: SparkSession, indexDf: DataFrame, queryVec: Array[Float], k: Int,
+            idCol: String = "vec_id", vecCol: String = "embedding",
+            bucketSizes: Option[Map[Long, Long]] = None): DataFrame =
+    Knn.topK(candidates(indexDf, queryVec, k, bucketSizes), queryVec, k,
+      Knn.Cosine, idCol, vecCol)
 
   /** Multi-probe query: probe the query's bucket plus every 1-bit-flip
     * neighbor bucket (numPlanes+1 buckets total) before considering the
@@ -243,17 +249,10 @@ class Lsh(val numPlanes: Int = 16, val seed: Long = 42L,
   def queryMultiProbe(spark: SparkSession, indexDf: DataFrame, queryVec: Array[Float],
       k: Int, idCol: String = "vec_id", vecCol: String = "embedding",
       bucketSizes: Option[Map[Long, Long]] = None): DataFrame = {
-    import spark.implicits._
     val b = bucketOf(queryVec)
     val probes = b +: (0 until numPlanes).map(i => b ^ (1L << i))
-    val bucketDf = indexDf.filter(col("bucket").isin(probes: _*))
-    val hits = bucketSizes match {
-      case Some(h) => probes.map(p => h.getOrElse(p, 0L)).sum
-      case None => bucketDf.count()
-    }
-    val candidates = if (hits < k) indexDf else bucketDf
-    val q = Seq(Tuple1(queryVec)).toDF("qe")
-    Knn.topK(candidates, q, k, Knn.Cosine, idCol, vecCol)
+    Knn.topK(probed(indexDf, probes, k, bucketSizes), queryVec, k,
+      Knn.Cosine, idCol, vecCol)
   }
 
   /** Bucket histogram — index health stats (deterministic given seed). */

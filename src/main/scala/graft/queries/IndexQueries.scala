@@ -747,7 +747,6 @@ object IndexQueries extends QueryRegistry {
     // persisted index is read — the (1/2^P)-of-the-corpus probe cost
     // the reference's bucket design promises (src/index.rs:109-120).
     "lsh_pruned_knn" -> ((s, dir) => {
-      import s.implicits._
       val emb = embeddings(s, dir)
       val (planes, idx) = lshDataStore(s, dir)
       val q = firstVec(emb)
@@ -758,8 +757,7 @@ object IndexQueries extends QueryRegistry {
         while (j < q.length) { dot += q(j).toDouble * p(j); j += 1 }
         if (dot >= 0.0) b |= (1L << i)
       }
-      Knn.topK(idx.filter(col("bucket") === lit(b)),
-        Seq(Tuple1(q)).toDF("qe"), 10, Knn.Cosine)
+      Knn.topK(idx.filter(col("bucket") === lit(b)), q, 10, Knn.Cosine)
     }),
 
     // Index-maintenance audit, CONTENT-checked since round 8 (the
@@ -1117,15 +1115,13 @@ object IndexQueries extends QueryRegistry {
     // rerank on full vectors. The two-phase cost-shaping every large
     // embedding store uses; the oracle replays both phases exactly.
     "dim_prefix_rerank" -> ((s, dir) => {
-      import s.implicits._
       val emb = embeddings(s, dir)
       val q = firstVec(emb)
       val prefixDb = emb.select(col("vec_id"),
         slice(col("embedding"), 1, 16).as("embedding"))
-      val pre = Knn.topK(prefixDb,
-        Seq(Tuple1(q.take(16))).toDF("qe"), 50, Knn.Cosine)
+      val pre = Knn.topK(prefixDb, q.take(16), 50, Knn.Cosine)
       val cand = emb.join(broadcast(pre.select(col("vec_id"))), "vec_id")
-      Knn.topK(cand, Seq(Tuple1(q)).toDF("qe"), 10, Knn.Cosine)
+      Knn.topK(cand, q, 10, Knn.Cosine)
     }),
 
     // int8-quantized search recall: the corpus quantized to per-vector

@@ -31,7 +31,8 @@ object VectorQueries extends QueryRegistry {
     "knn_manhattan" -> ((s, dir) =>
       Knn.topK(embeddings(s, dir), queryVec(s, dir), 10, Knn.NegManhattan)),
 
-    // QueryEngine::search_with_scores join-back (src/query.rs:28-39)
+    // QueryEngine::search_with_scores: full record + score in rank order
+    // (src/query.rs:28-39)
     "search_join_back" -> ((s, dir) =>
       Knn.searchWithScores(embeddings(s, dir), queryVec(s, dir), 5)
         .select(col("vec_id"), col("label"), col("score"))),

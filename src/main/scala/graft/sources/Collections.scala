@@ -130,8 +130,12 @@ class CollectionManager(spark: SparkSession, basePath: String) {
 
   /** Strict insert: errors on any duplicate id (src/storage.rs:30-36) or
     * dimension mismatch (collection_manager.rs:146-152). `rows` needs
-    * columns (id, embedding, metadata?). Duplicates are detected with a
-    * broadcast-friendly semi join — no full shuffle of the existing data.
+    * columns (id, embedding, metadata?). An id is a duplicate when it is
+    * already stored or repeats within the batch — the reference inserts
+    * row by row, so the second copy raises. Both kinds are found in one
+    * action: a broadcast-friendly semi join against the stored ids (no
+    * full shuffle of the existing data) beside a count over the batch's
+    * own ids.
     */
   def insert(name: String, rows: DataFrame): Unit = {
     val meta = collectionInfo(name)
@@ -143,9 +147,12 @@ class CollectionManager(spark: SparkSession, basePath: String) {
       .collect().map(_.getInt(0)).toSeq
     if (badDims.nonEmpty) throw DimensionMismatchException(meta.dimension, badDims)
 
-    val existing = scan(name)
-    val dups = incoming.join(existing.select("id"), Seq("id"), "left_semi")
-      .select("id").limit(5).collect().map(_.getString(0)).toSeq
+    val stored = incoming.join(scan(name).select("id"), Seq("id"), "left_semi")
+      .select("id")
+    val repeated = incoming.groupBy("id").count().filter(col("count") > 1)
+      .select("id")
+    val dups = stored.union(repeated).distinct().orderBy("id")
+      .limit(5).collect().map(_.getString(0)).toSeq
     if (dups.nonEmpty) throw DuplicateIdException(dups)
 
     appendRows(name, incoming, meta)

@@ -6,7 +6,7 @@ import graft.operators.Lsh
 import graft.sources.CollectionManager
 
 /** End-to-end facade contracts: the reference's QueryEngine surface
-  * (store -> index -> search -> join-back) on a real collection. */
+  * (store -> index -> search with the full record) on a real collection. */
 class EngineSpec extends SparkSpec {
   import spark.implicits._
 
@@ -30,6 +30,31 @@ class EngineSpec extends SparkSpec {
     assert(r.map(_.getString(0)).toSeq == Seq("a", "b"))
     assert(r(0).getDouble(r(0).fieldIndex("score")) == 1.0)
     assert(r(0).getString(r(0).fieldIndex("metadata")) == """{"tag":"x"}""")
+  }
+
+  test("search_with_scores: output columns are the stored record, then score") {
+    for (kind <- Seq(GraftEngine.BruteForce, GraftEngine.BruteForceEuclidean,
+        GraftEngine.LshIndex(new Lsh(numPlanes = 8, seed = 7L)))) {
+      val (_, eng) = freshEngine(kind)
+      assert(eng.searchWithScores(Array(1f, 0f, 0f, 0f), 2).columns.toSeq ===
+        Seq("id", "embedding", "metadata", "ingest_seq", "score"), kind)
+    }
+  }
+
+  test("search_with_scores never returns a deleted id") {
+    val (mgr, eng) = freshEngine(GraftEngine.BruteForce)
+    mgr.delete("c", "a")
+    val ids = eng.searchWithScores(Array(1f, 0f, 0f, 0f), 4).collect().map(_.getString(0))
+    assert(ids.toSeq === Seq("b", "c", "d"))
+  }
+
+  test("k above the live row count returns every live row in rank order") {
+    val (mgr, eng) = freshEngine(GraftEngine.BruteForce)
+    mgr.delete("c", "d")
+    val r = eng.searchWithScores(Array(1f, 0.5f, 0f, 0f), 10).collect()
+    assert(r.map(_.getString(0)).toSeq === Seq("b", "a", "c"))
+    val scores = r.map(r => r.getDouble(r.fieldIndex("score")))
+    assert(scores.zip(scores.tail).forall { case (a, b) => a >= b })
   }
 
   test("search drops the score column (src/query.rs:15-26)") {

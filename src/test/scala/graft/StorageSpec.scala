@@ -63,6 +63,21 @@ class StorageSpec extends SparkSpec {
     assert(cm.countVectors("c") === 1L)
   }
 
+  test("an id repeated within one insert batch raises DuplicateIdException") {
+    val cm = new CollectionManager(spark, freshBase())
+    cm.createCollection("c", 3)
+    cm.insert("c", rows("z" -> v3a))
+    val e = intercept[DuplicateIdException](
+      cm.insert("c", rows("a" -> v3a, "b" -> v3b, "a" -> v3b)))
+    assert(e.ids === Seq("a"))
+    // nothing of the rejected batch is stored
+    assert(cm.scan("c").select("id").as[String].collect().toSeq === Seq("z"))
+    // a batch mixing a stored id and a repeated one reports both
+    val both = intercept[DuplicateIdException](
+      cm.insert("c", rows("z" -> v3b, "b" -> v3a, "b" -> v3b)))
+    assert(both.ids === Seq("b", "z"))
+  }
+
   test("delete of missing id raises MissingIdException (src/storage.rs:42-47)") {
     val cm = new CollectionManager(spark, freshBase())
     cm.createCollection("c", 3)
