@@ -71,23 +71,20 @@ object Bench {
         col("l_returnflag"), col("l_linestatus"), col("l_shipdate"))
       .write.mode("overwrite").parquet(s"$outDir/lineitem.parquet")
     // part (the dimension table the bfs/sssp probes derive their brand
-    // seed sets from — r12's scaled corpus omitted it, so those probes
-    // THREW at the ×10 leg and the swallowed failure recorded as a
-    // 0-second success): keys shift by the same nPart stride as
-    // lineitem's l_partkey; non-key attributes carry over verbatim, so
-    // every replica holds its own full Brand#N seed set and the seed
-    // population scales with the graph
+    // seed sets from; without it those probes throw at the ×10 leg):
+    // keys shift by the same nPart stride as lineitem's l_partkey;
+    // non-key attributes carry over verbatim, so every replica holds
+    // its own full Brand#N seed set and the seed population scales with
+    // the graph
     pt.select(col("*"), rep)
       .select((col("p_partkey") + col("rep") * nPart).as("p_partkey"),
         col("p_name"), col("p_brand"), col("p_type"), col("p_size"),
         col("p_retailprice"))
       .write.mode("overwrite").parquet(s"$outDir/part.parquet")
     // the scaled tables were just OVERWRITTEN under names Tables.t
-    // memoizes per (session, dir): evict any relation captured for
-    // this dir so every later probe read re-lists the fresh files
-    // (r14 advisory — makes the write-before-read ordering a
-    // structural guarantee instead of a call-order accident)
-    graft.queries.Tables.evictRelations(spark, outDir)
+    // memoizes per (session, dir): evict every memo captured for this
+    // dir so every later probe read re-lists the fresh files
+    graft.queries.SharedBuilds.evictDir(spark, outDir)
     (System.nanoTime() - t0) / 1e9
   }
 
@@ -101,10 +98,9 @@ object Bench {
 
   /** One scale-probe entry: `"name":[x1,x10,ratio]`, with any failed
     * leg (NaN — the sentinel a thrown `once` returns) surfaced as the
-    * string "err" in that slot AND in the ratio. r12's probe wrote a
-    * thrown ×10 leg as a 0-second timing, which read as a sub-linear
-    * triumph and was excluded from max_ratio only by luck — an error
-    * must be unmistakably an error in the artifact. */
+    * string "err" in that slot AND in the ratio: a thrown leg written
+    * as a timing would read as a sub-linear success, so an error must
+    * be unmistakably an error in the artifact. */
   private[graft] def probeEntryJson(name: String, x1: Double, x10: Double): String = {
     def cell(v: Double) = if (v.isNaN) "\"err\"" else fmt(v, "%.1f")
     val ratio =
@@ -128,17 +124,12 @@ object Bench {
   }
   private val CalibIters = 400000000L // ~0.5 s/thread on an unloaded core
 
-  // Memory-BANDWIDTH calibration (r14): the ALU calib is blind to the
-  // contention mode that actually hits Spark — r14 measured two runs
-  // where every query inflated uniformly ~1.3× and within-run spread
-  // hit 1.43 while the ALU calib read FASTER than the baseline round
-  // (0.76 s vs 0.85 s): the co-tenant was saturating memory bandwidth
-  // and IO, which a register-resident xorshift loop never touches. One
-  // sequential sum over a 1 GiB long array is bandwidth-bound and sees
-  // exactly that mode. Emitted as host_calib.mbw_st (min-of-two, like
-  // the ALU points); not yet part of deflated_vs_prev (the committed
-  // baseline tuple has no mbw reading) — next round's protocol can
-  // bind on min-of-three once a baseline mbw exists.
+  // Memory-BANDWIDTH calibration: the ALU calib is blind to a
+  // co-tenant saturating memory bandwidth and IO, which inflates every
+  // Spark query uniformly while a register-resident xorshift loop
+  // reads unchanged. One sequential sum over a 1 GiB long array is
+  // bandwidth-bound and sees exactly that mode. Emitted as
+  // host_calib.mbw_st (min-of-two, like the ALU points).
   private lazy val mbwArray: Array[Long] = {
     val a = new Array[Long](134217728) // 1 GiB
     var i = 0
@@ -158,22 +149,14 @@ object Bench {
     math.min(pass(), pass())
   }
 
-  // Committed round-14 baseline tuple (BENCH_r14.json, the driver's
-  // own run of the r14 HEAD — advanced from the r13 tuple per the r14
-  // verdict so round-over-round is same-surface 221-vs-221 instead of
-  // repeating the 210-vs-221 confound): steady-median3 total over 221
-  // queries, with the calib points the r14 verdict fixed for the tuple
-  // (st 0.78 — both readings; mt32 0.97 — the [1.0, 0.94] bracket's
-  // midpoint as committed in VERDICT.md's reconstruction table; mbw
-  // 0.19 — both readings, newly part of the tuple now that a baseline
-  // mbw exists, per BASELINE.md's r15 protocol note).
-  // deflated_vs_prev divides BOTH rounds' totals by their own calib
-  // before comparing, turning shared-host tenancy out of the
-  // round-over-round ratio. THREE deflations are emitted (st-only
-  // deflation overstates regression when co-tenancy is multithreaded —
-  // r11 read st 0.86 but mt32 1.53 — and the ALU calibs are blind to
-  // memory-bandwidth contention, which mbw_st sees); the MIN of the
-  // ratios is the honest regression bound (BASELINE.md).
+  // Committed baseline tuple (BENCH_r14.json, a full run over the
+  // same 221 queries): steady-median3 total with its st, mt32 and mbw
+  // calib points (BASELINE.md). deflated_vs_prev divides BOTH totals by
+  // their own calib before comparing, taking shared-host tenancy out of
+  // the ratio. THREE deflations are emitted (st-only deflation
+  // overstates regression when co-tenancy is multithreaded, and the ALU
+  // calibs are blind to memory-bandwidth contention, which mbw_st
+  // sees); the MIN of the ratios is the honest regression bound.
   // Consumers should still normalize by n_queries (also emitted) when
   // the query surface grew.
   private val PrevSteadyTotal = 188.343
@@ -192,40 +175,15 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // Long-lived-driver block hygiene (guide §5 "unpersist when
-      // done", automated): every lineage cut leaves a localCheckpoint
-      // RDD whose blocks are only reclaimed after a JVM GC lets
-      // ContextCleaner see the dead reference — at 221 queries × 4
-      // passes the 48g heap can go 20+ minutes without one, so dead
-      // checkpoint blocks pile up in the block manager and late-suite
-      // queries run against a storage-pressured JVM (BASELINE.md's
-      // documented in-suite inflation). 3 min periodic GC bounds the
-      // pile; build.sbt pairs it with -XX:+ExplicitGCInvokesConcurrent
-      // so the triggered GC is a concurrent cycle, not a
-      // stop-the-world pause inside a timed query. The same setting is
-      // standard on any long-lived cluster driver.
-      .config("spark.cleaner.periodicGC.interval", "3min")
-      .getOrCreate()
-    // ERROR, not WARN: benign WARN chatter (function re-registration,
-    // state-store maintenance) lands in the same tail window the
-    // driver greps for the JSON line — see the print-last note below
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local()
     def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
         dir: String = sfDir): Double = {
       val t0 = System.nanoTime()
       // noop sink: forces every projected expression to evaluate
       // (a bare count() would let Catalyst prune the computed columns
       // out of map-only queries and under-measure them).
-      // A THROWN query returns NaN, never a wall time: r12's probe
-      // recorded a thrown ×10 leg as its elapsed-until-throw seconds,
-      // which the JSON presented as a sub-linear success (verdict #1) —
+      // A THROWN query returns NaN, never a wall time (its
+      // elapsed-until-throw seconds would read as a fast success) —
       // NaN propagates to an explicit "err" marker in every consumer.
       try {
         fn(spark, dir).write.format("noop").mode("overwrite").save()
@@ -236,9 +194,9 @@ object Bench {
           Double.NaN
       }
     }
-    // One cold pass + THREE steady passes (round-6's single steady pass
-    // let a shared-host tenancy burst read as a phantom 13x regression;
-    // medians make the gate noise-proof):
+    // One cold pass + THREE steady passes (with a single steady pass a
+    // shared-host tenancy burst reads as a phantom regression; medians
+    // make the gate noise-proof):
     //  - cold pass: first execution in a fresh JVM — includes JIT of
     //    the interpreted expression evaluators, codegen compilation,
     //    AND every shared index build (SharedBuilds materializes
@@ -253,7 +211,7 @@ object Bench {
     // reading before the cold pass and another after the steady passes —
     // two probes per point (min taken) so one scheduler hiccup cannot
     // masquerade as a slow host
-    val nThreads = cpus.toInt
+    val nThreads = Sessions.cpus
     xorshiftSum(CalibIters / 8, 1L) // JIT warm-up, untimed
     def calibPoint(): (Double, Double, Double) =
       (math.min(calib(1), calib(1)), math.min(calib(nThreads), calib(nThreads)),
@@ -304,10 +262,10 @@ object Bench {
       mapJson(withOther.sortBy(_._1))
     }
     val total = if (results.nonEmpty) sumOk(results.values) else 0.0
-    // Top-N COLD per-query entries in the metric line (r14 verdict
-    // item 5): build-once memos move train/index cost out of the
-    // steady map (skipgram 0.05 s steady vs a full pair build cold),
-    // so memo-shifted cost must be regression-gated from the cold map —
+    // Top-N COLD per-query entries in the metric line: build-once
+    // memos move train/index cost out of the steady map (skipgram
+    // 0.05 s steady vs a full pair build cold), so memo-shifted cost
+    // must be regression-gated from the cold map —
     // the 8 slowest cold queries carry that signal; the complete cold
     // map stays in target/bench-per-query.json.
     val coldQs = {
@@ -343,28 +301,26 @@ object Bench {
         "pq_trained_recall" -> SparkEntry.queries("pq_trained_recall"),
         "dup_span_stats" -> SparkEntry.queries("dup_span_stats"),
         "dsir_importance_top" -> SparkEntry.queries("dsir_importance_top"),
-        // r9 additions: the CM sketch must scale sublinearly (the grid
+        // the CM sketch must scale sublinearly (the grid
         // is 1024 cells at any corpus size; only the probe-side
         // distinct-key agg grows) and MaxSim is the map-only scan
         // whose ratio should track raw data volume
         "events_heavy_hitters" -> SparkEntry.queries("events_heavy_hitters"),
         "late_interaction_topk" -> SparkEntry.queries("late_interaction_topk"),
-        // r10: the iterative-graph workload — 3 supersteps of 2 keyed
+        // the iterative-graph workload — 3 supersteps of 2 keyed
         // shuffles each over the co-purchase edges; the edge build is
         // the data-volume-proportional part, so the ratio should track
         // corpus growth, never blow up
         "pagerank_copurchase" -> SparkEntry.queries("pagerank_copurchase"),
-        // r11: the headline incremental composition — ONE phase-B
+        // the headline incremental composition — ONE phase-B
         // execution (snapshot-diff read + thin-frame state merges +
         // funnel agg); the phase-A state build is memoized into the
         // untimed warm-up run, so the ratio isolates the recurring
         // daily-tick cost, which is the number that must hold at 100 TB
         "incremental_funnel_phaseB" -> ((s, d) =>
           graft.queries.TextQueries.incrementalFunnelProbe(s, d)),
-        // r12: the graph-mining tier — the round-11 board's heaviest
-        // additions were exactly the queries the 10× probe didn't
-        // measure (the r11 verdict's gap #4). The salted 10× lineitem
-        // makes 10 DISJOINT graph copies, so triangles/labels/ranks all
+        // the graph-mining tier. The salted 10× lineitem makes 10
+        // DISJOINT graph copies, so triangles/labels/ranks all
         // scale linearly in data with identical per-copy structure:
         //  - triangles: degree-ordered wedge volume is per-copy, so the
         //    ratio should track edges (~10×), never the naive Σdeg²
@@ -377,12 +333,11 @@ object Bench {
         "copurchase_triangles" -> SparkEntry.queries("copurchase_triangles"),
         "copurchase_communities" -> SparkEntry.queries("copurchase_communities"),
         "pagerank_append_audit" -> SparkEntry.queries("pagerank_append_audit"),
-        // r12 traversal tier: the frontier-BFS shape (per level one
+        // traversal tier: the frontier-BFS shape (per level one
         // co-partitioned join + distinct + anti-join against the
         // materialized levels) is the one traversal plan the probes
         // above don't cover
         "bfs_hop_census" -> SparkEntry.queries("bfs_hop_census"),
-        // r13 (verdict task #2): the two remaining unprobed heavies.
         // sssp is 3 min-plus supersteps over the full graph (needs the
         // replicated part table for its Brand#13 seeds); the triangle
         // append audit is the O(batch) maintenance tick — its store
@@ -391,7 +346,7 @@ object Bench {
         // (~10×), never a stored-graph re-enumeration blow-up
         "sssp_brand_cost" -> SparkEntry.queries("sssp_brand_cost"),
         "triangle_append_audit" -> SparkEntry.queries("triangle_append_audit"),
-        // r14: the sketch-state superstep tier — UNMEMOIZED register
+        // the sketch-state superstep tier — UNMEMOIZED register
         // build (the declared census memoizes it, so probing the
         // declared query would time the serve read): 4 absorption
         // supersteps over the memoized backbone (its build lands in
@@ -407,7 +362,7 @@ object Bench {
             .groupBy().agg(count(lit(1)).as("n_regs"),
               sum(col("r")).as("sum_r"))
         }),
-        // r15 (r14 verdict item 5): the UNMEMOIZED skip-gram pair
+        // the UNMEMOIZED skip-gram pair
         // build — the declared randwalk_skipgram_pairs query serves
         // the sharedSkipGramPairs memo (0.05 s steady), so only this
         // probe sees the real pair-build cost scale: one root-keyed
@@ -421,19 +376,16 @@ object Bench {
       val reps = 10
       val buildSec = buildScaled(spark, sfDir, scaledDir, reps)
       // The ×1 and ×10 legs of EACH probe run back-to-back (warm-up,
-      // then timed, at both scales before moving to the next probe).
-      // r13 timed all ×1 legs as one phase and all ×10 legs as a
-      // second phase ~25 min later, so the two legs saw different JVM
-      // states (block cache, GC pressure, code-cache churn) and the
-      // same-code ratio swung 1.0–14.3 run-to-run (bfs) — the probe
-      // measured the JVM, not the plan. Adjacent legs share one JVM
-      // state, so the ratio isolates data volume (r13 verdict #2).
+      // then timed, at both scales before moving to the next probe):
+      // legs timed as two phases minutes apart see different JVM states
+      // (block cache, GC pressure, code-cache churn), and the ratio then
+      // measures the JVM, not the plan. Adjacent legs share one JVM
+      // state, so the ratio isolates data volume.
       // each leg: one untimed warm-up, then the MIN of two timed runs —
       // one scheduler hiccup cannot write a 3× outlier into a leg (the
-      // calibPoint min-of-two discipline; r14 run-2 measured a 52 s
-      // ×10 outlier against 16 s for the same leg in run 1 on a
-      // spread-1.43 host). NaN (a thrown run) poisons the min, so an
-      // error still surfaces as "err", never as the other run's time.
+      // calibPoint min-of-two discipline). NaN (a thrown run) poisons
+      // the min, so an error still surfaces as "err", never as the
+      // other run's time.
       def minTimed(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
           dir: String): Double = {
         val a = once(name, fn, dir)
@@ -497,19 +449,21 @@ object Bench {
     }
 
     var qs = assemble(keep)
-    // budgets leave headroom for the fixed-size calib + deflated +
-    // scale-probe blocks inside the driver's ~2000-char tail window
-    // (r13: the probe gained sssp + triangle-audit entries ≈ +110
-    // chars; r15: cold_queries ≈ +240, the mbw ratio ≈ +35, and the
-    // skipgram probe entry ≈ +45 — the queries-map share shrinks; the
-    // full maps are in target/bench-per-query.json anyway)
+    // budgets leave headroom for the fixed-size cold_queries, calib,
+    // deflated and scale-probe blocks inside the driver's ~2000-char
+    // tail window; the full maps are in target/bench-per-query.json
     val qsBudget = if (scaleJson.isEmpty) 1150 else 450
     while (qs.length > qsBudget && keep > 1) { keep -= 8; qs = assemble(keep) }
-    // calib-deflated round-over-round ratios: (this total / this
-    // calib) over the committed r11 tuple, under BOTH the
-    // single-thread and the all-threads calib — >1 on the binding
-    // (min) ratio means genuinely more work per calib-second (e.g.
-    // new queries), not a noisier host
+    // calib-deflated ratios: (this total / this calib) over the
+    // committed baseline tuple, under the single-thread, all-threads
+    // and bandwidth calibs — >1 on the binding (min) ratio means
+    // genuinely more work per calib-second (e.g. new queries), not a
+    // noisier host. This run's calib is the min of its readings.
+    // PrevMtCalib alone is not: it is the midpoint of r14's two mt32
+    // readings [1.0, 0.94], the value the committed baseline was
+    // published with. Changing it would shift every reported ratio_mt;
+    // the midpoint sits above the min, so it can only overstate a
+    // regression, never hide one.
     val stCalib = math.min(calibPre._1, calibPost._1)
     val mtCalib = math.min(calibPre._2, calibPost._2)
     val mbwCal = math.min(calibPre._3, calibPost._3)
@@ -520,7 +474,7 @@ object Bench {
     // baseline did, so numeric-looking ratios would read optimistically
     // while silently comparing partial sums — emit them as "err"
     // (the errors field names the culprits; a partial total is still
-    // printed for the human, unmistakably marked) (r13 advisory).
+    // printed for the human, unmistakably marked).
     def ratioCell(v: Double): String =
       if (errNames.nonEmpty) "\"err\"" else fmt(v, "%.2f")
     val calibJson =
@@ -543,18 +497,16 @@ object Bench {
     //  2. to target/bench-metric.json (durable, grep-free consumption),
     //  3. once more as this process's final stdout line, after
     //     spark.stop() silenced the only other log source, followed by
-    //     an explicit flush — the r9 fix that got the line INTO the
-    //     tail window; what remains outside builder control is sbt
-    //     appending its success banner afterwards.
+    //     an explicit flush, so the line lands INTO the tail window
+    //     ahead of only sbt's success banner.
     println(line)
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("target/bench-metric.json"), line + "\n")
     catch { case _: Exception => () }
     // The driver's tail window truncates the per-query map to the ~40
-    // slowest names + "other" (r11 left 160 queries unattributed) —
-    // write the COMPLETE steady-median3 and cold maps durably so
-    // round-over-round per-query regression diffs never depend on
-    // tail luck (the bench-metric.json precedent; cited in BASELINE.md)
+    // slowest names + "other" — write the COMPLETE steady-median3 and
+    // cold maps durably so per-query regression diffs never depend on
+    // tail luck
     try {
       def fullMap(m: Map[String, Double]): String =
         m.toSeq.sortBy(_._1)

@@ -12,8 +12,8 @@ import graft.operators.Cuts.CutOps
   *
   * Scale design (the part that must survive 100 TB): the naive
   * src<dst wedge join fans out Σ deg(b)² at the wedge's MIDDLE vertex,
-  * which on a power-law graph explodes at the hubs (the r11 verdict's
-  * one plan-quality flag — 148M wedges already at sf0.1). Orienting
+  * which on a power-law graph explodes at the hubs (148M wedges
+  * already at sf0.1). Orienting
   * every undirected edge from its lower-(degree, id) endpoint to its
   * higher one and generating wedges at the LOWEST-rank vertex bounds
   * per-vertex fan-out by out-degree², and the degree ordering caps
@@ -49,12 +49,11 @@ object Triangles {
   /** Serialized size cap for the broadcast closure: 2M oriented edges
     * of two longs ≈ 32 MB on the wire (plus hash-relation overhead),
     * comfortably inside executor memory and broadcast timeouts. The
-    * r12 cutoff of 20M rows (~320 MB) sat exactly where the forced
-    * broadcast() hint — which bypasses autoBroadcastJoinThreshold —
-    * risks driver OOM instead of falling back to the shuffle semi
-    * (r12 advisory); past this cap the SHUFFLED-HASH semi over bare
-    * (b, c) keys is the scale path (measured comparison at the
-    * closure choice below). */
+    * forced broadcast() hint bypasses autoBroadcastJoinThreshold, so a
+    * much larger cap (20M rows, ~320 MB) risks driver OOM instead of
+    * falling back to the shuffle semi; past this cap the SHUFFLED-HASH
+    * semi over bare (b, c) keys is the scale path (measured comparison
+    * at the closure choice below). */
   private[graft] val BroadcastMaxOrientedEdges = 2000000L
 
   /** Exact triangle count of the undirected graph `e` (both-direction
@@ -72,15 +71,14 @@ object Triangles {
     * batch size, the append audit's build-time census) pass it so the
     * adaptive decision costs no extra job; cold callers omit it and
     * the choice keys off the materialized oriented frame's exact
-    * count — a cheap 1-value read after the checkpoint (r12 verdict
-    * item #3). */
+    * count — a cheap 1-value read after the checkpoint. */
   def count(e: DataFrame, edgeRowBound: Option[Long] = None): DataFrame = {
     // the oriented frame feeds THREE branches (both wedge sides + the
     // closure edge set): materialize it once per call — edge-sized, so
     // the cut is cheap — instead of re-running the orient joins per
     // branch (under the full bench suite's cache pressure the
     // un-materialized lineage re-derived the edge build three times:
-    // 8.7 s vs 5.0 s isolated, measured r12)
+    // 8.7 s vs 5.0 s isolated)
     val o = orient(e).cut()
     countFromOriented(o, edgeRowBound.map(_ / 2).getOrElse(o.count()))
   }
@@ -109,11 +107,10 @@ object Triangles {
     // the wedge frame streams through UNSORTED. Measured on the 10×
     // corpus (12M oriented edges, 410M wedges): sort-merge semi 172 s
     // (the big side's external sort dominates), forced 192 MB
-    // broadcast 53 s (the r12 path — driver-OOM territory on real
-    // executors), shuffled-hash 16 s. The r12 comment claiming SMJ
-    // beat shuffle_hash was measured in the broadcast regime at sf0.1,
-    // where the closure never dominates; at scale the sort is the
-    // whole cost.
+    // broadcast 53 s (driver-OOM territory on real executors),
+    // shuffled-hash 16 s. An SMJ-vs-shuffle_hash comparison at sf0.1
+    // sits in the broadcast regime, where the closure never dominates;
+    // at scale the sort is the whole cost.
     val closure =
       if (orientedBound <= BroadcastMaxOrientedEdges) broadcast(bc)
       else bc.hint("shuffle_hash")
@@ -125,7 +122,7 @@ object Triangles {
       .agg(F.count(lit(1)).cast("long").as("n_triangles"))
   }
 
-  /** Test-only naive baseline (the pre-r12 shape): orient src < dst,
+  /** Test-only naive baseline: orient src < dst,
     * wedge at the middle vertex. O(Σ deg²) fan-out — kept ONLY to pin
     * the degree-ordered count's orientation invariance in
     * GraphMiningSpec; no declared query ships it. */
@@ -187,7 +184,7 @@ object Triangles {
     // (v, wn) build, so the planner reuses ONE broadcast/exchange of the
     // merged edge set for both closure semis instead of building the
     // ~|old|+|batch| hash relation twice per tick (ReusedExchange,
-    // verified in the r14 plan diff)
+    // verified on the executed plan)
     val c2 = newBoth.select(col("src").as("ctr"), col("dst").as("x"))
       .join(newBoth.select(col("src").as("ctr"), col("dst").as("y")), "ctr")
       .filter(col("x") < col("y"))
@@ -244,12 +241,12 @@ object Triangles {
     * keeping edges with sup ≥ k−2 (callers derive the next edge set as
     * `keep`'s (u, v) projection). Two provably-equivalent backends:
     *
-    *  - `decrement = false` (the r14 shape): re-enumerate full support
+    *  - `decrement = false`: re-enumerate full support
     *    over the SHRUNKEN subgraph — one degree-ordered wedge pass per
     *    round, O(m'^1.5) in the kept subgraph. Right when a round
     *    removes most of the graph (the kept core is small).
-    *  - `decrement = true` (r15, guide §2 "stop recomputing the
-    *    world"): support only changes where a triangle DIED, and a
+    *  - `decrement = true` ("stop recomputing the world"): support
+    *    only changes where a triangle DIED, and a
     *    triangle dies iff it contains a removed edge — enumerate the
     *    triangles of the CURRENT graph that contain ≥ 1 removed edge
     *    (removed-edge-anchored common-neighbor join: |removed| × deg
@@ -323,24 +320,23 @@ object Triangles {
     * Per round the support backend is chosen by measured shape (see
     * [[peelRoundSupport]]): full re-enumeration while removals
     * dominate (the first cut of a k-12 peel drops most of the graph),
-    * support DECREMENT once the surviving core is the majority — the
-    * r14-verdict scale-killer fix: the cascade's long tail no longer
-    * re-pays the core's full wedge volume per round. The census
-    * actions (count + sum) read materialized cut partitions either
-    * way, and both backends are census-identical by construction
-    * (TrussPeelSpec) and vs the driver's independent oracle. */
+    * support DECREMENT once the surviving core is the majority, so
+    * the cascade's long tail does not re-pay the core's full wedge
+    * volume per round. The census actions (count + sum) read
+    * materialized cut partitions either way, and both backends are
+    * census-identical by construction (TrussPeelSpec) and vs the
+    * driver's independent oracle. */
   /* requires: `oriented0`, when supplied, must be [[orient]]'s output
    * over THIS `edges0` (the shared co-purchase oriented memo and the
    * shared graph satisfy this by construction — both derive from the
    * same prepared edge frame). A mismatched pre-orientation silently
    * computes wrong round-0 supports; callers wiring a new source must
-   * keep the two derivations coupled (r14 advisory). */
+   * keep the two derivations coupled. */
   def kTrussConvergedCensus(edges0: DataFrame, k: Int, maxRounds: Int,
       oriented0: Option[DataFrame] = None): DataFrame = {
     require(k >= 3, s"k must be >= 3, got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
     val spark = edges0.sparkSession
-    val trace = sys.env.contains("GRAFT_TRACE")
     def supSum(s: DataFrame): Long =
       s.agg(coalesce(F.sum(col("sup")), lit(0L))).head().getLong(0)
     var und = edges0.filter(col("src") < col("dst"))
@@ -350,17 +346,13 @@ object Triangles {
     // pre-materialized orientation when one exists (the shared
     // co-purchase oriented memo); later rounds work on their own
     // shrunken subgraphs
-    var t0 = System.nanoTime()
     var sup = oriented0.map(o => edgeSupportFromOriented(o))
       .getOrElse(edgeSupport(edges0)).cut()
     val census = scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]()
     census += ((0L, undN, supSum(sup)))
-    if (trace) System.err.println(
-      f"[ktruss] round 0: n_edges=$undN sup_sum=${census.last._3} ${(System.nanoTime() - t0) / 1e9}%.2f s")
     var r = 1
     var done = false
     while (!done && r <= maxRounds) {
-      t0 = System.nanoTime()
       val keep = sup.filter(col("sup") >= k - 2).cut()
       val keptN = keep.count()
       val removedN = undN - keptN
@@ -373,8 +365,6 @@ object Triangles {
         // exactly this round — measured 0.8–1.1 s at sf0.1, a whole
         // core wedge pass at scale)
         census += ((r.toLong, undN, census.last._3))
-        if (trace) System.err.println(
-          f"[ktruss] round $r: n_edges=$undN removed=0 (stable — identity row) ${(System.nanoTime() - t0) / 1e9}%.2f s")
       } else {
         // decrement only when removals are well under the surviving
         // core (measured sf0.1 bracket: at removed:kept = 2:1 the full
@@ -385,8 +375,6 @@ object Triangles {
         und = keep.select(col("u"), col("v"))
         undN = keptN
         census += ((r.toLong, undN, supSum(sup)))
-        if (trace) System.err.println(
-          f"[ktruss] round $r: n_edges=$undN removed=$removedN dec=$useDecrement sup_sum=${census.last._3} ${(System.nanoTime() - t0) / 1e9}%.2f s")
       }
       val n = census.size
       done = census(n - 1)._2 == census(n - 2)._2 &&

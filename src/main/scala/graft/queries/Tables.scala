@@ -42,16 +42,6 @@ object Tables {
       spark.read.parquet(s"$dir/$name.parquet"))
   }
 
-  /** Invalidate the memoized parquet RELATIONS for `dir` (r14
-    * advisory): the memo above captures the directory's file listing
-    * at first touch, so any writer that OVERWRITES `dir`'s table
-    * files mid-session must call this before the next read — without
-    * it the next query serves a stale or deleted file index.
-    * Bench.buildScaled (the one in-repo such writer) calls it after
-    * rewriting the scaled corpus. */
-  def evictRelations(s: SparkSession, dir: String): Unit =
-    SharedBuilds.evictMatching(s, dir, _.startsWith("table-"))
-
   /** documents feeds per-row-HEAVY pipelines (tokenize + md5-shingle)
     * that Spark evaluates in interpreted mode (HOFs have no codegen).
     * The testdata parquet is a single row group, so the scan yields ONE
@@ -62,11 +52,11 @@ object Tables {
     * push through Repartition to the parquet scan, so pruned reads stay
     * pruned (pinned in PlanSpec).
     *
-    * embeddings is NOT spread (changed in round 3): its hot consumers
+    * embeddings is NOT spread: its hot consumers
     * (knn family, LSH band keys, point lookups) run on the codegen'd
     * native expressions, where the per-load exchange cost more than the
     * parallelism bought — blanket-spreading it regressed search_join_back
-    * 7× in round 2 (two exchanges + a rebuilt broadcast per query).
+    * 7× (two exchanges + a rebuilt broadcast per query).
     * Relational tables (lineitem etc.) are likewise left alone: their
     * scan+agg paths are whole-stage-codegen'd and measure faster without
     * the extra exchange. Pipelines that genuinely need parallelism for
@@ -100,7 +90,7 @@ object Tables {
       // TIMESTAMP(NANOS) parquet + nanosAsLong=true → long nanos
       case LongType => df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       // TIMESTAMP(MICROS, isAdjustedToUTC=false) → Spark infers NTZ
-      // (driver testdata switched annotations in round 9). The cast
+      // (the testdata's current annotation). The cast
       // interprets wall-clock in the SESSION time zone, so it only
       // relabels (never shifts) the instants when that zone is UTC —
       // enforced here so a future non-UTC entry point fails loudly at
@@ -229,23 +219,18 @@ object SharedBuilds {
     }
     h.asInstanceOf[Holder[T]].value
   }
-  /** Drop the artifacts for (`s`, `dir`) whose key name satisfies
-    * `pred` — the targeted invalidation hook for callers that
-    * OVERWRITE a dir's source files mid-session (Bench.buildScaled
-    * rewrites the scaled corpus's table parquets every run): a
-    * memoized relation captures the file listing at first touch, so
-    * without eviction a rebuild-then-requery of the same dir would
-    * serve a stale or deleted file index (r14 advisory). */
-  def evictMatching(s: SparkSession, dir: String,
-      pred: String => Boolean): Unit = m.synchronized {
+  /** Drop every artifact built for (`s`, `dir`), so the next `of` on
+    * any of its keys rebuilds. A memoized relation (`Tables.t`)
+    * captures the directory's file listing at first touch, and an
+    * artifact derived from it captures the old contents, so a writer
+    * that OVERWRITES `dir`'s table files mid-session must call this
+    * before the next read — without it the next query serves a stale
+    * or deleted file index, or a stale derived build. Bench.buildScaled
+    * (the one in-repo such writer) calls it after rewriting the scaled
+    * corpus. */
+  def evictDir(s: SparkSession, dir: String): Unit = m.synchronized {
     val inner = m.get(s)
-    if (inner != null) {
-      val it = inner.keySet().iterator()
-      while (it.hasNext) {
-        val k = it.next()
-        if (k._1 == dir && pred(k._2)) it.remove()
-      }
-    }
+    if (inner != null) inner.keySet().removeIf(_._1 == dir)
   }
 
   /** Drop every artifact built for `s` (call when stopping a session in

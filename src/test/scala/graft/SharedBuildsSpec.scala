@@ -94,6 +94,25 @@ class SharedBuildsSpec extends SparkSpec {
     assert(innerRuns.get() === 1)
   }
 
+  test("evictDir drops every memo of one directory and no other") {
+    val runs = new AtomicInteger(0)
+    def memo(dir: String, key: String): String =
+      SharedBuilds.of(spark, dir, key) { s"$dir/$key#${runs.incrementAndGet()}" }
+    val table = memo("/tmp/sb-evict-a", "table-x")
+    val derived = memo("/tmp/sb-evict-a", "derived")
+    val other = memo("/tmp/sb-evict-b", "table-x")
+    assert(runs.get() === 3)
+    SharedBuilds.evictDir(spark, "/tmp/sb-evict-a")
+    // both keys of the evicted directory rebuild, derived memos included
+    assert(memo("/tmp/sb-evict-a", "table-x") === "/tmp/sb-evict-a/table-x#4")
+    assert(memo("/tmp/sb-evict-a", "derived") === "/tmp/sb-evict-a/derived#5")
+    assert(table !== memo("/tmp/sb-evict-a", "table-x"))
+    assert(derived !== memo("/tmp/sb-evict-a", "derived"))
+    // the other directory's memo survives
+    assert(memo("/tmp/sb-evict-b", "table-x") eq other)
+    assert(runs.get() === 5)
+  }
+
   test("a throwing build is re-attempted on the next force, not poisoned") {
     // the holder stays in the map after a failure, so the NEXT force
     // re-runs the ORIGINAL thunk (lazy vals don't latch exceptions) —
