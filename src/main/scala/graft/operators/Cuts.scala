@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, ExactStatsLeaf}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Lineage cuts with a config-selected durability backend — the one
   * switch every iterative operator (Supersteps, Traversal, Triangles,
@@ -8,11 +9,9 @@ import org.apache.spark.sql.DataFrame
   * cuts through.
   *
   * Backends:
-  *  - default (no config): `localCheckpoint()` — materialized
+  *  - default (no config): a local checkpoint — materialized
   *    unreplicated executor blocks. On `local[n]` this is correct and
-  *    the fastest cut available (no serialization to disk, no extra
-  *    job), and it is today's behavior at every call site,
-  *    bit-identical plans included.
+  *    the fastest cut available (no serialization to disk).
   *  - `spark.graft.checkpoint.dir = <path>`: a parquet round-trip
   *    under that directory — the CLUSTER-durable backend. On a real
   *    cluster, localCheckpoint pins unreplicated blocks in executor
@@ -20,10 +19,16 @@ import org.apache.spark.sql.DataFrame
   *    a checkpoint written to the shared filesystem (HDFS/S3/...)
   *    survives any executor loss and lets the job resume from the
   *    last cut. Parquet (rather than `df.checkpoint()`) because it
-  *    needs no SparkContext-global `setCheckpointDir` mutation, is
-  *    columnar-compressed on the wire, and its read-back is an
-  *    ordinary FileSourceScan — which also makes every reliable cut a
-  *    FRESH STATS LEAF for free (see [[statsLeaf]]).
+  *    needs no SparkContext-global `setCheckpointDir` mutation and is
+  *    columnar-compressed on the wire.
+  *
+  * Every cut is a fresh plan leaf, so size estimates restart at each
+  * cut. Joins multiply their children's size estimates, so a loop
+  * whose cuts carried the estimate forward would grow its bit-length
+  * by a factor of the join count per round, until Catalyst spends
+  * minutes in BigInteger arithmetic. The default backend's leaf also
+  * carries the exact row count (see [[counted]]), so the small frames
+  * an iterative loop cuts plan as broadcast joins.
   *
   * File lifecycle under the reliable backend is the caller's, exactly
   * like `SparkContext.setCheckpointDir`: point the config at a
@@ -41,36 +46,31 @@ object Cuts {
   private val seq = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Materialize `df` and return a frame reading the materialization —
-    * the lineage cut. Eager under both backends (localCheckpoint is
-    * eager by default; the parquet write is an action). */
-  def cut(df: DataFrame): DataFrame = reliableDir(df) match {
+    * the lineage cut — with its row count.
+    *
+    * Default backend: one job, a `count()` of the local checkpoint's
+    * RDD, which materializes the checkpoint as it counts. The frame's
+    * leaf has exact statistics (row count, and size = rows × row
+    * width). Reliable backend: the parquet write, then a count of the
+    * read-back as a second action; the read-back's statistics are file
+    * sizes. */
+  def counted(df: DataFrame): (DataFrame, Long) = reliableDir(df) match {
     case Some(dir) =>
       val path = s"$dir/cut-${seq.incrementAndGet()}-${java.util.UUID.randomUUID().toString.take(8)}"
       df.write.parquet(path)
-      df.sparkSession.read.parquet(path)
-    case None => df.localCheckpoint()
-  }
-
-  /** A cut that is also a fresh STATS leaf. localCheckpoint's
-    * LogicalRDD carries the child plan's BigInt size estimate forward,
-    * and every join in a subsequent superstep MULTIPLIES its children's
-    * estimates — a k-join step compounds the estimate's bit-length
-    * k-fold PER ROUND (double-exponential growth; by round ~15 Catalyst
-    * spends minutes inside BigInteger.multiply — measured r13 on the
-    * k-core loop). Rebuilding the frame from the checkpointed RDD makes
-    * the cut a fresh leaf; the row conversion is one pass over an
-    * already-materialized checkpoint. The reliable backend's parquet
-    * read-back is ALREADY a fresh leaf (file-size stats), so it needs
-    * no rebuild — and costs no row conversion on later reads. */
-  def statsLeaf(df: DataFrame): DataFrame = reliableDir(df) match {
-    case Some(_) => cut(df)
+      val back = df.sparkSession.read.parquet(path)
+      (back, back.count())
     case None =>
-      val cp = df.localCheckpoint()
-      cp.sparkSession.createDataFrame(cp.rdd, cp.schema)
+      val cp = df.localCheckpoint(eager = false)
+      val leaf = cp.queryExecution.logical.asInstanceOf[LogicalRDD]
+      val rows = leaf.rdd.count()
+      (ExactStatsLeaf(cp.sparkSession, leaf, rows), rows)
   }
 
-  /** `df.cut()` postfix form — the drop-in spelling for the former
-    * `.localCheckpoint()` call sites. */
+  /** [[counted]] without the count. */
+  def cut(df: DataFrame): DataFrame = counted(df)._1
+
+  /** `df.cut()` postfix form. */
   implicit class CutOps(private val df: DataFrame) extends AnyVal {
     def cut(): DataFrame = Cuts.cut(df)
   }

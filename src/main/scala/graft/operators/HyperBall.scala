@@ -99,12 +99,8 @@ object HyperBall {
     when(w === 0, lit(55L)).otherwise(lit(55L) - length(bin(w)))
 
   /** Register states for hops 0..maxHops (index = hop), each
-    * materialized via a plain [[Cuts]] cut (the bfsHops discipline —
-    * a stats-restart leaf is not needed here: each round is ONE join
-    * against a fixed-stats edge side, so estimate growth over a
-    * fixed ≤5-round horizon is linear in the exponent, nowhere near
-    * the deep multi-join squaring that forces Supersteps/kCore onto
-    * [[Cuts.statsLeaf]]). Superstep: absorb out-neighbors' registers
+    * materialized via a [[Cuts.cut]], a fresh leaf with exact
+    * statistics. Superstep: absorb out-neighbors' registers
     * and max-merge per (root, b) — one src-keyed join + one keyed
     * max, the two-shuffle Pregel shape, with register monotonicity
     * making re-delivery/retries idempotent for free. */

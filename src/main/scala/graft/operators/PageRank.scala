@@ -191,7 +191,7 @@ object PageRank {
     * a (node, rank) frame to the next one. */
   private def loop(r0: DataFrame, iters: Int, checkpointEvery: Int,
       earlyExitTolFp: Option[Long])(step: DataFrame => DataFrame): DataFrame = {
-    val probe = earlyExitTolFp.map { tol => (next: DataFrame, prev: DataFrame) =>
+    val probe = earlyExitTolFp.map { tol => (next: DataFrame, prev: DataFrame, _: Long) =>
       next.join(prev.withColumnRenamed("rank", "prev"), "node")
         .agg(coalesce(sum(abs(col("rank") - col("prev"))), lit(0L)))
         .collect()(0).getLong(0) <= tol

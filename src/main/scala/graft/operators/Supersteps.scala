@@ -6,26 +6,24 @@ import org.apache.spark.sql.DataFrame
   * (PageRank, label propagation — anything Pregel-shaped), carrying
   * the two depth controls a to-convergence run needs:
   *
-  *  - `checkpointEvery`: a [[Cuts]] lineage cut every k supersteps
-  *    (localCheckpoint locally; a durable parquet cut when
-  *    `spark.graft.checkpoint.dir` is set — the cluster posture), so
-  *    plan depth stays bounded instead of growing per iteration —
+  *  - `checkpointEvery`: a [[Cuts]] lineage cut every k supersteps,
+  *    so plan depth stays bounded instead of growing per iteration —
   *    past ~10 uncut supersteps Catalyst re-analysis and task
   *    serialization dominate (GraphAppendSpec and GraphMiningSpec pin
   *    bounded plan size at 20 iterations). Runs that never reach a
   *    cut (the declared 2–3 iteration queries) get byte-identical
   *    plans to an uncut loop.
   *  - `converged`: an optional exact, integer-friendly fixed-point
-  *    probe (next, prev) => stop?. Costs one action per superstep, so
-  *    it is opt-in; when enabled every superstep is checkpointed so
-  *    the probe reads materialized partitions, not re-executed
-  *    lineage. Callers use exact criteria (long L1 delta = 0, label
-  *    change count = 0) — a true fixed point, so early exit never
-  *    changes the result.
+  *    probe (next, prev, rows of next) => stop?. When it is set every
+  *    superstep is cut, so the probe reads materialized partitions,
+  *    not re-executed lineage, and gets the row count the cut took
+  *    in the same job. Callers use exact criteria (long L1 delta = 0,
+  *    label change count = 0, an unchanged census) — a true fixed
+  *    point, so early exit never changes the result.
   */
 object Supersteps {
   def loop(init: DataFrame, iters: Int, checkpointEvery: Int,
-      converged: Option[(DataFrame, DataFrame) => Boolean])
+      converged: Option[(DataFrame, DataFrame, Long) => Boolean])
       (step: DataFrame => DataFrame): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(checkpointEvery >= 1, s"checkpointEvery must be >= 1, got $checkpointEvery")
@@ -35,17 +33,11 @@ object Supersteps {
     while (it < iters && !done) {
       it += 1
       val next0 = step(cur)
-      val cut = converged.isDefined ||
-        (it % checkpointEvery == 0 && it < iters)
-      // A cut must restart SIZE STATS, not just lineage — joins
-      // MULTIPLY their children's BigInt size estimates, so a k-join
-      // step compounds the estimate's bit-length k-fold PER ROUND
-      // (double-exponential; by round ~15 Catalyst spends minutes in
-      // BigInteger.multiply — measured r13 on the k-core loop). Hence
-      // statsLeaf, not plain cut: see Cuts for both backends' leaves.
-      val next = if (cut) Cuts.statsLeaf(next0) else next0
-      converged.foreach { probe => if (probe(next, cur)) done = true }
-      cur = next
+      if (converged.isDefined || (it % checkpointEvery == 0 && it < iters)) {
+        val (next, rows) = Cuts.counted(next0)
+        converged.foreach { probe => if (probe(next, cur, rows)) done = true }
+        cur = next
+      } else cur = next0
     }
     cur
   }

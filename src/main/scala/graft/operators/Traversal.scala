@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.Cuts.CutOps
 
 /** Graph traversal kernels — frontier BFS, bounded-round Bellman–Ford
   * (min-plus relaxation), and k-core peeling — the reachability /
@@ -16,16 +15,13 @@ import graft.operators.Cuts.CutOps
   *
   * Scale shape: every round of every kernel is at most one
   * src-keyed join plus one node-keyed aggregate — the two-shuffle
-  * Pregel superstep. Frontiers/levels are [[Cuts]]-cut per round
+  * Pregel superstep. Each round's state is one [[Cuts]] counted cut
   * (localCheckpoint locally; a durable parquet cut when
   * `spark.graft.checkpoint.dir` is set), so plan depth stays bounded,
-  * the per-round empty-frontier probe reads materialized partitions,
-  * and on a cluster a lost executor cannot kill a deep traversal.
-  * Nothing is ever collected to the driver; frontier size is bounded
-  * by the reachable set, each BFS level materializes once, and the
-  * BFS visited set is ONE consolidated frame maintained per round —
-  * the anti-join reads a single leaf at any depth, not a
-  * depth-wide union.
+  * the job that materializes a round also counts it (the BFS
+  * empty-level test and the k-core census read that count), and on a
+  * cluster a lost executor cannot kill a deep traversal. No row is
+  * collected, only those counts.
   */
 object Traversal {
 
@@ -33,39 +29,32 @@ object Traversal {
     * (`src`, `dst`), seeds in `seeds("node")`, capped at `maxHops`.
     * Returns (node, hop) for every node reached within the cap, hop =
     * shortest hop distance (seeds at 0). Stops early on an empty
-    * frontier — a true fixed point, so the cap only ever truncates,
+    * level — a true fixed point, so the cap only ever truncates,
     * never changes reached distances. The seed frame is deduplicated
-    * here (r12 advisory): duplicate seed rows would otherwise emit
-    * duplicate (node, 0) rows and redundant frontier work, silently
-    * inflating any downstream per-hop census. */
+    * here: duplicate seed rows would otherwise emit duplicate (node, 0)
+    * rows and inflate any downstream per-hop census.
+    *
+    * The state is ONE visited frame (node, hop). Each level is a single
+    * counted cut of visited ∪ the level's new nodes, so the anti-join
+    * reads one leaf at any depth and the level's emptiness is read off
+    * the cut's own count: the level is empty exactly when the count did
+    * not grow. The final visited frame is the result. */
   def bfsHops(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    val levels = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    levels += seeds.select(col("node"), lit(0L).as("hop"))
-      .distinct().cut()
-    // ONE cumulative visited frame, re-cut per round (r13 advisory):
-    // the lazy union-of-all-levels the loop previously anti-joined
-    // against re-scanned O(depth) materialized frames per round —
-    // O(depth²) scans total and a per-round plan that grew with depth.
-    // Maintaining the consolidated frame costs one extra
-    // materialization per round (bounded by the reached set, which the
-    // anti-join had to read anyway) and keeps the anti-join's build
-    // side a single constant-shape leaf at any depth.
-    var visited = levels.last.select(col("node"))
-    var frontier = visited
+    var (visited, reached) = Cuts.counted(
+      seeds.select(col("node"), lit(0L).as("hop")).distinct())
     var d = 1
-    var done = false
-    while (d <= maxHops && !done) {
-      val nxt = bfsRound(edges, frontier, visited, d).cut()
-      if (nxt.isEmpty) done = true
-      else {
-        levels += nxt
-        visited = visited.unionByName(nxt.select(col("node"))).cut()
-        frontier = nxt.select(col("node"))
-        d += 1
-      }
+    var grew = true
+    while (d <= maxHops && grew) {
+      val frontier = visited.filter(col("hop") === d - 1).select(col("node"))
+      val (next, n) = Cuts.counted(visited.unionByName(
+        bfsRound(edges, frontier, visited.select(col("node")), d)))
+      grew = n > reached
+      visited = next
+      reached = n
+      d += 1
     }
-    levels.reduce(_ unionByName _)
+    visited
   }
 
   /** One BFS expansion: frontier-successors not yet in `visited`,
@@ -90,10 +79,8 @@ object Traversal {
     // checkpointEvery = 1: the relaxation references `dist` TWICE (once
     // in the edge join, once in the min-union), so an uncut loop
     // re-executes each earlier round's subtree 2× per later round —
-    // work doubles per round (measured r14: the declared 3-round sssp
-    // ran 4.2 s isolated against PageRank's 1.2 s for the same
-    // two-shuffle superstep; per-round cuts collapse the doubling and
-    // the cut frame is node-sized). PageRank references its rank state
+    // work doubles per round; per-round cuts collapse the doubling and
+    // the cut frame is node-sized. PageRank references its rank state
     // once per step, so it keeps the sparser default; LPA shares this
     // double-reference shape and cuts per round too.
     Supersteps.loop(d0, rounds, checkpointEvery = 1, None) { dist =>
@@ -116,32 +103,21 @@ object Traversal {
     * is the input graph (nodes = distinct sources), round r ≥ 1 counts
     * the kept-node set (which may exceed the next round's edge
     * endpoints — a kept node can lose all its edges to the
-    * restriction; that cascade is the algorithm). Each round's edge
-    * frame materializes once, so the census plan reads checkpoints,
-    * not O(rounds²) re-derived lineage. */
+    * restriction; that cascade is the algorithm). The census is
+    * rounds+1 integer triples built from the counts of each round's
+    * cuts. */
   def kCorePeelCensus(edges0: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    var e = edges0.select(col("src"), col("dst")).cut()
-    val rows = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    rows += e.agg(count_distinct(col("src")).as("n_nodes"),
-        count(lit(1)).as("n_edges"))
-      .select(lit(0L).as("round"), col("n_nodes"), col("n_edges"))
+    val (e0, row0) = peelStart(edges0)
+    val census = scala.collection.mutable.ArrayBuffer(row0)
+    var e = e0
     for (r <- 1 to rounds) {
-      val keep = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select(col("src").as("node"))
-        .cut()
-      // statsLeaf, not plain cut: the two keep-joins multiply size
-      // estimates, so a carried-stats cut compounds bit-length per
-      // round (the Supersteps pathology; this loop doesn't ride
-      // Supersteps because it accumulates a census frame per round)
-      e = Cuts.statsLeaf(e.join(keep.select(col("node").as("src")), "src")
-        .join(keep.select(col("node").as("dst")), "dst")
-        .select(col("src"), col("dst")))
-      rows += keep.agg(count(lit(1)).as("n_nodes"))
-        .crossJoin(e.agg(count(lit(1)).as("n_edges"))) // 1-row × 1-row stapler
-        .select(lit(r.toLong).as("round"), col("n_nodes"), col("n_edges"))
+      val (kept, keptNodes) = peelRound(e, k)
+      val (next, edgeRows) = Cuts.counted(kept)
+      census += ((r.toLong, keptNodes, edgeRows))
+      e = next
     }
-    rows.reduce(_ unionByName _)
+    censusFrame(edges0.sparkSession, census.toSeq)
   }
 
   /** k-core peeling run TO ITS FIXED POINT (capped at `maxRounds`),
@@ -163,35 +139,50 @@ object Traversal {
     * agree.
     *
     * Driven by the shared [[Supersteps.loop]]: the edge frame is the
-    * superstep state, every round is lineage-cut (the convergence
-    * probe reads materialized partitions, and plan depth stays bounded
-    * on long cascades — the 20-round pin in GraphMiningSpec), and the
-    * census is a bounded driver-side accumulation of ≤ maxRounds+1
-    * integer triples (the bounded-collect discipline: the per-round
-    * counts are actions the probe needs anyway). */
+    * superstep state and every round is lineage-cut, so plan depth
+    * stays bounded on long cascades (the 20-round pin in
+    * GraphMiningSpec). A round's census is the two counts its cuts
+    * take anyway — kept nodes from the `keep` cut, edges from the
+    * loop's cut — so the convergence test costs no action of its own. */
   def kCoreConvergedCensus(edges0: DataFrame, k: Int, maxRounds: Int): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val spark = edges0.sparkSession
-    val e0 = edges0.select(col("src"), col("dst")).cut()
-    val census = scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]()
-    census += ((0L, e0.select(col("src")).distinct().count(), e0.count()))
+    val (e0, row0) = peelStart(edges0)
+    val census = scala.collection.mutable.ArrayBuffer(row0)
     var keptNodes = 0L // stashed by the step, read by the probe
-    val probe = Some { (next: DataFrame, _: DataFrame) =>
-      census += ((census.size.toLong, keptNodes, next.count()))
+    val probe = Some { (_: DataFrame, _: DataFrame, edgeRows: Long) =>
+      census += ((census.size.toLong, keptNodes, edgeRows))
       val n = census.size
       census(n - 1)._2 == census(n - 2)._2 &&
         census(n - 1)._3 == census(n - 2)._3
     }
     Supersteps.loop(e0, maxRounds, checkpointEvery = 1, probe) { e =>
-      val keep = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select(col("src").as("node"))
-        .cut()
-      keptNodes = keep.count()
-      e.join(keep.select(col("node").as("src")), "src")
-        .join(keep.select(col("node").as("dst")), "dst")
-        .select(col("src"), col("dst"))
+      val (kept, n) = peelRound(e, k)
+      keptNodes = n
+      kept
     }
+    censusFrame(edges0.sparkSession, census.toSeq)
+  }
+
+  /** The cut (src, dst) edge frame and its round-0 census row. */
+  private def peelStart(edges0: DataFrame): (DataFrame, (Long, Long, Long)) = {
+    val (e, edgeRows) = Cuts.counted(edges0.select(col("src"), col("dst")))
+    (e, (0L, e.select(col("src")).distinct().count(), edgeRows))
+  }
+
+  /** One peel round: the edges between nodes of out-degree ≥ k (not
+    * cut) and the number of those nodes, counted by the `keep` cut. */
+  private def peelRound(e: DataFrame, k: Int): (DataFrame, Long) = {
+    val (keep, keptNodes) = Cuts.counted(
+      e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+        .filter(col("deg") >= k).select(col("src").as("node")))
+    val kept = e.join(keep.select(col("node").as("src")), "src")
+      .join(keep.select(col("node").as("dst")), "dst")
+      .select(col("src"), col("dst"))
+    (kept, keptNodes)
+  }
+
+  private def censusFrame(spark: SparkSession, census: Seq[(Long, Long, Long)]): DataFrame = {
     import spark.implicits._
-    census.toSeq.toDF("round", "n_nodes", "n_edges")
+    census.toDF("round", "n_nodes", "n_edges")
   }
 }

@@ -279,11 +279,11 @@ object Triangles {
         .join(adj.select(col("src").as("v"), col("dst").as("w")),
           Seq("v", "w"), "left_semi")
         // canonical triangle id (x1 < x2 < x3): dedupe multi-removed-
-        // edge triangles; x2 via the exact long identity u+v+w−min−max
+        // edge triangles; x2 is the comparison-only median, which
+        // cannot overflow the way a sum of ids near 2^62 does
         .select(least(col("u"), col("v"), col("w")).as("x1"),
-          (col("u") + col("v") + col("w")
-            - least(col("u"), col("v"), col("w"))
-            - greatest(col("u"), col("v"), col("w"))).as("x2"),
+          greatest(least(col("u"), col("v")),
+            least(greatest(col("u"), col("v")), col("w"))).as("x2"),
           greatest(col("u"), col("v"), col("w")).as("x3"))
         .distinct()
       val dec = hitTris.select(explode(array(

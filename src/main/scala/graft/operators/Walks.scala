@@ -48,10 +48,8 @@ object Walks {
 
   /** Walk positions (root, step, node) for one deterministic walk of
     * `steps` hops from every node of `nodes` — steps 0..steps, step 0
-    * the root itself. Each hop's state frame is [[Cuts]]-cut (plain
-    * cut, the bfsHops discipline: one fixed-stat join per round over
-    * a fixed ≤5-round horizon never reaches the stats-squaring that
-    * forces deep loops onto [[Cuts.statsLeaf]]) so the union census
+    * the root itself. Each hop's state frame is a [[Cuts.cut]] so the
+    * union census
     * reads materialized walk states instead of re-deriving step t's
     * lineage once per later step. */
   def walkPositions(edges: DataFrame, nodes: DataFrame, steps: Int): DataFrame = {

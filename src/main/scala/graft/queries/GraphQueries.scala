@@ -310,7 +310,7 @@ object GraphQueries extends QueryRegistry {
       checkpointEvery: Int = 1, earlyExitOnStable: Boolean = false): DataFrame = {
     val probe =
       if (!earlyExitOnStable) None
-      else Some { (next: DataFrame, prev: DataFrame) =>
+      else Some { (next: DataFrame, prev: DataFrame, _: Long) =>
         next.join(prev.withColumnRenamed("lbl", "prev_lbl"), "node")
           .filter(col("lbl") =!= col("prev_lbl"))
           .count() == 0L
@@ -495,8 +495,8 @@ object GraphQueries extends QueryRegistry {
     // there is the degenerate {0,1,2}): per-hop node count + id
     // min/max/sum, hop −1 = unreachable within the 6-hop cap. The
     // frontier loop is the Pregel shape — per level one co-partitioned
-    // src-keyed join + a distinct + an anti-join against the already-
-    // materialized levels; empty-frontier exit is a true fixed point.
+    // src-keyed join + a distinct + an anti-join against the
+    // materialized visited set; empty-level exit is a true fixed point.
     // The oracle replays it as a DuckDB recursive CTE (UNION-dedup
     // semantics bound the recursion), fully independent of the
     // frontier algorithm

@@ -4,15 +4,15 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Cuts, Supersteps, Traversal}
 
-/** The config-selected lineage-cut backend (r13 verdict task #1):
-  * localCheckpoint by default (today's local-mode behavior), a durable
-  * parquet round-trip when `spark.graft.checkpoint.dir` is set — the
-  * cluster posture, where localCheckpoint's unreplicated executor
+/** The config-selected lineage-cut backend: a local checkpoint by
+  * default, a durable parquet round-trip when
+  * `spark.graft.checkpoint.dir` is set — the cluster posture, where localCheckpoint's unreplicated executor
   * blocks would let one lost executor kill a 50-superstep job.
   * Pins: value-identical results across backends on a 20-superstep
   * loop, bounded plans under the reliable backend, the parquet scan
   * actually appearing in the reliable plan, and empty-frame cuts
-  * round-tripping.
+  * round-tripping; and under both backends, counted cuts whose count
+  * is the frame's and whose size estimate restarts at every cut.
   */
 class CutsSpec extends SparkSpec {
 
@@ -30,7 +30,7 @@ class CutsSpec extends SparkSpec {
   import spark.implicits._
 
   // a 40-node ring with long costs: bellmanFord at 20 rounds drives 20
-  // supersteps through Supersteps.loop (cuts at 5/10/15 + stats leaves)
+  // supersteps through Supersteps.loop (a cut every round)
   private def ring(n: Int): (DataFrame, DataFrame) = {
     val edges = (0 until n).map { i =>
       (i.toLong, ((i + 1) % n).toLong, 1L + (i % 3))
@@ -109,12 +109,12 @@ class CutsSpec extends SparkSpec {
     }
   }
 
-  test("statsLeaf stops size-stat compounding under both backends") {
+  test("cuts stop size-stat compounding under both backends") {
     // joins MULTIPLY their children's BigInt size estimates, so an
     // iterated join loop whose cuts CARRY stats forward compounds the
-    // estimate's bit-length every round (the r13 k-core pathology);
-    // a statsLeaf cut must restart the estimate each round, making the
-    // post-cut bit-length a round-invariant constant
+    // estimate's bit-length every round; a cut must restart the
+    // estimate each round, making the post-cut bit-length a
+    // round-invariant constant
     def statBits(d: DataFrame): Int =
       d.queryExecution.optimizedPlan.stats.sizeInBytes.bitLength
     val dim = Seq.tabulate(8)(i => (i.toLong, i.toLong * 2)).toDF("a", "c")
@@ -129,12 +129,36 @@ class CutsSpec extends SparkSpec {
     val carried = run(_.localCheckpoint()) // stats carry: compounds
     assert(carried.last > carried.head,
       s"control: carried stats should compound, got $carried")
-    val local = run(Cuts.statsLeaf)
+    val local = run(Cuts.cut)
     assert(local.distinct.size == 1,
-      s"local statsLeaf bits should be round-invariant, got $local")
-    val durable = withReliable(_ => run(Cuts.statsLeaf))
+      s"local cut bits should be round-invariant, got $local")
+    val durable = withReliable(_ => run(Cuts.cut))
     assert(durable.max <= durable.min + 8, // file sizes may wobble a byte
-      s"reliable statsLeaf bits should be flat, got $durable")
+      s"reliable cut bits should be flat, got $durable")
+  }
+
+  test("a default-backend cut's plan statistics carry its exact row count") {
+    val base = spark.range(0, 1000).select(col("id"), (col("id") % 7).as("m"))
+    for (df <- Seq(base, base.filter(col("m") === 3), base.filter(col("id") < 0),
+        base.groupBy(col("m")).count())) {
+      val c = Cuts.cut(df)
+      val stats = c.queryExecution.optimizedPlan.stats
+      assert(stats.rowCount.contains(BigInt(df.count())), s"$stats for\n${df.queryExecution.optimizedPlan}")
+      assert(stats.sizeInBytes > 0)
+    }
+  }
+
+  test("counted's count equals count() for empty and non-empty frames under both backends") {
+    val df = Seq.tabulate(37)(i => (i.toLong, s"v$i")).toDF("k", "v")
+    def check(): Unit =
+      for (f <- Seq(df, df.filter(col("k") % 3 === 0), df.filter(col("k") < 0))) {
+        val (c, n) = Cuts.counted(f)
+        assert(n == f.count() && c.count() == n, s"counted $n, count ${f.count()}")
+        // (the parquet read-back makes every column nullable)
+        assert(c.schema.map(x => x.name -> x.dataType) == f.schema.map(x => x.name -> x.dataType))
+      }
+    check()
+    withReliable(_ => check())
   }
 
   test("declared queries run unchanged under the reliable backend (end-to-end)") {

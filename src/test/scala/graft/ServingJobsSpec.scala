@@ -1,10 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.ListenerBusAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -17,7 +14,7 @@ import graft.sources.CollectionManager
   * each — a single scan under TakeOrderedAndProject, the query scored as
   * a literal — and return exactly what the one-row-DataFrame form of
   * `Knn.topK` returns, under any AQE and shuffle-partition setting. */
-class ServingJobsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+class ServingJobsSpec extends SparkSpec with JobCounting with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private val K = 10
@@ -47,22 +44,6 @@ class ServingJobsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       hist: Map[Long, Long], ivf: Ivf, cents: Array[(Int, Array[Double])], ivfDf: DataFrame,
       queries: Array[Array[Float]])
 
-  /** (result, jobs started while it ran) */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    ListenerBusAccess.drain(sc)
-    sc.addSparkListener(l)
-    try {
-      val r = body
-      ListenerBusAccess.drain(sc)
-      (r, n.get)
-    } finally sc.removeSparkListener(l)
-  }
-
   private def exchanges(p: SparkPlan): Seq[String] =
     collectWithSubqueries(p) { case e: Exchange => e.nodeName }
 
@@ -82,20 +63,6 @@ class ServingJobsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   private def frame(q: Array[Float]): DataFrame = Seq(Tuple1(q)).toDF("qe")
-
-  private def withKnobs(aqe: Boolean, partitions: Int)(body: => Unit): Unit = {
-    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
-    val prev = keys.map(k => k -> spark.conf.getOption(k))
-    spark.conf.set(keys(0), aqe.toString)
-    spark.conf.set(keys(1), partitions.toString)
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
-  private val knobs = for (aqe <- Seq(true, false); p <- Seq(1, 7)) yield (aqe, p)
 
   test("GraftEngine.searchWithScores: one job, no exchange, equal to DataFrame-query topK") {
     val f = fixture

@@ -1,0 +1,99 @@
+package graft
+
+import graft.operators.Traversal
+
+/** The iterative graph loops fold their per-round probes into the job
+  * that materializes each round: a converged k-core census runs a
+  * bounded number of Spark jobs per peel round (its census counts come
+  * from the round's own counted cuts) and a BFS a bounded number per
+  * level (a level's emptiness is read off the visited cut's count).
+  * Both equal in-memory replicas under any AQE and shuffle-partition
+  * setting. */
+class SuperstepJobsSpec extends SparkSpec with JobCounting {
+  import spark.implicits._
+
+  private val JobsPerRound = 6
+  private val KCoreRound0Jobs = 4
+  private val MaxHops = 8
+
+  /** A 24-node dense core with four pendant paths of 3 to 6 nodes,
+    * both directions, distinct: under k = 2 each path loses its free
+    * end per round, so the peel runs six rounds before it repeats. */
+  private lazy val graph: Vector[(Long, Long)] = {
+    val rnd = new scala.util.Random(20261017)
+    val core = for { a <- 0L until 24L; b <- a + 1 until 24L if rnd.nextDouble() < 0.4 }
+      yield (a, b)
+    val paths = (3 to 6).flatMap { len =>
+      val ids = (0 until len).map(i => 100L * len + i)
+      ((len.toLong, ids.head) +: ids.zip(ids.tail))
+    }
+    val und = (core ++ paths).toVector
+    (und ++ und.map(_.swap)).distinct
+  }
+  private val seeds = Seq(605L, 3L, 17L)
+
+  /** The fixed-point peel with the census trim rule of kCoreConvergedCensus. */
+  private def peelReplica(k: Int): Seq[(Long, Long, Long)] = {
+    var cur = graph
+    val census = scala.collection.mutable.ArrayBuffer(
+      (0L, cur.map(_._1).distinct.size.toLong, cur.size.toLong))
+    var done = false
+    while (!done) {
+      val keep = cur.groupBy(_._1).filter(_._2.size >= k).keySet
+      cur = cur.filter { case (s, d) => keep(s) && keep(d) }
+      census += ((census.size.toLong, keep.size.toLong, cur.size.toLong))
+      val n = census.size
+      done = census(n - 1)._2 == census(n - 2)._2 && census(n - 1)._3 == census(n - 2)._3
+    }
+    census.toSeq
+  }
+
+  private def bfsReplica: Map[Long, Long] = {
+    val adj = graph.groupBy(_._1).map { case (s, es) => s -> es.map(_._2) }
+    var dist = seeds.map(_ -> 0L).toMap
+    var frontier = seeds.toSet
+    for (d <- 1L to MaxHops.toLong if frontier.nonEmpty) {
+      frontier = frontier.flatMap(v => adj.getOrElse(v, Vector.empty)).filterNot(dist.contains)
+      dist ++= frontier.map(_ -> d)
+    }
+    dist
+  }
+
+  test("converged k-core census: at most 6 jobs per peel round, equal to the replica") {
+    val expect = peelReplica(k = 2)
+    val rounds = expect.size - 1
+    assert(rounds >= 6, s"the fixture should peel for several rounds: $expect")
+    for ((aqe, p) <- knobs) withKnobs(aqe, p) {
+      val edges = graph.toDF("src", "dst")
+      val (got, jobs) = jobsOf {
+        Traversal.kCoreConvergedCensus(edges, k = 2, maxRounds = 20)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
+      }
+      info(s"aqe=$aqe partitions=$p: $jobs jobs, $rounds peel rounds")
+      assert(got == expect, s"aqe=$aqe partitions=$p")
+      assert(jobs <= JobsPerRound * rounds + KCoreRound0Jobs,
+        s"aqe=$aqe partitions=$p: $jobs jobs for $rounds peel rounds")
+    }
+  }
+
+  test("bfsHops: at most 6 jobs per level, equal to the replica") {
+    val expect = bfsReplica
+    val deepest = expect.values.max.toInt
+    assert(deepest >= 4, s"the fixture should be several hops deep: $expect")
+    // every expansion, including the one that finds nothing new
+    // (unless the cap stops the search first); the seed frame's cut
+    // rides in the same budget
+    val levels = math.min(deepest + 1, MaxHops)
+    for ((aqe, p) <- knobs) withKnobs(aqe, p) {
+      val edges = graph.toDF("src", "dst")
+      val (got, jobs) = jobsOf {
+        Traversal.bfsHops(edges, seeds.toDF("node"), MaxHops)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
+      info(s"aqe=$aqe partitions=$p: $jobs jobs, $levels levels")
+      assert(got == expect, s"aqe=$aqe partitions=$p")
+      assert(jobs <= JobsPerRound * levels,
+        s"aqe=$aqe partitions=$p: $jobs jobs for $levels levels")
+    }
+  }
+}

@@ -82,4 +82,29 @@ class TrussPeelSpec extends SparkSpec {
       .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSet
     assert(got == expect.toSet, s"$got vs $expect")
   }
+
+  test("decrement peel with ids near 2^62 equals the census of the unshifted graph") {
+    import spark.implicits._
+    // a clique core that survives k = 5 (so later rounds take the
+    // decrement branch) plus pendant wedges that peel off in round 1;
+    // the canonical triangle id must not sum ids, whose sum overflows
+    // a long near 2^62 and throws under ANSI arithmetic
+    val core = (for { a <- 0L until 8L; b <- a + 1 until 8L } yield (a, b)).toVector
+    val tail = Vector((0L, 100L), (1L, 100L), (2L, 101L), (100L, 101L), (3L, 102L))
+    def bothDir(off: Long) = (core ++ tail).flatMap { case (a, b) =>
+      Vector((a + off, b + off), (b + off, a + off)) }.toDF("src", "dst")
+    def census(off: Long): Seq[(Long, Long, Long)] =
+      graft.operators.Triangles.kTrussConvergedCensus(bothDir(off), 5, maxRounds = 8)
+        .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).sorted.toSeq
+    val off = 1L << 62
+    val plain = census(0L)
+    assert(plain.size >= 3, s"the peel should run past round 1: $plain")
+    assert(census(off) == plain)
+    // the decrement round itself, against full re-enumeration, shifted
+    val und = bothDir(off).filter(col("src") < col("dst"))
+      .select(col("src").as("u"), col("dst").as("v"))
+    val keep = graft.operators.Triangles.edgeSupport(bothDir(off)).filter(col("sup") >= 3)
+    assert(supSet(graft.operators.Triangles.peelRoundSupport(und, keep, decrement = true)) ==
+      supSet(graft.operators.Triangles.peelRoundSupport(und, keep, decrement = false)))
+  }
 }
