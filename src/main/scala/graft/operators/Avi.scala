@@ -2,12 +2,11 @@ package graft.operators
 
 import java.io.ByteArrayOutputStream
 
-/** Zero-dependency RIFF/AVI container codec for MJPEG video — the
-  * r11 verdict's "close the video gap honestly" path: MJPEG-in-AVI is
-  * pure byte layout (Microsoft's public AVI RIFF File Reference) over
-  * per-frame JPEG streams, so demux + the existing [[Jpeg]] decoder
-  * yields REAL video-frame decode end-to-end, no codec stubs. H.264
-  * and other entropy-coded inter-frame codecs remain out of scope
+/** Hand-written RIFF/AVI container codec for MJPEG video.
+  * MJPEG-in-AVI is pure byte layout (Microsoft's public AVI RIFF File
+  * Reference) over per-frame JPEG streams, so demux + the [[Jpeg]]
+  * decoder yields REAL video-frame decode end-to-end, no codec stubs.
+  * H.264 and other entropy-coded inter-frame codecs remain out of scope
   * (documented in [[Multimodal]]); MJPEG is the intra-frame format
   * surveillance/capture pipelines actually emit, and it exercises the
   * same demux→decode→fingerprint plumbing any codec would ride.

@@ -1,1217 +1,85 @@
 package graft.operators
 
-/** Zero-dependency BASELINE JPEG codec (ITU-T T.81 sequential DCT,
-  * 8-bit). Closes the "real-corpus images are JPEG" gap the same way
-  * the PNG/BMP/WAV decoders did: honest byte-layout parsing, no
-  * library. The container stays an opaque `binary` column Spark-side;
-  * this codec runs inside the `Multimodal.decode` mapPartitions stage.
+import java.awt.image.BufferedImage
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+import javax.imageio.{IIOImage, ImageIO, ImageReader, ImageWriteParam}
+import javax.imageio.event.IIOReadWarningListener
+import javax.imageio.stream.{MemoryCacheImageInputStream, MemoryCacheImageOutputStream}
+import scala.util.control.NonFatal
+
+/** JPEG codec over the JDK's `javax.imageio` JPEG reader and writer.
+  * The container stays an opaque `binary` column Spark-side; this
+  * codec runs inside the `Multimodal.decode` mapPartitions stage, so
+  * `decode` must never throw: an escaped exception fails the stage.
   *
-  * Decoder: general baseline AND progressive — arbitrary DQT
-  * (8/16-bit) and DHT tables, SOF0/SOF1 sequential frames, SOF2
-  * progressive frames (spectral selection + successive approximation,
-  * T.81 G.2: interleaved/non-interleaved DC scans, per-component AC
-  * scans with EOB runs, DC/AC refinement passes), 1- or 3-component
-  * scans, any sampling factors up to 4 (covers 4:4:4, 4:2:2 and the
-  * ubiquitous 4:2:0), restart intervals, FF00 byte unstuffing,
-  * nearest-neighbor chroma upsampling and the standard YCbCr→RGB
-  * transform. Lossless and arithmetic-coded frames return None (the
-  * dispatcher falls back to the deterministic stub rather than
-  * mis-decoding).
-  *
-  * Encoder: the fixture/round-trip side — 4:4:4 (or single-component
-  * grayscale), Annex K quantization tables, and deliberately SIMPLE
-  * legal Huffman tables (all 12 DC symbols at 4 bits, all 162 AC
-  * symbols at 9 bits — canonical, decodable by any conformant
-  * decoder, a few percent larger than Annex K's optimized tables).
-  * `encode` emits baseline; `encodeProgressive` emits a fixed 5-phase
-  * progressive scan script that exercises BOTH progressive mechanisms
-  * (spectral bands 1–5/6–63 at Al=1, then a full AC refinement pass
-  * and a DC refinement pass to Al=0). Both halves are pure functions
-  * of their bytes, so every declared audit over them is deterministic.
-  *
-  * JPEG is lossy: decoders may differ by a few counts per sample
-  * (IDCT precision is only bounded, not pinned, by the spec), so the
-  * cross-decoder tests assert closeness, not equality — unlike the
-  * bit-exact PNG/BMP contracts.
+  * Readers and writers are made per call over in-memory streams and
+  * disposed, so no call touches ImageIO's temp-file cache or shares
+  * codec state across tasks. JPEG is lossy: tests assert closeness to
+  * the source samples, not equality.
   */
 object Jpeg {
 
-  /** zigzag index -> natural (row-major) index, T.81 figure A.6. */
-  private val ZigZag: Array[Int] = Array(
-    0, 1, 8, 16, 9, 2, 3, 10,
-    17, 24, 32, 25, 18, 11, 4, 5,
-    12, 19, 26, 33, 40, 48, 41, 34,
-    27, 20, 13, 6, 7, 14, 21, 28,
-    35, 42, 49, 56, 57, 50, 43, 36,
-    29, 22, 15, 23, 30, 37, 44, 51,
-    58, 59, 52, 45, 38, 31, 39, 46,
-    53, 60, 61, 54, 47, 55, 62, 63)
-
-  /** Annex K table K.1 (luminance) in natural order. */
-  private val QLuma: Array[Int] = Array(
-    16, 11, 10, 16, 24, 40, 51, 61,
-    12, 12, 14, 19, 26, 58, 60, 55,
-    14, 13, 16, 24, 40, 57, 69, 56,
-    14, 17, 22, 29, 51, 87, 80, 62,
-    18, 22, 37, 56, 68, 109, 103, 77,
-    24, 35, 55, 64, 81, 104, 113, 92,
-    49, 64, 78, 87, 103, 121, 120, 101,
-    72, 92, 95, 98, 112, 100, 103, 99)
-
-  /** Annex K table K.2 (chrominance) in natural order. */
-  private val QChroma: Array[Int] = Array(
-    17, 18, 24, 47, 99, 99, 99, 99,
-    18, 21, 26, 66, 99, 99, 99, 99,
-    24, 26, 56, 99, 99, 99, 99, 99,
-    47, 66, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99)
-
-  // ------------------------------------------------------------------
-  // decoder
-  // ------------------------------------------------------------------
-
-  private final class HuffTable(counts: Array[Int], symbols: Array[Byte]) {
-    // Annex F canonical decode arrays, 1-indexed by code length
-    val minCode = new Array[Int](17)
-    val maxCode = new Array[Int](17)
-    val valPtr = new Array[Int](17)
-    locally {
-      var code = 0
-      var k = 0
-      var l = 1
-      while (l <= 16) {
-        valPtr(l) = k
-        minCode(l) = code
-        code += counts(l - 1)
-        k += counts(l - 1)
-        maxCode(l) = code - 1
-        if (counts(l - 1) == 0) maxCode(l) = -1
-        code <<= 1
-        l += 1
-      }
-    }
-    def symbol(idx: Int): Int = symbols(idx) & 0xff
-  }
-
-  /** Entropy-segment bit reader: FF00 unstuffing; hitting any real
-    * marker ends the bit stream (restarts are consumed explicitly). */
-  private final class BitReader(data: Array[Byte], var pos: Int) {
-    private var bitBuf = 0
-    private var bitCnt = 0
-    def bit(): Int = {
-      if (bitCnt == 0) {
-        if (pos >= data.length) throw new IllegalArgumentException("jpeg: eof in scan")
-        var b = data(pos) & 0xff
-        pos += 1
-        if (b == 0xff) {
-          val m = if (pos < data.length) data(pos) & 0xff else -1
-          if (m == 0x00) pos += 1 // stuffed FF data byte
-          else throw new IllegalArgumentException("jpeg: marker in scan")
-          b = 0xff
-        }
-        bitBuf = b; bitCnt = 8
-      }
-      bitCnt -= 1
-      (bitBuf >> bitCnt) & 1
-    }
-    def bits(n: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < n) { v = (v << 1) | bit(); i += 1 }
-      v
-    }
-    def decode(t: HuffTable): Int = {
-      var code = bit()
-      var l = 1
-      while (l <= 16) {
-        if (t.maxCode(l) >= 0 && code <= t.maxCode(l))
-          return t.symbol(t.valPtr(l) + code - t.minCode(l))
-        code = (code << 1) | bit()
-        l += 1
-      }
-      throw new IllegalArgumentException("jpeg: bad huffman code")
-    }
-    /** Byte-align and consume the expected RSTn marker. */
-    def restart(n: Int): Unit = {
-      bitCnt = 0
-      if (pos + 1 >= data.length || (data(pos) & 0xff) != 0xff ||
-        (data(pos + 1) & 0xff) != (0xd0 + n))
-        throw new IllegalArgumentException("jpeg: missing restart marker")
-      pos += 2
-    }
-  }
-
-  /** EXTEND (T.81 F.2.2.1): map a t-bit magnitude to its signed value. */
-  private def extend(v: Int, t: Int): Int =
-    if (t == 0) 0 else if (v < (1 << (t - 1))) v - (1 << t) + 1 else v
-
-  private final case class Component(id: Int, h: Int, v: Int, tq: Int) {
-    var dcTab: HuffTable = _
-    var acTab: HuffTable = _
-    var pred: Int = 0
-    var plane: Array[Int] = _
-    var planeW: Int = 0
-    var planeH: Int = 0
-    // progressive state: full-precision coefficients accumulated
-    // across scans, on the padded MCU block grid (blocksW × blocksH)
-    var coefs: Array[Int] = _
-    var blocksW: Int = 0
-    var blocksH: Int = 0
-  }
-
-  /** cosTab(x)(u) = cos((2x+1)·u·π/16) — shared by FDCT and IDCT. */
-  private val cosTab: Array[Array[Double]] =
-    Array.tabulate(8, 8)((x, u) => math.cos((2 * x + 1) * u * math.Pi / 16))
-  /** Normalization c(0)=√½, else 1. */
-  private val cNorm: Array[Double] =
-    Array.tabulate(8)(i => if (i == 0) math.sqrt(0.5) else 1.0)
-
-  /** Separable double-precision IDCT on one dequantized 8×8 block
-    * (natural order), output level-shifted to 0..255. */
-  private def idct(in: Array[Double], out: Array[Int]): Unit = {
-    val tmp = new Array[Double](64)
-    val c = cNorm
-    // rows
-    var y = 0
-    while (y < 8) {
-      var x = 0
-      while (x < 8) {
-        var s = 0.0
-        var u = 0
-        while (u < 8) {
-          s += c(u) * in(y * 8 + u) * cosTab(x)(u)
-          u += 1
-        }
-        tmp(y * 8 + x) = s / 2
-        x += 1
-      }
-      y += 1
-    }
-    // columns
-    var x = 0
-    while (x < 8) {
-      y = 0
-      while (y < 8) {
-        var s = 0.0
-        var v = 0
-        while (v < 8) {
-          s += c(v) * tmp(v * 8 + x) * cosTab(y)(v)
-          v += 1
-        }
-        val px = math.round(s / 2 + 128).toInt
-        out(y * 8 + x) = if (px < 0) 0 else if (px > 255) 255 else px
-        y += 1
-      }
-      x += 1
-    }
-  }
-
-  /** Decode a baseline or progressive JPEG. 3-component output is
-    * r,g,b per pixel (top-down row-major); 1-component output is one
-    * gray sample per pixel. None for lossless/arithmetic/malformed
-    * payloads. */
+  /** Decode a baseline or progressive JPEG. 3-band output is r,g,b per
+    * pixel (top-down row-major); 1-band output is one gray sample per
+    * pixel. None for non-JPEG payloads, declared sizes over 2^24 pixels
+    * (checked from the header, before any pixel buffer exists), any
+    * reader warning (truncated or corrupt data), any reader error
+    * (e.g. arithmetic-coded SOF9) and band counts other than 1 or 3. */
   def decode(p: Array[Byte]): Option[Array[Int]] = {
     if (p.length < 4 || (p(0) & 0xff) != 0xff || (p(1) & 0xff) != 0xd8 ||
       (p(2) & 0xff) != 0xff) return None
-    try decodeInner(p) catch { case _: Exception => None }
-  }
-
-  private def decodeInner(p: Array[Byte]): Option[Array[Int]] = {
-    def u16(o: Int): Int = ((p(o) & 0xff) << 8) | (p(o + 1) & 0xff)
-    val qt = new Array[Array[Int]](4)
-    val dcT = new Array[HuffTable](4)
-    val acT = new Array[HuffTable](4)
-    var comps: Array[Component] = null
-    var w = 0
-    var h = 0
-    var ri = 0 // restart interval (MCUs)
-    var progressive = false
-    var scanned = false
-    var pos = 2
-    while (pos < p.length) {
-      if ((p(pos) & 0xff) != 0xff) throw new IllegalArgumentException("jpeg: lost marker sync")
-      val marker = p(pos + 1) & 0xff
-      if (marker == 0xff) { pos += 1 } // fill byte (T.81 B.1.1.2): skip
-      else if (marker == 0xd8 || (marker >= 0xd0 && marker <= 0xd7)) { pos += 2 }
-      else if (marker == 0xd9) // EOI: done iff a progressive frame's scans landed
-        return if (progressive && scanned)
-          Some(assembleProgressive(comps, qt, w, h))
-        else None
+    val reader = ImageIO.getImageReadersByFormatName("jpeg").next()
+    val in = new MemoryCacheImageInputStream(new ByteArrayInputStream(p))
+    var warned = false
+    reader.addIIOReadWarningListener(new IIOReadWarningListener {
+      def warningOccurred(r: ImageReader, warning: String): Unit = warned = true
+    })
+    try {
+      reader.setInput(in, true, true)
+      val (w, h) = (reader.getWidth(0), reader.getHeight(0))
+      if (w.toLong * h > (1L << 24)) None
       else {
-        val len = u16(pos + 2)
-        val seg = pos + 4
-        val segEnd = pos + 2 + len
-        marker match {
-          case 0xdb => // DQT: one or more tables
-            var o = seg
-            while (o < segEnd) {
-              val pq = (p(o) & 0xf0) >> 4
-              val tq = p(o) & 0x0f
-              val tab = new Array[Int](64)
-              var i = 0
-              while (i < 64) {
-                tab(ZigZag(i)) =
-                  if (pq == 0) p(o + 1 + i) & 0xff
-                  else u16(o + 1 + 2 * i)
-                i += 1
-              }
-              qt(tq) = tab
-              o += 1 + (if (pq == 0) 64 else 128)
-            }
-          case 0xc4 => // DHT: one or more tables
-            var o = seg
-            while (o < segEnd) {
-              val tc = (p(o) & 0xf0) >> 4
-              val th = p(o) & 0x0f
-              val counts = Array.tabulate(16)(i => p(o + 1 + i) & 0xff)
-              val n = counts.sum
-              val symbols = java.util.Arrays.copyOfRange(p, o + 17, o + 17 + n)
-              val t = new HuffTable(counts, symbols)
-              if (tc == 0) dcT(th) = t else acT(th) = t
-              o += 17 + n
-            }
-          case 0xc0 | 0xc1 | 0xc2 => // SOF0/SOF1 sequential, SOF2 progressive
-            progressive = marker == 0xc2
-            if ((p(seg) & 0xff) != 8) return None // 8-bit only
-            h = u16(seg + 1); w = u16(seg + 3)
-            val nc = p(seg + 5) & 0xff
-            if (w <= 0 || h <= 0 || (nc != 1 && nc != 3)) return None
-            // allocation bomb guard: a ~30-byte payload can DECLARE
-            // 65535×65535 and would otherwise size multi-GB planes
-            // (and w*h would overflow Int downstream) before any
-            // entropy data is read. 2^24 pixels (16 MP) is far above
-            // any fixture and keeps every buffer comfortably Int-sized.
-            if (w.toLong * h > (1L << 24)) return None
-            comps = Array.tabulate(nc) { i =>
-              val o = seg + 6 + 3 * i
-              val hv = p(o + 1) & 0xff
-              Component(p(o) & 0xff, (hv >> 4) & 0xf, hv & 0xf, p(o + 2) & 0x0f)
-            }
-            if (comps.exists(c => c.h < 1 || c.h > 4 || c.v < 1 || c.v > 4)) return None
-          case 0xc3 | 0xc5 | 0xc6 | 0xc7 | 0xc9 | 0xca | 0xcb |
-               0xcd | 0xce | 0xcf =>
-            return None // lossless/arithmetic/hierarchical: unsupported
-          case 0xdd => ri = u16(seg)
-          case 0xda => // SOS
-            if (comps == null) return None
-            if (progressive) {
-              // one of many scans: decode it, resync past its entropy
-              // data, keep walking markers until EOI
-              pos = decodeProgScan(p, seg, comps, dcT, acT, w, h, ri)
-              scanned = true
-            } else {
-              val ns = p(seg) & 0xff
-              var i = 0
-              while (i < ns) {
-                val cid = p(seg + 1 + 2 * i) & 0xff
-                val tt = p(seg + 2 + 2 * i) & 0xff
-                val c = comps.find(_.id == cid)
-                  .getOrElse(throw new IllegalArgumentException("jpeg: scan comp"))
-                c.dcTab = dcT((tt >> 4) & 0xf)
-                c.acTab = acT(tt & 0xf)
-                if (c.dcTab == null || c.acTab == null)
-                  throw new IllegalArgumentException("jpeg: missing huff table")
-                i += 1
-              }
-              return Some(decodeScan(p, seg + 1 + 2 * ns + 3, comps, qt, w, h, ri))
-            }
-          case _ => () // APPn / COM / others: skip
-        }
-        if (marker != 0xda) pos = segEnd
+        val raster = reader.read(0).getRaster
+        val bands = raster.getNumBands
+        if (warned || (bands != 1 && bands != 3)) None
+        else Some(raster.getPixels(0, 0, w, h, null: Array[Int]))
       }
-    }
-    None
-  }
-
-  private def decodeScan(p: Array[Byte], scanStart: Int,
-      comps: Array[Component], qt: Array[Array[Int]],
-      w: Int, h: Int, ri: Int): Array[Int] = {
-    val hMax = comps.map(_.h).max
-    val vMax = comps.map(_.v).max
-    val mcusX = (w + 8 * hMax - 1) / (8 * hMax)
-    val mcusY = (h + 8 * vMax - 1) / (8 * vMax)
-    comps.foreach { c =>
-      c.planeW = mcusX * c.h * 8
-      c.planeH = mcusY * c.v * 8
-      c.plane = new Array[Int](c.planeW * c.planeH)
-      c.pred = 0
-      if (qt(c.tq) == null) throw new IllegalArgumentException("jpeg: missing quant table")
-    }
-    val r = new BitReader(p, scanStart)
-    val coef = new Array[Double](64)
-    val px = new Array[Int](64)
-    var mcu = 0
-    var rstN = 0
-    val nMcus = mcusX * mcusY
-    while (mcu < nMcus) {
-      if (ri > 0 && mcu > 0 && mcu % ri == 0) {
-        r.restart(rstN)
-        rstN = (rstN + 1) & 7
-        comps.foreach(_.pred = 0)
-      }
-      val mx = mcu % mcusX
-      val my = mcu / mcusX
-      comps.foreach { c =>
-        val q = qt(c.tq)
-        var bv = 0
-        while (bv < c.v) {
-          var bh = 0
-          while (bh < c.h) {
-            // one 8x8 block
-            java.util.Arrays.fill(coef, 0.0)
-            val tDc = r.decode(c.dcTab)
-            val diff = extend(r.bits(tDc), tDc)
-            c.pred += diff
-            coef(0) = c.pred.toDouble * q(0)
-            var k = 1
-            while (k < 64) {
-              val rs = r.decode(c.acTab)
-              val run = (rs >> 4) & 0xf
-              val size = rs & 0xf
-              if (size == 0) {
-                if (run == 15) k += 16 // ZRL
-                else k = 64 // EOB
-              } else {
-                k += run
-                if (k > 63) throw new IllegalArgumentException("jpeg: coef overflow")
-                coef(ZigZag(k)) = extend(r.bits(size), size).toDouble * q(ZigZag(k))
-                k += 1
-              }
-            }
-            idct(coef, px)
-            val ox = (mx * c.h + bh) * 8
-            val oy = (my * c.v + bv) * 8
-            var yy = 0
-            while (yy < 8) {
-              var xx = 0
-              while (xx < 8) {
-                c.plane((oy + yy) * c.planeW + ox + xx) = px(yy * 8 + xx)
-                xx += 1
-              }
-              yy += 1
-            }
-            bh += 1
-          }
-          bv += 1
-        }
-      }
-      mcu += 1
-    }
-    assemble(comps, w, h, hMax, vMax)
-  }
-
-  /** Upsample (nearest) + color transform decoded planes into the
-    * output sample array — shared by the sequential and progressive
-    * paths. */
-  private def assemble(comps: Array[Component], w: Int, h: Int,
-      hMax: Int, vMax: Int): Array[Int] = {
-    if (comps.length == 1) {
-      val c = comps(0)
-      val out = new Array[Int](w * h)
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) { out(y * w + x) = c.plane(y * c.planeW + x); x += 1 }
-        y += 1
-      }
-      out
-    } else {
-      val Array(cy, cb, cr) = comps
-      val out = new Array[Int](w * h * 3)
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          def s(c: Component): Int =
-            c.plane((y * c.v / vMax) * c.planeW + (x * c.h / hMax))
-          val yv = s(cy).toDouble
-          val cbv = s(cb) - 128.0
-          val crv = s(cr) - 128.0
-          def clamp(d: Double): Int = {
-            val v = math.round(d).toInt
-            if (v < 0) 0 else if (v > 255) 255 else v
-          }
-          val o = (y * w + x) * 3
-          out(o) = clamp(yv + 1.402 * crv)
-          out(o + 1) = clamp(yv - 0.344136 * cbv - 0.714136 * crv)
-          out(o + 2) = clamp(yv + 1.772 * cbv)
-          x += 1
-        }
-        y += 1
-      }
-      out
-    }
-  }
-
-  // ------------------------------------------------------------------
-  // progressive decoding (T.81 G.2)
-  // ------------------------------------------------------------------
-
-  /** Decode ONE progressive scan starting at its SOS payload (`seg`):
-    * spectral band [ss, se], successive approximation ah→al.
-    * Coefficients accumulate into each component's full-precision
-    * `coefs` grid; returns the position of the next marker after the
-    * scan's entropy-coded data. */
-  private def decodeProgScan(p: Array[Byte], seg: Int, comps: Array[Component],
-      dcT: Array[HuffTable], acT: Array[HuffTable],
-      w: Int, h: Int, ri: Int): Int = {
-    val hMax = comps.map(_.h).max
-    val vMax = comps.map(_.v).max
-    val mcusX = (w + 8 * hMax - 1) / (8 * hMax)
-    val mcusY = (h + 8 * vMax - 1) / (8 * vMax)
-    comps.foreach { c =>
-      if (c.coefs == null) {
-        c.blocksW = mcusX * c.h
-        c.blocksH = mcusY * c.v
-        c.coefs = new Array[Int](c.blocksW * c.blocksH * 64)
-        c.pred = 0
-      }
-    }
-    val ns = p(seg) & 0xff
-    val scanComps = Array.tabulate(ns) { i =>
-      val cid = p(seg + 1 + 2 * i) & 0xff
-      val tt = p(seg + 2 + 2 * i) & 0xff
-      val c = comps.find(_.id == cid)
-        .getOrElse(throw new IllegalArgumentException("jpeg: scan comp"))
-      c.dcTab = dcT((tt >> 4) & 0xf) // may be null: refinement needs no table
-      c.acTab = acT(tt & 0xf)
-      c
-    }
-    val o = seg + 1 + 2 * ns
-    val ss = p(o) & 0xff
-    val se = p(o + 1) & 0xff
-    val ah = (p(o + 2) & 0xf0) >> 4
-    val al = p(o + 2) & 0x0f
-    if (ss > 63 || se > 63 || se < ss)
-      throw new IllegalArgumentException("jpeg: bad spectral band")
-    val r = new BitReader(p, o + 3)
-    var eobrun = 0
-    var rstN = 0
-
-    def dcBlock(c: Component, off: Int): Unit =
-      if (ah == 0) { // first DC scan: usual DIFF decode at Al precision
-        if (c.dcTab == null)
-          throw new IllegalArgumentException("jpeg: missing huff table")
-        val t = r.decode(c.dcTab)
-        c.pred += extend(r.bits(t), t)
-        c.coefs(off) = c.pred << al
-      } else { // refinement: one raw bit appends bit Al
-        if (r.bit() == 1) c.coefs(off) |= 1 << al
-      }
-
-    def acFirst(c: Component, off: Int): Unit = {
-      if (eobrun > 0) { eobrun -= 1; return }
-      var k = ss
-      while (k <= se) {
-        val rs = r.decode(c.acTab)
-        val run = (rs >> 4) & 0xf
-        val size = rs & 0xf
-        if (size == 0) {
-          if (run == 15) k += 16 // ZRL
-          else { // EOBn: 2^run - 1 + extra MORE all-zero bands
-            eobrun = (1 << run) - 1
-            if (run > 0) eobrun += r.bits(run)
-            return
-          }
-        } else {
-          k += run
-          if (k > se) throw new IllegalArgumentException("jpeg: band overflow")
-          c.coefs(off + ZigZag(k)) = extend(r.bits(size), size) << al
-          k += 1
-        }
-      }
-    }
-
-    /** AC refinement (T.81 G.2 / the libjpeg-documented algorithm):
-      * already-nonzero coefficients absorb correction bits as the
-      * cursor passes them (they do NOT count against zero runs);
-      * (run, 1) symbols place newly-significant ±2^Al values after
-      * `run` still-zero positions; an EOB run refines the remaining
-      * nonzero coefficients of each covered band. */
-    def acRefine(c: Component, off: Int): Unit = {
-      val p1 = 1 << al
-      val m1 = -1 << al
-      def correct(z: Int): Unit =
-        if (r.bit() == 1 && (c.coefs(z) & p1) == 0)
-          c.coefs(z) += (if (c.coefs(z) >= 0) p1 else m1)
-      var k = ss
-      if (eobrun == 0) {
-        var done = false
-        while (k <= se && !done) {
-          val rs = r.decode(c.acTab)
-          var run = (rs >> 4) & 0xf
-          val size = rs & 0xf
-          var newVal = 0
-          if (size == 0) {
-            if (run < 15) {
-              // EOBn INCLUDING this block: refine the rest of this
-              // band below, then eobrun-1 further whole bands
-              eobrun = 1 << run
-              if (run > 0) eobrun += r.bits(run)
-              done = true
-            } // run == 15: ZRL — pass 16 still-zero positions
-          } else {
-            if (size != 1)
-              throw new IllegalArgumentException("jpeg: bad refine size")
-            newVal = if (r.bit() == 1) p1 else m1
-          }
-          if (!done) {
-            var placed = false
-            while (k <= se && !placed) {
-              val z = off + ZigZag(k)
-              if (c.coefs(z) != 0) correct(z)
-              else if (run == 0) {
-                if (newVal != 0) c.coefs(z) = newVal
-                placed = true
-              } else run -= 1
-              k += 1
-            }
-          }
-        }
-      }
-      if (eobrun > 0) {
-        while (k <= se) {
-          val z = off + ZigZag(k)
-          if (c.coefs(z) != 0) correct(z)
-          k += 1
-        }
-        eobrun -= 1
-      }
-    }
-
-    def acBlock(c: Component, off: Int): Unit =
-      if (ah == 0) acFirst(c, off) else acRefine(c, off)
-
-    if (ss == 0) { // DC scan
-      if (se != 0) throw new IllegalArgumentException("jpeg: bad DC band")
-      if (ns > 1) { // interleaved over the frame's MCU grid
-        var mcu = 0
-        val n = mcusX * mcusY
-        while (mcu < n) {
-          if (ri > 0 && mcu > 0 && mcu % ri == 0) {
-            r.restart(rstN); rstN = (rstN + 1) & 7
-            scanComps.foreach(_.pred = 0)
-          }
-          val mx = mcu % mcusX
-          val my = mcu / mcusX
-          scanComps.foreach { c =>
-            var bv = 0
-            while (bv < c.v) {
-              var bh = 0
-              while (bh < c.h) {
-                dcBlock(c, ((my * c.v + bv) * c.blocksW + mx * c.h + bh) * 64)
-                bh += 1
-              }
-              bv += 1
-            }
-          }
-          mcu += 1
-        }
-      } else { // single component: raster over ITS block grid
-        val c = scanComps(0)
-        val nbX = (w * c.h + 8 * hMax - 1) / (8 * hMax)
-        val nbY = (h * c.v + 8 * vMax - 1) / (8 * vMax)
-        var b = 0
-        val n = nbX * nbY
-        while (b < n) {
-          if (ri > 0 && b > 0 && b % ri == 0) {
-            r.restart(rstN); rstN = (rstN + 1) & 7; c.pred = 0
-          }
-          dcBlock(c, ((b / nbX) * c.blocksW + b % nbX) * 64)
-          b += 1
-        }
-      }
-    } else { // AC scan: exactly one component (T.81 B.2.3)
-      if (ns != 1) throw new IllegalArgumentException("jpeg: interleaved AC scan")
-      val c = scanComps(0)
-      if (ah == 0 && c.acTab == null)
-        throw new IllegalArgumentException("jpeg: missing huff table")
-      val nbX = (w * c.h + 8 * hMax - 1) / (8 * hMax)
-      val nbY = (h * c.v + 8 * vMax - 1) / (8 * vMax)
-      var b = 0
-      val n = nbX * nbY
-      while (b < n) {
-        if (ri > 0 && b > 0 && b % ri == 0) {
-          r.restart(rstN); rstN = (rstN + 1) & 7; eobrun = 0
-        }
-        acBlock(c, ((b / nbX) * c.blocksW + b % nbX) * 64)
-        b += 1
-      }
-    }
-    // resync: skip to the next real marker after the entropy data
-    var q = r.pos
-    while (q + 1 < p.length &&
-      !((p(q) & 0xff) == 0xff && (p(q + 1) & 0xff) != 0x00 &&
-        (p(q + 1) & 0xff) != 0xff)) q += 1
-    q
-  }
-
-  /** Dequantize + IDCT every accumulated progressive block, then the
-    * shared upsample/color-transform assembly. */
-  private def assembleProgressive(comps: Array[Component],
-      qt: Array[Array[Int]], w: Int, h: Int): Array[Int] = {
-    val hMax = comps.map(_.h).max
-    val vMax = comps.map(_.v).max
-    val coef = new Array[Double](64)
-    val px = new Array[Int](64)
-    comps.foreach { c =>
-      val q = qt(c.tq)
-      if (q == null || c.coefs == null)
-        throw new IllegalArgumentException("jpeg: missing quant table or scan")
-      c.planeW = c.blocksW * 8
-      c.planeH = c.blocksH * 8
-      c.plane = new Array[Int](c.planeW * c.planeH)
-      var by = 0
-      while (by < c.blocksH) {
-        var bx = 0
-        while (bx < c.blocksW) {
-          val off = (by * c.blocksW + bx) * 64
-          var i = 0
-          while (i < 64) { coef(i) = c.coefs(off + i).toDouble * q(i); i += 1 }
-          idct(coef, px)
-          var yy = 0
-          while (yy < 8) {
-            var xx = 0
-            while (xx < 8) {
-              c.plane((by * 8 + yy) * c.planeW + bx * 8 + xx) = px(yy * 8 + xx)
-              xx += 1
-            }
-            yy += 1
-          }
-          bx += 1
-        }
-        by += 1
-      }
-    }
-    assemble(comps, w, h, hMax, vMax)
-  }
-
-  // ------------------------------------------------------------------
-  // encoder
-  // ------------------------------------------------------------------
-
-  private final class BitWriter {
-    private val out = new java.io.ByteArrayOutputStream()
-    private var buf = 0
-    private var cnt = 0
-    def put(v: Int, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        buf = (buf << 1) | ((v >> i) & 1)
-        cnt += 1
-        if (cnt == 8) {
-          out.write(buf & 0xff)
-          if ((buf & 0xff) == 0xff) out.write(0x00) // stuffing
-          buf = 0; cnt = 0
-        }
-        i -= 1
-      }
-    }
-    def flush(): Array[Byte] = {
-      while (cnt != 0) put(1, 1) // pad with 1s
-      out.toByteArray
-    }
-    /** Byte-align (1-padded) and emit a raw marker — markers are never
-      * byte-stuffed (T.81 B.1.1.2). */
-    def marker(m: Int): Unit = {
-      while (cnt != 0) put(1, 1)
-      out.write(0xff); out.write(m)
-    }
-  }
-
-  /** The encoder's deliberately simple tables (see object doc). */
-  private val DcLen = 4 // 12 symbols
-  private val AcLen = 9 // 162 symbols
-  private val AcSymbols: Array[Int] = {
-    // all (run, size) pairs with size 1..10, plus EOB (0x00) and ZRL (0xF0)
-    val b = scala.collection.mutable.ArrayBuffer[Int](0x00)
-    for (run <- 0 to 15; size <- 1 to 10) b += ((run << 4) | size)
-    b += 0xf0
-    b.toArray.distinct.sorted
-  }
-  private val AcCodeOf: Map[Int, Int] =
-    AcSymbols.zipWithIndex.map { case (s, i) => s -> i }.toMap
-
-  private def fdct(in: Array[Double], out: Array[Double]): Unit = {
-    val c = cNorm
-    val tmp = new Array[Double](64)
-    var u = 0
-    while (u < 8) { // rows
-      var y = 0
-      while (y < 8) {
-        var s = 0.0
-        var x = 0
-        while (x < 8) {
-          s += in(y * 8 + x) * cosTab(x)(u)
-          x += 1
-        }
-        tmp(y * 8 + u) = s * c(u) / 2
-        y += 1
-      }
-      u += 1
-    }
-    var v = 0
-    while (v < 8) { // columns
-      var uu = 0
-      while (uu < 8) {
-        var s = 0.0
-        var y = 0
-        while (y < 8) {
-          s += tmp(y * 8 + uu) * cosTab(y)(v)
-          y += 1
-        }
-        out(v * 8 + uu) = s * c(v) / 2
-        uu += 1
-      }
-      v += 1
-    }
-  }
-
-  private def bitSize(v: Int): Int = {
-    var a = math.abs(v)
-    var n = 0
-    while (a != 0) { a >>= 1; n += 1 }
-    n
-  }
-
-  private def encodeBlock(bw: BitWriter, block: Array[Double],
-      q: Array[Int], pred: Int): Int = {
-    val f = new Array[Double](64)
-    fdct(block, f)
-    val qz = new Array[Int](64)
-    var i = 0
-    while (i < 64) { qz(i) = math.round(f(i) / q(i)).toInt; i += 1 }
-    val dc = qz(0)
-    val diff = dc - pred
-    val t = bitSize(diff)
-    if (t > 11) throw new IllegalArgumentException("jpeg: dc out of range")
-    bw.put(t, DcLen)
-    if (t > 0) bw.put(if (diff < 0) diff + (1 << t) - 1 else diff, t)
-    var k = 1
-    var run = 0
-    while (k < 64) {
-      val v = qz(ZigZag(k))
-      if (v == 0) run += 1
-      else {
-        while (run > 15) { bw.put(AcCodeOf(0xf0), AcLen); run -= 16 }
-        val size = bitSize(v)
-        if (size > 10) throw new IllegalArgumentException("jpeg: ac out of range")
-        bw.put(AcCodeOf((run << 4) | size), AcLen)
-        bw.put(if (v < 0) v + (1 << size) - 1 else v, size)
-        run = 0
-      }
-      k += 1
-    }
-    if (run > 0) bw.put(AcCodeOf(0x00), AcLen) // EOB
-    dc
-  }
-
-  private def dhtSegment(tc: Int, th: Int, n: Int, len: Int,
-      symbols: Array[Int]): Array[Byte] = {
-    val counts = new Array[Byte](16)
-    counts(len - 1) = n.toByte
-    val b = new java.io.ByteArrayOutputStream()
-    b.write(0xff); b.write(0xc4)
-    val l = 2 + 1 + 16 + n
-    b.write((l >> 8) & 0xff); b.write(l & 0xff)
-    b.write((tc << 4) | th)
-    b.write(counts, 0, 16)
-    symbols.foreach(s => b.write(s & 0xff))
-    b.toByteArray
-  }
-
-  private def dqtSegment(id: Int, q: Array[Int]): Array[Byte] = {
-    val b = new java.io.ByteArrayOutputStream()
-    b.write(0xff); b.write(0xdb)
-    b.write(0); b.write(67)
-    b.write(id)
-    var i = 0
-    while (i < 64) { b.write(q(ZigZag(i)) & 0xff); i += 1 }
-    b.toByteArray
-  }
-
-  /** Level-shifted YCbCr (or gray) planes from interleaved samples —
-    * shared by the baseline and progressive encoders. */
-  private def toPlanes(width: Int, height: Int, rgb: Array[Byte],
-      nc: Int): Array[Array[Double]] = {
-    val planes = Array.ofDim[Double](nc, width * height)
-    var i = 0
-    while (i < width * height) {
-      if (nc == 1) planes(0)(i) = (rgb(i) & 0xff) - 128.0
-      else {
-        val r = rgb(3 * i) & 0xff
-        val g = rgb(3 * i + 1) & 0xff
-        val b = rgb(3 * i + 2) & 0xff
-        planes(0)(i) = 0.299 * r + 0.587 * g + 0.114 * b - 128.0
-        planes(1)(i) = -0.168736 * r - 0.331264 * g + 0.5 * b
-        planes(2)(i) = 0.5 * r - 0.418688 * g - 0.081312 * b
-      }
-      i += 1
-    }
-    planes
+    } catch { case NonFatal(_) => None }
+    finally { reader.dispose(); in.close() }
   }
 
   /** Encode interleaved r,g,b bytes (top-down row-major) as a baseline
-    * 4:4:4 JPEG; `gray = true` encodes channel 0 as single-component;
-    * `restartInterval > 0` emits a DRI segment and RSTn markers every
-    * that many MCUs (predictors reset — the error-resilience feature
-    * real camera/web JPEGs carry, and the decoder's restart path's
-    * fixture source). */
-  def encode(width: Int, height: Int, rgb: Array[Byte],
-      gray: Boolean = false, restartInterval: Int = 0): Array[Byte] = {
+    * JPEG at quality 0.5 (the unscaled Annex K tables); `gray = true`
+    * reads one sample per pixel and writes a single-component frame. */
+  def encode(width: Int, height: Int, samples: Array[Byte],
+      gray: Boolean = false): Array[Byte] =
+    write(width, height, samples, gray, progressive = false)
+
+  /** As `encode`, but a progressive (SOF2) stream with the writer's
+    * spectral-selection and successive-approximation scan script. */
+  def encodeProgressive(width: Int, height: Int, samples: Array[Byte],
+      gray: Boolean = false): Array[Byte] =
+    write(width, height, samples, gray, progressive = true)
+
+  private def write(width: Int, height: Int, samples: Array[Byte],
+      gray: Boolean, progressive: Boolean): Array[Byte] = {
     val nc = if (gray) 1 else 3
-    require(rgb.length == width * height * nc,
-      s"need $width*$height*$nc bytes, got ${rgb.length}")
-    require(restartInterval >= 0 && restartInterval <= 0xffff,
-      "restartInterval must fit DRI's 16-bit field") // T.81 B.2.4.4
-    val planes = toPlanes(width, height, rgb, nc)
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(0xff); out.write(0xd8) // SOI
-    out.write(dqtSegment(0, QLuma))
-    if (!gray) out.write(dqtSegment(1, QChroma))
-    // SOF0
-    val sof = new java.io.ByteArrayOutputStream()
-    sof.write(0xff); sof.write(0xc0)
-    val sofLen = 8 + 3 * nc
-    sof.write((sofLen >> 8) & 0xff); sof.write(sofLen & 0xff)
-    sof.write(8)
-    sof.write((height >> 8) & 0xff); sof.write(height & 0xff)
-    sof.write((width >> 8) & 0xff); sof.write(width & 0xff)
-    sof.write(nc)
-    var ci = 0
-    while (ci < nc) {
-      sof.write(ci + 1); sof.write(0x11); sof.write(if (ci == 0) 0 else 1)
-      ci += 1
-    }
-    out.write(sof.toByteArray)
-    out.write(dhtSegment(0, 0, 12, DcLen, Array.tabulate(12)(identity)))
-    out.write(dhtSegment(1, 0, AcSymbols.length, AcLen, AcSymbols))
-    if (!gray) {
-      out.write(dhtSegment(0, 1, 12, DcLen, Array.tabulate(12)(identity)))
-      out.write(dhtSegment(1, 1, AcSymbols.length, AcLen, AcSymbols))
-    }
-    // SOS
-    val sos = new java.io.ByteArrayOutputStream()
-    sos.write(0xff); sos.write(0xda)
-    val sosLen = 6 + 2 * nc
-    sos.write((sosLen >> 8) & 0xff); sos.write(sosLen & 0xff)
-    sos.write(nc)
-    ci = 0
-    while (ci < nc) {
-      sos.write(ci + 1); sos.write(if (ci == 0) 0x00 else 0x11)
-      ci += 1
-    }
-    sos.write(0); sos.write(63); sos.write(0)
-    // DRI precedes SOS (T.81 B.2.4.4); RSTn markers ride in the
-    // entropy stream every restartInterval MCUs
-    if (restartInterval > 0) {
-      val dri = Array(0xff, 0xdd, 0x00, 0x04,
-        (restartInterval >> 8) & 0xff, restartInterval & 0xff)
-      // insert before SOS: write DRI bytes first
-      val sosBytes = sos.toByteArray
-      dri.foreach(out.write)
-      out.write(sosBytes)
-    } else out.write(sos.toByteArray)
-    // entropy-coded data: 4:4:4 => one block per component per MCU
-    val bw = new BitWriter()
-    val preds = new Array[Int](nc)
-    val block = new Array[Double](64)
-    val bY = (height + 7) / 8
-    val bX = (width + 7) / 8
-    var mcu = 0
-    var rstN = 0
-    var by = 0
-    while (by < bY) {
-      var bx = 0
-      while (bx < bX) {
-        if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-          bw.marker(0xd0 + rstN)
-          rstN = (rstN + 1) & 7
-          java.util.Arrays.fill(preds, 0)
-        }
-        mcu += 1
-        ci = 0
-        while (ci < nc) {
-          var yy = 0
-          while (yy < 8) {
-            var xx = 0
-            while (xx < 8) {
-              val sy = math.min(by * 8 + yy, height - 1)
-              val sx = math.min(bx * 8 + xx, width - 1)
-              block(yy * 8 + xx) = planes(ci)(sy * width + sx)
-              xx += 1
-            }
-            yy += 1
-          }
-          preds(ci) = encodeBlock(bw, block,
-            if (ci == 0) QLuma else QChroma, preds(ci))
-          ci += 1
-        }
-        bx += 1
-      }
-      by += 1
-    }
-    out.write(bw.flush())
-    out.write(0xff); out.write(0xd9) // EOI
-    out.toByteArray
-  }
-
-  // ------------------------------------------------------------------
-  // progressive encoder (fixture side)
-  // ------------------------------------------------------------------
-
-  /** AC point transform: division by 2^al truncating toward zero
-    * (T.81 G.1.2.2 — DC uses the arithmetic shift instead). */
-  private def ptAc(v: Int, al: Int): Int =
-    if (v >= 0) v >> al else -((-v) >> al)
-
-  /** One AC "first scan" block over band [ss, se] at point transform
-    * `al` — baseline-style RLE within the band, per-block EOB0. */
-  private def encodeAcFirstBlock(bw: BitWriter, qz: Array[Int],
-      ss: Int, se: Int, al: Int): Unit = {
-    var k = ss
-    var run = 0
-    while (k <= se) {
-      val v = ptAc(qz(ZigZag(k)), al)
-      if (v == 0) run += 1
-      else {
-        while (run > 15) { bw.put(AcCodeOf(0xf0), AcLen); run -= 16 }
-        val size = bitSize(v)
-        if (size > 10) throw new IllegalArgumentException("jpeg: ac out of range")
-        bw.put(AcCodeOf((run << 4) | size), AcLen)
-        bw.put(if (v < 0) v + (1 << size) - 1 else v, size)
-        run = 0
-      }
-      k += 1
-    }
-    if (run > 0) bw.put(AcCodeOf(0x00), AcLen) // EOB (eobrun = 1)
-  }
-
-  /** One AC REFINEMENT block (ah = al+1 → emit bit `al`), the
-    * T.81 G.1.2.3 algorithm: newly-significant coefficients (|v|>>al
-    * == 1) are coded as (still-zero-run, 1) + sign; already-nonzero
-    * coefficients ride as buffered correction bits flushed after each
-    * symbol; per-block EOB0 covers the tail. */
-  private def encodeAcRefineBlock(bw: BitWriter, qz: Array[Int],
-      ss: Int, se: Int, al: Int): Unit = {
-    val absval = new Array[Int](64)
-    var k = ss
-    var lastNew = ss - 1
-    while (k <= se) {
-      val a = math.abs(qz(ZigZag(k))) >> al
-      absval(k) = a
-      if (a == 1) lastNew = k
-      k += 1
-    }
-    val pending = new scala.collection.mutable.ArrayBuffer[Int]()
-    def flush(): Unit = { pending.foreach(b => bw.put(b, 1)); pending.clear() }
-    var run = 0
-    k = ss
-    while (k <= se) {
-      val a = absval(k)
-      if (a == 0) run += 1
-      else {
-        // ZRLs fire at ANY nonzero-history position once 16 zeros have
-        // passed (unless foldable into the trailing EOB) — this keeps
-        // every buffered correction bit inside the 16-zero window its
-        // symbol covers on the decode side
-        while (run > 15 && k <= lastNew) {
-          bw.put(AcCodeOf(0xf0), AcLen); run -= 16; flush()
-        }
-        if (a > 1) pending += (a & 1) // history-nonzero: correction bit
-        else { // newly significant
-          bw.put(AcCodeOf((run << 4) | 1), AcLen)
-          bw.put(if (qz(ZigZag(k)) < 0) 0 else 1, 1)
-          run = 0
-          flush()
-        }
-      }
-      k += 1
-    }
-    if (run > 0 || pending.nonEmpty) {
-      bw.put(AcCodeOf(0x00), AcLen) // EOB
-      flush()
-    }
-  }
-
-  /** Encode interleaved r,g,b bytes (or gray channel) as a PROGRESSIVE
-    * (SOF2) 4:4:4 JPEG with a fixed five-phase scan script that
-    * exercises BOTH progressive mechanisms:
-    *   1. DC, all components, Ah=0 Al=1 (interleaved when 3-comp)
-    *   2. per component: AC band 1–5,  Ah=0 Al=1 (spectral selection)
-    *   3. per component: AC band 6–63, Ah=0 Al=1
-    *   4. per component: AC band 1–63, Ah=1 Al=0 (AC refinement)
-    *   5. DC refinement, all components, Ah=1 Al=0 (raw bits)
-    * Same deliberately simple Huffman/Annex-K tables as `encode`;
-    * decodable by any conformant decoder (MultimodalSpec pins ImageIO
-    * agreement both ways). */
-  def encodeProgressive(width: Int, height: Int, rgb: Array[Byte],
-      gray: Boolean = false, restartInterval: Int = 0): Array[Byte] = {
-    val nc = if (gray) 1 else 3
-    require(rgb.length == width * height * nc,
-      s"need $width*$height*$nc bytes, got ${rgb.length}")
-    require(restartInterval >= 0 && restartInterval <= 0xffff,
-      "restartInterval must fit DRI's 16-bit field") // T.81 B.2.4.4
-    val planes = toPlanes(width, height, rgb, nc)
-    val bX = (width + 7) / 8
-    val bY = (height + 7) / 8
-    // quantize every block up front (progressive scans revisit them)
-    val qblocks = Array.ofDim[Array[Int]](nc, bX * bY)
-    val block = new Array[Double](64)
-    val f = new Array[Double](64)
-    var ci = 0
-    while (ci < nc) {
-      val q = if (ci == 0) QLuma else QChroma
-      var b = 0
-      while (b < bX * bY) {
-        val by = b / bX
-        val bx = b % bX
-        var yy = 0
-        while (yy < 8) {
-          var xx = 0
-          while (xx < 8) {
-            val sy = math.min(by * 8 + yy, height - 1)
-            val sx = math.min(bx * 8 + xx, width - 1)
-            block(yy * 8 + xx) = planes(ci)(sy * width + sx)
-            xx += 1
-          }
-          yy += 1
-        }
-        fdct(block, f)
-        val qz = new Array[Int](64)
-        var i = 0
-        while (i < 64) { qz(i) = math.round(f(i) / q(i)).toInt; i += 1 }
-        qblocks(ci)(b) = qz
-        b += 1
-      }
-      ci += 1
-    }
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(0xff); out.write(0xd8) // SOI
-    out.write(dqtSegment(0, QLuma))
-    if (!gray) out.write(dqtSegment(1, QChroma))
-    val sof = new java.io.ByteArrayOutputStream()
-    sof.write(0xff); sof.write(0xc2) // SOF2
-    val sofLen = 8 + 3 * nc
-    sof.write((sofLen >> 8) & 0xff); sof.write(sofLen & 0xff)
-    sof.write(8)
-    sof.write((height >> 8) & 0xff); sof.write(height & 0xff)
-    sof.write((width >> 8) & 0xff); sof.write(width & 0xff)
-    sof.write(nc)
-    ci = 0
-    while (ci < nc) {
-      sof.write(ci + 1); sof.write(0x11); sof.write(if (ci == 0) 0 else 1)
-      ci += 1
-    }
-    out.write(sof.toByteArray)
-    out.write(dhtSegment(0, 0, 12, DcLen, Array.tabulate(12)(identity)))
-    out.write(dhtSegment(1, 0, AcSymbols.length, AcLen, AcSymbols))
-    if (!gray) {
-      out.write(dhtSegment(0, 1, 12, DcLen, Array.tabulate(12)(identity)))
-      out.write(dhtSegment(1, 1, AcSymbols.length, AcLen, AcSymbols))
-    }
-    def sos(compIds: Seq[Int], ss: Int, se: Int, ah: Int, al: Int): Unit = {
-      val s = new java.io.ByteArrayOutputStream()
-      s.write(0xff); s.write(0xda)
-      val len = 6 + 2 * compIds.length
-      s.write((len >> 8) & 0xff); s.write(len & 0xff)
-      s.write(compIds.length)
-      compIds.foreach { i =>
-        s.write(i + 1)
-        s.write((if (i == 0) 0x00 else 0x11)) // Td, Ta ids
-      }
-      s.write(ss); s.write(se); s.write((ah << 4) | al)
-      out.write(s.toByteArray)
-    }
-    if (restartInterval > 0) {
-      out.write(0xff); out.write(0xdd); out.write(0); out.write(4)
-      out.write((restartInterval >> 8) & 0xff); out.write(restartInterval & 0xff)
-    }
-    // per-scan restart cadence: byte-align + RSTn every `ri` units
-    // (MCUs for the interleaved DC scans, blocks for the per-component
-    // AC scans), with the per-scan decoder state (DC predictors /
-    // EOB runs) reset — exercising the progressive restart path
-    var bw: BitWriter = null
-    var rstN = 0
-    def restartTick(unit: Int)(reset: => Unit): Unit =
-      if (restartInterval > 0 && unit > 0 && unit % restartInterval == 0) {
-        bw.marker(0xd0 + rstN)
-        rstN = (rstN + 1) & 7
-        reset
-      }
-    // scan 1: DC first, Al=1 (interleaved when 3 components)
-    sos(0 until nc, 0, 0, 0, 1)
-    bw = new BitWriter()
-    rstN = 0
-    val preds = new Array[Int](nc)
-    var b = 0
-    while (b < bX * bY) {
-      restartTick(b) { java.util.Arrays.fill(preds, 0) }
-      ci = 0
-      while (ci < nc) {
-        val dc = qblocks(ci)(b)(0) >> 1 // DC point transform: arithmetic shift
-        val diff = dc - preds(ci)
-        preds(ci) = dc
-        val t = bitSize(diff)
-        if (t > 11) throw new IllegalArgumentException("jpeg: dc out of range")
-        bw.put(t, DcLen)
-        if (t > 0) bw.put(if (diff < 0) diff + (1 << t) - 1 else diff, t)
-        ci += 1
-      }
-      b += 1
-    }
-    out.write(bw.flush())
-    // scans 2–3: AC first passes, Al=1, bands 1–5 then 6–63, per comp
-    Seq((1, 5), (6, 63)).foreach { case (ss, se) =>
-      ci = 0
-      while (ci < nc) {
-        sos(Seq(ci), ss, se, 0, 1)
-        bw = new BitWriter()
-        rstN = 0
-        b = 0
-        while (b < bX * bY) {
-          restartTick(b)(()) // per-block EOBs: no cross-block state to reset
-          encodeAcFirstBlock(bw, qblocks(ci)(b), ss, se, 1)
-          b += 1
-        }
-        out.write(bw.flush())
-        ci += 1
-      }
-    }
-    // scan 4: AC refinement to Al=0, full band, per comp
-    ci = 0
-    while (ci < nc) {
-      sos(Seq(ci), 1, 63, 1, 0)
-      bw = new BitWriter()
-      rstN = 0
-      b = 0
-      while (b < bX * bY) {
-        restartTick(b)(())
-        encodeAcRefineBlock(bw, qblocks(ci)(b), 1, 63, 0)
-        b += 1
-      }
-      out.write(bw.flush())
-      ci += 1
-    }
-    // scan 5: DC refinement, raw bit 0 per block (interleaved)
-    sos(0 until nc, 0, 0, 1, 0)
-    bw = new BitWriter()
-    rstN = 0
-    b = 0
-    while (b < bX * bY) {
-      restartTick(b)(())
-      ci = 0
-      while (ci < nc) {
-        bw.put(qblocks(ci)(b)(0) & 1, 1)
-        ci += 1
-      }
-      b += 1
-    }
-    out.write(bw.flush())
-    out.write(0xff); out.write(0xd9) // EOI
-    out.toByteArray
+    require(samples.length == width * height * nc,
+      s"need $width*$height*$nc bytes, got ${samples.length}")
+    val img = new BufferedImage(width, height,
+      if (gray) BufferedImage.TYPE_BYTE_GRAY else BufferedImage.TYPE_3BYTE_BGR)
+    img.getRaster.setPixels(0, 0, width, height, samples.map(_ & 0xff))
+    val writer = ImageIO.getImageWritersByFormatName("jpeg").next()
+    val bytes = new ByteArrayOutputStream()
+    val out = new MemoryCacheImageOutputStream(bytes)
+    try {
+      val param = writer.getDefaultWriteParam
+      param.setCompressionMode(ImageWriteParam.MODE_EXPLICIT)
+      param.setCompressionQuality(0.5f)
+      if (progressive) param.setProgressiveMode(ImageWriteParam.MODE_DEFAULT)
+      writer.setOutput(out)
+      writer.write(null, new IIOImage(img, null, null), param)
+    } finally { writer.dispose(); out.close() }
+    bytes.toByteArray
   }
 }

@@ -11,13 +11,13 @@ import org.apache.spark.sql.functions._
   * library would amortize its per-batch setup exactly the same way.
   *
   * Decoding is a real dispatch: 8-bit RGB/RGBA PNG, 24-bit BMP,
-  * PCM WAV, GIF87a/89a and baseline or progressive JPEG payloads
-  * parse through zero-dependency byte-layout decoders (`decodePng`
-  * with full zlib inflate + scanline-filter reconstruction,
-  * `decodeBmp`, `decodeWav`, `decodeGif` with variable-width LZW and
-  * de-interlacing, `Jpeg.decode` with general Huffman/DQT parsing,
-  * 4:2:0 upsampling, restart intervals and multi-scan progressive
-  * refinement — real headers, CRCs, padding, chunk walks),
+  * PCM WAV and GIF87a/89a payloads parse through hand-written
+  * byte-layout decoders (`decodePng` with full zlib inflate +
+  * scanline-filter reconstruction, `decodeBmp`, `decodeWav`,
+  * `decodeGif` with variable-width LZW and de-interlacing — real
+  * headers, CRCs, padding, chunk walks); baseline and progressive
+  * JPEG go through `Jpeg.decode`, a wrapper over the JDK's
+  * `javax.imageio` codec that gives None on corrupt input,
   * and only OPAQUE payloads fall back to the deterministic
   * `decodeStub` (the documented stand-in for codecs this container
   * doesn't ship, e.g. H.264).
@@ -45,7 +45,7 @@ object Multimodal {
   def decodeStub(payload: Array[Byte]): Array[Int] =
     payload.map(b => b.toInt & 0xff)
 
-  // --- real zero-dependency codecs ---------------------------------
+  // --- real hand-written codecs -------------------------------------
   // Honest byte-layout parsers for two real containers: 24-bit
   // uncompressed BMP and PCM WAV (8-bit unsigned / 16-bit signed LE).
   // `decode` sniffs the magic and falls back to `decodeStub` for

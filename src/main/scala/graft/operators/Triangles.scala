@@ -322,9 +322,9 @@ object Triangles {
     * dominate (the first cut of a k-12 peel drops most of the graph),
     * support DECREMENT once the surviving core is the majority, so
     * the cascade's long tail does not re-pay the core's full wedge
-    * volume per round. The census actions (count + sum) read
-    * materialized cut partitions either way, and both backends are
-    * census-identical by construction (TrussPeelSpec) and vs the
+    * volume per round. Edge counts come from the round's counted
+    * cuts, the support sum from one action per round; both backends
+    * are census-identical by construction (TrussPeelSpec) and vs the
     * driver's independent oracle. */
   /* requires: `oriented0`, when supplied, must be [[orient]]'s output
    * over THIS `edges0` (the shared co-purchase oriented memo and the
@@ -339,9 +339,8 @@ object Triangles {
     val spark = edges0.sparkSession
     def supSum(s: DataFrame): Long =
       s.agg(coalesce(F.sum(col("sup")), lit(0L))).head().getLong(0)
-    var und = edges0.filter(col("src") < col("dst"))
-      .select(col("src").as("u"), col("dst").as("v")).cut()
-    var undN = und.count()
+    var (und, undN) = Cuts.counted(edges0.filter(col("src") < col("dst"))
+      .select(col("src").as("u"), col("dst").as("v")))
     // round 0 — the only round over the FULL graph — takes the caller's
     // pre-materialized orientation when one exists (the shared
     // co-purchase oriented memo); later rounds work on their own
@@ -353,8 +352,7 @@ object Triangles {
     var r = 1
     var done = false
     while (!done && r <= maxRounds) {
-      val keep = sup.filter(col("sup") >= k - 2).cut()
-      val keptN = keep.count()
+      val (keep, keptN) = Cuts.counted(sup.filter(col("sup") >= k - 2))
       val removedN = undN - keptN
       if (removedN == 0) {
         // zero removals → the edge set, hence every edge's support, is

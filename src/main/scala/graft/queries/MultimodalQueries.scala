@@ -126,10 +126,9 @@ object MultimodalQueries extends QueryRegistry {
 
     // REAL JPEG decode end-to-end: each ascii head, sorted into a
     // smooth ramp (so quality-50 quantization error stays small),
-    // becomes a single-component baseline JPEG via the zero-dependency
-    // encoder, and the pipeline decodes the actual entropy-coded
-    // stream back (Jpeg.decode — Huffman, dequant, IDCT — not the
-    // stub). JPEG is LOSSY, so unlike the bit-exact BMP/PNG twin the
+    // becomes a single-component baseline JPEG, and the pipeline
+    // decodes the entropy-coded stream back through Jpeg.decode, not
+    // the stub. JPEG is LOSSY, so unlike the bit-exact BMP/PNG twin the
     // oracle replays the cohort exactly (same WHERE) while the
     // reconstruction contract rides as must-be-true booleans — the
     // sketch-audit convention (events_value_sketches precedent).
@@ -152,23 +151,18 @@ object MultimodalQueries extends QueryRegistry {
         // 12.0 tolerates the Gibbs ringing of a step edge (e.g. the
         // space→letter jump in a sorted head) at quality-50 quant; a
         // structurally wrong decode lands orders of magnitude higher
-        // (the ±2-per-sample conformance pin vs the JDK decoder lives
-        // in MultimodalSpec)
         (id, n.toLong, n == 64, meanErr <= 12.0)
       }.toDF("media_id", "n_samples", "dims_ok", "recon_close")
         .orderBy(col("media_id"))
     }),
 
-    // PROGRESSIVE JPEG decode end-to-end (the round-8 gap close: most
-    // real crawled JPEGs are SOF2): the same sorted-ramp cohort as
-    // media_jpeg_audit, encoded with the five-phase progressive scan
-    // script (spectral selection + successive approximation) and
-    // decoded back through the multi-scan coefficient-accumulation
-    // path. Because the progressive stream carries the SAME quantized
-    // coefficients as the baseline one after full refinement, the
-    // decode must be BIT-IDENTICAL to the baseline decode — pinned as
-    // a boolean the oracle requires true (prog_eq_baseline), a
-    // strictly stronger contract than the closeness booleans alone.
+    // PROGRESSIVE (SOF2) JPEG decode end-to-end: the same sorted-ramp
+    // cohort as media_jpeg_audit, encoded with a spectral-selection +
+    // successive-approximation scan script and decoded back. After
+    // full refinement the progressive stream carries the SAME
+    // quantized coefficients as the baseline one, so the decode must
+    // be BIT-IDENTICAL to the baseline decode — pinned as a boolean
+    // the oracle requires true (prog_eq_baseline).
     "media_jpeg_progressive_audit" -> ((s, dir) => {
       import s.implicits._
       val docs = documents(s, dir)
@@ -321,22 +315,21 @@ object MultimodalQueries extends QueryRegistry {
         .orderBy(col("media_id"), col("frame_a"), col("frame_b"))
     }),
 
-    // REAL VIDEO decode end-to-end (r12 — the MJPEG-in-AVI close of
-    // the video gap): each doc muxes three sorted-ramp 8×8 baseline
-    // JPEGs plus an EXACT re-use of frame 0's JPEG stream (the
-    // duplicated-frame plant, at the container level — the shape a
-    // static-scene camera emits) into a genuine RIFF/AVI container
-    // (Avi.encodeMjpeg), and the pipeline demuxes the movi chunks
-    // back (Avi.decodeMjpegFrames), decodes each frame through the
-    // full Huffman/dequant/IDCT path (Jpeg.decode), aHashes the
-    // samples, and reports whether the planted duplicate surfaces as
-    // a Hamming-0 frame pair. JPEG is lossy, so the oracle replays
-    // the cohort exactly while the demux-exactness and dedup
-    // contracts ride as must-be-true booleans (the jpeg-audit
-    // convention); a wrong demux, a broken decode, or a broken hash
-    // all flip a boolean and hash-mismatch. Scale shape: one
-    // mapPartitions batch per doc cohort (binary codecs — the one
-    // justified mapPartitions tier), no shuffle at all
+    // REAL VIDEO decode end-to-end (MJPEG in AVI): each doc muxes
+    // three sorted-ramp 8×8 baseline JPEGs plus an EXACT re-use of
+    // frame 0's JPEG stream (the duplicated-frame plant, at the
+    // container level — the shape a static-scene camera emits) into a
+    // genuine RIFF/AVI container (Avi.encodeMjpeg), and the pipeline
+    // demuxes the movi chunks back (Avi.decodeMjpegFrames), decodes
+    // each frame with Jpeg.decode, aHashes the samples, and reports
+    // whether the planted duplicate surfaces as a Hamming-0 frame
+    // pair. JPEG is lossy, so the oracle replays the cohort exactly
+    // while the demux-exactness and dedup contracts ride as
+    // must-be-true booleans (the jpeg-audit convention); a wrong
+    // demux, a broken decode, or a broken hash all flip a boolean and
+    // hash-mismatch. Scale shape: one mapPartitions batch per doc
+    // cohort (binary codecs — the one justified mapPartitions tier),
+    // no shuffle at all
     "media_video_frame_dedup" -> ((s, dir) => {
       import s.implicits._
       val docs = documents(s, dir)

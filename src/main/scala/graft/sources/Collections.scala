@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.Comparator
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -160,7 +161,9 @@ class CollectionManager(spark: SparkSession, basePath: String) {
 
   /** Upsert: INSERT OR REPLACE semantics of the subcrate/SQLite path
     * (vector_db/src/sqlite_storage.rs:82-91). Existing rows with matching
-    * ids are replaced in one rewrite. */
+    * ids are replaced in one rewrite. An id repeated within the batch
+    * keeps only its last copy (the highest `ingest_seq`), as the
+    * reference's row-by-row replace leaves it. */
   def upsert(name: String, rows: DataFrame): Unit = {
     val meta = collectionInfo(name)
     val incoming = normalize(rows)
@@ -176,7 +179,10 @@ class CollectionManager(spark: SparkSession, basePath: String) {
     // insertion-ordered allVectors contract (sqlite_storage.rs:122-138).
     val base = scan(name)
       .agg(coalesce(max(col("ingest_seq")), lit(-1L))).collect()(0).getLong(0)
+    val lastCopy = Window.partitionBy("id").orderBy(col("ingest_seq").desc)
     val rebased = incoming
+      .withColumn("__copy", row_number().over(lastCopy))
+      .filter(col("__copy") === 1).drop("__copy")
       .withColumn("ingest_seq", col("ingest_seq") + lit(base + 1))
     val survivors = scan(name)
       .join(incoming.select("id"), Seq("id"), "left_anti")

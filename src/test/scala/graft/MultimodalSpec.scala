@@ -223,6 +223,42 @@ class MultimodalSpec extends SparkSpec {
     a.iterator.zip(b.iterator).map { case (x, y) => math.abs(x - y) }.sum.toDouble / a.length
   }
 
+  /** `Jpeg.encode`'s writer settings (quality 0.5, baseline or
+    * progressive) plus a DRI segment of one MCU, so even the three
+    * 4:2:0 MCUs of a 48×16 frame carry RST0 and RST1. The codec writes
+    * no restart markers itself; the stream is built here through the
+    * JDK writer's `dri` metadata node. */
+  private def jpegWithRestarts(w: Int, h: Int, rgb: Array[Byte],
+      progressive: Boolean): Array[Byte] = {
+    import javax.imageio.{IIOImage, ImageIO, ImageTypeSpecifier, ImageWriteParam}
+    import javax.imageio.metadata.IIOMetadataNode
+    val img = new java.awt.image.BufferedImage(w, h,
+      java.awt.image.BufferedImage.TYPE_3BYTE_BGR)
+    img.getRaster.setPixels(0, 0, w, h, rgb.map(_ & 0xff))
+    val writer = ImageIO.getImageWritersByFormatName("jpeg").next()
+    val param = writer.getDefaultWriteParam
+    param.setCompressionMode(ImageWriteParam.MODE_EXPLICIT)
+    param.setCompressionQuality(0.5f)
+    if (progressive) param.setProgressiveMode(ImageWriteParam.MODE_DEFAULT)
+    val meta = writer.getDefaultImageMetadata(
+      ImageTypeSpecifier.createFromRenderedImage(img), param)
+    val format = "javax_imageio_jpeg_image_1.0"
+    val root = new IIOMetadataNode(format)
+    val markers = new IIOMetadataNode("markerSequence")
+    val dri = new IIOMetadataNode("dri")
+    dri.setAttribute("interval", "1")
+    markers.appendChild(dri)
+    root.appendChild(new IIOMetadataNode("JPEGvariety"))
+    root.appendChild(markers)
+    meta.mergeTree(format, root)
+    val bos = new java.io.ByteArrayOutputStream()
+    val ios = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
+    writer.setOutput(ios)
+    writer.write(null, new IIOImage(img, null, meta), param)
+    ios.close(); writer.dispose()
+    bos.toByteArray
+  }
+
   test("avi container: mux → demux returns the exact per-frame JPEG streams") {
     val frames = Seq(
       Array.tabulate(64)(i => (10 + 3 * i).toByte),
@@ -335,10 +371,8 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("jpeg codec: our stream decodes identically-close in the JDK decoder") {
-    // cross-decoder conformance: javax.imageio (in the JDK, used here
-    // as a REFERENCE only — the engine's decode path stays
-    // zero-dependency) must accept our stream and agree per sample up
-    // to IDCT tolerance
+    // the wrapper's samples must match what ImageIO.read's RGB view
+    // gives for the same stream, up to IDCT tolerance
     val (w, h) = (16, 12)
     val jpg = graft.operators.Jpeg.encode(w, h, gradientRgb(w, h))
     val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(jpg))
@@ -376,8 +410,8 @@ class MultimodalSpec extends SparkSpec {
       val o = (y * w + x) * 3
       ref(o) = (p >> 16) & 0xff; ref(o + 1) = (p >> 8) & 0xff; ref(o + 2) = p & 0xff
     }
-    // JDK upsamples chroma with interpolation, we use nearest: close,
-    // not equal — on a smooth gradient the difference stays small
+    // a stream written by plain ImageIO.write decodes close to
+    // ImageIO.read's RGB view of it
     assert(meanAbsDiff(ours, ref) < 4.0)
   }
 
@@ -392,15 +426,29 @@ class MultimodalSpec extends SparkSpec {
       .find(i => (arith(i) & 0xff) == 0xff && (arith(i + 1) & 0xff) == 0xc0).get
     arith(sof + 1) = 0xc9.toByte
     assert(graft.operators.Jpeg.decode(arith).isEmpty)
+    // a four-component frame is neither gray nor RGB
+    val fourBand = {
+      val raster = java.awt.image.Raster.createInterleavedRaster(
+        java.awt.image.DataBuffer.TYPE_BYTE, 8, 8, 4, null)
+      val writer = javax.imageio.ImageIO.getImageWritersByFormatName("jpeg").next()
+      val bos = new java.io.ByteArrayOutputStream()
+      val ios = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
+      writer.setOutput(ios)
+      writer.write(null, new javax.imageio.IIOImage(raster, null, null), null)
+      ios.close(); writer.dispose()
+      bos.toByteArray
+    }
+    assert(fourBand.length > 100)
+    assert(graft.operators.Jpeg.decode(fourBand).isEmpty)
     // the dispatcher routes real JPEG to the codec (not the stub)
     assert(Multimodal.decode(jpg).length === 8 * 8 * 3)
   }
 
   test("jpeg codec: restart intervals (DRI + RSTn) decode identically; JDK agrees") {
-    val (w, h) = (48, 16) // 6x2 MCUs at 4:4:4 -> several restarts at ri=2
+    val (w, h) = (48, 16) // 3 MCUs at 4:2:0, a restart after each
     val rgb = gradientRgb(w, h)
     val plain = graft.operators.Jpeg.encode(w, h, rgb)
-    val rst = graft.operators.Jpeg.encode(w, h, rgb, restartInterval = 2)
+    val rst = jpegWithRestarts(w, h, rgb, progressive = false)
     // the stream really carries DRI and at least one wrapped RSTn marker
     def hasMarker(p: Array[Byte], m: Int): Boolean =
       (0 until p.length - 1).exists(i =>
@@ -443,7 +491,7 @@ class MultimodalSpec extends SparkSpec {
     val (w, h) = (48, 16)
     val rgb = gradientRgb(w, h)
     val plain = graft.operators.Jpeg.encodeProgressive(w, h, rgb)
-    val rst = graft.operators.Jpeg.encodeProgressive(w, h, rgb, restartInterval = 2)
+    val rst = jpegWithRestarts(w, h, rgb, progressive = true)
     def hasMarker(p: Array[Byte], m: Int): Boolean =
       (0 until p.length - 1).exists(i =>
         (p(i) & 0xff) == 0xff && (p(i + 1) & 0xff) == m)
@@ -507,8 +555,38 @@ class MultimodalSpec extends SparkSpec {
       val o = (y * w + x) * 3
       ref(o) = (p >> 16) & 0xff; ref(o + 1) = (p >> 8) & 0xff; ref(o + 2) = p & 0xff
     }
-    // nearest vs interpolated chroma upsampling: close, not equal
+    // close to ImageIO.read's RGB view of the same stream
     assert(meanAbsDiff(ours, ref) < 4.0)
+  }
+
+  test("jpeg codec: byte-flipped and truncated streams give None or a whole frame") {
+    // crawled media is corrupt now and then; the codec runs inside the
+    // decode mapPartitions stage, where one escaped exception fails
+    // the whole stage, and a partial sample array would be read as a
+    // frame of the declared size
+    val (w, h) = (16, 12)
+    val rgb = gradientRgb(w, h)
+    val streams = Seq(graft.operators.Jpeg.encode(w, h, rgb),
+      graft.operators.Jpeg.encodeProgressive(w, h, rgb))
+    val rnd = new scala.util.Random(41)
+    for (jpg <- streams; i <- 1 to 150) {
+      if (i % 3 == 0) {
+        // the first two cuts drop only EOI bytes, the rest cut anywhere;
+        // the reader warns on a cut stream and pads the frame, and the
+        // padded frame must not pass as data
+        val cut = jpg.take(if (i < 9) jpg.length - i / 3 else rnd.nextInt(jpg.length))
+        assert(graft.operators.Jpeg.decode(cut).isEmpty, s"cut at ${cut.length}")
+        Multimodal.decode(cut) // must not throw
+      } else {
+        val bad = jpg.clone()
+        for (_ <- 1 to 1 + rnd.nextInt(4))
+          bad(rnd.nextInt(bad.length)) = rnd.nextInt(256).toByte
+        graft.operators.Jpeg.decode(bad).foreach { got =>
+          assert(got.length == w * h * 3, s"copy $i: ${got.length} samples")
+        }
+        Multimodal.decode(bad) // must not throw
+      }
+    }
   }
 
   test("gif codec: gray encode → LZW decode round-trips bit-exactly, incl. interlace") {
@@ -611,6 +689,17 @@ class MultimodalSpec extends SparkSpec {
     bomb(sof + 5) = 0x9c.toByte; bomb(sof + 6) = 0x40.toByte // h = 40000
     bomb(sof + 7) = 0x9c.toByte; bomb(sof + 8) = 0x40.toByte // w = 40000
     assert(graft.operators.Jpeg.decode(bomb).isEmpty)
+    // 4097×4097 is just over 2^24 pixels yet small enough for the JDK
+    // reader to size its 50 MB frame buffer: only the header check
+    // keeps that buffer from being allocated
+    val justOver = jpg.clone()
+    justOver(sof + 5) = 0x10.toByte; justOver(sof + 6) = 0x01.toByte
+    justOver(sof + 7) = 0x10.toByte; justOver(sof + 8) = 0x01.toByte
+    val threads = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val allocated = threads.getCurrentThreadAllocatedBytes
+    assert(graft.operators.Jpeg.decode(justOver).isEmpty)
+    assert(threads.getCurrentThreadAllocatedBytes - allocated < (8L << 20))
     // same for PNG: chunk-valid header declaring 19000×19000 RGBA
     val png = rawPng(2, 2, 6, 4, Array.fill(16)(1.toByte))
     val ihdrData = 8 + 8 // sig + len/type of IHDR

@@ -161,6 +161,19 @@ class StorageSpec extends SparkSpec {
     assert(seqs.distinct.length === seqs.length)
   }
 
+  test("upsert of an id repeated within one batch keeps only its last copy") {
+    val cm = new CollectionManager(spark, freshBase())
+    cm.createCollection("c", 3)
+    cm.insert("c", rows("b" -> v3a))
+    // row-by-row INSERT OR REPLACE: the second "a" replaces the first
+    cm.upsert("c", rows("a" -> v3a, "a" -> v3b))
+    val got = cm.allVectors("c").select($"id", $"embedding").collect()
+      .map(r => r.getString(0) -> r.getSeq[Float](1).toSeq)
+    assert(got.toSeq === Seq("b" -> v3a.toSeq, "a" -> v3b.toSeq))
+    assert(cm.countVectors("c") === 2L)
+    assert(cm.collectionInfo("c").vectorCount === 2L)
+  }
+
   test("insertion-order scan + sidecar stats + optimize") {
     val cm = new CollectionManager(spark, freshBase())
     cm.createCollection("c", 3)

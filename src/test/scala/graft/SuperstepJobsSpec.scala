@@ -1,13 +1,13 @@
 package graft
 
-import graft.operators.Traversal
+import graft.operators.{Traversal, Triangles}
 
 /** The iterative graph loops fold their per-round probes into the job
-  * that materializes each round: a converged k-core census runs a
-  * bounded number of Spark jobs per peel round (its census counts come
-  * from the round's own counted cuts) and a BFS a bounded number per
-  * level (a level's emptiness is read off the visited cut's count).
-  * Both equal in-memory replicas under any AQE and shuffle-partition
+  * that materializes each round: a converged k-core or k-truss census
+  * runs a bounded number of Spark jobs per peel round (its edge counts
+  * come from the round's own counted cuts) and a BFS a bounded number
+  * per level (a level's emptiness is read off the visited cut's count).
+  * All equal in-memory replicas under any AQE and shuffle-partition
   * setting. */
 class SuperstepJobsSpec extends SparkSpec with JobCounting {
   import spark.implicits._
@@ -15,6 +15,8 @@ class SuperstepJobsSpec extends SparkSpec with JobCounting {
   private val JobsPerRound = 6
   private val KCoreRound0Jobs = 4
   private val MaxHops = 8
+  private val TrussJobsPerRound = 11
+  private val TrussRound0Jobs = 4
 
   /** A 24-node dense core with four pendant paths of 3 to 6 nodes,
     * both directions, distinct: under k = 2 each path loses its free
@@ -48,6 +50,27 @@ class SuperstepJobsSpec extends SparkSpec with JobCounting {
     census.toSeq
   }
 
+  /** The k-truss census of kTrussConvergedCensus: (round, undirected
+    * edges, support sum), the first repeated row included. */
+  private def trussReplica(k: Int): Seq[(Long, Long, Long)] = {
+    def support(es: Vector[(Long, Long)]): Map[(Long, Long), Long] = {
+      val nbrs = (es ++ es.map(_.swap)).groupBy(_._1)
+        .map { case (v, ns) => v -> ns.map(_._2).toSet }
+      es.map { case (u, v) => (u, v) -> (nbrs(u) & nbrs(v)).size.toLong }.toMap
+    }
+    var sup = support(graph.filter { case (s, d) => s < d })
+    val census = scala.collection.mutable.ArrayBuffer((0L, sup.size.toLong, sup.values.sum))
+    var done = false
+    while (!done) {
+      val keep = sup.filter(_._2 >= k - 2)
+      if (keep.size < sup.size) sup = support(keep.keys.toVector)
+      census += ((census.size.toLong, sup.size.toLong, sup.values.sum))
+      val n = census.size
+      done = census(n - 1)._2 == census(n - 2)._2 && census(n - 1)._3 == census(n - 2)._3
+    }
+    census.toSeq
+  }
+
   private def bfsReplica: Map[Long, Long] = {
     val adj = graph.groupBy(_._1).map { case (s, es) => s -> es.map(_._2) }
     var dist = seeds.map(_ -> 0L).toMap
@@ -72,6 +95,23 @@ class SuperstepJobsSpec extends SparkSpec with JobCounting {
       info(s"aqe=$aqe partitions=$p: $jobs jobs, $rounds peel rounds")
       assert(got == expect, s"aqe=$aqe partitions=$p")
       assert(jobs <= JobsPerRound * rounds + KCoreRound0Jobs,
+        s"aqe=$aqe partitions=$p: $jobs jobs for $rounds peel rounds")
+    }
+  }
+
+  test("converged k-truss census: at most 11 jobs per peel round, equal to the replica") {
+    val expect = trussReplica(k = 5)
+    val rounds = expect.size - 1
+    assert(rounds >= 4, s"the fixture should peel for several rounds: $expect")
+    for ((aqe, p) <- knobs) withKnobs(aqe, p) {
+      val edges = graph.toDF("src", "dst")
+      val (got, jobs) = jobsOf {
+        Triangles.kTrussConvergedCensus(edges, k = 5, maxRounds = 20)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
+      }
+      info(s"aqe=$aqe partitions=$p: $jobs jobs, $rounds peel rounds")
+      assert(got == expect, s"aqe=$aqe partitions=$p")
+      assert(jobs <= TrussJobsPerRound * rounds + TrussRound0Jobs,
         s"aqe=$aqe partitions=$p: $jobs jobs for $rounds peel rounds")
     }
   }
