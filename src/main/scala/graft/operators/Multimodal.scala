@@ -10,14 +10,13 @@ import org.apache.spark.sql.functions._
   * pandas-batch UDF: one iterator per partition, so a real codec
   * library would amortize its per-batch setup exactly the same way.
   *
-  * Decoding is a real dispatch: 8-bit RGB/RGBA PNG, 24-bit BMP,
-  * PCM WAV and GIF87a/89a payloads parse through hand-written
-  * byte-layout decoders (`decodePng` with full zlib inflate +
-  * scanline-filter reconstruction, `decodeBmp`, `decodeWav`,
-  * `decodeGif` with variable-width LZW and de-interlacing — real
-  * headers, CRCs, padding, chunk walks); baseline and progressive
-  * JPEG go through `Jpeg.decode`, a wrapper over the JDK's
-  * `javax.imageio` codec that gives None on corrupt input,
+  * Decoding is a real dispatch: 8-bit PNG, 24-bit BMP and PCM WAV
+  * payloads parse through hand-written byte-layout decoders
+  * (`decodePng` with full zlib inflate + scanline-filter
+  * reconstruction, `decodeBmp`, `decodeWav` — real headers, CRCs,
+  * padding, chunk walks); GIF87a/89a and baseline and progressive
+  * JPEG go through `Gif.decode` and `Jpeg.decode`, wrappers over the
+  * JDK's `javax.imageio` codecs that give None on corrupt input,
   * and only OPAQUE payloads fall back to the deterministic
   * `decodeStub` (the documented stand-in for codecs this container
   * doesn't ship, e.g. H.264).
@@ -41,17 +40,20 @@ object Multimodal {
   /** Fallback decode for OPAQUE payloads: the "samples" are the raw
     * payload bytes widened to int — a stand-in for codecs this
     * container doesn't ship, deterministic so tests and oracles pin it.
-    * Real containers (BMP, WAV) are parsed for real by `decode`. */
+    * Real containers (PNG, BMP, WAV, GIF, JPEG) are parsed for real
+    * by `decode`. */
   def decodeStub(payload: Array[Byte]): Array[Int] =
     payload.map(b => b.toInt & 0xff)
 
-  // --- real hand-written codecs -------------------------------------
-  // Honest byte-layout parsers for two real containers: 24-bit
-  // uncompressed BMP and PCM WAV (8-bit unsigned / 16-bit signed LE).
-  // `decode` sniffs the magic and falls back to `decodeStub` for
-  // anything else. Sniffing is structural, not just magic bytes — the
-  // declared file size must match the payload — so a text payload that
-  // happens to start with "BM"/"RIFF" falls back instead of throwing.
+  // --- hand-written codecs -------------------------------------------
+  // Byte-layout parsers for 24-bit uncompressed BMP, PCM WAV (8-bit
+  // unsigned / 16-bit signed LE) and 8-bit PNG, kept because the JDK's
+  // readers accept streams these reject (a PNG chunk CRC flip, a BMP one
+  // byte short, a WAV tagged IEEE float). `decode` sniffs the
+  // magic and falls back to `decodeStub` for anything else. Sniffing is
+  // structural, not just magic bytes — the declared file size must
+  // match the payload — so a text payload that happens to start with
+  // "BM"/"RIFF" falls back instead of throwing.
 
   private def u16(b: Array[Byte], o: Int): Int =
     (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
@@ -279,306 +281,12 @@ object Multimodal {
     }
   }
 
-  /** GIF87a/GIF89a FIRST FRAME → r,g,b per pixel of the frame's own
-    * w×h (top-down row-major), palette-expanded; interlaced frames are
-    * de-interlaced (the four GIF passes), extensions are skipped
-    * structurally (sub-block walk), and the variable-width LSB-first
-    * LZW stream is fully decompressed with clear/end-code handling.
-    * A GIF89a graphic-control extension's transparency index IS
-    * honored: transparent pixels composite to the logical screen's
-    * declared background color (what a conformant viewer shows over
-    * the GIF's own canvas), or black when no global palette carries
-    * one. None on anything structurally non-GIF: bad signature,
-    * missing color table, palette-overrun index, truncated or
-    * over-producing LZW data, dictionary overflow, or a frame that
-    * declares more pixels than the decoder's allocation guard allows. */
-  def decodeGif(p: Array[Byte]): Option[Array[Int]] =
-    decodeGifFrames(p, maxFrames = 1).map(_.head)
-
-  /** ALL frames of a (possibly animated) GIF stream, each decoded with
-    * the same de-interlace / palette / transparency semantics as the
-    * first-frame path (`decodeGif` IS this with maxFrames = 1 — one
-    * decoder, two surfaces). A GCE transparency index arms only the
-    * single image that follows it, per the 89a spec. None on any
-    * structural defect in any frame, or on a stream that ends without
-    * a trailer once maxFrames is not the limiter — a torn animation
-    * should fail loudly, not pass as a shorter one. */
-  def decodeGifFrames(p: Array[Byte],
-      maxFrames: Int = 256): Option[Array[Array[Int]]] = {
-    if (p.length < 13) return None
-    val hdr = new String(p, 0, 6, "US-ASCII")
-    if (hdr != "GIF87a" && hdr != "GIF89a") return None
-    def u16(o: Int): Int = (p(o) & 0xff) | ((p(o + 1) & 0xff) << 8)
-    try {
-      val packed = p(10) & 0xff
-      val bgIndex = p(11) & 0xff // logical-screen background color
-      var pos = 13
-      var globalPal: Array[Byte] = null
-      if ((packed & 0x80) != 0) {
-        val n = 3 * (2 << (packed & 7))
-        globalPal = java.util.Arrays.copyOfRange(p, pos, pos + n)
-        pos += n
-      }
-      var transIndex = -1 // GCE transparency index for the NEXT image
-      val frames = scala.collection.mutable.ArrayBuffer.empty[Array[Int]]
-      // walk blocks, decoding each image descriptor in stream order
-      while (pos < p.length) {
-        (p(pos) & 0xff) match {
-          case 0x3b => // trailer
-            return if (frames.isEmpty) None else Some(frames.toArray)
-          case 0x21 => // extension: label byte then sub-blocks
-            // graphic-control extension (0xF9): flags bit 0 arms the
-            // transparency index (data byte 3) for the following image
-            if ((p(pos + 1) & 0xff) == 0xf9 && (p(pos + 2) & 0xff) >= 4)
-              transIndex =
-                if ((p(pos + 3) & 1) != 0) p(pos + 6) & 0xff else -1
-            pos += 2
-            while ((p(pos) & 0xff) != 0) pos += 1 + (p(pos) & 0xff)
-            pos += 1
-          case 0x2c => // image descriptor
-            val w = u16(pos + 5)
-            val h = u16(pos + 7)
-            val ipacked = p(pos + 9) & 0xff
-            val interlaced = (ipacked & 0x40) != 0
-            pos += 10
-            var pal = globalPal
-            if ((ipacked & 0x80) != 0) {
-              val n = 3 * (2 << (ipacked & 7))
-              pal = java.util.Arrays.copyOfRange(p, pos, pos + n)
-              pos += n
-            }
-            if (pal == null || w <= 0 || h <= 0) return None
-            if (w.toLong * h > (1L << 24)) return None // allocation bomb
-            // concatenate the LZW sub-blocks
-            val mcs = p(pos) & 0xff
-            if (mcs < 2 || mcs > 11) return None
-            pos += 1
-            val data = new java.io.ByteArrayOutputStream()
-            while ((p(pos) & 0xff) != 0) {
-              val n = p(pos) & 0xff
-              data.write(p, pos + 1, n)
-              pos += 1 + n
-            }
-            pos += 1 // past the sub-block terminator
-            val idx = lzwDecode(data.toByteArray, mcs, w * h)
-              .getOrElse(return None)
-            // de-interlace + palette expand; transparent pixels show
-            // the logical screen's background color (black fallback)
-            val nColors = pal.length / 3
-            val (bgR, bgG, bgB) =
-              if (globalPal != null && bgIndex < globalPal.length / 3)
-                (globalPal(3 * bgIndex) & 0xff,
-                  globalPal(3 * bgIndex + 1) & 0xff,
-                  globalPal(3 * bgIndex + 2) & 0xff)
-              else (0, 0, 0)
-            val out = new Array[Int](w * h * 3)
-            val rowOrder: Array[Int] =
-              if (!interlaced) Array.tabulate(h)(identity)
-              else (Seq.range(0, h, 8) ++ Seq.range(4, h, 8) ++
-                Seq.range(2, h, 4) ++ Seq.range(1, h, 2)).toArray
-            var r = 0
-            while (r < h) {
-              val destY = rowOrder(r)
-              var x = 0
-              while (x < w) {
-                val ci = idx(r * w + x)
-                if (ci >= nColors) return None // palette overrun
-                val o = (destY * w + x) * 3
-                if (ci == transIndex) {
-                  out(o) = bgR; out(o + 1) = bgG; out(o + 2) = bgB
-                } else {
-                  out(o) = pal(3 * ci) & 0xff
-                  out(o + 1) = pal(3 * ci + 1) & 0xff
-                  out(o + 2) = pal(3 * ci + 2) & 0xff
-                }
-                x += 1
-              }
-              r += 1
-            }
-            frames += out
-            transIndex = -1 // a GCE arms exactly one image
-            if (frames.length >= maxFrames) return Some(frames.toArray)
-          case _ => return None // lost block sync
-        }
-      }
-      None // ran off the end without a trailer
-    } catch { case _: Exception => None }
-  }
-
-  /** Variable-width LSB-first GIF LZW: produce exactly `n` indices.
-    * None on truncation, over-production, or a corrupt code. */
-  private def lzwDecode(data: Array[Byte], minCodeSize: Int,
-      n: Int): Option[Array[Int]] = {
-    val clear = 1 << minCodeSize
-    val end = clear + 1
-    // dictionary as (prefix link, last byte): entry i < clear is the
-    // literal i; entries grow to 4096 then freeze until a clear code
-    val prefix = new Array[Int](4096)
-    val suffix = new Array[Int](4096)
-    var dictSize = end + 1
-    var codeSize = minCodeSize + 1
-    val out = new Array[Int](n)
-    var outPos = 0
-    var bitPos = 0
-    val totalBits = data.length * 8
-    var prev = -1
-    def readCode(): Int = {
-      if (bitPos + codeSize > totalBits) return -1
-      var v = 0
-      var i = 0
-      while (i < codeSize) {
-        val bp = bitPos + i
-        if ((data(bp >> 3) & (1 << (bp & 7))) != 0) v |= 1 << i
-        i += 1
-      }
-      bitPos += codeSize
-      v
-    }
-    // expand a code to the output buffer (walk the prefix chain)
-    val stack = new Array[Int](4096)
-    def emit(code: Int): Boolean = {
-      var sp = 0
-      var c = code
-      while (c >= clear) { // composite entry
-        if (sp >= 4096) return false
-        stack(sp) = suffix(c); sp += 1
-        c = prefix(c)
-      }
-      if (outPos + sp + 1 > n) return false // over-production
-      out(outPos) = c; outPos += 1
-      while (sp > 0) { sp -= 1; out(outPos) = stack(sp); outPos += 1 }
-      true
-    }
-    def firstByte(code: Int): Int = {
-      var c = code
-      while (c >= clear) c = prefix(c)
-      c
-    }
-    while (outPos < n) {
-      val code = readCode()
-      if (code < 0 || code == end) return None // truncated mid-frame
-      if (code == clear) {
-        dictSize = end + 1
-        codeSize = minCodeSize + 1
-        prev = -1
-      } else if (prev < 0) {
-        if (code >= clear) return None // first code must be a literal
-        if (!emit(code)) return None
-        prev = code
-      } else {
-        if (code > dictSize || (code >= clear && code <= end)) return None
-        val cur = if (code == dictSize) {
-          // KwKwK case: new entry = prev + firstByte(prev)
-          if (dictSize >= 4096) return None
-          prefix(dictSize) = prev; suffix(dictSize) = firstByte(prev)
-          dictSize += 1
-          code
-        } else {
-          if (dictSize < 4096) {
-            prefix(dictSize) = prev; suffix(dictSize) = firstByte(code)
-            dictSize += 1
-          }
-          code
-        }
-        if (!emit(cur)) return None
-        if (dictSize == (1 << codeSize) && codeSize < 12) codeSize += 1
-        prev = cur
-      }
-    }
-    Some(out)
-  }
-
-  /** Gray GIF87a fixture encoder: 256-entry gray global palette
-    * (r=g=b=index), one optionally INTERLACED frame, and an
-    * "uncompressed" LZW stream (a CLEAR code before every pixel
-    * literal keeps the dictionary frozen at its initial size — larger
-    * than optimal but legal, decodable by any conformant decoder).
-    * The lossless round trip `decodeGif(encodeGifGray(w,h,g))` returns
-    * each gray byte three times in LOGICAL row order regardless of
-    * interlacing, which is what lets a declared audit replay decoded
-    * values bit-exactly from the source text. */
-  def encodeGifGray(width: Int, height: Int, gray: Array[Byte],
-      interlaced: Boolean = false): Array[Byte] = {
-    val out = gifHeaderGray(width, height)
-    writeGifFrame(out, width, height, gray, interlaced)
-    out.write(0x3b) // trailer
-    out.toByteArray
-  }
-
-  /** ANIMATED gray GIF fixture encoder: the same header/palette as the
-    * single-frame encoder, then one image descriptor + LZW stream per
-    * frame (all full-canvas, non-interlaced), closed by one trailer —
-    * the minimal legal multi-image GIF89a stream. Round trip:
-    * `decodeGifFrames(encodeGifAnimGray(w,h,frames))` returns each
-    * frame's gray bytes tripled, in frame order. */
-  def encodeGifAnimGray(width: Int, height: Int,
-      frames: Seq[Array[Byte]]): Array[Byte] = {
-    require(frames.nonEmpty, "animated GIF needs at least one frame")
-    val out = gifHeaderGray(width, height, version = "GIF89a")
-    frames.foreach(f => writeGifFrame(out, width, height, f, interlaced = false))
-    out.write(0x3b) // trailer
-    out.toByteArray
-  }
-
-  /** Header + logical screen + 256-entry gray global palette. */
-  private def gifHeaderGray(width: Int, height: Int,
-      version: String = "GIF87a"): java.io.ByteArrayOutputStream = {
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(version.getBytes("US-ASCII"))
-    def w16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    w16(width); w16(height)
-    out.write(0xf7) // global table present, 8-bit color res, 256 entries
-    out.write(0); out.write(0) // background index, aspect
-    var i = 0
-    while (i < 256) { out.write(i); out.write(i); out.write(i); i += 1 }
-    out
-  }
-
-  /** One full-canvas image descriptor + "uncompressed" LZW stream
-    * (CLEAR before every literal — see the class note). */
-  private def writeGifFrame(out: java.io.ByteArrayOutputStream,
-      width: Int, height: Int, gray: Array[Byte], interlaced: Boolean): Unit = {
-    require(gray.length == width * height,
-      s"need $width*$height bytes, got ${gray.length}")
-    def w16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    out.write(0x2c) // image descriptor
-    w16(0); w16(0); w16(width); w16(height)
-    out.write(if (interlaced) 0x40 else 0x00)
-    out.write(8) // LZW minimum code size: clear=256, end=257, 9-bit codes
-    val bits = new java.io.ByteArrayOutputStream()
-    var cur = 0
-    var nb = 0
-    def put(code: Int): Unit = { // 9 bits, LSB-first
-      cur |= code << nb
-      nb += 9
-      while (nb >= 8) { bits.write(cur & 0xff); cur >>= 8; nb -= 8 }
-    }
-    val rowOrder: Array[Int] =
-      if (!interlaced) Array.tabulate(height)(identity)
-      else (Seq.range(0, height, 8) ++ Seq.range(4, height, 8) ++
-        Seq.range(2, height, 4) ++ Seq.range(1, height, 2)).toArray
-    rowOrder.foreach { y =>
-      var x = 0
-      while (x < width) { put(256); put(gray(y * width + x) & 0xff); x += 1 }
-    }
-    put(257) // end of information
-    if (nb > 0) bits.write(cur & 0xff)
-    val arr = bits.toByteArray
-    var o = 0
-    while (o < arr.length) {
-      val n = math.min(255, arr.length - o)
-      out.write(n); out.write(arr, o, n)
-      o += n
-    }
-    out.write(0) // sub-block terminator
-  }
-
   /** Decode dispatch: a real container parse when the payload IS a
-    * real container (PNG, BMP, WAV, GIF, baseline or progressive
-    * JPEG — see `Jpeg`), the deterministic stub otherwise. */
+    * real container (PNG, BMP, WAV, GIF — see `Gif` — or baseline or
+    * progressive JPEG — see `Jpeg`), the deterministic stub otherwise. */
   def decode(payload: Array[Byte]): Array[Int] =
     decodePng(payload).orElse(decodeBmp(payload)).orElse(decodeWav(payload))
-      .orElse(decodeGif(payload))
+      .orElse(Gif.decode(payload))
       .orElse(Jpeg.decode(payload))
       .getOrElse(decodeStub(payload))
 
@@ -613,9 +321,10 @@ object Multimodal {
   }
 
   /** Encode grayscale bytes as a REAL 8-bit RGB PNG (r=g=b=v). The
-    * IDAT zlib stream uses STORED (uncompressed) deflate blocks built
-    * by hand, so the byte count is deterministic across JVMs/zlib
-    * versions — which is what lets the DuckDB oracle pin n_bytes.
+    * IDAT zlib stream is level 0: one STORED (uncompressed) deflate
+    * block per input under 64 KiB, so the byte count follows from the
+    * image size alone — which is what lets the DuckDB oracle pin
+    * n_bytes.
     * `mixedFilters` cycles the scanline filter None/Sub/Up/Average/
     * Paeth by row, so decoding these fixtures exercises the full
     * filter reconstruction, not just the happy path. */
@@ -652,25 +361,11 @@ object Multimodal {
       System.arraycopy(cur, 0, prev, 0, stride)
       y += 1
     }
-    // zlib stream with stored blocks: 0x78 0x01 header, then
-    // (BFINAL|BTYPE=00, LEN, NLEN, data)*, then adler32(raw)
+    // zlib stream of stored (level 0) deflate blocks
+    val deflater = new java.util.zip.Deflater(java.util.zip.Deflater.NO_COMPRESSION)
     val zl = new java.io.ByteArrayOutputStream()
-    zl.write(0x78); zl.write(0x01)
-    var off = 0
-    while (off < flt.length) {
-      val n = math.min(65535, flt.length - off)
-      val last = off + n == flt.length
-      zl.write(if (last) 1 else 0)
-      zl.write(n & 0xff); zl.write((n >> 8) & 0xff)
-      zl.write(~n & 0xff); zl.write((~n >> 8) & 0xff)
-      zl.write(flt, off, n)
-      off += n
-    }
-    val adler = new java.util.zip.Adler32()
-    adler.update(flt)
-    val ad = adler.getValue
-    zl.write(((ad >> 24) & 0xff).toInt); zl.write(((ad >> 16) & 0xff).toInt)
-    zl.write(((ad >> 8) & 0xff).toInt); zl.write((ad & 0xff).toInt)
+    val z = new java.util.zip.DeflaterOutputStream(zl, deflater)
+    z.write(flt); z.close(); deflater.end()
     def chunk(typ: String, data: Array[Byte]): Array[Byte] = {
       val b = java.nio.ByteBuffer.allocate(12 + data.length)
       b.putInt(data.length)

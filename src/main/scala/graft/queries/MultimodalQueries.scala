@@ -1,8 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.Multimodal
+import graft.operators.{Gif, Multimodal}
 import graft.functions.TextOps
 import graft.operators.Cuts.CutOps
 
@@ -48,16 +48,7 @@ object MultimodalQueries extends QueryRegistry {
     // (54-byte header + 192 pixel bytes).
     "media_real_decode" -> ((s, dir) => {
       import s.implicits._
-      val docs = documents(s, dir)
-        .filter(col("doc_id") < 40 && length(col("text")) >= 64)
-        .select(col("doc_id"), substring(col("text"), 1, 64).as("head"))
-        // ASCII-only heads: a multi-byte char would make getBytes yield
-        // more than 64 bytes (encodeBmpGray would throw) and desync the
-        // oracle's ascii() from UTF-8 byte values. octet_length = char
-        // length iff every char is single-byte; mirrored in the oracle
-        // via strlen (DuckDB's byte length).
-        .filter(octet_length(col("head")) === 64)
-        .as[(Long, String)]
+      val docs = asciiHeads(s, dir, maxId = 40, len = 64)
       // each doc yields a BMP row AND a PNG row (media_id + 1000): the
       // PNG fixtures cycle all five scanline filters, so the decoded
       // values hash-matching the oracle pins the full filter
@@ -93,11 +84,7 @@ object MultimodalQueries extends QueryRegistry {
     // band packing, pairing, Hamming — from the raw text.
     "media_phash_pairs" -> ((s, dir) => {
       import s.implicits._
-      val docs = documents(s, dir)
-        .filter(col("doc_id") < 300 && length(col("text")) >= 64)
-        .select(col("doc_id"), substring(col("text"), 1, 64).as("head"))
-        .filter(octet_length(col("head")) === 64)
-        .as[(Long, String)]
+      val docs = asciiHeads(s, dir, maxId = 300, len = 64)
       val media = docs.map { case (id, txt) =>
         Multimodal.MediaRow(id, "image",
           Multimodal.encodeBmpGray(8, 8, txt.getBytes("UTF-8")), 8, 8, 1) }
@@ -134,11 +121,7 @@ object MultimodalQueries extends QueryRegistry {
     // sketch-audit convention (events_value_sketches precedent).
     "media_jpeg_audit" -> ((s, dir) => {
       import s.implicits._
-      val docs = documents(s, dir)
-        .filter(col("doc_id") < 40 && length(col("text")) >= 64)
-        .select(col("doc_id"), substring(col("text"), 1, 64).as("head"))
-        .filter(octet_length(col("head")) === 64)
-        .as[(Long, String)]
+      val docs = asciiHeads(s, dir, maxId = 40, len = 64)
       docs.map { case (id, txt) =>
         val gray = txt.getBytes("UTF-8").sorted
         val jpg = graft.operators.Jpeg.encode(8, 8, gray, gray = true)
@@ -165,11 +148,7 @@ object MultimodalQueries extends QueryRegistry {
     // the oracle requires true (prog_eq_baseline).
     "media_jpeg_progressive_audit" -> ((s, dir) => {
       import s.implicits._
-      val docs = documents(s, dir)
-        .filter(col("doc_id") < 40 && length(col("text")) >= 64)
-        .select(col("doc_id"), substring(col("text"), 1, 64).as("head"))
-        .filter(octet_length(col("head")) === 64)
-        .as[(Long, String)]
+      val docs = asciiHeads(s, dir, maxId = 40, len = 64)
       docs.map { case (id, txt) =>
         val gray = txt.getBytes("UTF-8").sorted
         val prog = graft.operators.Jpeg.encodeProgressive(8, 8, gray, gray = true)
@@ -192,22 +171,18 @@ object MultimodalQueries extends QueryRegistry {
 
     // REAL GIF decode end-to-end, and BIT-EXACT (GIF is lossless,
     // unlike the JPEG audits): each ascii head becomes an INTERLACED
-    // gray GIF whose LZW stream the pipeline fully decompresses and
-    // de-interlaces; the position-weighted sample sum then replays
+    // gray GIF that the pipeline decodes and de-interlaces through
+    // Gif.decode; the position-weighted sample sum then replays
     // from the raw text in DuckDB (sample 3i..3i+2 = byte i, so
     // Σ sⱼ·(j+1) = Σ bᵢ·(9i+6)) — any LZW, palette, or row-order
     // slip moves the integer and hash-fails
     "media_gif_audit" -> ((s, dir) => {
       import s.implicits._
-      val docs = documents(s, dir)
-        .filter(col("doc_id") < 40 && length(col("text")) >= 64)
-        .select(col("doc_id"), substring(col("text"), 1, 64).as("head"))
-        .filter(octet_length(col("head")) === 64)
-        .as[(Long, String)]
+      val docs = asciiHeads(s, dir, maxId = 40, len = 64)
       docs.map { case (id, txt) =>
         val gray = txt.getBytes("UTF-8")
-        val gif = Multimodal.encodeGifGray(8, 8, gray, interlaced = true)
-        val got = Multimodal.decodeGif(gif)
+        val gif = Gif.encodeGray(8, 8, Seq(gray), interlaced = true)
+        val got = Gif.decode(gif)
         val n = got.map(_.length).getOrElse(-1)
         val wsum = got.map(_.iterator.zipWithIndex
           .map { case (v, j) => v.toLong * (j + 1) }.sum).getOrElse(-1L)
@@ -229,11 +204,7 @@ object MultimodalQueries extends QueryRegistry {
     // whole decode→transform chain is exactly right.
     "media_audio_features" -> ((s, dir) => {
       import s.implicits._
-      val docs = documents(s, dir)
-        .filter(col("doc_id") < 40 && length(col("text")) >= 64)
-        .select(col("doc_id"), substring(col("text"), 1, 64).as("head"))
-        .filter(octet_length(col("head")) === 64)
-        .as[(Long, String)]
+      val docs = asciiHeads(s, dir, maxId = 40, len = 64)
       docs.map { case (id, txt) =>
         val wav = Multimodal.encodeWavPcm8(txt.getBytes("UTF-8"))
         val samples = Multimodal.decodeWav(wav).getOrElse(Array.empty[Int])
@@ -260,8 +231,8 @@ object MultimodalQueries extends QueryRegistry {
     // without needing H.264: each doc becomes a REAL 4-frame animated
     // GIF (three text-slice frames plus a planted near-identical
     // fourth = frame 0 with one gray byte bumped), the decoder
-    // extracts every frame (decodeGifFrames — the same LZW/palette
-    // path as the single-frame audits), each frame gets the aHash
+    // extracts every frame (Gif.decodeFrames — the same reader path
+    // as the single-frame audit), each frame gets the aHash
     // band packing, and near-identical frames WITHIN an animation
     // come from a (media, band)-keyed equi-join + popcount Hamming
     // rerank — the media_phash_pairs discipline applied along the
@@ -269,19 +240,14 @@ object MultimodalQueries extends QueryRegistry {
     // bits → bands → pairs → Hamming) from the raw text.
     "media_frame_dedup" -> ((s, dir) => {
       import s.implicits._
-      val docs = documents(s, dir)
-        .filter(col("doc_id") < 120 && length(col("text")) >= 192)
-        .select(col("doc_id"), substring(col("text"), 1, 192).as("head"))
-        .filter(octet_length(col("head")) === 192)
-        .as[(Long, String)]
+      val docs = asciiHeads(s, dir, maxId = 120, len = 192)
       val fr = docs.flatMap { case (id, txt) =>
         val b = txt.getBytes("UTF-8")
         val f3 = b.slice(0, 64)
         f3(7) = (f3(7) + 1).toByte // the planted near-identical frame
         val frames = Seq(b.slice(0, 64), b.slice(64, 128),
           b.slice(128, 192), f3)
-        val dec = Multimodal.decodeGifFrames(
-          Multimodal.encodeGifAnimGray(8, 8, frames))
+        val dec = Gif.decodeFrames(Gif.encodeGray(8, 8, frames))
           .getOrElse(throw new IllegalStateException(
             s"animated GIF round trip failed for doc $id"))
         dec.zipWithIndex.map { case (samples, fi) =>
@@ -332,11 +298,7 @@ object MultimodalQueries extends QueryRegistry {
     // no shuffle at all
     "media_video_frame_dedup" -> ((s, dir) => {
       import s.implicits._
-      val docs = documents(s, dir)
-        .filter(col("doc_id") < 120 && length(col("text")) >= 192)
-        .select(col("doc_id"), substring(col("text"), 1, 192).as("head"))
-        .filter(octet_length(col("head")) === 192)
-        .as[(Long, String)]
+      val docs = asciiHeads(s, dir, maxId = 120, len = 192)
       docs.map { case (id, txt) =>
         val b = txt.getBytes("UTF-8")
         val jpgs = (0 until 3).map(f =>
@@ -374,6 +336,23 @@ object MultimodalQueries extends QueryRegistry {
         .orderBy(col("media_id"))
     }),
   )
+
+  /** (doc_id, head) for docs with doc_id < `maxId` whose first `len`
+    * chars are all ASCII: the cohort every byte-level media query
+    * encodes. A multi-byte char would make getBytes yield more than
+    * `len` bytes (the fixed-size encoders would throw) and desync the
+    * oracle's ascii() from UTF-8 byte values. octet_length = char
+    * length iff every char is single-byte; the oracles mirror it with
+    * strlen (DuckDB's byte length). */
+  private def asciiHeads(s: SparkSession, dir: String, maxId: Long,
+      len: Int): Dataset[(Long, String)] = {
+    import s.implicits._
+    documents(s, dir)
+      .filter(col("doc_id") < maxId && length(col("text")) >= len)
+      .select(col("doc_id"), substring(col("text"), 1, len).as("head"))
+      .filter(octet_length(col("head")) === len)
+      .as[(Long, String)]
+  }
 
   override def oracle: Map[String, String] = Map(
     "media_features" ->

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Multimodal
+import graft.operators.{Gif, Multimodal}
 import graft.operators.Multimodal.MediaRow
 
 /** Multimodal plumbing contracts: binary round-trip, batch decode,
@@ -563,27 +563,38 @@ class MultimodalSpec extends SparkSpec {
     // crawled media is corrupt now and then; the codec runs inside the
     // decode mapPartitions stage, where one escaped exception fails
     // the whole stage, and a partial sample array would be read as a
-    // frame of the declared size
+    // frame of the declared size. The GIF streams (one interlaced
+    // frame, a 3-frame animation) go through the all-frames decoder,
+    // which needs the trailer
     val (w, h) = (16, 12)
     val rgb = gradientRgb(w, h)
-    val streams = Seq(graft.operators.Jpeg.encode(w, h, rgb),
-      graft.operators.Jpeg.encodeProgressive(w, h, rgb))
+    val gray = Array.tabulate(w * h)(i => ((i * 37 + 11) % 256).toByte)
+    val jpegFrames = (p: Array[Byte]) => graft.operators.Jpeg.decode(p).map(Seq(_))
+    val gifFrames = (p: Array[Byte]) => Gif.decodeFrames(p).map(_.toSeq)
+    val streams = Seq(
+      graft.operators.Jpeg.encode(w, h, rgb) -> jpegFrames,
+      graft.operators.Jpeg.encodeProgressive(w, h, rgb) -> jpegFrames,
+      Gif.encodeGray(w, h, Seq(gray), interlaced = true) -> gifFrames,
+      Gif.encodeGray(w, h, Seq(gray, gray.reverse, gray.map(v => (v ^ 0x55).toByte)))
+        -> gifFrames)
     val rnd = new scala.util.Random(41)
-    for (jpg <- streams; i <- 1 to 150) {
+    for ((stream, frames) <- streams; i <- 1 to 150) {
       if (i % 3 == 0) {
-        // the first two cuts drop only EOI bytes, the rest cut anywhere;
-        // the reader warns on a cut stream and pads the frame, and the
-        // padded frame must not pass as data
-        val cut = jpg.take(if (i < 9) jpg.length - i / 3 else rnd.nextInt(jpg.length))
-        assert(graft.operators.Jpeg.decode(cut).isEmpty, s"cut at ${cut.length}")
+        // the first two cuts drop only the last one or two bytes (EOI;
+        // a GIF's trailer and block terminator), the rest cut anywhere;
+        // the JPEG reader warns on a cut stream and pads the frame, and
+        // the padded frame must not pass as data
+        val cut = stream.take(
+          if (i < 9) stream.length - i / 3 else rnd.nextInt(stream.length))
+        assert(frames(cut).isEmpty, s"cut at ${cut.length}")
         Multimodal.decode(cut) // must not throw
       } else {
-        val bad = jpg.clone()
+        val bad = stream.clone()
         for (_ <- 1 to 1 + rnd.nextInt(4))
           bad(rnd.nextInt(bad.length)) = rnd.nextInt(256).toByte
-        graft.operators.Jpeg.decode(bad).foreach { got =>
+        frames(bad).foreach(_.foreach { got =>
           assert(got.length == w * h * 3, s"copy $i: ${got.length} samples")
-        }
+        })
         Multimodal.decode(bad) // must not throw
       }
     }
@@ -593,19 +604,61 @@ class MultimodalSpec extends SparkSpec {
     val (w, h) = (9, 13) // odd dims: all four interlace passes non-empty
     val gray = Array.tabulate(w * h)(i => ((i * 37 + 11) % 256).toByte)
     val want = gray.flatMap(v => Seq(v & 0xff, v & 0xff, v & 0xff)).toSeq
-    val plain = Multimodal.decodeGif(Multimodal.encodeGifGray(w, h, gray)).get
+    val plain = Gif.decode(Gif.encodeGray(w, h, Seq(gray))).get
     assert(plain.toSeq === want)
     // interlaced frame: physical row order differs, logical must not
-    val inter = Multimodal.decodeGif(
-      Multimodal.encodeGifGray(w, h, gray, interlaced = true)).get
+    val inter = Gif.decode(Gif.encodeGray(w, h, Seq(gray), interlaced = true)).get
     assert(inter.toSeq === want)
     // structural rejections: truncated LZW, trailer-before-image, bad sig
-    val gif = Multimodal.encodeGifGray(w, h, gray)
-    assert(Multimodal.decodeGif(gif.dropRight(20)).isEmpty)
-    assert(Multimodal.decodeGif("GIF87a then junk that is long enough".getBytes).isEmpty)
+    val gif = Gif.encodeGray(w, h, Seq(gray))
+    assert(Gif.decode(gif.dropRight(20)).isEmpty)
+    assert(Gif.decode("GIF87a then junk that is long enough".getBytes).isEmpty)
+    // an LZW stream that ends before the last row, or (non-interlaced)
+    // runs a row past it
+    assert(Gif.decode(rawGif(2, 3, 1, literals(1, 2))).isEmpty)
+    assert(Gif.decode(rawGif(2, 2, 1, literals(1, 2, 3, 0))).isEmpty)
+    // code 261 when the next free entry is 260: the reader warns, then
+    // still fills the row
+    assert(Gif.decode(rawGif(2, 5, 1, Seq(256, 1, 2, 3, 261, 1, 2, 257))).isEmpty)
+    // palette overrun: index 9 of an 8-entry table fits the reader's
+    // 4-bit raster and gives None; index 200 of a 4-entry table does
+    // not fit its 2-bit raster and is masked to in-range samples
+    assert(Gif.decode(rawGif(3, 2, 1, literals(1, 9))).isEmpty)
+    val masked = rawGif(2, 2, 1, literals(1, 200))
+    Gif.decode(masked).foreach(got =>
+      assert(got.length == 6 && got.forall(v => v >= 0 && v <= 255), got.toSeq))
+    Multimodal.decode(masked) // must not throw
     // dispatch routes GIF to the real parse
     assert(Multimodal.decode(gif).toSeq === want)
   }
+
+  /** Hand-built GIF89a: a global table of 2^`tableBits` gray entries
+    * (entry i = 30·i) and one w×h frame of 9-bit LZW `codes` (minimum
+    * code size 8: CLEAR = 256, END = 257), so any index up to 255 can be
+    * coded whatever the table size. */
+  private def rawGif(tableBits: Int, w: Int, h: Int, codes: Seq[Int]): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    def w16(v: Int): Unit = { out.write(v & 0xff); out.write(v >> 8) }
+    out.write("GIF89a".getBytes("US-ASCII"))
+    w16(w); w16(h); out.write(0x80 | (tableBits - 1)); out.write(0); out.write(0)
+    for (i <- 0 until (1 << tableBits); _ <- 0 until 3) out.write(30 * i)
+    out.write(0x2c); w16(0); w16(0); w16(w); w16(h); out.write(0)
+    out.write(8)
+    val data = new java.io.ByteArrayOutputStream()
+    var (acc, nb) = (0L, 0)
+    for (c <- codes) {
+      acc |= c.toLong << nb; nb += 9
+      while (nb >= 8) { data.write((acc & 0xff).toInt); acc >>= 8; nb -= 8 }
+    }
+    if (nb > 0) data.write(acc.toInt)
+    out.write(data.size); data.writeTo(out); out.write(0)
+    out.write(0x3b)
+    out.toByteArray
+  }
+
+  /** LZW codes for `pixels` with a CLEAR before each literal (the table
+    * never grows), then END. */
+  private def literals(pixels: Int*): Seq[Int] = pixels.flatMap(px => Seq(256, px)) :+ 257
 
   test("wht band energies: Parseval, DC purity, and wav round-trip") {
     val rnd = new scala.util.Random(7)
@@ -634,25 +687,26 @@ class MultimodalSpec extends SparkSpec {
   test("gif codec: GIF89a GCE transparency composites to the screen background") {
     val (w, h) = (4, 3)
     val gray = Array.tabulate(w * h)(i => (i * 20 + 10).toByte) // 10,30,…,230
-    val base = Multimodal.encodeGifGray(w, h, gray)
-    // splice: GIF89a signature, background index 200 (gray 200), and a
-    // graphic-control extension ahead of the image descriptor at 13+768
+    val base = Gif.encodeGray(w, h, Seq(gray))
+    // splice: background index 200 (gray 200), and a graphic-control
+    // extension ahead of the image descriptor at 13+768 (the writer's
+    // single frame is GIF89a with a 256-entry global table, no GCE)
+    assert(new String(base, 0, 6, "US-ASCII") == "GIF89a" && base(13 + 768) == 0x2c)
     def withGce(flags: Int, transIdx: Int, bgIdx: Int): Array[Byte] = {
       val b = base.clone()
-      b(4) = '9'.toByte // GIF87a -> GIF89a
       b(11) = bgIdx.toByte
       val imgDesc = 13 + 768
       val gce = Array(0x21, 0xf9, 0x04, flags, 0, 0, transIdx, 0x00).map(_.toByte)
       b.take(imgDesc) ++ gce ++ b.drop(imgDesc)
     }
     // transparency armed on the pixel holding gray 50 → background 200
-    val trans = Multimodal.decodeGif(withGce(flags = 1, transIdx = 50, bgIdx = 200)).get
+    val trans = Gif.decode(withGce(flags = 1, transIdx = 50, bgIdx = 200)).get
     for (i <- 0 until w * h; c <- 0 until 3) {
       val g = gray(i) & 0xff
       assert(trans(3 * i + c) === (if (g == 50) 200 else g), s"px $i ch $c")
     }
     // GCE present but transparency bit OFF → index 50 decodes as itself
-    val opaque = Multimodal.decodeGif(withGce(flags = 0, transIdx = 50, bgIdx = 200)).get
+    val opaque = Gif.decode(withGce(flags = 0, transIdx = 50, bgIdx = 200)).get
     for (i <- 0 until w * h; c <- 0 until 3)
       assert(opaque(3 * i + c) === (gray(i) & 0xff))
   }
@@ -666,15 +720,15 @@ class MultimodalSpec extends SparkSpec {
     val bos = new java.io.ByteArrayOutputStream()
     assert(javax.imageio.ImageIO.write(img, "gif", bos))
     val gif = bos.toByteArray
-    val ours = Multimodal.decodeGif(gif).get
+    val ours = Gif.decode(gif).get
     assert(ours.length === w * h * 3)
-    val back = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(gif))
+    // against the source samples: the JDK reader is what Gif wraps
     for (y <- 0 until h; x <- 0 until w) {
-      val p = back.getRGB(x, y)
+      val v = (x * 16 + y * 7) % 256
       val o = (y * w + x) * 3
-      assert(ours(o) === ((p >> 16) & 0xff), s"r at $x,$y")
-      assert(ours(o + 1) === ((p >> 8) & 0xff), s"g at $x,$y")
-      assert(ours(o + 2) === (p & 0xff), s"b at $x,$y")
+      assert(ours(o) === v, s"r at $x,$y")
+      assert(ours(o + 1) === v, s"g at $x,$y")
+      assert(ours(o + 2) === v, s"b at $x,$y")
     }
   }
 
@@ -700,6 +754,15 @@ class MultimodalSpec extends SparkSpec {
     val allocated = threads.getCurrentThreadAllocatedBytes
     assert(graft.operators.Jpeg.decode(justOver).isEmpty)
     assert(threads.getCurrentThreadAllocatedBytes - allocated < (8L << 20))
+    // a GIF image descriptor (at 13+768) declaring 4097×4097: the JDK
+    // reader would size an 84 MB raster and pad it without a warning
+    val gifBomb = Gif.encodeGray(8, 8, Seq(Array.tabulate(64)(_.toByte)))
+    for (o <- Seq(13 + 768 + 5, 13 + 768 + 7)) {
+      gifBomb(o) = 0x01.toByte; gifBomb(o + 1) = 0x10.toByte
+    }
+    val gifAllocated = threads.getCurrentThreadAllocatedBytes
+    assert(Gif.decode(gifBomb).isEmpty)
+    assert(threads.getCurrentThreadAllocatedBytes - gifAllocated < (8L << 20))
     // same for PNG: chunk-valid header declaring 19000×19000 RGBA
     val png = rawPng(2, 2, 6, 4, Array.fill(16)(1.toByte))
     val ihdrData = 8 + 8 // sig + len/type of IHDR
@@ -744,8 +807,8 @@ class MultimodalSpec extends SparkSpec {
     val f0 = Array.tabulate(64)(i => (i * 4).toByte)
     val f1 = Array.tabulate(64)(i => (255 - i * 4).toByte)
     val f2 = Array.fill(64)(77.toByte)
-    val anim = Multimodal.encodeGifAnimGray(8, 8, Seq(f0, f1, f2))
-    val got = Multimodal.decodeGifFrames(anim)
+    val anim = Gif.encodeGray(8, 8, Seq(f0, f1, f2))
+    val got = Gif.decodeFrames(anim)
     assert(got.isDefined && got.get.length == 3)
     got.get.zip(Seq(f0, f1, f2)).foreach { case (samples, src) =>
       assert(samples.length == 192)
@@ -755,8 +818,8 @@ class MultimodalSpec extends SparkSpec {
           samples(3 * i + 2) == v, s"pixel $i")
       }
     }
-    // decodeGif (first-frame surface) sees exactly frame 0
-    val first = Multimodal.decodeGif(anim)
+    // Gif.decode (first-frame surface) sees exactly frame 0
+    val first = Gif.decode(anim)
     assert(first.isDefined && first.get.toSeq == got.get.head.toSeq)
   }
 
@@ -769,8 +832,8 @@ class MultimodalSpec extends SparkSpec {
     val f3 = f0.clone(); f3(40) = 10.toByte
     val f1 = (Array.fill(32)(200) ++ Array.fill(32)(10)).map(_.toByte)
     val f2 = Array.tabulate(64)(i => if (i % 2 == 0) 250 else 0).map(_.toByte)
-    val anim = Multimodal.encodeGifAnimGray(8, 8, Seq(f0, f1, f2, f3))
-    val frames = Multimodal.decodeGifFrames(anim).get
+    val anim = Gif.encodeGray(8, 8, Seq(f0, f1, f2, f3))
+    val frames = Gif.decodeFrames(anim).get
     val bands = frames.map(s => Multimodal.aHashBits(s, 3))
     def hamming(a: Array[Int], b: Array[Int]): Int =
       (0 until 4).map(j => Integer.bitCount(a(j) ^ b(j))).sum
