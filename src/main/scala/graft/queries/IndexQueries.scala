@@ -73,14 +73,15 @@ object IndexQueries extends QueryRegistry {
   private[graft] val LshAppendPlanes = 4
 
   /** The data-plane Lsh instance + half split shared by the append and
-    * compact maintenance stores — ONE copy of the plane-selection rule,
-    * so the two audits that share lshMaintenanceOracle can never drift
-    * apart on it. Planes are DATA-DEPENDENT (the first 4 embeddings —
-    * the lshDataStore precedent), which makes every bucket key
+    * compact maintenance stores and the streaming append replay — ONE
+    * copy of the plane-selection rule, so the three audits that share
+    * lshMaintenanceOracle can never drift apart on it. Planes are
+    * DATA-DEPENDENT (the first 4 embeddings — the lshDataStore
+    * precedent), which makes every bucket key
     * SQL-replayable: the audits over these stores are CONTENT-checked
     * by a full DuckDB re-assignment, not merely invariant-checked.
     * Returns (lsh, half, embeddings frame). */
-  private def dataPlanesLsh(s: SparkSession, dir: String): (Lsh, Long, DataFrame) = {
+  private[graft] def dataPlanesLsh(s: SparkSession, dir: String): (Lsh, Long, DataFrame) = {
     val emb = embeddings(s, dir)
     val half = emb.count() / 2
     val planes = emb.filter(col("vec_id") < LshAppendPlanes)

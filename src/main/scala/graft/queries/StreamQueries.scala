@@ -1,9 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.types.StructType
 import graft.functions.TextOps
 import graft.operators.Dedup
 import graft.streaming.{DedupStream, EventStreams}
@@ -11,13 +12,14 @@ import graft.operators.Cuts.CutOps
 
 /** Declared queries for the STREAMING surface, via bounded replay: each
   * runs the real Structured Streaming pipeline (state store, event-time
-  * watermark, timeouts) with `Trigger.AvailableNow` over a finite file
-  * source derived from the driver's parquet tables, sinks the output to
+  * watermark, timeouts) to completion over a finite file source
+  * derived from the driver's parquet tables, sinks the output to
   * parquet, and declares the (deterministic) sink — which a DuckDB
   * batch twin then replays value-for-value. This brings the streaming
   * operators under the same rows+schema+hash gate as everything else;
   * the reference engine is batch-only (SURVEY §2.8), so the whole
-  * module is extension surface.
+  * module is extension surface. All replays share one staging rule
+  * (`stage`) and one run rule (`replay`).
   *
   * Determinism notes (why the sinks are hash-stable):
   *   - `stream_near_dup_replay`: with every doc in one micro-batch and
@@ -27,14 +29,13 @@ import graft.operators.Cuts.CutOps
   *     of intra-batch iteration order — pair ids are min/max
   *     normalized and est_jaccard is a pure function of the two
   *     signatures.
-  *   - `stream_sessions_replay`: the input is split into TWO
-  *     mtime-ordered files replayed as separate micro-batches
-  *     (maxFilesPerTrigger=1), so state genuinely persists across a
-  *     batch boundary and the watermark advances between batches; the
-  *     sink aggregate (per user: final session count, events in the
-  *     final session) is invariant to how updates and timeout
-  *     re-emissions interleave because n_sessions is monotone and
-  *     events-in-session is monotone within a session.
+  *   - `stream_sessions_replay`: the input is staged as TWO
+  *     micro-batches, so state genuinely persists across a batch
+  *     boundary and the watermark advances between batches; the sink
+  *     aggregate (per user: final session count, events in the final
+  *     session) is invariant to how updates and timeout re-emissions
+  *     interleave because n_sessions is monotone and events-in-session
+  *     is monotone within a session.
   *   - `stream_decontam_replay`: the screen is stateless map-only over
   *     a broadcast Bloom bitmap — per-doc flags are order-free.
   *   - `stream_hourly_replay`: Append-mode windows are emitted exactly
@@ -43,10 +44,10 @@ import graft.operators.Cuts.CutOps
   *   - `stream_click_attr_replay`: a bounded inner stream-stream join
   *     emits exactly the batch join's pair set (watermarks only bound
   *     state, never filter an in-bound match).
-  *   - `stream_exact_dedup_replay`: three mtime-ordered micro-batches;
-  *     per-batch winners are earliest-event rows (sorted single-file
-  *     batches), and state eviction is deterministic end-of-batch
-  *     watermark math — see exactDedupReplaySink.
+  *   - `stream_exact_dedup_replay`: three micro-batches; per-batch
+  *     winners are earliest-event rows (sorted single-file batches),
+  *     and state eviction is deterministic end-of-batch watermark math
+  *     — see exactDedupReplaySink.
   *   - `stream_graph_replay`: per-batch edge increments are pure
   *     functions of the batch's (whole) orders and the sum-merge is
   *     associative/commutative, so the merged store is batch-order
@@ -54,11 +55,10 @@ import graft.operators.Cuts.CutOps
   *     rewrite, not double-count.
   *   - `stream_triangle_replay`: each tick's gained-triangle count is
   *     a pure function of (its batch's edges, the id-bounded PREFIX
-  *     store), and with maxFilesPerTrigger=1 over mtime-ordered files
-  *     the batch→id assignment is fixed — so deltas are replay-stable
-  *     and a re-delivered tick recomputes the same count (the prefix
-  *     read filters by id, keeping later batches' on-disk partitions
-  *     out of view).
+  *     store), and the staged batch→id assignment is fixed — so deltas
+  *     are replay-stable and a re-delivered tick recomputes the same
+  *     count (the prefix read filters by id, keeping later batches'
+  *     on-disk partitions out of view).
   *   - `stream_funnel_replay`: per-doc increments (bands, shingles,
   *     hashes, metrics, contam flags) are pure per-doc functions;
   *     the pair set is exactly "all qualifying pairs, generated once
@@ -83,161 +83,29 @@ object StreamQueries extends QueryRegistry {
     * per-doc event times (one doc per minute, deterministic in doc_id). */
   private val DocTsBase = 1704067200L
 
-  /** The prepared document stream input: (doc_id, ts, text) as ONE
-    * parquet file, so the whole corpus arrives in one micro-batch (no
-    * watermark ordering concerns) with a fixed row order. Built once
-    * per (session, dir); both document streams read it with their own
-    * checkpoints. Returns (path, schema). */
-  private def docsStreamInput(s: SparkSession, dir: String)
-      : (String, org.apache.spark.sql.types.StructType) =
-    SharedBuilds.of(s, dir, "stream-docs-in") {
-      val in = buildPath(dir, "stream-docs-in")
+  /** Stage a replay input: part `i` becomes the `i`-th mtime-ordered
+    * parquet file of `stream-<tag>-in`, so under `replay` it arrives as
+    * micro-batch `i` with a fixed row order. Built once per (session,
+    * dir, tag) — `parts` is only evaluated on the build — and shared by
+    * every replay that reads the same input. Returns (path, schema). */
+  private[graft] def stage(s: SparkSession, dir: String, tag: String,
+      parts: => Seq[DataFrame]): (String, StructType) =
+    SharedBuilds.of(s, dir, s"stream-$tag-in") {
+      val in = buildPath(dir, s"stream-$tag-in")
       rmrf(in)
-      val prepared = documents(s, dir).select(col("doc_id"),
-        timestamp_micros((lit(DocTsBase) + col("doc_id") * 60L) * 1000000L).as("ts"),
-        col("text"))
-      prepared.coalesce(1).write.mode("overwrite").parquet(in)
-      (in, prepared.schema)
-    }
-
-  /** Run the in-stream near-dup pairing (band-keyed
-    * flatMapGroupsWithState) to completion over the bounded doc stream;
-    * returns the parquet sink path. The checkpoint is recreated every
-    * build (a stale checkpoint would silently skip the replay). */
-  private def nearDupReplaySink(s: SparkSession, dir: String): String =
-    SharedBuilds.of(s, dir, "stream-near-dup-replay") {
-      val (in, schema) = docsStreamInput(s, dir)
-      val sink = buildPath(dir, "stream-nd-sink")
-      val ckpt = buildPath(dir, "stream-nd-ckpt")
-      rmrf(sink, ckpt)
-      val stream = s.readStream.schema(schema).parquet(in)
-      val q = DedupStream.inStreamNearDups(stream)
-        .writeStream.format("parquet")
-        .option("path", sink).option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      sink
-    }
-
-  /** The prepared event stream input: one parquet file (single
-    * micro-batch — no watermark-ordering concerns), shared by the
-    * hourly-aggregate and click-attribution replays. */
-  private def eventsStreamInput(s: SparkSession, dir: String)
-      : (String, org.apache.spark.sql.types.StructType) =
-    SharedBuilds.of(s, dir, "stream-events-in") {
-      val in = buildPath(dir, "stream-events-in")
-      rmrf(in)
-      val prepared = events(s, dir).select(col("event_id"), col("ts"),
-        col("user_id"), col("event_type"), col("value"))
-      prepared.coalesce(1).write.mode("overwrite").parquet(in)
-      (in, prepared.schema)
-    }
-
-  /** Run the watermarked tumbling-window aggregate to completion.
-    * Append mode only emits windows the final watermark (max event
-    * time − 2 h) has passed — the no-data batch AvailableNow runs
-    * after the last data batch finalizes them; later windows stay in
-    * state and are deterministically ABSENT from the sink (the oracle
-    * applies the same cutoff). Returns the parquet sink path. */
-  private def hourlyReplaySink(s: SparkSession, dir: String): String =
-    SharedBuilds.of(s, dir, "stream-hourly-replay") {
-      val (in, schema) = eventsStreamInput(s, dir)
-      val sink = buildPath(dir, "stream-hr-sink")
-      val ckpt = buildPath(dir, "stream-hr-ckpt")
-      rmrf(sink, ckpt)
-      val q = EventStreams.hourlyAggregate(s.readStream.schema(schema).parquet(in))
-        .writeStream.format("parquet")
-        .option("path", sink).option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      sink
-    }
-
-  /** Run the stream-stream interval join (purchases attributed to the
-    * same user's clicks in the preceding 30 min) to completion; the
-    * two sides are watermarked filters of ONE bounded source, so the
-    * inner join's emitted pair set equals the batch join exactly.
-    * Returns the parquet sink path. */
-  private def clickAttrReplaySink(s: SparkSession, dir: String): String =
-    SharedBuilds.of(s, dir, "stream-click-attr-replay") {
-      val (in, schema) = eventsStreamInput(s, dir)
-      val sink = buildPath(dir, "stream-ca-sink")
-      val ckpt = buildPath(dir, "stream-ca-ckpt")
-      rmrf(sink, ckpt)
-      val stream = s.readStream.schema(schema).parquet(in)
-      val q = EventStreams.clickToPurchaseJoin(
-          stream.filter(col("event_type") === "click"),
-          stream.filter(col("event_type") === "purchase"))
-        .writeStream.format("parquet")
-        .option("path", sink).option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      sink
-    }
-
-  /** Streaming index maintenance — the loop a serving tier actually
-    * runs: the LSH store is built on the first half of the corpus,
-    * then a foreachBatch consumer `Lsh.append`s each micro-batch of
-    * newly-arriving vectors (three mtime-ordered files → three real
-    * micro-batches) into the bucket-partitioned store. Append is
-    * O(batch) against the frozen data-dependent plane matrix, so the
-    * streaming path does exactly what the batch lsh_append_audit path
-    * does — and the declared audit over the final store shares that
-    * query's full-DuckDB-re-assignment oracle: a dropped batch, a
-    * double-applied batch, or a drifted bucket key hash-fails.
-    * Honesty note on restarts: Lsh.append is not idempotent per
-    * micro-batch — a crash AFTER the append but BEFORE the checkpoint
-    * commit would re-apply the batch on restart (and the audit would
-    * catch the duplicate ids). A production deployment writes the
-    * batchId into the store (or compacts through a transactional
-    * format) to make redelivery exact; the bounded replay here runs
-    * each batch exactly once. */
-  private def indexAppendReplay(s: SparkSession, dir: String): (Long, DataFrame) =
-    SharedBuilds.of(s, dir, "stream-index-append") {
-      val emb = embeddings(s, dir)
-      val total = emb.count()
-      val half = total / 2
-      val planes = emb.filter(col("vec_id") < IndexQueries.LshAppendPlanes)
-        .orderBy(col("vec_id")).select(col("embedding")).collect()
-        .map(_.getSeq[Float](0).map(_.toDouble).toArray)
-      val lsh = new graft.operators.Lsh(
-        numPlanes = IndexQueries.LshAppendPlanes, seed = 42L,
-        explicitPlanes = Some(planes))
-      val path = buildPath(dir, "stream-lsh-store")
-      val in = buildPath(dir, "stream-vec-in")
-      val ckpt = buildPath(dir, "stream-lsh-ckpt")
-      rmrf(path, in, ckpt)
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
-      lsh.build(emb.filter(col("vec_id") < half), path)
-      val slice = emb.select(col("vec_id"), col("embedding"))
-      val third = (total - half) / 3 + 1
-      (0 until 3).foreach { i =>
-        writeMtimed(dir, in, f"$i%02d-vecs",
-          slice.filter(col("vec_id") >= half + i * third &&
-            col("vec_id") < half + (i + 1) * third),
-          1700000000000L + i * 100000L)
+      val ps = parts
+      ps.zipWithIndex.foreach { case (df, i) =>
+        writeMtimed(dir, in, f"$tag-$i%02d", df, 1700000000000L + i * 100000L)
       }
-      val q = s.readStream.schema(slice.schema)
-        .option("maxFilesPerTrigger", "1").parquet(in)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          lsh.append(path, batch); ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      (half, s.read.parquet(path))
+      (in, ps.head.schema)
     }
 
   /** Write `df` as the single parquet file `<inDir>/<name>.parquet`
-    * with a pinned mtime — the unit of one micro-batch under
-    * AvailableNow + maxFilesPerTrigger=1, which orders batches by
-    * mtime. A refused mtime (setLastModified returns false on some
+    * with a pinned mtime. The file source orders batches by mtime, so
+    * a refused mtime (setLastModified returns false on some
     * filesystems) would silently reorder the batches and change the
-    * replay, so it is asserted, not ignored. */
+    * replay — it is asserted, not ignored. */
   private def writeMtimed(dir: String, inDir: String, name: String,
       df: DataFrame, mtime: Long): Unit = {
     val tmp = buildPath(dir, s"stream-tmp-$name")
@@ -253,46 +121,153 @@ object StreamQueries extends QueryRegistry {
     rmrf(tmp)
   }
 
-  /** Run the stateful sessionizer to completion over the event stream,
-    * split into two ts-ranged, mtime-ordered files so AvailableNow +
-    * maxFilesPerTrigger=1 drives TWO micro-batches — per-user state
-    * crosses a real batch boundary and event-time timeouts can fire on
-    * the second batch's advanced watermark. Per-batch Update-mode rows
-    * land in the sink via foreachBatch (the file sink itself is
-    * append-only). Returns the parquet sink path. */
+  /** Run one bounded replay of a staged input to completion: read it
+    * one file per micro-batch, in staging order, hand the stream to
+    * `sink`, and run the query with the checkpoint `stream-<tag>-ckpt`
+    * until every staged batch is committed. The checkpoint is always
+    * cleared first — a stale one would silently skip the replay.
+    * `reset = true` also clears `stores` (a fresh run);
+    * `reset = false` keeps them, so every batch is re-delivered onto
+    * the state the previous pass left — the at-least-once retry that
+    * StreamReplaySpec drives with two passes. */
+  private[graft] def replay(s: SparkSession, dir: String, tag: String,
+      reset: Boolean, stores: String*)(staged: (String, StructType))(
+      sink: DataFrame => DataStreamWriter[Row]): Unit = {
+    val ckpt = buildPath(dir, s"stream-$tag-ckpt")
+    rmrf((if (reset) stores else Nil) :+ ckpt: _*)
+    sink(s.readStream.schema(staged._2)
+        .option("maxFilesPerTrigger", "1").parquet(staged._1))
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+  }
+
+  /** A sink that hands each micro-batch and its id to `f`. */
+  private def eachBatch(f: (DataFrame, Long) => Unit)(df: DataFrame)
+      : DataStreamWriter[Row] = df.writeStream.foreachBatch(f)
+
+  /** A fresh file-sink replay: `op` over the staged stream, appended to
+    * the parquet sink `stream-<tag>-sink`; returns the sink path. */
+  private def sinkReplay(s: SparkSession, dir: String, tag: String,
+      staged: (String, StructType))(op: DataFrame => DataFrame): String = {
+    val sink = buildPath(dir, s"stream-$tag-sink")
+    replay(s, dir, tag, reset = true, sink)(staged)(st =>
+      op(st).writeStream.format("parquet").option("path", sink).outputMode("append"))
+    sink
+  }
+
+  /** The document stream input: (doc_id, ts, text) as ONE batch, so
+    * the whole corpus arrives together (no watermark ordering
+    * concerns); both document streams read it. */
+  private def docsStreamInput(s: SparkSession, dir: String): (String, StructType) =
+    stage(s, dir, "docs", Seq(documents(s, dir).select(col("doc_id"),
+      timestamp_micros((lit(DocTsBase) + col("doc_id") * 60L) * 1000000L).as("ts"),
+      col("text"))))
+
+  /** The event stream input as ONE batch (no watermark-ordering
+    * concerns), shared by the hourly-aggregate and click-attribution
+    * replays. */
+  private def eventsStreamInput(s: SparkSession, dir: String): (String, StructType) =
+    stage(s, dir, "events", Seq(events(s, dir).select(col("event_id"), col("ts"),
+      col("user_id"), col("event_type"), col("value"))))
+
+  /** Three whole-order lineitem batches (`l_orderkey % 3`), shared by
+    * the graph, reach and triangle replays. */
+  private def lineitemStreamInput(s: SparkSession, dir: String): (String, StructType) =
+    stage(s, dir, "lineitem", {
+      val li = Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_partkey"))
+      (0 until 3).map(i => li.filter(col("l_orderkey") % 3 === i))
+    })
+
+  /** The in-stream near-dup pairing (band-keyed
+    * flatMapGroupsWithState) over the doc stream; returns the sink. */
+  private def nearDupReplaySink(s: SparkSession, dir: String): String =
+    SharedBuilds.of(s, dir, "stream-near-dup-replay") {
+      sinkReplay(s, dir, "nd", docsStreamInput(s, dir))(DedupStream.inStreamNearDups(_))
+    }
+
+  /** The watermarked tumbling-window aggregate. Append mode only emits
+    * windows the final watermark (max event time − 2 h) has passed —
+    * the no-data batch the trigger runs after the last data batch
+    * finalizes them; later windows stay in state and are
+    * deterministically ABSENT from the sink (the oracle applies the
+    * same cutoff). Returns the sink. */
+  private def hourlyReplaySink(s: SparkSession, dir: String): String =
+    SharedBuilds.of(s, dir, "stream-hourly-replay") {
+      sinkReplay(s, dir, "hr", eventsStreamInput(s, dir))(EventStreams.hourlyAggregate)
+    }
+
+  /** The stream-stream interval join (purchases attributed to the same
+    * user's clicks in the preceding 30 min); the two sides are
+    * watermarked filters of ONE bounded source, so the inner join's
+    * emitted pair set equals the batch join exactly. Returns the sink. */
+  private def clickAttrReplaySink(s: SparkSession, dir: String): String =
+    SharedBuilds.of(s, dir, "stream-click-attr-replay") {
+      sinkReplay(s, dir, "ca", eventsStreamInput(s, dir))(st =>
+        EventStreams.clickToPurchaseJoin(
+          st.filter(col("event_type") === "click"),
+          st.filter(col("event_type") === "purchase")))
+    }
+
+  /** Streaming index maintenance — the loop a serving tier actually
+    * runs: the LSH store is built on the first half of the corpus,
+    * then a foreachBatch consumer `Lsh.append`s each of three batches
+    * of newly-arriving vectors into the bucket-partitioned store.
+    * Append is O(batch) against the frozen data-dependent plane
+    * matrix, so the streaming path does exactly what the batch
+    * lsh_append_audit path does — and the declared audit over the
+    * final store shares that query's full-DuckDB-re-assignment oracle:
+    * a dropped batch, a double-applied batch, or a drifted bucket key
+    * hash-fails. Lsh.append is not idempotent per micro-batch — a
+    * crash AFTER the append but BEFORE the checkpoint commit would
+    * re-apply the batch on restart (and the audit would catch the
+    * duplicate ids). A production deployment writes the batchId into
+    * the store (or compacts through a transactional format) to make
+    * redelivery exact; this replay runs each batch exactly once.
+    * Returns (half, store). */
+  private def indexAppendReplay(s: SparkSession, dir: String): (Long, DataFrame) =
+    SharedBuilds.of(s, dir, "stream-index-append") {
+      val (lsh, half, emb) = IndexQueries.dataPlanesLsh(s, dir)
+      val path = buildPath(dir, "stream-lsh-store")
+      lsh.build(emb.filter(col("vec_id") < half), path)
+      val staged = stage(s, dir, "vec", {
+        val third = (emb.count() - half) / 3 + 1
+        (0 until 3).map(i => emb.select(col("vec_id"), col("embedding"))
+          .filter(col("vec_id") >= half + i * third &&
+            col("vec_id") < half + (i + 1) * third))
+      })
+      replay(s, dir, "lsh", reset = true)(staged)(eachBatch((batch, _) =>
+        lsh.append(path, batch)))
+      (half, s.read.parquet(path))
+    }
+
+  /** The stateful sessionizer over the events staged as two ts-ranged
+    * batches — per-user state crosses a real batch boundary and
+    * event-time timeouts can fire on the second batch's advanced
+    * watermark. Per-batch Update-mode rows land in the sink via
+    * foreachBatch (the file sink itself is append-only). Returns the
+    * sink. */
   private def sessionsReplaySink(s: SparkSession, dir: String): String =
     SharedBuilds.of(s, dir, "stream-sessions-replay") {
       import s.implicits._
-      val in = buildPath(dir, "stream-ev-in")
+      val staged = stage(s, dir, "ev", {
+        val ev = events(s, dir).select(col("event_id"), col("ts"),
+          col("user_id"), col("event_type"), col("value"))
+        val cnt = ev.count()
+        require(cnt > 0, s"sessionsReplaySink: empty events table at $dir" +
+          " — the two-batch replay needs at least one event to split on")
+        // boundary = the (n/2)-th smallest event time; ties land in the
+        // first file, so batch order equals global (ts, event_id) order
+        val ms = unix_millis(col("ts"))
+        val boundary = ev.select(ms.as("ms"))
+          .orderBy(col("ms")).limit((cnt / 2).toInt.max(1))
+          .agg(max(col("ms"))).collect()(0).getLong(0)
+        Seq(ev.filter(ms <= boundary), ev.filter(ms > boundary))
+      })
       val sink = buildPath(dir, "stream-ev-sink")
-      val ckpt = buildPath(dir, "stream-ev-ckpt")
-      rmrf(in, sink, ckpt)
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
-      val ev = events(s, dir).select(col("event_id"), col("ts"),
-        col("user_id"), col("event_type"), col("value"))
-      val cnt = ev.count()
-      require(cnt > 0, s"sessionsReplaySink: empty events table at $dir" +
-        " — the two-batch replay needs at least one event to split on")
-      // boundary = the (n/2)-th smallest event time; ties land in the
-      // first file, so batch order equals global (ts, event_id) order
-      val boundary = ev.select(unix_millis(col("ts")).as("ms"))
-        .orderBy(col("ms")).limit((cnt / 2).toInt.max(1))
-        .agg(max(col("ms"))).collect()(0).getLong(0)
-      writeMtimed(dir, in, "00-first",
-        ev.filter(unix_millis(col("ts")) <= boundary), 1700000000000L)
-      writeMtimed(dir, in, "01-second",
-        ev.filter(unix_millis(col("ts")) > boundary), 1700000100000L)
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(in)
-      val q = EventStreams.sessionize(stream.as[EventStreams.EventIn])
-        .toDF().writeStream
-        .outputMode("update")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(sink); ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      replay(s, dir, "ev", reset = true, sink)(staged)(st =>
+        eachBatch((batch, _) => batch.write.mode("append").parquet(sink))(
+          EventStreams.sessionize(st.as[EventStreams.EventIn]).toDF())
+          .outputMode("update"))
       sink
     }
 
@@ -304,10 +279,10 @@ object StreamQueries extends QueryRegistry {
     * Spark's choice of strict-vs-inclusive at both boundaries. */
   private val XdDelaySec = 2415L
 
-  /** Run the streaming exact dedup (dropDuplicatesWithinWatermark on
-    * the 60-bit content hash) across THREE mtime-ordered micro-batches.
-    * Three batches because Spark evicts expired dedup state at the END
-    * of a micro-batch (after processing its rows, using that batch's
+  /** The streaming exact dedup (dropDuplicatesWithinWatermark on the
+    * 60-bit content hash) across THREE micro-batches. Three batches
+    * because Spark evicts expired dedup state at the END of a
+    * micro-batch (after processing its rows, using that batch's
     * watermark): an entry whose horizon lapsed during batch 2 is only
     * gone when batch 3 runs — observed empirically against 4.1 and
     * encoded identically in the oracle. Input = documents plus
@@ -329,81 +304,53 @@ object StreamQueries extends QueryRegistry {
     * Batch files are single sorted parquet (repartition(1) +
     * sortWithinPartitions), so arrival order per hash is event-time
     * order and the within-batch winner is deterministically the
-    * earliest row. Returns the parquet sink path. */
+    * earliest row. Returns the sink. */
   private def exactDedupReplaySink(s: SparkSession, dir: String): String =
     SharedBuilds.of(s, dir, "stream-exact-dedup-replay") {
-      val in = buildPath(dir, "stream-xd-in")
-      val sink = buildPath(dir, "stream-xd-sink")
-      val ckpt = buildPath(dir, "stream-xd-ckpt")
-      rmrf(in, sink, ckpt)
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
-      val docs = documents(s, dir).select(col("doc_id"), col("text"))
-      def cohort(lo: Long, hi: Long, offMin: Long): DataFrame =
-        docs.filter(col("doc_id") >= lo && col("doc_id") < hi)
-          .select((col("doc_id") + 10000L).as("doc_id"),
-            (col("doc_id") + offMin).as("minute"), col("text"))
-      val all = docs
-        .select(col("doc_id"), col("doc_id").as("minute"), col("text"))
-        .unionByName(cohort(0, 25, 400))
-        .unionByName(cohort(40, 65, 30))
-        .unionByName(cohort(100, 125, 310))
-        .select(col("doc_id"),
-          timestamp_micros((lit(DocTsBase) + col("minute") * 60L) * 1000000L)
-            .as("ts"),
-          col("text"))
-      val cnt = all.count()
-      require(cnt > 0, s"exactDedupReplaySink: empty documents table at $dir")
-      def kthMs(k: Long): Long = all.select(unix_millis(col("ts")).as("ms"))
-        .orderBy(col("ms")).limit(k.toInt.max(1))
-        .agg(max(col("ms"))).collect()(0).getLong(0)
-      val q1 = kthMs(cnt / 3)
-      val q2 = kthMs(2 * cnt / 3)
-      def sorted(df: DataFrame): DataFrame =
-        df.repartition(1).sortWithinPartitions(col("ts"), col("doc_id"))
-      val ms = unix_millis(col("ts"))
-      writeMtimed(dir, in, "00-first",
-        sorted(all.filter(ms <= q1)), 1700000000000L)
-      writeMtimed(dir, in, "01-second",
-        sorted(all.filter(ms > q1 && ms <= q2)), 1700000100000L)
-      writeMtimed(dir, in, "02-third",
-        sorted(all.filter(ms > q2)), 1700000200000L)
-      val stream = s.readStream.schema(all.schema)
-        .option("maxFilesPerTrigger", "1").parquet(in)
-      val q = DedupStream.dropExactDuplicates(stream, s"$XdDelaySec seconds")
-        .select(col("doc_id"), col("ts"), col("content_hash"))
-        .writeStream.format("parquet")
-        .option("path", sink).option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      sink
+      val staged = stage(s, dir, "xd", {
+        val docs = documents(s, dir).select(col("doc_id"), col("text"))
+        def cohort(lo: Long, hi: Long, offMin: Long): DataFrame =
+          docs.filter(col("doc_id") >= lo && col("doc_id") < hi)
+            .select((col("doc_id") + 10000L).as("doc_id"),
+              (col("doc_id") + offMin).as("minute"), col("text"))
+        val all = docs
+          .select(col("doc_id"), col("doc_id").as("minute"), col("text"))
+          .unionByName(cohort(0, 25, 400))
+          .unionByName(cohort(40, 65, 30))
+          .unionByName(cohort(100, 125, 310))
+          .select(col("doc_id"),
+            timestamp_micros((lit(DocTsBase) + col("minute") * 60L) * 1000000L)
+              .as("ts"),
+            col("text"))
+        val cnt = all.count()
+        require(cnt > 0, s"exactDedupReplaySink: empty documents table at $dir")
+        val ms = unix_millis(col("ts"))
+        def kthMs(k: Long): Long = all.select(ms.as("ms"))
+          .orderBy(col("ms")).limit(k.toInt.max(1))
+          .agg(max(col("ms"))).collect()(0).getLong(0)
+        val (q1, q2) = (kthMs(cnt / 3), kthMs(2 * cnt / 3))
+        Seq(ms <= q1, ms > q1 && ms <= q2, ms > q2).map(p =>
+          all.filter(p).repartition(1).sortWithinPartitions(col("ts"), col("doc_id")))
+      })
+      sinkReplay(s, dir, "xd", staged)(st =>
+        DedupStream.dropExactDuplicates(st, s"$XdDelaySec seconds")
+          .select(col("doc_id"), col("ts"), col("content_hash")))
     }
 
-  /** Run the stateless streaming contamination screen (broadcast Bloom
+  /** The stateless streaming contamination screen (broadcast Bloom
     * bitmap of the eval set's shingle hashes — docs with doc_id < 10,
-    * the decontamination_bloom split) over the bounded doc stream.
-    * Returns the parquet sink path. */
+    * the decontamination_bloom split) over the doc stream. Returns the
+    * sink. */
   private def decontamReplaySink(s: SparkSession, dir: String): String =
     SharedBuilds.of(s, dir, "stream-decontam-replay") {
-      val (in, schema) = docsStreamInput(s, dir)
-      val sink = buildPath(dir, "stream-dc-sink")
-      val ckpt = buildPath(dir, "stream-dc-ckpt")
-      rmrf(sink, ckpt)
       val toks = TextOps.tokens(col("text"))
       val bits = Dedup.bloomBitsOf(
         documents(s, dir).filter(col("doc_id") < 10)
           .select(explode(array_distinct(
             TextOps.shingleHashes(TextOps.shingles(toks, Dedup.ShingleN)))).as("h")))
-      val stream = s.readStream.schema(schema).parquet(in)
-      val q = DedupStream.contaminationScreen(
-          stream.filter(col("doc_id") >= 10), bits)
-        .select(col("doc_id"), col("maybe_contaminated"))
-        .writeStream.format("parquet")
-        .option("path", sink).option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      sink
+      sinkReplay(s, dir, "dc", docsStreamInput(s, dir))(st =>
+        DedupStream.contaminationScreen(st.filter(col("doc_id") >= 10), bits)
+          .select(col("doc_id"), col("maybe_contaminated")))
     }
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -488,24 +435,24 @@ object StreamQueries extends QueryRegistry {
         .orderBy(col("ch"))
     }),
 
-    // the SEVENTH replay: streaming index maintenance. The audit rows
-    // come from the store the foreachBatch consumer maintained; the
-    // oracle is the same full from-scratch DuckDB re-assignment the
-    // batch lsh_append_audit uses — streaming appends must land the
-    // store in the exact state a batch rebuild would
+    // streaming index maintenance: the audit rows come from the store
+    // the foreachBatch consumer maintained; the oracle is the same full
+    // from-scratch DuckDB re-assignment the batch lsh_append_audit
+    // uses — streaming appends must land the store in the exact state
+    // a batch rebuild would
     "stream_index_append_replay" -> ((s, dir) => {
       val (half, idx) = indexAppendReplay(s, dir)
       IndexQueries.lshAppendAudit(half, idx)
     }),
 
-    // EIGHTH replay: incremental SKETCH maintenance — each micro-batch
-    // appends its partial HLL registers to a durable store via
-    // foreachBatch; the serve-side read max-merges them. Because
-    // register merge is max (associative, commutative, IDEMPOTENT), a
-    // retried batch changes nothing — the one streaming state shape
-    // that is exactly-once for free under at-least-once delivery —
-    // and the merged estimate equals the batch twin BIT-FOR-BIT,
-    // which is what the shared events_hll_distinct oracle checks.
+    // incremental SKETCH maintenance — each micro-batch appends its
+    // partial HLL registers to a durable store via foreachBatch; the
+    // serve-side read max-merges them. Because register merge is max
+    // (associative, commutative, IDEMPOTENT), a retried batch changes
+    // nothing — the one streaming state shape that is exactly-once for
+    // free under at-least-once delivery — and the merged estimate
+    // equals the batch twin BIT-FOR-BIT, which is what the shared
+    // events_hll_distinct oracle checks.
     "stream_hll_replay" -> ((s, dir) => {
       val partials = hllStreamReplay(s, dir)
       val merged = partials.groupBy(col("event_type"), col("b"))
@@ -514,18 +461,15 @@ object StreamQueries extends QueryRegistry {
         EventQueries.hllRegisterRows(Tables.events(s, dir)))
     }),
 
-    // THIRTEENTH replay: streaming CLASSIFIER maintenance (r13 verdict
-    // task #5) — each doc micro-batch lands its train-side NB partial
-    // count table in a batchId-keyed overwrite partition; the serve
-    // side sum-merges the partials into the live count table and
-    // scores the held-out docs from it. Counts are additive longs, so
-    // sum-merge over a disjoint batch split equals a from-scratch
-    // train EXACTLY — the oracle IS nb_quality_score's full train+
-    // score SQL replay, closing the loop between the learned-quality
-    // tier and the streaming surface. Additive state would
-    // double-count on a retried batch, hence the overwrite-per-batch
-    // discipline (the graph/triangle-replay shape, pinned by
-    // StreamReplaySpec's two-pass re-delivery).
+    // streaming CLASSIFIER maintenance — each doc micro-batch lands its
+    // train-side NB partial count table in a batchId-keyed overwrite
+    // partition; the serve side sum-merges the partials into the live
+    // count table and scores the held-out docs from it. Counts are
+    // additive longs, so sum-merge over a disjoint batch split equals
+    // a from-scratch train EXACTLY — the oracle IS nb_quality_score's
+    // full train+score SQL replay. Additive state would double-count
+    // on a retried batch, hence the overwrite-per-batch discipline
+    // (pinned by StreamReplaySpec's two-pass re-delivery).
     "stream_nb_replay" -> ((s, dir) => {
       val store = nbStreamReplay(s, dir)
       val merged = s.read.parquet(store)
@@ -540,15 +484,15 @@ object StreamQueries extends QueryRegistry {
         .limit(30)
     }),
 
-    // FOURTEENTH replay: streaming REACH maintenance — converged
-    // HyperBall registers kept fresh as whole-order edge batches land.
-    // Each tick overwrites its batchId-keyed edge increment, derives
-    // the CURRENT w≥2 backbone from the merged store, and re-converges
-    // the register store FROM ITS MAINTAINED STATE (seed = stored
-    // registers max-merged with hop-0 registers of the current node
-    // set). Register state is a monotone lattice and the backbone only
-    // gains edges under whole-order additivity, so converging from any
-    // maintained intermediate state lands on the same fixed point as a
+    // streaming REACH maintenance — converged HyperBall registers kept
+    // fresh as whole-order edge batches land. Each tick overwrites its
+    // batchId-keyed edge increment, derives the CURRENT w≥2 backbone
+    // from the merged store, and re-converges the register store FROM
+    // ITS MAINTAINED STATE (seed = stored registers max-merged with
+    // hop-0 registers of the current node set). Register state is a
+    // monotone lattice and the backbone only gains edges under
+    // whole-order additivity, so converging from any maintained
+    // intermediate state lands on the same fixed point as a
     // from-scratch build — the semi-naive incremental evaluation that
     // makes each tick O(newly-opened absorption paths), and makes
     // re-delivery idempotent even AFTER the state was applied (a
@@ -559,19 +503,16 @@ object StreamQueries extends QueryRegistry {
     "stream_reach_replay" -> ((s, dir) =>
       GraphQueries.reachCensus(s.read.parquet(reachStreamReplay(s, dir)))),
 
-    // NINTH replay: streaming GRAPH maintenance — each micro-batch of
-    // lineitem rows (whole orders per batch) lands its order-local
-    // co-purchase edge increment in a durable store via foreachBatch;
-    // the serve-side read sum-merges the increments and runs the
-    // 3-iteration integer PageRank. Edge counts are order-additive
-    // longs, so merge-at-read equals a full rebuild exactly — and the
-    // oracle IS the full from-scratch SQL replay (shared with
-    // pagerank_copurchase), closing the loop between the r10 graph
-    // tier and the streaming surface. Unlike HLL's idempotent max,
-    // sum-increments would double-count on a retried batch, so the
-    // sink is made idempotent the standard way: each batch OVERWRITES
-    // its own batchId-keyed partition (a retry rewrites, never
-    // re-appends).
+    // streaming GRAPH maintenance — each micro-batch of lineitem rows
+    // (whole orders per batch) lands its order-local co-purchase edge
+    // increment in a durable store via foreachBatch; the serve-side
+    // read sum-merges the increments and runs the 3-iteration integer
+    // PageRank. Edge counts are order-additive longs, so merge-at-read
+    // equals a full rebuild exactly — and the oracle IS the full
+    // from-scratch SQL replay (shared with pagerank_copurchase).
+    // Unlike HLL's idempotent max, sum-increments would double-count
+    // on a retried batch, so each batch OVERWRITES its own
+    // batchId-keyed partition (a retry rewrites, never re-appends).
     "stream_graph_replay" -> ((s, dir) => {
       val g = graphStreamReplay(s, dir)
       graft.operators.PageRank.iterate(g, 3)
@@ -580,19 +521,19 @@ object StreamQueries extends QueryRegistry {
         .limit(20)
     }),
 
-    // ELEVENTH replay: streaming TRIANGLE-CENSUS maintenance — the
-    // r12 O(batch) mining tier under at-least-once delivery. Each
-    // whole-order micro-batch tick anti-joins its edge increment
-    // against the PREFIX store (batches < id), counts the triangles
-    // it gains with Triangles.delta (batch-anchored inclusion–
-    // exclusion — the stored graph's wedges are never re-enumerated),
-    // and lands BOTH the edge partition and a (batch_id, n_delta)
-    // count row, each batchId-keyed overwrite. The prefix read is by
-    // id, so a re-delivered batch sees the SAME prefix and recomputes
-    // the SAME delta — idempotent like the graph replay. The oracle
-    // recounts every PREFIX graph from scratch with the naive wedge
-    // shape: each tick's delta AND each running total must equal a
-    // full recount — per-tick exactness, not just the final sum
+    // streaming TRIANGLE-CENSUS maintenance under at-least-once
+    // delivery. Each whole-order micro-batch tick anti-joins its edge
+    // increment against the PREFIX store (batches < id), counts the
+    // triangles it gains with Triangles.delta (batch-anchored
+    // inclusion–exclusion — the stored graph's wedges are never
+    // re-enumerated), and lands BOTH the edge partition and a
+    // (batch_id, n_delta) count row, each batchId-keyed overwrite. The
+    // prefix read is by id, so a re-delivered batch sees the SAME
+    // prefix and recomputes the SAME delta — idempotent like the graph
+    // replay. The oracle recounts every PREFIX graph from scratch with
+    // the naive wedge shape: each tick's delta AND each running total
+    // must equal a full recount — per-tick exactness, not just the
+    // final sum
     "stream_triangle_replay" -> ((s, dir) => {
       val counts = triangleStreamReplay(s, dir)
       val w = Window.orderBy(col("batch_id"))
@@ -603,33 +544,29 @@ object StreamQueries extends QueryRegistry {
         .orderBy(col("batch_id"))
     }),
 
-    // TENTH replay: the STREAMING curation-funnel tick — the
-    // incremental funnel's phase B re-expressed as a live ingest loop.
-    // The snapshot-diff docs arrive as three mtime-ordered
-    // micro-batches; each foreachBatch tick runs the per-batch text
-    // work (shingle/band/hash/metrics/PII-scrub/decon) and lands SIX
-    // state increments in batchId-keyed store partitions (idempotent
-    // overwrite-per-batch, the graph replay's retry story), including
-    // the batch's verified near-dup PAIRS against everything seen so
-    // far (phase-A state + earlier batches — each cross-batch pair is
-    // generated exactly once, by the later side's tick). The read side
-    // merges: connected components over phase-A star edges + all
-    // appended pairs (star compression preserves connectivity and
-    // min-id labels, the incremental_funnel argument), then the same
-    // thin-frame funnel aggregation. Oracle = the FULL-corpus funnel
-    // SQL, so green == "a funnel maintained by streaming ticks equals
-    // a from-scratch batch rebuild" — the strongest replay on the
-    // board, closing the loop between the two r10 headline features
+    // the STREAMING curation-funnel tick — the incremental funnel's
+    // phase B re-expressed as a live ingest loop. The snapshot-diff
+    // docs arrive as three micro-batches; each foreachBatch tick runs
+    // the per-batch text work (shingle/band/hash/metrics/PII-scrub/
+    // decon) and lands SIX state increments in batchId-keyed store
+    // partitions (idempotent overwrite-per-batch, the graph replay's
+    // retry story), including the batch's verified near-dup PAIRS
+    // against everything seen so far (phase-A state + earlier batches
+    // — each cross-batch pair is generated exactly once, by the later
+    // side's tick). The read side merges: connected components over
+    // phase-A star edges + all appended pairs (star compression
+    // preserves connectivity and min-id labels, the incremental_funnel
+    // argument), then the same thin-frame funnel aggregation. Oracle =
+    // the FULL-corpus funnel SQL, so green == "a funnel maintained by
+    // streaming ticks equals a from-scratch batch rebuild"
     "stream_funnel_replay" -> ((s, dir) =>
       TextQueries.funnelAgg(funnelStreamReplay(s, dir))),
 
-    // TWELFTH replay: streaming TRAINING-EXPORT maintenance — the
-    // pipeline's deliverable artifact (r12's batch-only
-    // training_export_audit) kept fresh by ingest ticks, closing the
-    // last pipeline stage without a streaming twin (r12 verdict task
-    // #8). The funnel's final survivors — read from the STREAMING-
-    // maintained funnel state, so two streaming stages chain — arrive
-    // as three mtime-ordered micro-batches; each foreachBatch tick
+    // streaming TRAINING-EXPORT maintenance — the pipeline's
+    // deliverable artifact (the batch training_export_audit) kept
+    // fresh by ingest ticks. The funnel's final survivors — read from
+    // the STREAMING-maintained funnel state, so two streaming stages
+    // chain — arrive as three micro-batches; each foreachBatch tick
     // applies the per-doc export transforms (PII redaction, the
     // deterministic split label) and lands its rows as split×source
     // hive partitions under its own batchId-keyed overwrite. The
@@ -646,77 +583,59 @@ object StreamQueries extends QueryRegistry {
         .orderBy(col("split"), col("source"))),
   )
 
-  /** Three mtime-ordered survivor micro-batches through foreachBatch
-    * into the split×source export store; returns the read-back store
-    * rows (memoized). */
+  /** Three survivor micro-batches through foreachBatch into the
+    * split×source export store; returns the read-back store rows
+    * (memoized). */
   private def exportStreamReplay(s: SparkSession, dir: String): DataFrame =
     SharedBuilds.of(s, dir, "stream-export") {
       exportStreamReplayCore(s, dir, reset = true).cut()
     }
 
-  /** One full streaming pass of the export-maintenance ticks.
-    * `reset = false` keeps store + inputs and clears only the
-    * checkpoint, forcing a full re-delivery: every tick's rows are a
-    * pure function of its batch, and each tick overwrites its own
-    * batchId-keyed partition tree — StreamReplaySpec pins census
-    * invariance across the two passes. */
+  /** One full pass of the export-maintenance ticks (`reset` as in
+    * `replay`). Every tick's rows are a pure function of its batch,
+    * and each tick overwrites its own batchId-keyed partition tree, so
+    * a re-delivery leaves the census unchanged. */
   private[graft] def exportStreamReplayCore(s: SparkSession, dir: String,
       reset: Boolean): DataFrame = {
-    // survivors come from the streaming-maintained funnel thin frame
-    // (the tenth replay), with text + chars joined back for the
-    // export rows; the keep-list is cap-bounded, so it broadcasts
-    val kept = TextQueries.funnelFlags(funnelStreamReplay(s, dir))
-      .filter(col("final_keep")).select(col("doc_id"))
-    val survivors = documents(s, dir)
-      .join(broadcast(kept), "doc_id")
-      .select(col("doc_id"), col("n_chars"), col("text"), col("source"))
-    val in = buildPath(dir, "stream-export-in")
+    val staged = stage(s, dir, "export", {
+      // survivors come from the streaming-maintained funnel thin frame,
+      // with text + chars joined back for the export rows; the
+      // keep-list is cap-bounded, so it broadcasts
+      val kept = TextQueries.funnelFlags(funnelStreamReplay(s, dir))
+        .filter(col("final_keep")).select(col("doc_id"))
+      val survivors = documents(s, dir)
+        .join(broadcast(kept), "doc_id")
+        .select(col("doc_id"), col("n_chars"), col("text"), col("source"))
+      (0 until 3).map(i => survivors.filter(col("doc_id") % 3 === i))
+    })
     val store = buildPath(dir, "stream-export-store")
-    val ckpt = buildPath(dir, "stream-export-ckpt")
-    if (reset) {
-      rmrf(in, store, ckpt)
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
-      (0 until 3).foreach { i =>
-        writeMtimed(dir, in, f"$i%02d-docs",
-          survivors.filter(col("doc_id") % 3 === i),
-          1700000000000L + i * 100000L)
-      }
-    } else rmrf(ckpt)
-    val q = s.readStream.schema(survivors.schema)
-      .option("maxFilesPerTrigger", "1").parquet(in)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        batch
-          .withColumn("text",
-            TextQueries.piiRedact(TextQueries.piiPlanted))
-          .withColumn("split", TextOps.splitLabel(col("doc_id")))
-          .select(col("doc_id"), col("n_chars"), col("text"),
-            col("split"), col("source"))
-          .write.mode("overwrite")
-          .partitionBy("split", "source")
-          .parquet(s"$store/batch=$id")
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    replay(s, dir, "export", reset, store)(staged)(eachBatch { (batch, id) =>
+      batch
+        .withColumn("text",
+          TextQueries.piiRedact(TextQueries.piiPlanted))
+        .withColumn("split", TextOps.splitLabel(col("doc_id")))
+        .select(col("doc_id"), col("n_chars"), col("text"),
+          col("split"), col("source"))
+        .write.mode("overwrite")
+        .partitionBy("split", "source")
+        .parquet(s"$store/batch=$id")
+    })
     s.read.parquet(store)
   }
 
-  /** Three mtime-ordered micro-batches of the funnel store's
-    * snapshot-diff docs through foreachBatch; returns the merged thin
-    * per-doc frame (memoized). */
+  /** Three micro-batches of the funnel store's snapshot-diff docs
+    * through foreachBatch; returns the merged thin per-doc frame
+    * (memoized). */
   private def funnelStreamReplay(s: SparkSession, dir: String): DataFrame =
     SharedBuilds.of(s, dir, "stream-funnel") {
       funnelStreamReplayCore(s, dir, reset = true).cut()
     }
 
-  /** One full streaming pass; `reset = false` keeps store + inputs and
-    * clears only the checkpoint, forcing a full re-delivery. A
+  /** One full pass of the funnel ticks (`reset` as in `replay`). A
     * re-delivered batch sees LATER batches' state too, so its pairs
     * partition gains extra-but-legitimate pairs (already present in
     * the later batch's partition) — the MERGED funnel result is
-    * invariant, which StreamReplaySpec pins with two passes. */
+    * invariant. */
   private[graft] def funnelStreamReplayCore(s: SparkSession, dir: String,
       reset: Boolean): DataFrame = {
       import graft.operators.Components
@@ -725,19 +644,11 @@ object StreamQueries extends QueryRegistry {
       def state(n: String): DataFrame = s.read.parquet(s"$stateDir/$n")
       val evalSh = state("eval-shingles")
       val bits = typedLit(Dedup.bloomBitsOf(evalSh))
-      val diff = TextQueries.readSnap(s, path, "1..2")
-      val in = buildPath(dir, "stream-funnel-in")
+      val staged = stage(s, dir, "funnel", {
+        val diff = TextQueries.readSnap(s, path, "1..2")
+        (0 until 3).map(i => diff.filter(col("doc_id") % 3 === i))
+      })
       val store = buildPath(dir, "stream-funnel-store")
-      val ckpt = buildPath(dir, "stream-funnel-ckpt")
-      if (reset) {
-        rmrf(in, store, ckpt)
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
-        (0 until 3).foreach { i =>
-          writeMtimed(dir, in, f"$i%02d-docs",
-            diff.filter(col("doc_id") % 3 === i),
-            1700000000000L + i * 100000L)
-        }
-      } else rmrf(ckpt)
       // appended-so-far reader: absent on the first tick → empty frame
       // with the state table's shape (batchId partition column dropped)
       def soFar(name: String, shapeOf: DataFrame): DataFrame = {
@@ -746,51 +657,44 @@ object StreamQueries extends QueryRegistry {
           s.read.parquet(p).drop("batch")
         else shapeOf.limit(0)
       }
-      val q = s.readStream.schema(diff.schema)
-        .option("maxFilesPerTrigger", "1").parquet(in)
-        .writeStream
-        .foreachBatch { (batch0: DataFrame, id: Long) =>
-          val batch = batch0.cut()
-          val hashedB = Dedup.shingled(batch).cut()
-          val bandsB = Dedup.candidateBands(hashedB).cut()
-          // bands seen BEFORE this batch: phase-A state + earlier ticks
-          val stBands = state("bands")
-            .unionByName(soFar("bands", state("bands")))
-          // candidates: within-batch ∪ batch-vs-seen (id-normalized —
-          // an earlier-batch doc may carry a LARGER id than this one)
-          val cross = stBands
-            .select(col("doc_id").as("x"), col("band"), col("band_hash"))
-            .join(bandsB.select(col("doc_id").as("y"), col("band"), col("band_hash")),
-              Seq("band", "band_hash"))
-            .filter(col("x") =!= col("y"))
-            .select(least(col("x"), col("y")).as("a"),
-              greatest(col("x"), col("y")).as("b"))
-          val cand = Dedup.candidatePairs(bandsB).unionByName(cross).distinct()
-          val shAll = state("shingles")
-            .unionByName(soFar("sh", state("shingles")))
-            .unionByName(hashedB.select(col("doc_id"), col("sh")))
-          // MATERIALIZED (an eager Cuts cut) BEFORE any store
-          // write: on a re-delivered batch, the lazy pair plan reads
-          // this batch's own previous partitions, which the land()
-          // overwrites below would delete out from under it —
-          // read-completely-before-overwrite is the idempotence
-          // discipline
-          val pairsB = Dedup.minhashNearDupsFrom(shAll, cand, 0.3)
-            .select(col("a"), col("b")).cut()
-          def land(df: DataFrame, name: String): Unit =
-            df.write.mode("overwrite").parquet(s"$store/$name/batch=$id")
-          land(bandsB, "bands")
-          land(hashedB.select(col("doc_id"), col("sh")), "sh")
-          land(batch.select(col("doc_id"),
-            TextOps.md5Long(col("text")).as("ch")), "ch")
-          land(TextQueries.funnelMetrics(batch), "metrics")
-          land(TextQueries.contamIds(hashedB, bits, evalSh), "contam")
-          land(pairsB, "pairs")
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      replay(s, dir, "funnel", reset, store)(staged)(eachBatch { (batch0, id) =>
+        val batch = batch0.cut()
+        val hashedB = Dedup.shingled(batch).cut()
+        val bandsB = Dedup.candidateBands(hashedB).cut()
+        // bands seen BEFORE this batch: phase-A state + earlier ticks
+        val stBands = state("bands")
+          .unionByName(soFar("bands", state("bands")))
+        // candidates: within-batch ∪ batch-vs-seen (id-normalized —
+        // an earlier-batch doc may carry a LARGER id than this one)
+        val cross = stBands
+          .select(col("doc_id").as("x"), col("band"), col("band_hash"))
+          .join(bandsB.select(col("doc_id").as("y"), col("band"), col("band_hash")),
+            Seq("band", "band_hash"))
+          .filter(col("x") =!= col("y"))
+          .select(least(col("x"), col("y")).as("a"),
+            greatest(col("x"), col("y")).as("b"))
+        val cand = Dedup.candidatePairs(bandsB).unionByName(cross).distinct()
+        val shAll = state("shingles")
+          .unionByName(soFar("sh", state("shingles")))
+          .unionByName(hashedB.select(col("doc_id"), col("sh")))
+        // MATERIALIZED (an eager Cuts cut) BEFORE any store
+        // write: on a re-delivered batch, the lazy pair plan reads
+        // this batch's own previous partitions, which the land()
+        // overwrites below would delete out from under it —
+        // read-completely-before-overwrite is the idempotence
+        // discipline
+        val pairsB = Dedup.minhashNearDupsFrom(shAll, cand, 0.3)
+          .select(col("a"), col("b")).cut()
+        def land(df: DataFrame, name: String): Unit =
+          df.write.mode("overwrite").parquet(s"$store/$name/batch=$id")
+        land(bandsB, "bands")
+        land(hashedB.select(col("doc_id"), col("sh")), "sh")
+        land(batch.select(col("doc_id"),
+          TextOps.md5Long(col("text")).as("ch")), "ch")
+        land(TextQueries.funnelMetrics(batch), "metrics")
+        land(TextQueries.contamIds(hashedB, bits, evalSh), "contam")
+        land(pairsB, "pairs")
+      })
       // merge-at-read, exactly the incremental funnel's phase-B shape
       def app(name: String, shapeOf: DataFrame) = soFar(name, shapeOf)
       val starEdges = state("components")
@@ -809,11 +713,10 @@ object StreamQueries extends QueryRegistry {
         .join(state("metrics").union(app("metrics", state("metrics"))), "doc_id")
   }
 
-  /** Three mtime-ordered whole-order lineitem batches through
-    * foreachBatch, each overwriting its own `batch=<id>` partition of
-    * the edge store with its order-local edge increment; returns the
-    * PREPARED sum-merged graph (memoized — the build-once/probe-many
-    * discipline). */
+  /** The three lineitem batches through foreachBatch, each overwriting
+    * its own `batch=<id>` partition of the edge store with its
+    * order-local edge increment; returns the PREPARED sum-merged graph
+    * (memoized — the build-once/probe-many discipline). */
   private def graphStreamReplay(s: SparkSession, dir: String)
       : graft.operators.PageRank.Graph =
     SharedBuilds.of(s, dir, "stream-graph") {
@@ -821,41 +724,18 @@ object StreamQueries extends QueryRegistry {
         graphStreamReplayCore(s, dir, reset = true))
     }
 
-  /** One full streaming pass over the three lineitem micro-batches,
-    * returning the sum-merged edge frame. `reset = false` keeps the
-    * existing store and inputs but clears ONLY the checkpoint — the
-    * whole stream replays and every batch OVERWRITES its own
-    * batchId-keyed partition, which is the at-least-once retry story
-    * the replay's docstring claims; StreamReplaySpec drives two passes
-    * and pins that the merged store is byte-identical (no
-    * double-count). */
+  /** One full pass over the three lineitem batches (`reset` as in
+    * `replay`), returning the sum-merged edge frame. Every batch
+    * OVERWRITES its own batchId-keyed partition, so a re-delivery
+    * leaves the merged store byte-identical (no double-count). */
   private[graft] def graphStreamReplayCore(s: SparkSession, dir: String,
       reset: Boolean): DataFrame = {
-    val li = Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_partkey"))
     val store = buildPath(dir, "stream-graph-store")
-    val in = buildPath(dir, "stream-graph-in")
-    val ckpt = buildPath(dir, "stream-graph-ckpt")
-    if (reset) {
-      rmrf(store, in, ckpt)
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
-      (0 until 3).foreach { i =>
-        writeMtimed(dir, in, f"$i%02d-lineitem",
-          li.filter(col("l_orderkey") % 3 === i),
-          1700000000000L + i * 100000L)
-      }
-    } else rmrf(ckpt)
-    val q = s.readStream.schema(li.schema)
-      .option("maxFilesPerTrigger", "1").parquet(in)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
+    replay(s, dir, "graph", reset, store)(lineitemStreamInput(s, dir))(
+      eachBatch { (batch, id) =>
         GraphQueries.edgesOf(batch)
           .write.mode("overwrite").parquet(s"$store/batch=$id")
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+      })
     s.read.parquet(store)
       .groupBy(col("src"), col("dst"))
       .agg(sum(col("w")).as("w"))
@@ -869,34 +749,18 @@ object StreamQueries extends QueryRegistry {
       reachStreamReplayCore(s, dir, reset = true)
     }
 
-  /** One full streaming pass of the reach-maintenance ticks.
-    * `reset = false` keeps stores + inputs and clears only the
-    * checkpoint, forcing a full re-delivery; StreamReplaySpec pins
-    * that the re-delivered register store is value-identical (the
-    * lattice idempotence claimed above). The converge input is cut
-    * (materialized) before the store overwrite, so the tick never
-    * reads the files it is replacing. */
+  /** One full pass of the reach-maintenance ticks (`reset` as in
+    * `replay`). A re-delivery re-converges already-converged state, so
+    * the register store stays value-identical (the lattice idempotence
+    * claimed above). The converge input is cut (materialized) before
+    * the store overwrite, so the tick never reads the files it is
+    * replacing. */
   private[graft] def reachStreamReplayCore(s: SparkSession, dir: String,
       reset: Boolean): String = {
-    val li = Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_partkey"))
     val edgeStore = buildPath(dir, "stream-reach-edges")
     val regStore = buildPath(dir, "stream-reach-regs")
-    val in = buildPath(dir, "stream-reach-in")
-    val ckpt = buildPath(dir, "stream-reach-ckpt")
-    if (reset) {
-      rmrf(edgeStore, regStore, in, ckpt)
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
-      (0 until 3).foreach { i =>
-        writeMtimed(dir, in, f"$i%02d-lineitem",
-          li.filter(col("l_orderkey") % 3 === i),
-          1700000000000L + i * 100000L)
-      }
-    } else rmrf(ckpt)
-    val q = s.readStream.schema(li.schema)
-      .option("maxFilesPerTrigger", "1").parquet(in)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
+    replay(s, dir, "reach", reset, edgeStore, regStore)(lineitemStreamInput(s, dir))(
+      eachBatch { (batch, id) =>
         GraphQueries.edgesOf(batch)
           .write.mode("overwrite").parquet(s"$edgeStore/batch=$id")
         val bb = s.read.parquet(edgeStore)
@@ -910,58 +774,36 @@ object StreamQueries extends QueryRegistry {
             .groupBy(col("root"), col("b")).agg(max(col("r")).as("r"))
         graft.operators.HyperBall.converge(bb, seed, maxRounds = 64)
           .write.mode("overwrite").parquet(regStore)
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+      })
     regStore
   }
 
-  /** Three mtime-ordered whole-order lineitem batches through
-    * foreachBatch, each landing its edge increment AND its gained-
-    * triangle count (vs the prefix store) in batchId-keyed partitions;
-    * returns the (batch_id, n_delta) count frame (memoized). */
+  /** The three lineitem batches through foreachBatch, each landing its
+    * edge increment AND its gained-triangle count (vs the prefix
+    * store) in batchId-keyed partitions; returns the (batch_id,
+    * n_delta) count frame (memoized). */
   private def triangleStreamReplay(s: SparkSession, dir: String): DataFrame =
     SharedBuilds.of(s, dir, "stream-tri") {
       triangleStreamReplayCore(s, dir, reset = true).cut()
     }
 
-  /** One full streaming pass of the triangle-maintenance ticks.
-    * `reset = false` keeps store + inputs and clears only the
-    * checkpoint, forcing a full re-delivery: every batch re-reads the
-    * SAME id-bounded prefix, recomputes the SAME delta, and overwrites
-    * its own partitions — StreamReplaySpec pins count-store
-    * invariance across the two passes. */
+  /** One full pass of the triangle-maintenance ticks (`reset` as in
+    * `replay`). A re-delivered batch re-reads the SAME id-bounded
+    * prefix, recomputes the SAME delta, and overwrites its own
+    * partitions, so the count store is unchanged. */
   private[graft] def triangleStreamReplayCore(s: SparkSession, dir: String,
       reset: Boolean): DataFrame = {
-    val li = Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_partkey"))
     val store = buildPath(dir, "stream-tri-store")
     val counts = buildPath(dir, "stream-tri-counts")
-    val in = buildPath(dir, "stream-tri-in")
-    val ckpt = buildPath(dir, "stream-tri-ckpt")
-    if (reset) {
-      rmrf(store, counts, in, ckpt)
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
-      (0 until 3).foreach { i =>
-        writeMtimed(dir, in, f"$i%02d-lineitem",
-          li.filter(col("l_orderkey") % 3 === i),
-          1700000000000L + i * 100000L)
-      }
-    } else rmrf(ckpt)
-    val q = s.readStream.schema(li.schema)
-      .option("maxFilesPerTrigger", "1").parquet(in)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
+    replay(s, dir, "tri", reset, store, counts)(lineitemStreamInput(s, dir))(
+      eachBatch { (batch, id) =>
         val ss = batch.sparkSession
         // land the edge partition FIRST, with the batch's edge-row
         // census observed ON the write job (an Observation piggybacks
         // on the action — no separate count job), so the delta below
         // can size its closure-broadcast choice for free and read the
         // batch edges back columnar instead of re-running the
-        // edge-derivation self-join (r12 verdict item #3: no per-tick
-        // count job in this plan)
+        // edge-derivation self-join
         val obs = org.apache.spark.sql.Observation()
         GraphQueries.edgesOf(batch)
           .select(col("src"), col("dst"))
@@ -985,97 +827,62 @@ object StreamQueries extends QueryRegistry {
         import ss.implicits._
         Seq((id, nDelta)).toDF("batch_id", "n_delta")
           .write.mode("overwrite").parquet(s"$counts/batch=$id")
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+      })
     s.read.parquet(counts).select(col("batch_id"), col("n_delta"))
   }
 
-  /** Three mtime-ordered document batches through foreachBatch, each
-    * OVERWRITING its own `batch=<id>` partition of the classifier
-    * count store with its train-side NB partial counts; returns the
-    * store path (memoized). Counts are ADDITIVE (unlike HLL's
-    * idempotent max), so idempotence under at-least-once delivery
-    * comes from the batchId-keyed overwrite discipline — a retried
-    * batch rewrites identical bytes, never re-adds. */
+  /** Three document batches through foreachBatch, each OVERWRITING its
+    * own `batch=<id>` partition of the classifier count store with its
+    * train-side NB partial counts; returns the store path (memoized).
+    * Counts are ADDITIVE (unlike HLL's idempotent max), so idempotence
+    * under at-least-once delivery comes from the batchId-keyed
+    * overwrite discipline — a retried batch rewrites identical bytes,
+    * never re-adds. */
   private def nbStreamReplay(s: SparkSession, dir: String): String =
     SharedBuilds.of(s, dir, "stream-nb") {
       nbStreamReplayCore(s, dir, reset = true)
     }
 
-  /** One full streaming pass of the classifier-maintenance ticks.
-    * `reset = false` keeps store + inputs and clears only the
-    * checkpoint, forcing a full re-delivery: every batch recomputes
-    * the SAME partial counts and overwrites its own partition —
-    * StreamReplaySpec pins merged-count invariance across two passes
-    * (the double-count a naive append store would show). */
+  /** One full pass of the classifier-maintenance ticks (`reset` as in
+    * `replay`). Every batch recomputes the SAME partial counts and
+    * overwrites its own partition, so a re-delivery leaves the merged
+    * counts unchanged (a naive append store would double-count). */
   private[graft] def nbStreamReplayCore(s: SparkSession, dir: String,
       reset: Boolean): String = {
-    val docs = documents(s, dir).select(col("doc_id"), col("source"), col("text"))
-    val maxId = docs.agg(max(col("doc_id"))).collect()(0).getLong(0)
-    val third = maxId / 3 + 1
+    val staged = stage(s, dir, "nb", {
+      val docs = documents(s, dir).select(col("doc_id"), col("source"), col("text"))
+      val third = docs.agg(max(col("doc_id"))).collect()(0).getLong(0) / 3 + 1
+      (0 until 3).map(i =>
+        docs.filter(col("doc_id") >= i * third && col("doc_id") < (i + 1) * third))
+    })
     val store = buildPath(dir, "stream-nb-store")
-    val in = buildPath(dir, "stream-nb-in")
-    val ckpt = buildPath(dir, "stream-nb-ckpt")
-    if (reset) {
-      rmrf(store, in, ckpt)
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
-      (0 until 3).foreach { i =>
-        writeMtimed(dir, in, f"$i%02d-docs",
-          docs.filter(col("doc_id") >= i * third && col("doc_id") < (i + 1) * third),
-          1700000000000L + i * 100000L)
-      }
-    } else rmrf(ckpt)
-    val q = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(in)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.operators.NaiveBayes.train(
-            PipelineQueries.nbFeats(batch).filter(col("doc_id") % 2 === 0),
-            col("doc_id") < 10)
-          .write.mode("overwrite").parquet(s"$store/batch=$id")
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    replay(s, dir, "nb", reset, store)(staged)(eachBatch { (batch, id) =>
+      graft.operators.NaiveBayes.train(
+          PipelineQueries.nbFeats(batch).filter(col("doc_id") % 2 === 0),
+          col("doc_id") < 10)
+        .write.mode("overwrite").parquet(s"$store/batch=$id")
+    })
     store
   }
 
-  /** Three mtime-ordered event batches through foreachBatch, each
-    * appending its per-batch max registers to the store parquet. */
+  /** Three event batches through foreachBatch, each appending its
+    * per-batch max registers to the store parquet. */
   private def hllStreamReplay(s: SparkSession, dir: String): DataFrame =
     SharedBuilds.of(s, dir, "stream-hll") {
-      val ev = Tables.events(s, dir)
-        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-      val maxId = ev.agg(max(col("event_id"))).collect()(0).getLong(0)
-      val third = maxId / 3 + 1
+      val staged = stage(s, dir, "hll", {
+        val ev = Tables.events(s, dir)
+          .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
+        val third = ev.agg(max(col("event_id"))).collect()(0).getLong(0) / 3 + 1
+        (0 until 3).map(i => ev.filter(col("event_id") >= i * third &&
+          col("event_id") < (i + 1) * third))
+      })
       val store = buildPath(dir, "stream-hll-store")
-      val in = buildPath(dir, "stream-hll-in")
-      val ckpt = buildPath(dir, "stream-hll-ckpt")
-      rmrf(store, in, ckpt)
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
-      (0 until 3).foreach { i =>
-        writeMtimed(dir, in, f"$i%02d-events",
-          ev.filter(col("event_id") >= i * third &&
-            col("event_id") < (i + 1) * third),
-          1700000000000L + i * 100000L)
-      }
-      val q = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(in)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          EventQueries.hllRegisterRows(batch)
-            .groupBy(col("event_type"), col("b"))
-            .agg(max(col("rank")).as("r"))
-            .write.mode("append").parquet(store)
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      replay(s, dir, "hll", reset = true, store)(staged)(eachBatch { (batch, _) =>
+        EventQueries.hllRegisterRows(batch)
+          .groupBy(col("event_type"), col("b"))
+          .agg(max(col("rank")).as("r"))
+          .write.mode("append").parquet(store)
+      })
       s.read.parquet(store)
     }
 

@@ -358,6 +358,42 @@ class StreamReplaySpec extends SparkSpec {
       "streaming-maintained export must equal the batch artifact's census")
   }
 
+  test("stage + replay: part i is micro-batch i, and a reset = false pass re-delivers all") {
+    // the shared replay protocol: staged parts arrive one file per
+    // batch in staging (mtime) order, and clearing only the checkpoint
+    // re-delivers every batch from the start
+    import graft.queries.StreamQueries.{replay, stage}
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    val staged = stage(spark, sfDir, "contract",
+      (0 until 3).map(i => Seq(i * 10L).toDF("v")))
+    def pass(reset: Boolean): Seq[(Long, Long)] = {
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]
+      replay(spark, sfDir, "contract", reset)(staged)(_.writeStream.foreachBatch {
+        (b: org.apache.spark.sql.DataFrame, id: Long) =>
+          b.collect().foreach(r => seen.add(id -> r.getLong(0))); ()
+      })
+      seen.asScala.toSeq
+    }
+    val expected = Seq(0L -> 0L, 1L -> 10L, 2L -> 20L)
+    assert(pass(reset = true) == expected, "parts must arrive one per batch, in order")
+    assert(pass(reset = false) == expected, "a cleared checkpoint must re-deliver every part")
+  }
+
+  test("stream_index_append_replay: every vector lands once, in its full-corpus bucket") {
+    val audit = SparkEntry.queries("stream_index_append_replay")(spark, sfDir).collect()
+    val (lsh, half, emb) = graft.queries.IndexQueries.dataPlanesLsh(spark, sfDir)
+    assert(audit.head.getAs[Long]("n_base") == half)
+    def pairs(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+      df.select(col("vec_id").cast("long"), col("bucket").cast("long")).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toSeq
+    val store = pairs(spark.read.parquet(Tables.buildPath(sfDir, "stream-lsh-store")))
+    assert(half > 0 && store.size > half, "vacuous: nothing was appended")
+    assert(store.map(_._1).distinct.size == store.size, "a vec_id landed twice")
+    assert(store.toSet == pairs(lsh.index(emb)).toSet,
+      "the streamed store must equal a from-scratch index of the whole corpus")
+  }
+
   test("stream_decontam_replay has no false negatives vs the exact overlap join") {
     val flags = SparkEntry.queries("stream_decontam_replay")(spark, sfDir).collect()
       .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
