@@ -292,11 +292,15 @@ case class ManhattanDist(left: Expression, right: Expression)
   * as SQL functions and via functions.call_function — the supported
   * route to a custom Expression without private Column constructors. */
 object GraftFunctions {
-  private val all: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
+  /** (name, implementing class, builder) of every native function. */
+  val all: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
     ("graft_cosine", classOf[CosineSim].getName, c => CosineSim(c(0), c(1))),
     ("graft_dot", classOf[DotProduct].getName, c => DotProduct(c(0), c(1))),
     ("graft_euclidean", classOf[EuclideanDist].getName, c => EuclideanDist(c(0), c(1))),
-    ("graft_manhattan", classOf[ManhattanDist].getName, c => ManhattanDist(c(0), c(1))))
+    ("graft_manhattan", classOf[ManhattanDist].getName, c => ManhattanDist(c(0), c(1))),
+    ("graft_shingles", classOf[Shingles].getName, c => Shingles(c(0), c(1))),
+    ("graft_minhash", classOf[MinHash].getName, c => MinHash(c(0), c(1))),
+    ("graft_simhash", classOf[SimHash].getName, c => SimHash(c(0), c(1))))
 
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
@@ -315,22 +319,8 @@ object GraftFunctions {
   * no code call needed (the deployment story for a shared cluster;
   * `GraftFunctions.register` stays for embedded/library use). */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSim].getName, "graft_cosine"),
-      (children: Seq[Expression]) => CosineSim(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (children: Seq[Expression]) => DotProduct(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_euclidean"),
-      new ExpressionInfo(classOf[EuclideanDist].getName, "graft_euclidean"),
-      (children: Seq[Expression]) => EuclideanDist(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_manhattan"),
-      new ExpressionInfo(classOf[ManhattanDist].getName, "graft_manhattan"),
-      (children: Seq[Expression]) => ManhattanDist(children(0), children(1))))
-  }
+  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
+    GraftFunctions.all.foreach { case (name, className, builder) =>
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(className, name), builder))
+    }
 }

@@ -5,9 +5,12 @@ import org.apache.spark.sql.functions._
 
 /** Text-analysis column functions for the training-data-pipeline surface:
   * tokenization, document fingerprinting, MinHash, SimHash, quality
-  * signals. Everything is a pure built-in-expression composition (no
-  * UDFs), so plans stay inside WholeStageCodegen and scale linearly with
-  * the corpus; and everything is deterministic + portable so the DuckDB
+  * signals. No UDFs: each op is a composition of built-in expressions,
+  * higher-order functions (`transform`/`filter`/`aggregate`, whose
+  * lambdas Spark interprets once per element) and, where a lambda would
+  * re-evaluate its whole input per element, the single-pass native
+  * kernels of graft.expressions.TextKernels (`shingles`, MinHash,
+  * SimHash). Everything is deterministic + portable so the DuckDB
   * oracle can mirror each op bit-for-bit (md5 as the shared hash base).
   *
   * Design notes for 100 TB: per-document ops are embarrassingly parallel
@@ -58,23 +61,23 @@ object TextOps {
   }
 
   /** n-token shingles joined by single spaces; empty array when the doc
-    * has fewer than n tokens. */
-  def shingles(toks: Column, n: Int): Column =
-    when(size(toks) < n, array().cast("array<string>"))
-      .otherwise(transform(
-        sequence(lit(1), size(toks) - (n - 1)),
-        i => concat_ws(" ", slice(toks, i, lit(n)))))
+    * has fewer than n tokens (native, one pass over `toks`). */
+  def shingles(toks: Column, n: Int): Column = {
+    require(n >= 1, "shingle width must be >= 1")
+    call_function("graft_shingles", toks, lit(n))
+  }
 
   /** Hash each shingle into the prime field. */
   def shingleHashes(sh: Column): Column = transform(sh, s => tokenHashP(s))
 
   /** MinHash signature of length h over universal hashes
     * hᵢ(x) = ((2i+1)·x + 7919·i) mod P; empty input → all-P sentinel
-    * (mirrored with coalesce(list_min(..), P) on the SQL side). */
-  def minhashSignature(shHashes: Column, h: Int): Column =
-    transform(sequence(lit(0), lit(h - 1)), i =>
-      aggregate(shHashes, lit(P),
-        (m, x) => least(m, ((i * 2 + 1) * x + lit(7919L) * i) % P)))
+    * (mirrored with coalesce(list_min(..), P) on the SQL side). Native,
+    * one pass over `shHashes` per row. */
+  def minhashSignature(shHashes: Column, h: Int): Column = {
+    require(h >= 1, "minhash length must be >= 1")
+    call_function("graft_minhash", shHashes, lit(h))
+  }
 
   /** Rolling-hash id of one LSH band: fold (h·31 + x) mod P over the
     * band's signature slice, seed 0. */
@@ -106,10 +109,7 @@ object TextOps {
   def simhash16(toks: Column): Column =
     simhash16FromHashes(transform(toks, t => md5Long(t)))
 
-  /** SimHash from a pre-hashed token array. The hash array is embedded
-    * 16 times (once per bit), so callers on a hot path should
-    * materialize it first (cache / parquet) — inlined, each bit would
-    * re-run md5 over every token. */
+  /** 16-bit SimHash from a pre-hashed token array. */
   def simhash16FromHashes(hashes: Column): Column =
     simhashFromHashes(hashes, 16)
 
@@ -117,19 +117,11 @@ object TextOps {
     * (md5Long carries 60 hash bits); wider sketches mean finer
     * pigeonhole bands — at 60 bits a maxDist=3 banding yields 2^15
     * buckets per band instead of 2^4, which is what keeps Σ|bucket|²
-    * sub-quadratic on a large corpus. Same materialize-first caveat as
-    * the 16-bit version (hash array embedded `bits` times). */
+    * sub-quadratic on a large corpus. Native: one pass over `hashes`
+    * per row votes on every bit at once. */
   def simhashFromHashes(hashes: Column, bits: Int): Column = {
     require(bits >= 1 && bits <= 60, "simhash width must be 1..60")
-    val pw = typedLit((0 until bits).map(1L << _).toArray)
-    aggregate(
-      transform(sequence(lit(0), lit(bits - 1)), b => {
-        val p = element_at(pw, b + 1)
-        val votes = aggregate(hashes, lit(0L),
-          (s, h) => s + when((h % (p * 2)) >= p, 1L).otherwise(-1L))
-        when(votes > 0, p).otherwise(lit(0L))
-      }),
-      lit(0L), (s, x) => s + x)
+    call_function("graft_simhash", hashes, lit(bits))
   }
 
   /** Hamming distance between two small non-negative longs (≤ 16 bits),

@@ -63,12 +63,16 @@ object VectorOps {
       lit(0.0),
       (acc, x) => acc + x)
 
+  /** `body` over `x` evaluated once per row. A lambda re-evaluates an
+    * embedded expression that ignores its own variable once per array
+    * element; bound through this one-element lambda, `x` is a variable. */
+  private[graft] def let(x: Column)(body: Column => Column): Column =
+    element_at(transform(array(x), body), 1)
+
   /** v/‖v‖ as ARRAY<DOUBLE>; v (cast to double) unchanged when ‖v‖=0. */
-  def normalize(v: Column): Column = {
-    val m = magnitude(v)
-    when(m === lit(0.0), transform(v, x => d(x)))
-      .otherwise(transform(v, x => d(x) / m))
-  }
+  def normalize(v: Column): Column =
+    let(magnitude(v))(m =>
+      transform(v, x => when(m === lit(0.0), d(x)).otherwise(d(x) / m)))
 
   /** `size(v)` — dimension of the vector (src/vector.rs:37-39). */
   def dimension(v: Column): Column = size(v)
@@ -96,11 +100,9 @@ object VectorOps {
     * per-vector scale, so quantized similarity search needs only the
     * integer arrays; recall loss is the quantization error alone.
     * All-zero vectors quantize to all zeros. */
-  def int8Quantize(v: Column): Column = {
-    val s = array_max(transform(v, x => abs(d(x)))) / 127.0
-    when(s === 0.0, transform(v, x => d(x) * 0.0))
-      .otherwise(transform(v, x => round(d(x) / s, 0)))
-  }
+  def int8Quantize(v: Column): Column =
+    let(array_max(transform(v, x => abs(d(x)))) / 127.0)(s =>
+      transform(v, x => when(s === 0.0, d(x) * 0.0).otherwise(round(d(x) / s, 0))))
 
   /** Fused euclidean distance (graft.expressions.EuclideanDist) —
     * bit-identical to `euclidean`, one primitive loop. */

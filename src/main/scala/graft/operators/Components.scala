@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.Cuts.CutOps
 
 /** Connected components over a pair list — the clustering step that
   * turns near-duplicate PAIRS (MinHash/SimHash/embedding-LSH output)
@@ -66,15 +65,12 @@ object Components {
       .distinct()
   }
 
-  /** (count, xor-of-row-hashes) — an order-independent edge-set
-    * fingerprint used for the convergence test. bit_xor (not sum)
-    * so ANSI overflow semantics can't bite. */
-  private def fingerprint(edges: DataFrame): (Long, Long) = {
-    val r = edges
-      .agg(count(lit(1)).as("c"),
-        coalesce(bit_xor(xxhash64(col("u"), col("v"))), lit(0L)).as("h"))
-      .head()
-    (r.getLong(0), r.getLong(1))
+  /** Cut `edges` and take its fingerprint in the same job: (count, sum
+    * of row hashes), order-independent, for the convergence test. */
+  private def cutWithFingerprint(edges: DataFrame): (DataFrame, (Long, Long)) = {
+    val (cut, rows, sums) =
+      Cuts.measured(edges.withColumn("h", xxhash64(col("u"), col("v"))), Seq("h"))
+    (cut.select(col("u"), col("v")), (rows, sums(0)))
   }
 
   /** Component id (= min node id of the component) for every node that
@@ -83,25 +79,23 @@ object Components {
     *
     * Each round Cuts-cuts the shrunken edge set — without the
     * lineage cut, round k would replay rounds 1..k-1 and the plan
-    * would grow exponentially. maxIter is a safety bound only; the
+    * would grow exponentially — and reads the round's fingerprint off
+    * that cut's own job. maxIter is a safety bound only; the
     * alternation provably converges in O(log² n) rounds worst case
     * (SoCC 2014 thm 2 — in practice a handful) and the loop exits on
     * the first fixed point, so extra headroom costs nothing.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
-    var edges = pairs
+    var (edges, fp) = cutWithFingerprint(pairs
       .select(col("a").cast("long").as("u"), col("b").cast("long").as("v"))
       .filter(col("u") =!= col("v"))
       .select(greatest(col("u"), col("v")).as("u"),
         least(col("u"), col("v")).as("v"))
-      .distinct()
-      .cut()
-    var fp = fingerprint(edges)
+      .distinct())
     var converged = fp._1 == 0L // no edges -> already at the fixed point
     var it = 0
     while (!converged && it < maxIter) {
-      val next = smallStar(largeStar(edges)).cut()
-      val nfp = fingerprint(next)
+      val (next, nfp) = cutWithFingerprint(smallStar(largeStar(edges)))
       converged = nfp == fp
       fp = nfp
       edges = next

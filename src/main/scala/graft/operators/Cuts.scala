@@ -1,6 +1,8 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, ExactStatsLeaf}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Lineage cuts with a config-selected durability backend — the one
@@ -48,23 +50,58 @@ object Cuts {
   /** Materialize `df` and return a frame reading the materialization —
     * the lineage cut — with its row count.
     *
-    * Default backend: one job, a `count()` of the local checkpoint's
+    * Default backend: one job, a count over the local checkpoint's
     * RDD, which materializes the checkpoint as it counts. The frame's
     * leaf has exact statistics (row count, and size = rows × row
     * width). Reliable backend: the parquet write, then a count of the
-    * read-back as a second action; the read-back's statistics are file
+    * read-back as a second job; the read-back's statistics are file
     * sizes. */
-  def counted(df: DataFrame): (DataFrame, Long) = reliableDir(df) match {
-    case Some(dir) =>
-      val path = s"$dir/cut-${seq.incrementAndGet()}-${java.util.UUID.randomUUID().toString.take(8)}"
-      df.write.parquet(path)
-      val back = df.sparkSession.read.parquet(path)
-      (back, back.count())
-    case None =>
-      val cp = df.localCheckpoint(eager = false)
-      val leaf = cp.queryExecution.logical.asInstanceOf[LogicalRDD]
-      val rows = leaf.rdd.count()
-      (ExactStatsLeaf(cp.sparkSession, leaf, rows), rows)
+  def counted(df: DataFrame): (DataFrame, Long) = {
+    val (cut, rows, _) = measured(df, Nil)
+    (cut, rows)
+  }
+
+  /** [[counted]] that also returns the sums of the named long columns,
+    * taken in the same pass over the materialized rows: one job on the
+    * default backend, the write and then one pass over the read-back
+    * on the reliable one. Sums wrap on overflow (they are order-free
+    * fingerprints, never quantities), NULLs add nothing. */
+  def measured(df: DataFrame, sums: Seq[String]): (DataFrame, Long, Array[Long]) =
+    reliableDir(df) match {
+      case Some(dir) =>
+        val path = s"$dir/cut-${seq.incrementAndGet()}-${java.util.UUID.randomUUID().toString.take(8)}"
+        df.write.parquet(path)
+        val back = df.sparkSession.read.parquet(path)
+        val (rows, totals) = countAndSum(
+          back.select(sums.map(back.col): _*).queryExecution.toRdd, sums.indices)
+        (back, rows, totals)
+      case None =>
+        val cp = df.localCheckpoint(eager = false)
+        val leaf = cp.queryExecution.logical.asInstanceOf[LogicalRDD]
+        val (rows, totals) = countAndSum(leaf.rdd, sums.map(cp.schema.fieldIndex))
+        (ExactStatsLeaf(cp.sparkSession, leaf, rows), rows, totals)
+    }
+
+  /** Row count and wrapping per-ordinal long sums in one job. */
+  private def countAndSum(rdd: RDD[InternalRow], ordinals: Seq[Int]): (Long, Array[Long]) = {
+    val ords = ordinals.toArray
+    val k = ords.length
+    val parts = rdd.mapPartitions { it =>
+      val acc = new Array[Long](k + 1)
+      it.foreach { row =>
+        acc(0) += 1
+        var j = 0
+        while (j < k) {
+          if (!row.isNullAt(ords(j))) acc(j + 1) += row.getLong(ords(j))
+          j += 1
+        }
+      }
+      Iterator.single(acc)
+    }
+    val total = parts.fold(new Array[Long](k + 1)) { (x, y) =>
+      Array.tabulate(k + 1)(j => x(j) + y(j))
+    }
+    (total(0), total.tail)
   }
 
   /** [[counted]] without the count. */

@@ -64,18 +64,15 @@ object Dedup {
   /** Full MinHash+LSH near-dup pipeline: candidates reranked by exact
     * shingle Jaccard >= threshold.
     *
-    * The shingle+signature prefix feeds three consumers (band table,
-    * A-side rerank, B-side rerank); it is computed once and cached —
-    * without this Spark re-tokenizes and re-hashes the corpus three
-    * times. At 100 TB the same role is played by materializing the
-    * signature table to parquet between the two jobs. */
+    * The shingle table feeds three consumers (band table, A-side
+    * rerank, B-side rerank); it is computed once and cut — without
+    * this Spark re-tokenizes and re-hashes the corpus three times. At
+    * 100 TB the same role is played by materializing the shingle table
+    * to parquet between the two jobs. */
   def minhashNearDups(docs: DataFrame, threshold: Double): DataFrame = {
-    // materialize BEFORE the signature fold: minhashSignature embeds the
-    // shingle-hash array once per hash function, so without a
-    // materialization boundary projection collapse re-runs md5 over
-    // every shingle MinhashH times. A Cuts cut (not cache) so the
-    // blocks are reclaimed by the ContextCleaner once this pipeline's
-    // result is consumed — repeated invocations don't pin storage memory
+    // a Cuts cut (not cache) so the blocks are reclaimed by the
+    // ContextCleaner once this pipeline's result is consumed —
+    // repeated invocations don't pin storage memory
     val hashed = shingled(docs).cut()
     minhashNearDupsFrom(hashed, candidatesFrom(hashed), threshold)
   }
@@ -218,15 +215,6 @@ object Dedup {
       .orderBy(col("a"), col("b"))
   }
 
-  /** Scale-safe SimHash pair generation via pigeonhole banding: split
-    * the 16 sketch bits into maxDist+1 disjoint bands — two sketches
-    * within Hamming distance maxDist differ in at most maxDist bands,
-    * so they must agree EXACTLY on at least one band. An equi-join per
-    * band therefore finds every qualifying pair (no recall loss), with
-    * one shuffle keyed on (band, band bits) — the same Σ|bucket|² shape
-    * as the MinHash path — followed by the exact Hamming rerank.
-    * Result-identical to the all-pairs `simhashPairs` baseline below,
-    * without its O(n²) crossJoin. */
   /** Bloom-filter membership pre-filter — the 100 TB decontamination
     * shape: the benchmark/eval shingle set is tiny by definition, so
     * its Bloom bitmap broadcasts to every task and the corpus is
@@ -314,32 +302,37 @@ object Dedup {
   }
 
   /** Per-doc token-hash table (doc_id, th ARRAY&lt;BIGINT&gt;) — the shared
-    * prefix of every simhash sketch width. Materialize it (a Cuts cut
-    * or parquet) before feeding the per-bit folds: simhashFromHashes
-    * embeds its input once per bit, so an un-materialized md5 would run
-    * `bits` times per token. */
+    * prefix of every simhash sketch width. */
   def tokenHashes(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
       transform(TextOps.tokens(col("text")), t => TextOps.md5Long(t)).as("th"))
 
+  /** Scale-safe SimHash pair generation via pigeonhole banding: split
+    * the sketch's `bits` bits into maxDist+1 disjoint bands — two sketches
+    * within Hamming distance maxDist differ in at most maxDist bands,
+    * so they must agree EXACTLY on at least one band. An equi-join per
+    * band therefore finds every qualifying pair (no recall loss), with
+    * one shuffle keyed on (band, band bits) — the same Σ|bucket|² shape
+    * as the MinHash path — followed by the exact Hamming rerank.
+    * Result-identical to the all-pairs `simhashPairs` baseline below,
+    * without its O(n²) crossJoin. */
   def simhashPairsBanded(docs: DataFrame, maxDist: Int,
       bits: Int = 16): DataFrame =
-    simhashPairsBandedFrom(tokenHashes(docs).cut(), maxDist, bits)
+    simhashPairsBandedFrom(tokenHashes(docs), maxDist, bits)
 
-  /** Banded simhash pairs from a pre-materialized token-hash table —
-    * the build/probe split: callers answering several sketch widths
-    * (16-bit and 60-bit declared queries) tokenize + md5 the corpus
-    * ONCE and derive each sketch from the shared table. */
   /** (doc_id, simhash) sketch table at the given width from a
-    * token-hash table. The `bits`-wide fold is the expensive map of
-    * the whole pipeline — callers should materialize the result
-    * / parquet) before joining on it; at scale this
-    * is the sketch table a dedup pipeline persists between its
-    * signature and candidate stages. */
+    * token-hash table. Both self-join sides of the pair search read
+    * it, so callers materialize it (a Cuts cut, or parquet at scale:
+    * the sketch table a dedup pipeline persists between its signature
+    * and candidate stages) before joining on it. */
   def simhashSketch(hashed: DataFrame, bits: Int): DataFrame =
     hashed.select(col("doc_id"),
       TextOps.simhashFromHashes(col("th"), bits).as("simhash"))
 
+  /** Banded simhash pairs from a token-hash table — the build/probe
+    * split: callers answering several sketch widths (16-bit and 60-bit
+    * declared queries) tokenize + md5 the corpus ONCE into a shared
+    * table and derive each sketch from it. */
   def simhashPairsBandedFrom(hashed: DataFrame, maxDist: Int,
       bits: Int = 16): DataFrame =
     simhashPairsFromSketch(
@@ -385,16 +378,7 @@ object Dedup {
     * <= maxDist. All-pairs crossJoin — the bounded correctness baseline
     * for `simhashPairsBanded`; never run this on an unbounded corpus. */
   def simhashPairs(docs: DataFrame, maxDist: Int, bits: Int = 16): DataFrame = {
-    // materialize token hashes BEFORE the per-bit fold: simhash embeds
-    // the hash array once per bit, so an inlined md5 would run `bits`
-    // times per token; the boundary blocks projection collapse.
-    // a Cuts cut, not cache, so blocks free up after the result is
-    // consumed
-    val hashed = docs.select(col("doc_id"),
-      transform(TextOps.tokens(col("text")), t => TextOps.md5Long(t)).as("th"))
-      .cut()
-    val sh = hashed.select(col("doc_id"),
-      TextOps.simhashFromHashes(col("th"), bits).as("simhash"))
+    val sh = simhashSketch(tokenHashes(docs), bits)
     val a = sh.select(col("doc_id").as("a"), col("simhash").as("ha"))
     val b = sh.select(col("doc_id").as("b"), col("simhash").as("hb"))
     a.crossJoin(b).filter(col("a") < col("b"))

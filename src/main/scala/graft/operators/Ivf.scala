@@ -67,15 +67,15 @@ class Ivf(nlist: Int, iters: Int) {
 
   /** Expression-only argmin assignment against broadcast centroids:
     * array_min over (dist, idx) structs gives min-dist with min-idx
-    * tiebreak, entirely inside WholeStageCodegen. */
+    * tiebreak; the embedding is cast to double once per row, not once
+    * per centroid. */
   def assignExpr(emb: Column, cents: Array[(Int, Array[Double])]): Column = {
     val cl = centroidLit(cents)
     // size the probe sequence from the actual centroid count: initCentroids
     // can return < nlist, and probing past the array end yields null dists
-    array_min(transform(sequence(lit(0), lit(cents.length - 1)),
-      i => struct(
-        sqDist(VectorOps.toDouble(emb), element_at(cl, i + 1)).as("d"),
-        i.as("c"))))
+    VectorOps.let(VectorOps.toDouble(emb))(e =>
+      array_min(transform(sequence(lit(0), lit(cents.length - 1)),
+        i => struct(sqDist(e, element_at(cl, i + 1)).as("d"), i.as("c")))))
       .getField("c")
   }
 

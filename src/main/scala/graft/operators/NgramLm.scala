@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.TextOps
 
@@ -50,19 +50,14 @@ object NgramLm {
     * bucket), f2 (hashed 2-token-context bucket). Docs with fewer than
     * 3 tokens contribute no rows (and so never reach scoring — a
     * 0-trigram doc has no fluency evidence either way). */
-  def feats(docs: DataFrame, idCols: Seq[String]): DataFrame = {
-    val toks = TextOps.tokens(col("text"))
-    val pairs = when(size(toks) < 3,
-        array().cast("array<struct<tri:string,ctx:string>>"))
-      .otherwise(transform(sequence(lit(1), size(toks) - 2),
-        i => struct(
-          concat_ws(" ", slice(toks, i, lit(3))).as("tri"),
-          concat_ws(" ", slice(toks, i, lit(2))).as("ctx"))))
-    docs.select(idCols.map(col) :+ explode(pairs).as("tc"): _*)
+  def feats(docs: DataFrame, idCols: Seq[String]): DataFrame =
+    docs.select(idCols.map(col) :+
+        explode(TextOps.shingles(TextOps.tokens(col("text")), 3)).as("tri"): _*)
       .select(idCols.map(col)
-        :+ (TextOps.md5Long(col("tc.tri")) % TriBuckets).as("f3")
-        :+ (TextOps.md5Long(col("tc.ctx")) % CtxBuckets).as("f2"): _*)
-  }
+        :+ (TextOps.md5Long(col("tri")) % TriBuckets).as("f3")
+        // a token never contains a space, so the context is the
+        // trigram's first two tokens
+        :+ (TextOps.md5Long(substring_index(col("tri"), " ", 2)) % CtxBuckets).as("f2"): _*)
 
   /** Train the two bounded count tables from the reference side's
     * occurrence rows: (f3, n3) and (f2, n2). The context counts come

@@ -161,6 +161,21 @@ class CutsSpec extends SparkSpec {
     withReliable(_ => check())
   }
 
+  test("measured's count and wrapping column sums under both backends") {
+    // two near-max values overflow: the sum wraps, as Scala's Long sum does
+    val big = Long.MaxValue - 1
+    val rows = Seq[(Long, Option[Long])]((0L, Some(big)), (1L, Some(big)), (2L, None), (3L, Some(-5L)))
+    val df = rows.toDF("k", "h")
+    def check(): Unit =
+      for ((f, kept) <- Seq(df -> rows, df.filter(col("k") < 0) -> Nil)) {
+        val (c, n, sums) = Cuts.measured(f, Seq("h", "k"))
+        assert(n == kept.size && c.count() == n)
+        assert(sums.toSeq == Seq(kept.flatMap(_._2).sum, kept.map(_._1).sum))
+      }
+    check()
+    withReliable(_ => check())
+  }
+
   test("declared queries run unchanged under the reliable backend (end-to-end)") {
     // the zero-behavior-change contract at QUERY level, not just
     // operator level: a cut-heavy declared query (communities: LPA

@@ -1,0 +1,93 @@
+package graft
+
+import java.sql.Timestamp
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import graft.operators.{Components, Dedup}
+import graft.streaming.DedupStream
+
+/** Adversarial corpora through every dedup operator: an empty corpus,
+  * and one whose texts are NULL, empty or token-free next to a planted
+  * copy and a one-token edit. Each operator must finish, and each
+  * result is pinned. */
+class DedupEdgeSpec extends SparkSpec {
+
+  private val docSchema = StructType.fromDDL("doc_id BIGINT, text STRING, ts TIMESTAMP")
+  private val embSchema = StructType.fromDDL("vec_id BIGINT, embedding ARRAY<FLOAT>")
+
+  private def frame(rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+
+  private val body = "alpha beta gamma delta epsilon zeta eta"
+  private val t0 = new Timestamp(0L)
+
+  /** 0 and 3 NULL, 1 empty, 2 token-free; 5 copies 4; 6 edits 4's last
+    * token (two of four distinct 5-shingles shared). */
+  private lazy val degenerate = frame(Seq(
+    Row(0L, null, t0), Row(1L, "", t0), Row(2L, "!!! 42", t0), Row(3L, null, t0),
+    Row(4L, body, t0), Row(5L, body, t0), Row(6L, "alpha beta gamma delta epsilon zeta theta", t0)), docSchema)
+
+  /** Unit axis vectors, except 5 = 4: only the planted copy is cosine 1. */
+  private lazy val emb = frame((0 until 7).map { i =>
+    val v = Array.fill(8)(0.0f); v(if (i == 5) 4 else i) = 1.0f
+    Row(i.toLong, v.toSeq)
+  }, embSchema)
+
+  private lazy val empty = frame(Nil, docSchema)
+  private lazy val emptyEmb = frame(Nil, embSchema)
+
+  private def pairs(df: DataFrame): Seq[(Long, Long)] =
+    df.select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+
+  test("exactDupGroups: NULL texts group together; empty corpus has no groups") {
+    val g = Dedup.exactDupGroups(degenerate).collect()
+      .map(r => (Option(r.get(0)).isEmpty, r.getLong(1), r.getLong(2))).sortBy(_._3).toSeq
+    assert(g == Seq((true, 2L, 0L), (false, 1L, 1L), (false, 1L, 2L), (false, 2L, 4L), (false, 1L, 6L)))
+    assert(Dedup.exactDupGroups(empty).count() == 0L)
+  }
+
+  test("minhashNearDups and semanticNearDups: token-free docs never pair") {
+    val mh = Dedup.minhashNearDups(degenerate, 0.6).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    assert(mh == Seq((4L, 5L, 1.0)))
+    val sem = Dedup.semanticNearDups(degenerate, emb, 0.6).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(4))).toSeq
+    assert(sem == Seq((4L, 5L, 1.0)))
+    assert(Dedup.minhashNearDups(empty, 0.6).count() == 0L)
+    assert(Dedup.semanticNearDups(empty, emptyEmb, 0.6).count() == 0L)
+  }
+
+  test("jaccardPairs: NULL and empty shingle sets score no pair") {
+    val got = Dedup.jaccardPairs(degenerate, 0.2).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    assert(got == Seq((4L, 5L, 1.0), (4L, 6L, 0.5), (5L, 6L, 0.5)))
+    assert(Dedup.jaccardPairs(empty, 0.2).count() == 0L)
+  }
+
+  test("simhashPairsBanded: NULL, empty and token-free docs share the zero sketch") {
+    val got = pairs(Dedup.simhashPairsBanded(degenerate, 3))
+    val zero = for (a <- Seq(0L, 1L, 2L, 3L); b <- Seq(0L, 1L, 2L, 3L) if a < b) yield (a, b)
+    assert(got == (zero :+ ((4L, 5L))).sorted)
+    assert(Dedup.simhashPairsBanded(empty, 3).count() == 0L)
+  }
+
+  test("bandStream: NULL docs emit NULL band hashes; empty corpus emits nothing") {
+    val rows = DedupStream.bandStream(degenerate).collect()
+    assert(rows.length == 7 * Dedup.Bands)
+    assert(rows.filter(_.isNullAt(3)).map(_.getLong(0)).distinct.sorted.toSeq == Seq(0L, 3L))
+    // the four token-free docs carry the empty-set signature: one bucket per band
+    val emptySet = rows.filter(r => Set(1L, 2L).contains(r.getLong(0)))
+      .groupBy(_.getInt(2)).values.map(_.map(_.getLong(3)).distinct.length)
+    assert(emptySet.size == Dedup.Bands && emptySet.forall(_ == 1))
+    assert(DedupStream.bandStream(empty).count() == 0L)
+  }
+
+  test("connectedComponents over the degenerate pairs and over no pairs") {
+    val got = Components.connectedComponents(Dedup.simhashPairsBanded(degenerate, 3))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 0L, 4L -> 4L, 5L -> 4L))
+    assert(Components.connectedComponents(Dedup.simhashPairsBanded(empty, 3)).count() == 0L)
+  }
+}

@@ -210,6 +210,20 @@ class PlanSpec extends SparkSpec {
     assert(offenders.isEmpty, s"cartesian products in declared plans: $offenders")
   }
 
+  test("no declared query evaluates lambda-invariant work per element") {
+    // a split, md5, regex or nested higher-order function inside a
+    // lambda that ignores the lambda's own variables runs once per
+    // array element instead of once per row (LambdaLint); each query
+    // is constructed as in the CartesianProduct sweep, and its
+    // optimized plan is checked
+    val offenders = SparkEntry.queries.keys.toSeq.sorted.flatMap { q =>
+      spark.catalog.clearCache()
+      val plan = SparkEntry.queries(q)(spark, sfDir).queryExecution.optimizedPlan
+      LambdaLint.offenders(plan).map(o => s"$q: $o")
+    }
+    assert(offenders.isEmpty, s"lambda-invariant work in declared plans:\n${offenders.mkString("\n")}")
+  }
+
   test("bounded-collect sweep: no declared build path lands more than 64 rows on the driver") {
     // The round-6 verdict's last discipline gap: every driver-side
     // materialization on a declared path must be an INDEX HEAD — a

@@ -1,12 +1,14 @@
 package graft
 
-import graft.operators.{Traversal, Triangles}
+import graft.operators.{Components, Traversal, Triangles}
 
 /** The iterative graph loops fold their per-round probes into the job
   * that materializes each round: a converged k-core or k-truss census
   * runs a bounded number of Spark jobs per peel round (its edge counts
   * come from the round's own counted cuts) and a BFS a bounded number
-  * per level (a level's emptiness is read off the visited cut's count).
+  * per level (a level's emptiness is read off the visited cut's count),
+  * and connected components a bounded number per star round (its
+  * convergence fingerprint is taken by the round's measured cut).
   * All equal in-memory replicas under any AQE and shuffle-partition
   * setting. */
 class SuperstepJobsSpec extends SparkSpec with JobCounting {
@@ -17,6 +19,8 @@ class SuperstepJobsSpec extends SparkSpec with JobCounting {
   private val MaxHops = 8
   private val TrussJobsPerRound = 11
   private val TrussRound0Jobs = 4
+  private val StarJobsPerRound = 5
+  private val StarRound0Jobs = 4
 
   /** A 24-node dense core with four pendant paths of 3 to 6 nodes,
     * both directions, distinct: under k = 2 each path loses its free
@@ -69,6 +73,33 @@ class SuperstepJobsSpec extends SparkSpec with JobCounting {
       done = census(n - 1)._2 == census(n - 2)._2 && census(n - 1)._3 == census(n - 2)._3
     }
     census.toSeq
+  }
+
+  /** The large-star/small-star rounds of connectedComponents on the
+    * fixture (the loop stops at the first round that repeats the edge
+    * set) and the component of every node. */
+  private def starReplica: (Int, Map[Long, Long]) = {
+    def minOf(es: Set[(Long, Long)]) = es.groupBy(_._1).map { case (u, ns) => u -> ns.map(_._2).min }
+    def largeStar(es: Set[(Long, Long)]) = {
+      val sym = es ++ es.map(_.swap)
+      val m = minOf(sym)
+      sym.collect { case (u, v) if v > u => (v, math.min(u, m(u))) }
+    }
+    def smallStar(es: Set[(Long, Long)]) = {
+      val canon = es.map { case (u, v) => (math.max(u, v), math.min(u, v)) }
+      val m = minOf(canon)
+      canon.collect { case (u, v) if v != m(u) => (v, m(u)) } ++ canon.map { case (u, _) => (u, m(u)) }
+    }
+    var edges = graph.collect { case (a, b) if a != b => (math.max(a, b), math.min(a, b)) }.toSet
+    var rounds = 0
+    var done = edges.isEmpty
+    while (!done) {
+      val next = smallStar(largeStar(edges))
+      done = next == edges
+      edges = next
+      rounds += 1
+    }
+    (rounds, edges.flatMap { case (u, v) => Seq(u -> v, v -> v) }.toMap)
   }
 
   private def bfsReplica: Map[Long, Long] = {
@@ -134,6 +165,25 @@ class SuperstepJobsSpec extends SparkSpec with JobCounting {
       assert(got == expect, s"aqe=$aqe partitions=$p")
       assert(jobs <= JobsPerRound * levels,
         s"aqe=$aqe partitions=$p: $jobs jobs for $levels levels")
+    }
+  }
+
+  test("connectedComponents: at most 5 jobs per star round, equal to the replica") {
+    // each round's convergence fingerprint is read off the round's own
+    // cut, so a round is its four shuffle stages (one job each under
+    // AQE) plus the cut's job, with no separate fingerprint aggregate
+    val (rounds, expect) = starReplica
+    assert(rounds >= 3, s"the fixture should take several rounds: $rounds")
+    for ((aqe, p) <- knobs) withKnobs(aqe, p) {
+      val pairs = graph.toDF("a", "b")
+      val (got, jobs) = jobsOf {
+        Components.connectedComponents(pairs)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
+      info(s"aqe=$aqe partitions=$p: $jobs jobs, $rounds star rounds")
+      assert(got == expect, s"aqe=$aqe partitions=$p")
+      assert(jobs <= StarJobsPerRound * rounds + StarRound0Jobs,
+        s"aqe=$aqe partitions=$p: $jobs jobs for $rounds star rounds")
     }
   }
 }

@@ -288,4 +288,154 @@ class TextSpec extends SparkSpec {
         s"bag-NB must score permuted twins identically: doc $id")
     }
   }
+
+  /** Runs `body` with whole-stage and expression codegen off
+    * (interpreted) or forced on, then restores the defaults. */
+  private def evalMode[T](codegen: Boolean)(body: => T): T = {
+    val prev = spark.conf.get("spark.sql.codegen.wholeStage", "true")
+    try {
+      spark.conf.set("spark.sql.codegen.wholeStage", codegen.toString)
+      spark.conf.set("spark.sql.codegen.factoryMode", if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN")
+      body
+    } finally {
+      spark.conf.set("spark.sql.codegen.wholeStage", prev)
+      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    }
+  }
+
+  /** Rows of an RDD-backed frame: no optimizer rule folds or pre-computes
+    * a projection over it, so the kernels run in the generated (or
+    * interpreted) operator. */
+  private def rddFrame(rows: Seq[Row], schema: String): org.apache.spark.sql.DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 3),
+      org.apache.spark.sql.types.StructType.fromDDL(schema))
+
+  /** (id, native, reference) value pairs under one evaluation mode. */
+  private def pairsOf(df: org.apache.spark.sql.DataFrame,
+      checks: Seq[(String, org.apache.spark.sql.Column, org.apache.spark.sql.Column)],
+      codegen: Boolean): Seq[(String, Long, Any, Any)] = evalMode(codegen) {
+    df.select(col("id") +: checks.flatMap { case (_, n, h) => Seq(n, h) }: _*)
+      .collect().toSeq.flatMap { r =>
+        checks.indices.map(i => (checks(i)._1, r.getLong(0), r.get(1 + 2 * i), r.get(2 + 2 * i)))
+      }
+  }
+
+  private def assertParity(df: org.apache.spark.sql.DataFrame,
+      checks: Seq[(String, org.apache.spark.sql.Column, org.apache.spark.sql.Column)]): Unit = {
+    val interp = pairsOf(df, checks, codegen = false)
+    val gen = pairsOf(df, checks, codegen = true)
+    for (got <- Seq(interp, gen); (name, id, native, ref) <- got)
+      assert(native == ref, s"$name differs on row $id: native $native, reference $ref")
+    assert(interp == gen, "interpreted and generated evaluation disagree")
+  }
+
+  /** Edge texts, then 200 seeded random docs over a small vocabulary with
+    * mixed case, digits and runs of separators. */
+  private lazy val parityTexts: Seq[Row] = {
+    val edge = Seq(null, "", "  ,, ", "42 007", "a", "a b c d", "a b c d e",
+      "a b c d e f", "Hello,,  WORLD 42 foo9bar  Baz;;the THE the", "x y x y x y x y")
+    val rnd = new scala.util.Random(20261019)
+    val vocab = Vector("the", "Fast", "HASH", "scan", "x", "q9z", "merge", "and")
+    val seps = Vector(" ", "  ", ", ", "!?", " 12 ", "\t")
+    val random = (0 until 200).map { _ =>
+      (0 until rnd.nextInt(24)).map(_ => vocab(rnd.nextInt(vocab.size)) + seps(rnd.nextInt(seps.size))).mkString
+    }
+    (edge ++ random).zipWithIndex.map { case (t, i) => Row(i.toLong, t) }
+  }
+
+  test("native shingles, minhash and simhash equal their HOF references on text") {
+    val docs = rddFrame(parityTexts, "id BIGINT, text STRING")
+      .select(col("id"), TextOps.tokens(col("text")).as("toks"))
+      .select(col("id"), col("toks"),
+        TextOps.shingleHashes(TextOps.shingles(col("toks"), Dedup.ShingleN)).as("shh"),
+        transform(col("toks"), t => TextOps.md5Long(t)).as("th"))
+    val checks =
+      Seq(1, 2, 3, 5).map(n => (s"shingles n=$n",
+        TextOps.shingles(col("toks"), n), TextHof.shingles(col("toks"), n))) ++
+      Seq(1, Dedup.MinhashH).map(h => (s"minhash h=$h",
+        TextOps.minhashSignature(col("shh"), h), TextHof.minhashSignature(col("shh"), h))) ++
+      Seq(1, 16, 32, 60).map(b => (s"simhash bits=$b",
+        TextOps.simhashFromHashes(col("th"), b), TextHof.simhashFromHashes(col("th"), b)))
+    assertParity(docs, checks)
+  }
+
+  test("native kernels equal their HOF references on NULL elements and negative hashes") {
+    val arrays = rddFrame(Seq(
+        Row(0L, null, null),
+        Row(1L, Seq(), Seq()),
+        Row(2L, Seq("a", null, "c", "d", null, "f"), Seq(1L, null, -5L, 7L)),
+        Row(3L, Seq(null, null, null), Seq(null)),
+        Row(4L, Seq("x"), Seq(-1L, -7919L, -2147483646L, -123456789012L)),
+        Row(5L, Seq("a", "b", "c"), Seq(-648541476951500027L, 648541476951500027L, -3L)),
+        Row(6L, Seq("p", "q", "r", "s", "t"), Seq(2147483646L, 0L, null, 2147483647L))),
+      "id BIGINT, toks ARRAY<STRING>, h ARRAY<BIGINT>")
+    // the minhash products stay far below 2^63 only for field-sized
+    // hashes, which is all the kernel is ever given; row 5 feeds simhash
+    val field = when(col("id") =!= 5L, col("h"))
+    val checks =
+      Seq(1, 2, 3, 5).map(n => (s"shingles n=$n",
+        TextOps.shingles(col("toks"), n), TextHof.shingles(col("toks"), n))) ++
+      Seq(1, Dedup.MinhashH).map(k => (s"minhash h=$k",
+        TextOps.minhashSignature(field, k), TextHof.minhashSignature(field, k))) ++
+      Seq(1, 16, 60).map(b => (s"simhash bits=$b",
+        TextOps.simhashFromHashes(col("h"), b), TextHof.simhashFromHashes(col("h"), b)))
+    assertParity(arrays, checks)
+    // pinned corners: NULL text gives NULL shingles, a NULL hash array
+    // MinHash components of NULL and a SimHash of 0, a NULL element
+    // votes against every bit
+    val r = arrays.filter(col("id") <= 3L).orderBy("id").select(
+        TextOps.shingles(col("toks"), 2), TextOps.minhashSignature(col("h"), 2),
+        TextOps.simhashFromHashes(col("h"), 4)).collect()
+    assert(r(0).isNullAt(0) && r(0).getSeq[Any](1) == Seq(null, null) && r(0).getLong(2) == 0L)
+    assert(r(1).getSeq[String](0).isEmpty && r(1).getSeq[Long](1) == Seq(TextOps.P, TextOps.P))
+    assert(r(2).getSeq[String](0) == Seq("a", "c", "c d", "d", "f"))
+    assert(r(3).getSeq[String](0) == Seq("", "") && r(3).getLong(2) == 0L)
+  }
+
+  test("NgramLm.feats equals the per-window trigram and context formula") {
+    import graft.operators.NgramLm
+    val docs = rddFrame(parityTexts, "doc_id BIGINT, text STRING")
+    val toks = TextOps.tokens(col("text"))
+    val pairs = when(size(toks) < 3,
+        array().cast("array<struct<tri:string,ctx:string>>"))
+      .otherwise(transform(sequence(lit(1), size(toks) - 2),
+        i => struct(
+          concat_ws(" ", slice(toks, i, lit(3))).as("tri"),
+          concat_ws(" ", slice(toks, i, lit(2))).as("ctx"))))
+    val reference = docs.select(col("doc_id"), explode(pairs).as("tc"))
+      .select(col("doc_id"),
+        (TextOps.md5Long(col("tc.tri")) % NgramLm.TriBuckets).as("f3"),
+        (TextOps.md5Long(col("tc.ctx")) % NgramLm.CtxBuckets).as("f2"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
+    val got = rows(NgramLm.feats(docs, Seq("doc_id")))
+    assert(got.nonEmpty && got == rows(reference))
+  }
+
+  test("lambda lint: the dedup text plans evaluate no invariant work per element") {
+    import graft.operators.NgramLm
+    import graft.streaming.DedupStream
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      .select(col("doc_id"), col("text"), current_timestamp().as("ts"))
+    def lint(df: org.apache.spark.sql.DataFrame) = LambdaLint.offenders(df.queryExecution.optimizedPlan)
+    val plans = Seq(
+      "Dedup.shingled" -> Dedup.shingled(docs),
+      "Dedup.signatures" -> Dedup.signatures(docs),
+      "simhashSketch(tokenHashes)" -> Dedup.simhashSketch(Dedup.tokenHashes(docs), 32),
+      "DedupStream.bandStream" -> DedupStream.bandStream(docs),
+      "DedupStream.contaminationScreen" ->
+        DedupStream.contaminationScreen(docs, Dedup.bloomBits(Seq(1L, 2L))),
+      "NgramLm.feats" -> NgramLm.feats(docs, Seq("doc_id")))
+    val offenders = plans.flatMap { case (name, df) => lint(df).map(o => s"$name: $o") }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+    // the lint is not vacuous: the HOF formulas trip it, while a lambda
+    // whose md5 reads its own variable does not
+    val toks = TextOps.tokens(col("text"))
+    assert(lint(docs.select(TextHof.shingles(toks, 5))).exists(_.contains("split")))
+    assert(lint(docs.select(TextHof.minhashSignature(
+      TextOps.shingleHashes(TextOps.shingles(toks, 5)), 4))).exists(_.contains("transform")))
+    assert(lint(docs.select(TextHof.simhashFromHashes(
+      transform(toks, t => TextOps.md5Long(t)), 16))).nonEmpty)
+    assert(lint(docs.select(transform(toks, t => TextOps.md5Long(t)))).isEmpty)
+  }
 }
