@@ -459,8 +459,8 @@ object Bench {
     // and bandwidth calibs — >1 on the binding (min) ratio means
     // genuinely more work per calib-second (e.g. new queries), not a
     // noisier host. This run's calib is the min of its readings.
-    // PrevMtCalib alone is not: it is the midpoint of r14's two mt32
-    // readings [1.0, 0.94], the value the committed baseline was
+    // PrevMtCalib alone is not: it is the midpoint of the baseline
+    // host's two mt32 readings [1.0, 0.94], the value the committed baseline was
     // published with. Changing it would shift every reported ratio_mt;
     // the midpoint sits above the min, so it can only overstate a
     // regression, never hide one.

@@ -127,8 +127,8 @@ object Avi {
     // header is 12 bytes, so a crafted/corrupt container of a few
     // hundred KB of nested LIST headers would drive call-stack depth
     // past the JVM limit and throw StackOverflowError — breaking the
-    // never-throw fail-soft contract from inside the walker itself
-    // (r12 advisory). An ArrayDeque is depth-proof at any nesting.
+    // never-throw fail-soft contract from inside the walker itself.
+    // An ArrayDeque is depth-proof at any nesting.
     val work = new java.util.ArrayDeque[(Long, Long)]()
     work.push((12L, end))
     while (!work.isEmpty) {

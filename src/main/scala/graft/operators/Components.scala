@@ -65,42 +65,32 @@ object Components {
       .distinct()
   }
 
-  /** Cut `edges` and take its fingerprint in the same job: (count, sum
-    * of row hashes), order-independent, for the convergence test. */
-  private def cutWithFingerprint(edges: DataFrame): (DataFrame, (Long, Long)) = {
-    val (cut, rows, sums) =
-      Cuts.measured(edges.withColumn("h", xxhash64(col("u"), col("v"))), Seq("h"))
-    (cut.select(col("u"), col("v")), (rows, sums(0)))
-  }
+  /** `edges` with its round fingerprint column: the measured pair
+    * (rows, Σ h) is order-free, so two rounds with the same pair hold
+    * the same edge set up to a 64-bit hash collision. */
+  private def fingerprinted(edges: DataFrame): DataFrame =
+    edges.withColumn("h", xxhash64(col("u"), col("v")))
 
   /** Component id (= min node id of the component) for every node that
     * appears in `pairs` (columns `a`, `b`). Output: (node, component),
     * component roots map to themselves.
     *
-    * Each round Cuts-cuts the shrunken edge set — without the
-    * lineage cut, round k would replay rounds 1..k-1 and the plan
-    * would grow exponentially — and reads the round's fingerprint off
-    * that cut's own job. maxIter is a safety bound only; the
-    * alternation provably converges in O(log² n) rounds worst case
-    * (SoCC 2014 thm 2 — in practice a handful) and the loop exits on
-    * the first fixed point, so extra headroom costs nothing.
+    * Each star round is one [[Supersteps.converge]] superstep, which
+    * stops at the first round whose fingerprint repeats. maxIter is a
+    * safety bound only; the alternation provably converges in
+    * O(log² n) rounds worst case (SoCC 2014 thm 2 — in practice a
+    * handful), so extra headroom costs nothing.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
-    var (edges, fp) = cutWithFingerprint(pairs
-      .select(col("a").cast("long").as("u"), col("b").cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
-      .select(greatest(col("u"), col("v")).as("u"),
-        least(col("u"), col("v")).as("v"))
-      .distinct())
-    var converged = fp._1 == 0L // no edges -> already at the fixed point
-    var it = 0
-    while (!converged && it < maxIter) {
-      val (next, nfp) = cutWithFingerprint(smallStar(largeStar(edges)))
-      converged = nfp == fp
-      fp = nfp
-      edges = next
-      it += 1
-    }
+    val rounds = Supersteps.converge(fingerprinted(pairs
+        .select(col("a").cast("long").as("u"), col("b").cast("long").as("v"))
+        .filter(col("u") =!= col("v"))
+        .select(greatest(col("u"), col("v")).as("u"),
+          least(col("u"), col("v")).as("v"))
+        .distinct()), maxIter, Seq("h")) {
+      (prev, _) => fingerprinted(smallStar(largeStar(prev.state)))
+    }(_ sameMeasure _)
+    val last = rounds.last
     // Fail loudly rather than return silently-wrong clusters: a
     // non-converged edge set is not a star forest, so the node→min
     // mapping below would be incorrect. Rounds needed grow with log n
@@ -109,11 +99,12 @@ object Components {
     // set (2^50 nodes) — and the throw fires only on a logic
     // regression. The residual edge count rides in the error message
     // so the bound can be tuned from the failure itself if it binds.
-    if (!converged)
+    if (last.rows > 0 && !(rounds.size > 1 && rounds(rounds.size - 2).sameMeasure(last)))
       throw new IllegalStateException(
         s"connectedComponents did not converge within $maxIter rounds " +
-          s"(edge fingerprint still moving: count=${fp._1})")
+          s"(edge fingerprint still moving: count=${last.rows})")
     // fixed point = stars: every non-root points at its root
+    val edges = last.state
     edges.select(col("u").as("node"), col("v").as("component"))
       .union(edges.select(col("v").as("node"), col("v").as("component")))
       .distinct()

@@ -4,6 +4,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, ExactStatsLeaf}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.types.LongType
 
 /** Lineage cuts with a config-selected durability backend — the one
   * switch every iterative operator (Supersteps, Traversal, Triangles,
@@ -65,8 +66,11 @@ object Cuts {
     * taken in the same pass over the materialized rows: one job on the
     * default backend, the write and then one pass over the read-back
     * on the reliable one. Sums wrap on overflow (they are order-free
-    * fingerprints, never quantities), NULLs add nothing. */
-  def measured(df: DataFrame, sums: Seq[String]): (DataFrame, Long, Array[Long]) =
+    * fingerprints or exact censuses), NULLs add nothing. */
+  def measured(df: DataFrame, sums: Seq[String]): (DataFrame, Long, Array[Long]) = {
+    sums.foreach { c =>
+      require(df.schema(c).dataType == LongType, s"measured column $c must be a long")
+    }
     reliableDir(df) match {
       case Some(dir) =>
         val path = s"$dir/cut-${seq.incrementAndGet()}-${java.util.UUID.randomUUID().toString.take(8)}"
@@ -81,6 +85,7 @@ object Cuts {
         val (rows, totals) = countAndSum(leaf.rdd, sums.map(cp.schema.fieldIndex))
         (ExactStatsLeaf(cp.sparkSession, leaf, rows), rows, totals)
     }
+  }
 
   /** Row count and wrapping per-ordinal long sums in one job. */
   private def countAndSum(rdd: RDD[InternalRow], ordinals: Seq[Int]): (Long, Array[Long]) = {

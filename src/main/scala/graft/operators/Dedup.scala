@@ -153,9 +153,10 @@ object Dedup {
       .orderBy(col("a"), col("b"))
   }
 
-  /** Exact duplicate groups keyed on the 60-bit md5 content hash. */
+  /** Exact duplicate groups keyed on the 60-bit md5 content hash. A
+    * NULL text has no content, so it is in no group. */
   def exactDupGroups(docs: DataFrame): DataFrame =
-    docs.groupBy(TextOps.md5Long(col("text")).as("content_hash"))
+    docs.filter(col("text").isNotNull).groupBy(TextOps.md5Long(col("text")).as("content_hash"))
       .agg(count(lit(1)).as("cnt"), min(col("doc_id")).as("keep_id"))
 
   /** Embedding near-dup via banded sign-LSH with DATA-DEPENDENT
@@ -174,10 +175,9 @@ object Dedup {
     import graft.functions.VectorOps
     // The plane set is nPlanes ROWS — collect it once and inline it as
     // literals, so every band key is one map-only codegen'd expression
-    // per row (exactly Lsh.bucketCol's shape). The round-2 version
-    // crossJoined the planes (a 16× row blowup) and then SHUFFLED the
-    // blown-up rows on (vec_id, band) to regroup bits — n×P rows through
-    // an exchange that this formulation never creates.
+    // per row (exactly Lsh.bucketCol's shape) — never a crossJoin with
+    // the planes (a 16× row blowup) whose rows would then be SHUFFLED
+    // on (vec_id, band) to regroup bits.
     val planeRows = emb.filter(col("vec_id") < nPlanes)
       .orderBy(col("vec_id")).select(col("vec_id"), col("embedding")).collect()
     // plane i must be the embedding with vec_id == i (the oracle and the
@@ -324,10 +324,15 @@ object Dedup {
     * token-hash table. Both self-join sides of the pair search read
     * it, so callers materialize it (a Cuts cut, or parquet at scale:
     * the sketch table a dedup pipeline persists between its signature
-    * and candidate stages) before joining on it. */
+    * and candidate stages) before joining on it. A doc with no token
+    * hash (NULL, empty or token-free text) gets no sketch: it has no
+    * content to be a near-duplicate of. The row is dropped by the
+    * explode of an empty option, not by a filter, which Catalyst
+    * would push below the projection that tokenizes `th` and so
+    * tokenize every doc twice. */
   def simhashSketch(hashed: DataFrame, bits: Int): DataFrame =
-    hashed.select(col("doc_id"),
-      TextOps.simhashFromHashes(col("th"), bits).as("simhash"))
+    hashed.select(col("doc_id"), explode(when(size(col("th")) > 0,
+      array(TextOps.simhashFromHashes(col("th"), bits)))).as("simhash"))
 
   /** Banded simhash pairs from a token-hash table — the build/probe
     * split: callers answering several sketch widths (16-bit and 60-bit

@@ -65,8 +65,7 @@ class Hnsw(val m: Int = 16, val ef: Int = 32, val seed: Long = 42L,
   /** Build the adjacency: for every level l ≤ node level, connect each
     * node to its M nearest same-level peers AMONG LSH-blocked candidate
     * pairs. The blocker is REQUIRED (defaulted): the unblocked variant
-    * is a full per-level self-join — O(n²) pair rows — which is the
-    * footgun-shaped default the round-5 verdict flagged; it survives
+    * is a full per-level self-join — O(n²) pair rows — so it survives
     * only as the test-only `buildAdjacencyUnblocked` equivalence
     * baseline. Returns (node_id, level, neighbor_id, dist) sorted-free;
     * write to parquet partitioned by level for pruned serve-time
@@ -155,15 +154,14 @@ class Hnsw(val m: Int = 16, val ef: Int = 32, val seed: Long = 42L,
     *    vector rehydration and no re-prune: an untouched (level, src)
     *    gains zero candidates, so its rebuild candidate set equals its
     *    base-build candidate set and the stored top-M IS the rebuild
-    *    answer (the round-10 version re-rehydrated and re-pruned every
-    *    stored edge anyway — a full edge-frame shuffle per batch the
-    *    r10 verdict flagged; now per-batch work is O(batch·bucket +
-    *    touched·M), never O(|edges|) rehydration).
+    *    answer, so per-batch work is O(batch·bucket + touched·M),
+    *    never an O(|edges|) rehydration and re-prune of every stored
+    *    edge.
     * Touched stored dists are REANCHORED from the vectors (not reused
     * rounded) so the merge sorts by the same unrounded keys as a
     * rebuild — a 6-decimal tie could otherwise order differently.
-    * An empty batch is a no-op returning `existing` unchanged (r10
-    * advisory: the dim probe used to throw on an empty frame). */
+    * An empty batch is a no-op returning `existing` unchanged (the
+    * dim probe would throw on an empty frame). */
   def appendAdjacency(existing: DataFrame, oldVectors: DataFrame,
                       newBatch: DataFrame,
                       idCol: String = "vec_id", vecCol: String = "embedding",
@@ -381,7 +379,7 @@ object Hnsw {
   /** Bounded LRU (access-ordered LinkedHashMap): single-entry eviction
     * of the least-recently-used key, so a working set hovering near the
     * boundary stays hot instead of thrashing through whole-cache resets
-    * (the round-5 CachingFetch behavior the r5 advisory flagged). */
+    * on every overflow. */
   private final class Lru[K, V](maxEntries: Int) {
     private val m = new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
       override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
@@ -427,9 +425,9 @@ object Hnsw {
     def resident: Int = cache.values.count(_.isDefined)
   }
 
-  /** Caching NEIGHBOR-LIST source — the paged serve head. The round-5
-    * head collected the whole adjacency (O(n·M) edge ids on the
-    * driver); at genuine 100 TB that head outgrows one driver, so this
+  /** Caching NEIGHBOR-LIST source — the paged serve head. A head that
+    * collected the whole adjacency (O(n·M) edge ids on the driver)
+    * would outgrow one driver at genuine 100 TB, so this
     * wraps a neighbor-list point read (`parquetAdjacency`, or any
     * (node, level) => neighbors lambda) with the same LRU bound and
     * materialization counter as CachingFetch: driver-resident EDGES

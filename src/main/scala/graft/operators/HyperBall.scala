@@ -98,21 +98,16 @@ object HyperBall {
   private def rankOf(w: Column): Column =
     when(w === 0, lit(55L)).otherwise(lit(55L) - length(bin(w)))
 
-  /** Register states for hops 0..maxHops (index = hop), each
-    * materialized via a [[Cuts.cut]], a fresh leaf with exact
-    * statistics. Superstep: absorb out-neighbors' registers
-    * and max-merge per (root, b) — one src-keyed join + one keyed
-    * max, the two-shuffle Pregel shape, with register monotonicity
-    * making re-delivery/retries idempotent for free. */
+  /** Register states for hops 0..maxHops (index = hop), one
+    * [[Supersteps.converge]] round each, never stopping early.
+    * Superstep: absorb out-neighbors' registers and max-merge per
+    * (root, b) — one src-keyed join + one keyed max, the two-shuffle
+    * Pregel shape, with register monotonicity making
+    * re-delivery/retries idempotent for free. */
   def registerHops(edges: DataFrame, nodes: DataFrame, maxHops: Int): Seq[DataFrame] = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    var regs = Cuts.cut(registers0(nodes))
-    val out = scala.collection.mutable.ArrayBuffer(regs)
-    for (_ <- 1 to maxHops) {
-      regs = Cuts.cut(step(edges, regs))
-      out += regs
-    }
-    out.toSeq
+    Supersteps.converge(registers0(nodes), maxHops)((regs, _) => step(edges, regs.state))(
+      (_, _) => false).map(_.state)
   }
 
   /** One absorption superstep:
@@ -127,36 +122,20 @@ object HyperBall {
   /** Absorption supersteps run TO THE FIXED POINT (capped at
     * `maxRounds`) — converged registers summarize each root's full
     * REACHABLE set (= its connected component on a both-direction
-    * edge list). The convergence probe is an exact integer
-    * certificate: registers only appear or grow under max-merge, so
-    * the (row count, Σr) pair strictly increases unless the state is
-    * identical — a repeat certifies the true fixed point, and because
-    * the state is a monotone lattice, convergence from ANY
-    * intermediate state (e.g. registers maintained across streaming
-    * ticks as edges arrive) lands on the SAME fixed point — the
-    * semi-naive incremental evaluation that makes streaming reach
+    * edge list). The stop test is an exact integer certificate, the
+    * measured (register rows, Σ r) of each round's cut: registers only
+    * appear or grow under max-merge, so the pair strictly increases
+    * unless the state is identical — a repeat certifies the true fixed
+    * point, and because the state is a monotone lattice, convergence
+    * from ANY intermediate state (e.g. registers maintained across
+    * streaming ticks as edges arrive) lands on the SAME fixed point —
+    * the semi-naive incremental evaluation that makes streaming reach
     * maintenance exact AND re-delivery-idempotent even after the
     * state was already applied. */
   def converge(edges: DataFrame, regs0: DataFrame, maxRounds: Int): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    var regs = Cuts.cut(regs0)
-    var cert = certOf(regs)
-    var round = 0
-    var done = false
-    while (!done && round < maxRounds) {
-      val nxt = Cuts.cut(step(edges, regs))
-      val c2 = certOf(nxt)
-      if (c2 == cert) done = true // equal state — keep regs
-      else { regs = nxt; cert = c2 }
-      round += 1
-    }
-    regs
-  }
-
-  /** The integer fixed-point certificate: (register rows, Σ rank). */
-  private def certOf(regs: DataFrame): (Long, Long) = {
-    val row = regs.agg(count(lit(1)), sum(col("r"))).head()
-    (row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1))
+    Supersteps.converge(regs0.select(col("root"), col("b"), col("r")), maxRounds, Seq("r"))(
+      (regs, _) => step(edges, regs.state))(_ sameMeasure _).last.state
   }
 
   /** Per-root estimator inputs from one hop's merged registers:

@@ -175,13 +175,24 @@ class Ivf(nlist: Int, iters: Int) {
     * partitioned by cluster this scans nprobe/nlist of data. */
   def query(assigned: DataFrame, cents: Array[(Int, Array[Double])],
       q: Array[Float], k: Int, nprobe: Int): DataFrame = {
-    val qd = q.map(_.toDouble)
+    val probes = Ivf.nearestCells(q, cents, nprobe).map(_._1)
+    Knn.topK(assigned.filter(col("cluster").isin(probes.toSeq: _*)), q, k, Knn.Cosine)
+  }
+}
+
+object Ivf {
+  /** The `n` cells nearest to `q` with their centroids, nearest first,
+    * ties to the smaller cell id — the driver-side replay of
+    * [[Ivf.assignExpr]]'s (squared distance, cell id) struct argmin.
+    * The squared distance is a left-to-right double fold, the order
+    * of assignExpr and of the SQL oracles. */
+  def nearestCells(q: Array[Float], cents: Array[(Int, Array[Double])],
+      n: Int): Array[(Int, Array[Double])] = {
     def d2(c: Array[Double]): Double = {
       var s = 0.0; var i = 0
-      while (i < c.length) { val diff = c(i) - qd(i); s += diff * diff; i += 1 }
+      while (i < c.length) { val diff = q(i).toDouble - c(i); s += diff * diff; i += 1 }
       s
     }
-    val probes = cents.sortBy { case (i, c) => (d2(c), i) }.take(nprobe).map(_._1)
-    Knn.topK(assigned.filter(col("cluster").isin(probes.toSeq: _*)), q, k, Knn.Cosine)
+    cents.sortBy { case (cid, c) => (d2(c), cid) }.take(n)
   }
 }

@@ -81,13 +81,13 @@ class Lsh(val numPlanes: Int = 16, val seed: Long = 42L,
       // store has up to 2^16 bucket directories, and an unclustered
       // write makes EACH input task open a parquet writer per bucket it
       // sees — a single-task source serially opens/commits thousands of
-      // tiny files (measured r14: 2000 buckets ≈ 30-60 s of pure file
+      // tiny files (measured: 2000 buckets ≈ 30-60 s of pure file
       // churn at sf0.1). Hash-clustering routes every bucket wholly to
       // one task: file creation parallelizes across the cluster and the
       // store gets exactly ONE file per bucket instead of one per
       // (task × bucket) — the compact() layout, written right the first
       // time (guide §6: file sizing/count is set at write time).
-      // The partition COUNT must be pinned (r15): a bare
+      // The partition COUNT must be pinned: a bare
       // repartition(col) is an AQE-coalescible shuffle, and at
       // byte-tiny row volume AQE folds it back to ONE post-shuffle
       // partition — one task again serially opening every bucket's
@@ -130,7 +130,7 @@ class Lsh(val numPlanes: Int = 16, val seed: Long = 42L,
     // partition-discovery pass over the store's files (append must
     // stay O(batch)). Whenever the sidecar is absent or unreadable
     // (legacy store, torn write), fall back to the one-row Spark
-    // probe. Bootstrap classification is EXPLICIT (r8 advisory): a
+    // probe. Bootstrap classification is EXPLICIT: a
     // genuinely missing store directory bootstraps silently (first
     // append = build); an existing-but-unreadable directory (e.g.
     // pre-created empty by an orchestrator) also bootstraps, but says
@@ -271,8 +271,8 @@ object Lsh {
   /** Resolve the store's OWN filesystem from its path scheme — local
     * paths hit RawLocalFileSystem, `hdfs://`/`s3a://`/`file:` stores
     * hit theirs, so every sidecar/compact operation below works
-    * wherever Spark itself can read the store (the r8 advisory:
-    * java.nio on the raw path string only ever worked locally). */
+    * wherever Spark itself can read the store (java.nio on the raw
+    * path string only works locally). */
   private def fsOf(conf: Configuration, path: String): (FileSystem, HPath) = {
     val p = new HPath(path)
     (p.getFileSystem(conf), p)

@@ -78,9 +78,9 @@ object PageRank {
     * ONLY the 16-byte-row rank frame — the big edge frame is shuffled
     * and sorted exactly once per prepared graph, not once per
     * iteration (a checkpointed ExistingRDD loses that metadata and
-    * cost one full edge exchange + sort per superstep, measured in
-    * the r11 plan audit). This is the resident co-partitioned edge
-    * structure every Pregel-style system (GraphX, Giraph — public
+    * cost one full edge exchange + sort per superstep). This is the
+    * resident co-partitioned edge structure every Pregel-style
+    * system (GraphX, Giraph — public
     * designs) keeps across supersteps; on a cluster the same effect
     * comes from a bucketed edge table. */
   def prepare(edges: DataFrame): Graph = {
@@ -186,17 +186,22 @@ object PageRank {
     }
   }
 
-  /** Rank-frame adapter over [[Supersteps.loop]]: exact long-L1 early
-    * exit (see [[iterate]]) and the rank_fp output rename. `step` maps
+  /** Rank-frame adapter over [[Supersteps]]: the fixed-count loop,
+    * or with `earlyExitTolFp` the measured loop with the exact long-L1
+    * stop (see [[iterate]]); and the rank_fp output rename. `step` maps
     * a (node, rank) frame to the next one. */
   private def loop(r0: DataFrame, iters: Int, checkpointEvery: Int,
       earlyExitTolFp: Option[Long])(step: DataFrame => DataFrame): DataFrame = {
-    val probe = earlyExitTolFp.map { tol => (next: DataFrame, prev: DataFrame, _: Long) =>
-      next.join(prev.withColumnRenamed("rank", "prev"), "node")
-        .agg(coalesce(sum(abs(col("rank") - col("prev"))), lit(0L)))
-        .collect()(0).getLong(0) <= tol
+    val ranks = earlyExitTolFp match {
+      case None => Supersteps.loop(r0, iters, checkpointEvery)(step)
+      case Some(tol) =>
+        require(iters >= 1, s"iters must be >= 1, got $iters")
+        Supersteps.converge(r0, iters)((prev, _) => step(prev.state)) { (prev, next) =>
+          next.state.join(prev.state.withColumnRenamed("rank", "prev"), "node")
+            .agg(coalesce(sum(abs(col("rank") - col("prev"))), lit(0L)))
+            .collect()(0).getLong(0) <= tol
+        }.last.state
     }
-    Supersteps.loop(r0, iters, checkpointEvery, probe)(step)
-      .select(col("node"), col("rank").as("rank_fp"))
+    ranks.select(col("node"), col("rank").as("rank_fp"))
   }
 }

@@ -182,8 +182,8 @@ class Pq(val m: Int) {
     * m×ksub table from a broadcast map literal, and the bounded-heap
     * aggregate (TopKAggregate — the knn_multi_agg move) keeps k rows
     * per query on the map side, so the shuffle carries q×k rows
-    * instead of q×n. Replaces the round-5 driver loop that unioned one
-    * shortlist plan per query (q FileScans → 1).
+    * instead of q×n, and one FileScan serves all q queries (a union of
+    * per-query shortlist plans would scan q times).
     *
     * Ordering contract matches the single-query probe exactly:
     * adc ASC, vec_id ASC (the heap holds (vec_id, −adc) so its

@@ -1,44 +1,71 @@
 package graft.operators
 
+import scala.annotation.tailrec
+
 import org.apache.spark.sql.DataFrame
 
-/** The shared superstep driver for iterative graph algorithms
-  * (PageRank, label propagation — anything Pregel-shaped), carrying
-  * the two depth controls a to-convergence run needs:
+/** The one superstep driver of the graph tier. Every Pregel-shaped
+  * loop (PageRank, label propagation, Bellman–Ford, BFS, the k-core
+  * and k-truss peels, HyperBall, random walks, connected components)
+  * runs through one of its two entry points:
   *
-  *  - `checkpointEvery`: a [[Cuts]] lineage cut every k supersteps,
-  *    so plan depth stays bounded instead of growing per iteration —
-  *    past ~10 uncut supersteps Catalyst re-analysis and task
-  *    serialization dominate (GraphAppendSpec and GraphMiningSpec pin
-  *    bounded plan size at 20 iterations). Runs that never reach a
-  *    cut (the declared 2–3 iteration queries) get byte-identical
-  *    plans to an uncut loop.
-  *  - `converged`: an optional exact, integer-friendly fixed-point
-  *    probe (next, prev, rows of next) => stop?. When it is set every
-  *    superstep is cut, so the probe reads materialized partitions,
-  *    not re-executed lineage, and gets the row count the cut took
-  *    in the same job. Callers use exact criteria (long L1 delta = 0,
-  *    label change count = 0, an unchanged census) — a true fixed
-  *    point, so early exit never changes the result.
+  *  - [[loop]]: a fixed number of supersteps with a [[Cuts]] lineage
+  *    cut every `checkpointEvery` of them, so plan depth stays bounded
+  *    instead of growing per iteration (GraphAppendSpec and
+  *    GraphMiningSpec pin bounded plan size at 20 iterations). A run
+  *    that never reaches a cut gets the plan of an uncut loop.
+  *  - [[converge]]: up to `maxSteps` supersteps, each one cut, until
+  *    the caller's `stop(previous, next)` holds. Every round, the
+  *    initial state included, is cut with [[Cuts.measured]]: the
+  *    round's row count and the sums of the named long columns come
+  *    from the job that materializes it (one job on the default
+  *    backend; on the reliable backend the parquet write, then one
+  *    pass over the read-back). Sums wrap on overflow and NULLs add
+  *    nothing, so they serve as order-free fingerprints and exact
+  *    censuses. A stop test built from these measures costs no action
+  *    of its own.
+  *
+  * Callers use exact stop criteria (an unchanged measure over a state
+  * that only grows or only shrinks, a zero label change, a long L1
+  * delta within tolerance), so early exit never changes the result.
   */
 object Supersteps {
-  def loop(init: DataFrame, iters: Int, checkpointEvery: Int,
-      converged: Option[(DataFrame, DataFrame, Long) => Boolean])
+
+  /** One cut round of [[converge]]: the materialized state, its row
+    * count and the sums of the measured columns, in the order named. */
+  final case class Round(state: DataFrame, rows: Long, sums: Seq[Long]) {
+    /** Equal row count and equal sums. */
+    def sameMeasure(o: Round): Boolean = rows == o.rows && sums == o.sums
+  }
+
+  /** `iters` supersteps of `step` from `init`, cut every
+    * `checkpointEvery` supersteps (never after the last). */
+  def loop(init: DataFrame, iters: Int, checkpointEvery: Int)
       (step: DataFrame => DataFrame): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(checkpointEvery >= 1, s"checkpointEvery must be >= 1, got $checkpointEvery")
-    var cur = init
-    var it = 0
-    var done = false
-    while (it < iters && !done) {
-      it += 1
-      val next0 = step(cur)
-      if (converged.isDefined || (it % checkpointEvery == 0 && it < iters)) {
-        val (next, rows) = Cuts.counted(next0)
-        converged.foreach { probe => if (probe(next, cur, rows)) done = true }
-        cur = next
-      } else cur = next0
+    (1 to iters).foldLeft(init) { (cur, it) =>
+      val next = step(cur)
+      if (it % checkpointEvery == 0 && it < iters) Cuts.cut(next) else next
     }
-    cur
+  }
+
+  /** Rounds 0..n of a measured superstep run: round 0 is `init`, round
+    * t is `step(round t−1, t)`. Stops after the first round t with
+    * `stop(round t−1, round t)`, or at t = `maxSteps`. */
+  def converge(init: DataFrame, maxSteps: Int, sums: Seq[String] = Nil)
+      (step: (Round, Int) => DataFrame)(stop: (Round, Round) => Boolean): IndexedSeq[Round] = {
+    require(maxSteps >= 0, s"maxSteps must be >= 0, got $maxSteps")
+    def measure(df: DataFrame): Round = {
+      val (cut, rows, totals) = Cuts.measured(df, sums)
+      Round(cut, rows, totals.toSeq)
+    }
+    @tailrec def go(rounds: Vector[Round]): Vector[Round] =
+      if (rounds.size > maxSteps) rounds
+      else {
+        val next = measure(step(rounds.last, rounds.size))
+        if (stop(rounds.last, next)) rounds :+ next else go(rounds :+ next)
+      }
+    go(Vector(measure(init)))
   }
 }

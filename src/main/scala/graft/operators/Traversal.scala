@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Graph traversal kernels — frontier BFS, bounded-round Bellman–Ford
@@ -15,13 +15,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: every round of every kernel is at most one
   * src-keyed join plus one node-keyed aggregate — the two-shuffle
-  * Pregel superstep. Each round's state is one [[Cuts]] counted cut
-  * (localCheckpoint locally; a durable parquet cut when
-  * `spark.graft.checkpoint.dir` is set), so plan depth stays bounded,
-  * the job that materializes a round also counts it (the BFS
-  * empty-level test and the k-core census read that count), and on a
-  * cluster a lost executor cannot kill a deep traversal. No row is
-  * collected, only those counts.
+  * Pregel superstep, run by [[Supersteps]]. No row is collected; the
+  * BFS empty-level test and the k-core census read the row counts and
+  * sums of the driver's measured cuts.
   */
 object Traversal {
 
@@ -34,27 +30,17 @@ object Traversal {
     * here: duplicate seed rows would otherwise emit duplicate (node, 0)
     * rows and inflate any downstream per-hop census.
     *
-    * The state is ONE visited frame (node, hop). Each level is a single
-    * counted cut of visited ∪ the level's new nodes, so the anti-join
-    * reads one leaf at any depth and the level's emptiness is read off
-    * the cut's own count: the level is empty exactly when the count did
-    * not grow. The final visited frame is the result. */
+    * The state is ONE visited frame (node, hop), so the anti-join
+    * reads one leaf at any depth; a level is empty exactly when the
+    * visited row count did not grow. */
   def bfsHops(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    var (visited, reached) = Cuts.counted(
-      seeds.select(col("node"), lit(0L).as("hop")).distinct())
-    var d = 1
-    var grew = true
-    while (d <= maxHops && grew) {
-      val frontier = visited.filter(col("hop") === d - 1).select(col("node"))
-      val (next, n) = Cuts.counted(visited.unionByName(
-        bfsRound(edges, frontier, visited.select(col("node")), d)))
-      grew = n > reached
-      visited = next
-      reached = n
-      d += 1
-    }
-    visited
+    Supersteps.converge(seeds.select(col("node"), lit(0L).as("hop")).distinct(), maxHops) {
+      (visited, d) =>
+        val v = visited.state
+        v.unionByName(bfsRound(edges, v.filter(col("hop") === d - 1).select(col("node")),
+          v.select(col("node")), d))
+    }(_.rows == _.rows).last.state
   }
 
   /** One BFS expansion: frontier-successors not yet in `visited`,
@@ -83,7 +69,7 @@ object Traversal {
     // the cut frame is node-sized. PageRank references its rank state
     // once per step, so it keeps the sparser default; LPA shares this
     // double-reference shape and cuts per round too.
-    Supersteps.loop(d0, rounds, checkpointEvery = 1, None) { dist =>
+    Supersteps.loop(d0, rounds, checkpointEvery = 1) { dist =>
       val relax = edgesWithCost
         .join(dist, edgesWithCost("src") === dist("node"))
         .select(edgesWithCost("dst").as("node"),
@@ -103,21 +89,10 @@ object Traversal {
     * is the input graph (nodes = distinct sources), round r ≥ 1 counts
     * the kept-node set (which may exceed the next round's edge
     * endpoints — a kept node can lose all its edges to the
-    * restriction; that cascade is the algorithm). The census is
-    * rounds+1 integer triples built from the counts of each round's
-    * cuts. */
+    * restriction; that cascade is the algorithm). */
   def kCorePeelCensus(edges0: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    val (e0, row0) = peelStart(edges0)
-    val census = scala.collection.mutable.ArrayBuffer(row0)
-    var e = e0
-    for (r <- 1 to rounds) {
-      val (kept, keptNodes) = peelRound(e, k)
-      val (next, edgeRows) = Cuts.counted(kept)
-      census += ((r.toLong, keptNodes, edgeRows))
-      e = next
-    }
-    censusFrame(edges0.sparkSession, census.toSeq)
+    peel(edges0, k, rounds)((_, _) => false)
   }
 
   /** k-core peeling run TO ITS FIXED POINT (capped at `maxRounds`),
@@ -132,57 +107,38 @@ object Traversal {
     * repeats the previous one. The peel only ever shrinks the edge
     * set, so an equal (kept-node, edge) census means an equal SET and
     * a true fixed point: the repeated row is the proof of convergence,
-    * and stopping there never changes any earlier row (the integer
-    * early-exit doctrine of LPA/PageRank). If the cascade outlives the
-    * cap, all maxRounds+1 rows are emitted — the oracle applies the
-    * identical trim rule over the identical unroll, so the two always
-    * agree.
-    *
-    * Driven by the shared [[Supersteps.loop]]: the edge frame is the
-    * superstep state and every round is lineage-cut, so plan depth
-    * stays bounded on long cascades (the 20-round pin in
-    * GraphMiningSpec). A round's census is the two counts its cuts
-    * take anyway — kept nodes from the `keep` cut, edges from the
-    * loop's cut — so the convergence test costs no action of its own. */
+    * and stopping there never changes any earlier row. If the cascade
+    * outlives the cap, all maxRounds+1 rows are emitted — the oracle
+    * applies the identical trim rule over the identical unroll, so the
+    * two always agree. */
   def kCoreConvergedCensus(edges0: DataFrame, k: Int, maxRounds: Int): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val (e0, row0) = peelStart(edges0)
-    val census = scala.collection.mutable.ArrayBuffer(row0)
-    var keptNodes = 0L // stashed by the step, read by the probe
-    val probe = Some { (_: DataFrame, _: DataFrame, edgeRows: Long) =>
-      census += ((census.size.toLong, keptNodes, edgeRows))
-      val n = census.size
-      census(n - 1)._2 == census(n - 2)._2 &&
-        census(n - 1)._3 == census(n - 2)._3
-    }
-    Supersteps.loop(e0, maxRounds, checkpointEvery = 1, probe) { e =>
-      val (kept, n) = peelRound(e, k)
-      keptNodes = n
-      kept
-    }
-    censusFrame(edges0.sparkSession, census.toSeq)
+    peel(edges0, k, maxRounds)(_ sameMeasure _)
   }
 
-  /** The cut (src, dst) edge frame and its round-0 census row. */
-  private def peelStart(edges0: DataFrame): (DataFrame, (Long, Long, Long)) = {
-    val (e, edgeRows) = Cuts.counted(edges0.select(col("src"), col("dst")))
-    (e, (0L, e.select(col("src")).distinct().count(), edgeRows))
-  }
-
-  /** One peel round: the edges between nodes of out-degree ≥ k (not
-    * cut) and the number of those nodes, counted by the `keep` cut. */
-  private def peelRound(e: DataFrame, k: Int): (DataFrame, Long) = {
-    val (keep, keptNodes) = Cuts.counted(
-      e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select(col("src").as("node")))
-    val kept = e.join(keep.select(col("node").as("src")), "src")
-      .join(keep.select(col("node").as("dst")), "dst")
-      .select(col("src"), col("dst"))
-    (kept, keptNodes)
-  }
-
-  private def censusFrame(spark: SparkSession, census: Seq[(Long, Long, Long)]): DataFrame = {
+  /** The peel both censuses share. The superstep state of round r is
+    * the degree frame (node, deg) of the round's kept set K_r: every
+    * kept node with its out-degree in the round's edge set, 0 when it
+    * has lost all its edges (round 0: every source of the input). Its
+    * measured cut is the census row: rows = n_nodes, Σ deg = n_edges.
+    * The kept sets only shrink, so the round-r edge set is the input
+    * restricted to K_r at both endpoints, and each round filters the
+    * (cut) input edge list by K_r. */
+  private def peel(edges0: DataFrame, k: Int, maxRounds: Int)
+      (stop: (Supersteps.Round, Supersteps.Round) => Boolean): DataFrame = {
+    val e0 = Cuts.cut(edges0.select(col("src"), col("dst")))
+    val deg0 = e0.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
+    val rounds = Supersteps.converge(deg0, maxRounds, Seq("deg")) { (prev, _) =>
+      val keep = prev.state.filter(col("deg") >= k).select(col("node"))
+      e0.join(keep.select(col("node").as("src")), "src")
+        .join(keep.select(col("node").as("dst")), "dst")
+        .select(col("src").as("node"), lit(1L).as("deg"))
+        .unionByName(keep.select(col("node"), lit(0L).as("deg")))
+        .groupBy(col("node")).agg(sum(col("deg")).as("deg"))
+    }(stop)
+    val spark = edges0.sparkSession
     import spark.implicits._
-    census.toDF("round", "n_nodes", "n_edges")
+    rounds.zipWithIndex.map { case (r, i) => (i.toLong, r.rows, r.sums.head) }
+      .toDF("round", "n_nodes", "n_edges")
   }
 }

@@ -207,13 +207,11 @@ object Triangles {
     * common-neighbor intersection, which re-pays the Σ deg² wedge
     * volume per EDGE-SIDE instead of once. */
   def edgeSupport(e: DataFrame): DataFrame =
-    edgeSupportFromOriented(orient(e).cut())
+    triangleEdges(orient(e).cut()).groupBy(col("u"), col("v")).agg(F.count(lit(1)).as("sup"))
 
-  /** [[edgeSupport]] from a pre-materialized oriented frame — the same
-    * build/probe split as [[countFromOriented]], so the k-truss peel's
-    * round 0 (the only round over the FULL graph) can ride the shared
-    * session-memoized orientation instead of re-deriving it. */
-  def edgeSupportFromOriented(o: DataFrame): DataFrame = {
+  /** (u, v) in u &lt; v form, once per edge of every triangle of the
+    * oriented frame `o`. */
+  private def triangleEdges(o: DataFrame): DataFrame = {
     val ab = o.select(col("a"), col("b"), col("rb").as("r1"))
     val ac = o.select(col("a"), col("b").as("c"), col("rb").as("r2"))
     val bc = o.select(col("a").as("b"), col("b").as("c"))
@@ -228,18 +226,25 @@ object Triangles {
         struct(least(col("b"), col("c")).as("u"), greatest(col("b"), col("c")).as("v"))))
         .as("ed"))
       .select(col("ed.u").as("u"), col("ed.v").as("v"))
-      .groupBy(col("u"), col("v")).agg(F.count(lit(1)).as("sup"))
   }
+
+  /** (u, v, sup) for EVERY edge of `und` (u &lt; v): its triangle support
+    * over the triangles of `o`, 0 for an edge in no triangle. One
+    * (u, v)-keyed sum, the same shuffle as [[edgeSupport]]. */
+  private def supportOf(und: DataFrame, o: DataFrame): DataFrame =
+    triangleEdges(o).select(col("u"), col("v"), lit(1L).as("sup"))
+      .unionByName(und.select(col("u"), col("v"), lit(0L).as("sup")))
+      .groupBy(col("u"), col("v")).agg(F.sum(col("sup")).as("sup"))
 
   private def bothDirUv(u: DataFrame): DataFrame =
     u.select(col("u").as("src"), col("v").as("dst"))
       .unionByName(u.select(col("v").as("src"), col("u").as("dst")))
 
   /** One peel round: from the current undirected edge set `und` (u<v)
-    * and its support frame `sup` ((u, v, sup ≥ 1) — edges in no
-    * triangle carry no row), produce the next round's support frame,
-    * keeping edges with sup ≥ k−2 (callers derive the next edge set as
-    * `keep`'s (u, v) projection). Two provably-equivalent backends:
+    * and `keep`, its edges with sup ≥ k−2 ((u, v, sup)), produce the
+    * next round's support frame: (u, v, sup) for every kept edge, 0
+    * when none of its triangles survives. Two provably-equivalent
+    * backends:
     *
     *  - `decrement = false`: re-enumerate full support
     *    over the SHRUNKEN subgraph — one degree-ordered wedge pass per
@@ -257,8 +262,7 @@ object Triangles {
     *      sup_{r+1}(e) = sup_r(e) − |{T ∋ e in G_r : T hit}|
     *    because a triangle of G_{r+1} containing e is exactly a
     *    triangle of G_r containing e, none of whose edges was removed.
-    *    Rows that hit 0 are dropped (the "no row for no-triangle
-    *    edges" invariant). Right when removals are the minority —
+    *    Right when removals are the minority —
     *    late cascade rounds, where re-enumerating the near-unchanged
     *    core repaid the whole wedge volume per round.
     *
@@ -268,7 +272,7 @@ object Triangles {
   private[graft] def peelRoundSupport(und: DataFrame, keep: DataFrame,
       decrement: Boolean): DataFrame = {
     if (!decrement)
-      edgeSupport(bothDirUv(keep.select(col("u"), col("v")))).cut()
+      supportOf(keep, orient(bothDirUv(keep.select(col("u"), col("v")))).cut())
     else {
       val removed = und.join(keep.select(col("u"), col("v")),
         Seq("u", "v"), "left_anti")
@@ -297,8 +301,6 @@ object Triangles {
       keep.join(dec, Seq("u", "v"), "left")
         .select(col("u"), col("v"),
           (col("sup") - coalesce(col("d"), lit(0L))).as("sup"))
-        .filter(col("sup") >= 1)
-        .cut()
     }
   }
 
@@ -317,13 +319,15 @@ object Triangles {
     * outlives `maxRounds`, all maxRounds+1 rows are emitted and the
     * oracle applies the identical trim over the identical unroll).
     *
-    * Per round the support backend is chosen by measured shape (see
-    * [[peelRoundSupport]]): full re-enumeration while removals
-    * dominate (the first cut of a k-12 peel drops most of the graph),
-    * support DECREMENT once the surviving core is the majority, so
-    * the cascade's long tail does not re-pay the core's full wedge
-    * volume per round. Edge counts come from the round's counted
-    * cuts, the support sum from one action per round; both backends
+    * The superstep state is the round's support frame (u, v, sup,
+    * kept) over every edge of the round, kept = [sup ≥ k−2]; its
+    * measured cut is the census row (rows = n_edges, Σ sup) and
+    * Σ kept is the next round's edge count. Per round the support
+    * backend is chosen by measured shape (see [[peelRoundSupport]]):
+    * full re-enumeration while removals dominate (the first cut of a
+    * k-12 peel drops most of the graph), support DECREMENT once the
+    * surviving core is the majority, so the cascade's long tail does
+    * not re-pay the core's full wedge volume per round. Both backends
     * are census-identical by construction (TrussPeelSpec) and vs the
     * driver's independent oracle. */
   /* requires: `oriented0`, when supplied, must be [[orient]]'s output
@@ -337,49 +341,36 @@ object Triangles {
     require(k >= 3, s"k must be >= 3, got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
     val spark = edges0.sparkSession
-    def supSum(s: DataFrame): Long =
-      s.agg(coalesce(F.sum(col("sup")), lit(0L))).head().getLong(0)
-    var (und, undN) = Cuts.counted(edges0.filter(col("src") < col("dst"))
-      .select(col("src").as("u"), col("dst").as("v")))
+    def flagged(sup: DataFrame): DataFrame =
+      sup.withColumn("kept", (col("sup") >= k - 2).cast("long"))
     // round 0 — the only round over the FULL graph — takes the caller's
     // pre-materialized orientation when one exists (the shared
     // co-purchase oriented memo); later rounds work on their own
     // shrunken subgraphs
-    var sup = oriented0.map(o => edgeSupportFromOriented(o))
-      .getOrElse(edgeSupport(edges0)).cut()
-    val census = scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]()
-    census += ((0L, undN, supSum(sup)))
-    var r = 1
-    var done = false
-    while (!done && r <= maxRounds) {
-      val (keep, keptN) = Cuts.counted(sup.filter(col("sup") >= k - 2))
-      val removedN = undN - keptN
-      if (removedN == 0) {
-        // zero removals → the edge set, hence every edge's support, is
-        // UNCHANGED: the stable row is an algebraic identity, so emit
-        // it from the previous round's numbers instead of re-paying a
-        // full support enumeration of the converged core to discover
-        // "nothing changed" (every converged cascade's last round is
-        // exactly this round — measured 0.8–1.1 s at sf0.1, a whole
-        // core wedge pass at scale)
-        census += ((r.toLong, undN, census.last._3))
-      } else {
+    val und0 = edges0.filter(col("src") < col("dst"))
+      .select(col("src").as("u"), col("dst").as("v"))
+    val rounds = Supersteps.converge(
+        flagged(supportOf(und0, oriented0.getOrElse(orient(edges0).cut()))),
+        maxRounds, Seq("sup", "kept")) { (prev, _) =>
+      val keptN = prev.sums(1)
+      val removedN = prev.rows - keptN
+      // zero removals → the edge set, hence every edge's support, is
+      // UNCHANGED: the state is its own successor, so the stable round
+      // re-cuts it instead of re-paying a full support enumeration of
+      // the converged core to discover "nothing changed"
+      if (removedN == 0) prev.state
+      else {
         // decrement only when removals are well under the surviving
         // core (measured sf0.1 bracket: at removed:kept = 2:1 the full
         // re-enumeration won 1.0 s vs 2.6 s; at 0:1 decrement won
         // 0.75 s vs 1.05 s — the crossover sits below 1:1)
-        val useDecrement = removedN * 2 <= keptN
-        sup = peelRoundSupport(und, keep, useDecrement)
-        und = keep.select(col("u"), col("v"))
-        undN = keptN
-        census += ((r.toLong, undN, supSum(sup)))
+        flagged(peelRoundSupport(prev.state.select(col("u"), col("v")),
+          prev.state.filter(col("kept") === 1L).select(col("u"), col("v"), col("sup")),
+          decrement = removedN * 2 <= keptN))
       }
-      val n = census.size
-      done = census(n - 1)._2 == census(n - 2)._2 &&
-        census(n - 1)._3 == census(n - 2)._3
-      r += 1
-    }
+    }(_ sameMeasure _)
     import spark.implicits._
-    census.toSeq.toDF("round", "n_edges", "sum_support")
+    rounds.zipWithIndex.map { case (r, i) => (i.toLong, r.rows, r.sums.head) }
+      .toDF("round", "n_edges", "sum_support")
   }
 }

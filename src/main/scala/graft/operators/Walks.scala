@@ -48,25 +48,20 @@ object Walks {
 
   /** Walk positions (root, step, node) for one deterministic walk of
     * `steps` hops from every node of `nodes` — steps 0..steps, step 0
-    * the root itself. Each hop's state frame is a [[Cuts.cut]] so the
-    * union census
-    * reads materialized walk states instead of re-deriving step t's
-    * lineage once per later step. */
+    * the root itself. Each hop is one [[Supersteps.converge]] round
+    * that never stops early, so the union census reads materialized
+    * walk states instead of re-deriving step t's lineage once per
+    * later step. */
   def walkPositions(edges: DataFrame, nodes: DataFrame, steps: Int): DataFrame = {
     require(steps >= 0, s"steps must be >= 0, got $steps")
-    var cur = Cuts.cut(
-      nodes.select(col("node").as("root"), col("node").as("cur")))
-    val frames = scala.collection.mutable.ArrayBuffer(
-      cur.select(col("root"), lit(0L).as("step"), col("cur").as("node")))
-    for (t <- 1 to steps) {
-      val s = successors(edges, t)
-      cur = Cuts.cut(
-        cur.join(s, cur("cur") === s("src"))
-          .select(col("root"), col("nxt").as("cur")))
-      frames += cur.select(col("root"), lit(t.toLong).as("step"),
-        col("cur").as("node"))
-    }
-    frames.reduce(_ unionByName _)
+    Supersteps.converge(nodes.select(col("node").as("root"), col("node").as("cur")), steps) {
+      (prev, t) =>
+        val (cur, s) = (prev.state, successors(edges, t))
+        cur.join(s, cur("cur") === s("src")).select(col("root"), col("nxt").as("cur"))
+    }((_, _) => false).zipWithIndex
+      .map { case (r, t) =>
+        r.state.select(col("root"), lit(t.toLong).as("step"), col("cur").as("node"))
+      }.reduce(_ unionByName _)
   }
 
   /** Skip-gram (center, context) pair counts over the walk corpus,

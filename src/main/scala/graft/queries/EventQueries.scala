@@ -118,7 +118,7 @@ object EventQueries extends QueryRegistry {
       cnt(s1, "n_signup").crossJoin(cnt(s2, "n_viewed"))
         .crossJoin(cnt(s3, "n_clicked")).crossJoin(cnt(s4, "n_purchased"))
         .withColumn("full_funnel_rate",
-          // empty-corpus pin (r10 advisory): 0/0 is IEEE NaN in Spark
+          // empty-corpus pin: 0/0 is IEEE NaN in Spark
           // but engine-dependent in SQL — an empty funnel reports 0.0
           when(col("n_signup") === 0L, lit(0.0)).otherwise(
             round(col("n_purchased").cast("double") / col("n_signup"), 6) + 0.0))

@@ -43,7 +43,7 @@ object GraphQueries extends QueryRegistry {
     * number of ORDERS where the two parts appear together (per-order
     * (orderkey, partkey) pairs are distinct'd BEFORE the self-join, so
     * a part listed on k lines of one order contributes one co-order,
-    * not k·j pair rows — the r10 advisory's inflated-weight fix). */
+    * not k·j pair rows, which would inflate the weight). */
   private[graft] def copurchaseEdges(s: SparkSession, dir: String): DataFrame =
     edgesOf(lineitem(s, dir))
 
@@ -78,8 +78,7 @@ object GraphQueries extends QueryRegistry {
     * distinct-order counts (a bounded, persisted frame) and the 1-value
     * total-order count — the SharedBuilds discipline applied to the
     * association-rule denominators, so repeated invocations don't
-    * re-run the distinct + count() driver action per query (r11
-    * hygiene note). */
+    * re-run the distinct + count() driver action per query. */
   private def sharedOrderCensus(s: SparkSession, dir: String): (DataFrame, Long) =
     SharedBuilds.of(s, dir, "copurchase-order-census") {
       val op = lineitem(s, dir)
@@ -94,8 +93,8 @@ object GraphQueries extends QueryRegistry {
     * the one edge-wide aggregation that three declared consumers
     * (triangle wedge denominator, degree histogram, the orientation
     * build) each re-ran per invocation — built once and materialized
-    * like the graph itself (r14 optimization round; the frame is
-    * node-sized, so the cut is cheap). */
+    * like the graph itself (the frame is node-sized, so the cut is
+    * cheap). */
   private def sharedDegrees(s: SparkSession, dir: String): DataFrame =
     SharedBuilds.of(s, dir, "copurchase-degrees") {
       graft.operators.Cuts.cut(
@@ -108,9 +107,8 @@ object GraphQueries extends QueryRegistry {
     * the orient joins + the closure-sizing count are iteration-static
     * exactly like the prepared graph, so the triangle census and the
     * k-truss peel's round 0 probe the same cut frame instead of paying
-    * two full edge aggregations per invocation (r14 optimization
-    * round — the build-once/probe-many discipline applied to the
-    * orientation). */
+    * two full edge aggregations per invocation (the
+    * build-once/probe-many discipline applied to the orientation). */
   private def sharedOriented(s: SparkSession, dir: String): (DataFrame, Long) =
     SharedBuilds.of(s, dir, "copurchase-oriented") {
       val o = graft.operators.Cuts.cut(graft.operators.Triangles.orient(
@@ -170,7 +168,7 @@ object GraphQueries extends QueryRegistry {
     }
 
   /** Skip-gram (center, context) pair census over the memoized walk
-    * corpus, itself memoized (r14 optimization round): both randwalk
+    * corpus, itself memoized: both randwalk
     * queries read the pair table (the top-k census directly, the
     * negatives audit as its collision side), so the root-keyed
     * self-join + pair aggregation run once per (session, dir) instead
@@ -183,7 +181,7 @@ object GraphQueries extends QueryRegistry {
     }
 
   /** UNMEMOIZED skip-gram pair census — the 10× scale-probe surface
-    * for the pair build (r14 verdict item 5: the declared
+    * for the pair build (the declared
     * randwalk_skipgram_pairs query reads the [[sharedSkipGramPairs]]
     * memo, so probing the declared query would time the serve read).
     * Re-runs the root-keyed self-join + pair aggregation over the
@@ -211,7 +209,7 @@ object GraphQueries extends QueryRegistry {
         nodes.select(col("node"), row_number().over(w).cast("long").as("rk")))
       // the node count rides the memo (one bounded read of the cut
       // frame at build time) so the negatives audit stops paying a
-      // count() action per invocation (r14 optimization round)
+      // count() action per invocation
       (ranked, ranked.count())
     }
 
@@ -252,7 +250,7 @@ object GraphQueries extends QueryRegistry {
 
   /** O(batch) incremental edge append — the graph tier joins
     * LSH/IVF/PQ/HNSW in taking batch maintenance without a corpus
-    * rebuild (the r10 verdict's missing piece). Pairs are order-local
+    * rebuild. Pairs are order-local
     * (see [[edgesOf]]), so a batch of WHOLE new orders contributes a
     * self-contained edge increment; the merge is a union + keyed sum —
     * one shuffle over |stored edges| + |batch edges|, no lineitem
@@ -294,29 +292,21 @@ object GraphQueries extends QueryRegistry {
     * sf0.1 vote frame). Returns (node, lbl).
     *
     * Depth controls ride the shared [[graft.operators.Supersteps]]
-    * driver (the r11 verdict's LPA/PageRank unification): lineage cuts
+    * driver: lineage cuts
     * every `checkpointEvery` supersteps bound plan depth on
     * to-convergence runs, and `earlyExitOnStable` stops when the EXACT
     * label-change count hits 0 — labels are a pure function of the
     * previous labeling, so a zero-change superstep is a true fixed
     * point and exit never changes the result (integer criterion,
-    * oracle-friendly). checkpointEvery defaults to 1 (r14 optimization
-    * round): each superstep references `labels` TWICE (the vote join
-    * and the no-vote fallback), so an uncut loop re-executes every
+    * oracle-friendly). checkpointEvery defaults to 1: each superstep
+    * references `labels` TWICE (the vote join and the no-vote
+    * fallback), so an uncut loop re-executes every
     * earlier round's subtree 2× per later round — the Bellman–Ford
     * doubling; the per-round cut is node-sized and collapses it
     * (values unchanged — a cut is semantically the identity). */
   private[graft] def lpaIterate(g: PageRank.Graph, iters: Int,
       checkpointEvery: Int = 1, earlyExitOnStable: Boolean = false): DataFrame = {
-    val probe =
-      if (!earlyExitOnStable) None
-      else Some { (next: DataFrame, prev: DataFrame, _: Long) =>
-        next.join(prev.withColumnRenamed("lbl", "prev_lbl"), "node")
-          .filter(col("lbl") =!= col("prev_lbl"))
-          .count() == 0L
-      }
-    val l0 = g.nodes.select(col("node"), col("node").as("lbl"))
-    graft.operators.Supersteps.loop(l0, iters, checkpointEvery, probe) { labels =>
+    def step(labels: DataFrame): DataFrame = {
       val top = g.ew.join(labels, g.ew("src") === labels("node"))
         .select(g.ew("dst").as("node"), col("lbl"), g.ew("w"))
         .groupBy(col("node"), col("lbl")).agg(sum(col("w")).as("cnt"))
@@ -326,6 +316,18 @@ object GraphQueries extends QueryRegistry {
       labels.select(col("node"), col("lbl").as("old_lbl"))
         .join(top, Seq("node"), "left")
         .select(col("node"), coalesce(col("new_lbl"), col("old_lbl")).as("lbl"))
+    }
+    val l0 = g.nodes.select(col("node"), col("node").as("lbl"))
+    if (!earlyExitOnStable)
+      graft.operators.Supersteps.loop(l0, iters, checkpointEvery)(step)
+    else {
+      require(iters >= 1, s"iters must be >= 1, got $iters")
+      graft.operators.Supersteps.converge(l0, iters)((prev, _) => step(prev.state)) {
+        (prev, next) =>
+          next.state.join(prev.state.withColumnRenamed("lbl", "prev_lbl"), "node")
+            .filter(col("lbl") =!= col("prev_lbl"))
+            .count() == 0L
+      }.last.state
     }
   }
 
@@ -441,8 +443,8 @@ object GraphQueries extends QueryRegistry {
     // DEGREE-ORDERED (graft.operators.Triangles: orient each edge
     // low-rank → high-rank, wedge at the lowest-rank vertex) — the
     // hub-proof exact algorithm whose wedge fan-out is bounded by
-    // arboricity instead of Σ deg(middle)², the r11 verdict's one
-    // plan-quality flag (148M wedges at sf0.1 under the naive shape;
+    // arboricity instead of Σ deg(middle)² (148M wedges at sf0.1
+    // under the naive shape;
     // a power-law hub at 100× makes that THE skewed-shuffle killer).
     // The oracle keeps the INDEPENDENT naive src<dst formulation —
     // the count is orientation-invariant, so green is cross-ALGORITHM
@@ -450,10 +452,10 @@ object GraphQueries extends QueryRegistry {
     // distinct-neighbor degrees (exact longs — the product is always
     // even); the one double is the final rounded coefficient
     "copurchase_triangles" -> ((s, dir) => {
-      // orientation + degree frame ride session memos (r14 optimization
-      // round): the timed probe is the wedge self-join + closure semi —
-      // the per-invocation orient joins, sizing count, and degree
-      // aggregation all collapsed into build-once artifacts
+      // orientation + degree frame ride session memos: the timed probe
+      // is the wedge self-join + closure semi — the per-invocation
+      // orient joins, sizing count, and degree aggregation all
+      // collapsed into build-once artifacts
       val (o, nOriented) = sharedOriented(s, dir)
       val tri = graft.operators.Triangles.countFromOriented(o, nOriented)
       val wedges = sharedDegrees(s, dir)
@@ -555,7 +557,7 @@ object GraphQueries extends QueryRegistry {
       // explicit broadcast: the stapler side is 1 row by construction,
       // but its size ESTIMATE flows through agg-of-agg stats Catalyst
       // can't bound, so an unhinted crossJoin planned a
-      // CartesianProduct (PlanSpec's round-6 sweep caught it)
+      // CartesianProduct (PlanSpec's no-cartesian sweep pins this)
       census.crossJoin(broadcast(plateau)) // 5-row × 1-row stapler
         .select(col("hop"), col("n_roots"), col("n_reg_rows"),
           col("sum_rank"), col("nf_est"),
@@ -691,7 +693,7 @@ object GraphQueries extends QueryRegistry {
         sharedBackbone(s, dir), k = 3, rounds = 4)
         .orderBy(col("round"))),
 
-    // the same peel run TO ITS FIXED POINT (r12 verdict task #6): the
+    // the same peel run TO ITS FIXED POINT: the
     // census stops at — and includes — the first round whose
     // (n_nodes, n_edges) repeats the previous round's, the exact
     // integer convergence probe the LPA/PageRank tier uses (the edge
@@ -699,9 +701,9 @@ object GraphQueries extends QueryRegistry {
     // 12-round cap is shared with the oracle, which unrolls the
     // identical 12 rounds and applies the identical
     // trim-after-first-repeat rule — so capped and converged runs both
-    // match bit-for-bit. Per round: one degree aggregation + two
-    // co-partitioned keep-joins, every round lineage-cut via the
-    // shared Supersteps driver
+    // match bit-for-bit. Per round: two broadcast keep-joins and one
+    // node-keyed degree sum, one measured cut of the Supersteps
+    // driver
     "kcore_converged_census" -> ((s, dir) =>
       graft.operators.Traversal.kCoreConvergedCensus(
         sharedBackbone(s, dir), k = 3, maxRounds = KCoreMaxRounds)
@@ -710,10 +712,10 @@ object GraphQueries extends QueryRegistry {
     // the CLUSTER-DURABLE cut backend gated by the driver's oracle,
     // not just specs (the stream_nb_replay shared-oracle precedent:
     // different execution path, same result contract): the deepest
-    // declared superstep consumer — the converged k-core peel,
-    // checkpointEvery = 1 with a convergence probe reading every
-    // cut — re-run with EVERY lineage cut routed through the durable
-    // parquet backend (`spark.graft.checkpoint.dir`). The oracle is
+    // declared superstep consumer — the converged k-core peel, whose
+    // stop test reads every round's measured cut — re-run with EVERY
+    // lineage cut routed through the durable parquet backend
+    // (`spark.graft.checkpoint.dir`). The oracle is
     // kcore_converged_census's SQL verbatim, so a backend that loses
     // rows, reorders reads, or drifts schema hash-fails per round in
     // the driver gate. The peel is eager (per-round census actions),
@@ -750,7 +752,7 @@ object GraphQueries extends QueryRegistry {
       // ⋈ stored), the new-existence set; weight-only changes add no
       // triangles) and count the gained triangles batch-anchored —
       // the build-time batch census bounds newE, so the tick never
-      // pays a sizing job (r12 verdict item #3)
+      // pays a sizing job
       val newE = batchE.join(base, Seq("src", "dst"), "left_anti")
       graft.operators.Triangles.delta(base, newE, Some(nBatchE))
         .select(lit(nBase).as("n_base"), col("n_delta"),
@@ -773,8 +775,8 @@ object GraphQueries extends QueryRegistry {
       // in-memory persists: under the full 210-query suite's cache
       // pressure a persisted frame gets evicted and every steady tick
       // silently re-runs the lineitem self-join it was supposed to
-      // amortize (measured r13: the audit's in-suite time was 11 s vs
-      // 3 s isolated until this change) — a columnar re-scan of the
+      // amortize (measured: the audit's in-suite time was 11 s vs
+      // 3 s isolated) — a columnar re-scan of the
       // written store is cheap, deterministic, and is what a real
       // daily tick reads anyway
       val basePath = buildPath(dir, "copurchase-edges-tri-base")

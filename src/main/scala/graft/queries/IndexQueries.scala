@@ -28,6 +28,17 @@ object IndexQueries extends QueryRegistry {
     df.filter(col("vec_id") === 0).select(col("embedding"))
       .collect()(0).getSeq[Float](0).toArray
 
+  /** The first `n` embeddings in vec_id order — the data-dependent
+    * centroids, codebook seeds and planes of the SQL-replayable index
+    * stores. */
+  private def headVectors(emb: DataFrame, n: Int): Array[Array[Float]] =
+    emb.filter(col("vec_id") < n).orderBy(col("vec_id"))
+      .select(col("embedding")).collect().map(_.getSeq[Float](0).toArray)
+
+  /** The first 8 embeddings as IVF centroids, cell id = rank. */
+  private def headCentroids(emb: DataFrame): Array[(Int, Array[Double])] =
+    headVectors(emb, 8).zipWithIndex.map { case (v, i) => (i, v.map(_.toDouble)) }
+
   // Durable build-once/query-many artifacts (the reference's
   // build→save→load→probe contract, vector_db/src/binary_index.rs:29-60):
   // each index is BUILT to disk once per (session, data dir) and every
@@ -56,12 +67,11 @@ object IndexQueries extends QueryRegistry {
       // read-back of the store: build() writes that exact frame
       // losslessly, and at 16 planes the store is one tiny file per
       // populated bucket — a full read-back scan pays per-file open
-      // cost ~|buckets| times for identical counts (r14 optimization
-      // round: the read-back histogram was ~1/3 of this store's 33 s
-      // first-touch cost). Probes still read the WRITTEN store
-      // (partition-pruned), and lsh_bucket_stats still audits the
-      // store read-back directly.
-      // SINGLE-WRITER assumption (r14 advisory): histogram ≡ store
+      // cost ~|buckets| times for identical counts (the read-back
+      // histogram was ~1/3 of this store's 33 s first-touch cost).
+      // Probes still read the WRITTEN store (partition-pruned), and
+      // lsh_bucket_stats still audits the store read-back directly.
+      // SINGLE-WRITER assumption: histogram ≡ store
       // holds because this memo thunk is the lsh16 path's ONLY writer
       // (build-once, mode overwrite). Any future append/compact path
       // onto THIS store must recompute the histogram from the store —
@@ -84,9 +94,7 @@ object IndexQueries extends QueryRegistry {
   private[graft] def dataPlanesLsh(s: SparkSession, dir: String): (Lsh, Long, DataFrame) = {
     val emb = embeddings(s, dir)
     val half = emb.count() / 2
-    val planes = emb.filter(col("vec_id") < LshAppendPlanes)
-      .orderBy(col("vec_id")).select(col("embedding")).collect()
-      .map(_.getSeq[Float](0).map(_.toDouble).toArray)
+    val planes = headVectors(emb, LshAppendPlanes).map(_.map(_.toDouble))
     (new Lsh(numPlanes = LshAppendPlanes, seed = 42L,
       explicitPlanes = Some(planes)), half, emb)
   }
@@ -153,16 +161,16 @@ object IndexQueries extends QueryRegistry {
       (half, s.read.parquet(path))
     }
 
-  /** Declared HNSW build: FULL corpus (round 2 capped it at
-    * vec_id &lt; 300), LSH-blocked candidate pairs (multi-probe 1-bit
-    * expansion keeps the graph connected — see Hnsw.buildAdjacency).
+  /** Declared HNSW build: FULL corpus, LSH-blocked candidate pairs
+    * (multi-probe 1-bit expansion keeps the graph connected — see
+    * Hnsw.buildAdjacency).
     * 3 planes → 8 buckets: coarse enough that the blocked graph keeps
     * good edges near every node, fine enough that the blocked join is
     * Σ|bucket|², not n² — the knob tightens with corpus size. Serve
     * beam ef=1024: on the blocked graph the walk needs a wider frontier
     * than the reference's ef=32 default — measured recall@10 vs brute
     * force (hnsw_recall_audit) is 50/50 across sf0.001–0.1 at ef=1024
-    * (40/50 at ef=256 on sf0.1, the round-8 setting), and ~1k
+    * (40/50 at ef=256 on sf0.1), and ~1k
     * LRU-cached point reads per query is still trivial serve-time work.
     * Package-visible so PlanSpec can pin that the built plan joins on
     * the bucket key (no unblocked per-level self-join). */
@@ -199,10 +207,9 @@ object IndexQueries extends QueryRegistry {
 
   /** HNSW serve head: FULLY PAGED — both the vectors and the GRAPH live
     * in kwi offset-table files and arrive through LRU-cached point
-    * reads (`IndexedReader.get` seeks, no Spark job per miss). The
-    * round-6 head still collected the whole adjacency (n×M edge ids on
-    * the driver — the last corpus-sized driver structure on a declared
-    * path); now a walk pays O(visited) neighbor-page seeks and
+    * reads (`IndexedReader.get` seeks, no Spark job per miss), never a
+    * collect of the whole adjacency (n×M edge ids on the driver): a
+    * walk pays O(visited) neighbor-page seeks and
     * driver-resident state is the two LRU caches, independent of n.
     * `Hnsw.collectAdjacency` remains as the tiny-corpus convenience
     * tier only. */
@@ -239,9 +246,7 @@ object IndexQueries extends QueryRegistry {
   private def ivfDataStore(s: SparkSession, dir: String): (Array[(Int, Array[Double])], DataFrame) =
     SharedBuilds.of(s, dir, "ivf8-data-store") {
       val emb = embeddings(s, dir)
-      val cents = emb.filter(col("vec_id") < 8).orderBy(col("vec_id"))
-        .select(col("embedding")).collect().zipWithIndex
-        .map { case (r, i) => (i, r.getSeq[Float](0).map(_.toDouble).toArray) }
+      val cents = headCentroids(emb)
       val ivf = new Ivf(nlist = 8, iters = 0)
       // spread before assigning (interpreted argmin HOF over a
       // single-row-group scan — same reasoning as ivf_cell_join)
@@ -253,24 +258,15 @@ object IndexQueries extends QueryRegistry {
       (cents, s.read.parquet(path))
     }
 
-  /** Persisted sign-LSH index with DATA-DEPENDENT planes (the first 4
-    * embeddings) — SQL-replayable bucket keys, so the pruned
+  /** Persisted sign-LSH index over the [[dataPlanesLsh]] planes (the
+    * first 4 embeddings) — SQL-replayable bucket keys, so the pruned
     * single-bucket probe is hash-verified. */
-  private def lshDataStore(s: SparkSession, dir: String): (Array[Array[Double]], DataFrame) =
+  private def lshDataStore(s: SparkSession, dir: String): (Lsh, DataFrame) =
     SharedBuilds.of(s, dir, "lsh4-data-store") {
-      import graft.functions.VectorOps
-      val emb = embeddings(s, dir)
-      val planes = emb.filter(col("vec_id") < 4).orderBy(col("vec_id"))
-        .select(col("embedding")).collect()
-        .map(_.getSeq[Float](0).map(_.toDouble).toArray)
-      val bucket = planes.zipWithIndex.map { case (p, i) =>
-        when(VectorOps.fastDot(col("embedding"), typedLit(p.toSeq)) >= 0.0,
-          lit(1L << i)).otherwise(lit(0L))
-      }.reduce(_ + _)
+      val (lsh, _, emb) = dataPlanesLsh(s, dir)
       val path = buildPath(dir, "lsh4-data")
-      emb.select(col("vec_id"), col("embedding"), bucket.as("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(path)
-      (planes, s.read.parquet(path))
+      lsh.build(emb, path)
+      (lsh, s.read.parquet(path))
     }
 
   /** Persisted PQ codes table (the COMPRESSED index: 4 int codes per
@@ -284,9 +280,7 @@ object IndexQueries extends QueryRegistry {
     SharedBuilds.of(s, dir, "pq4x16-store") {
       val emb = embeddings(s, dir)
       val pq = new Pq(m = 4)
-      val seed = emb.filter(col("vec_id") < 16).orderBy(col("vec_id"))
-        .select(col("embedding")).collect()
-        .map(_.getSeq[Float](0).toArray)
+      val seed = headVectors(emb, 16)
       val books = pq.codebooksFromSeed(seed)
       val path = buildPath(dir, "pq4x16")
       emb.repartition(s.sparkContext.defaultParallelism)
@@ -306,14 +300,12 @@ object IndexQueries extends QueryRegistry {
     SharedBuilds.of(s, dir, "pq-trained-books") {
       val emb = embeddings(s, dir)
       val pq = new Pq(m = 4)
-      val seed = emb.filter(col("vec_id") < 16).orderBy(col("vec_id"))
-        .select(col("embedding")).collect()
-        .map(_.getSeq[Float](0).toArray)
+      val seed = headVectors(emb, 16)
       (pq, pq.codebooksFromSeed(seed), pq.train(emb, seed, iters = 1))
     }
 
   /** Persisted CODES tables for both book sets of the trained-PQ audit,
-    * memoized like every index store (r14 optimization round): encoding
+    * memoized like every index store: encoding
     * the corpus against a frozen codebook is the index BUILD — the
     * pqStore precedent ("the artifact a petabyte corpus keeps hot") —
     * so the audit's recurring cost is the ADC shortlist + exact rerank,
@@ -340,13 +332,9 @@ object IndexQueries extends QueryRegistry {
       : (Array[(Int, Array[Double])], Pq, Array[Array[Array[Double]]], DataFrame) =
     SharedBuilds.of(s, dir, "ivfpq-store") {
       val emb = embeddings(s, dir)
-      val cents = emb.filter(col("vec_id") < 8).orderBy(col("vec_id"))
-        .select(col("embedding")).collect().zipWithIndex
-        .map { case (r, i) => (i, r.getSeq[Float](0).map(_.toDouble).toArray) }
+      val cents = headCentroids(emb)
       val pq = new Pq(m = 4)
-      val seed = emb.filter(col("vec_id") < 16).orderBy(col("vec_id"))
-        .select(col("embedding")).collect()
-        .map(_.getSeq[Float](0).toArray)
+      val seed = headVectors(emb, 16)
       val books = pq.codebooksFromSeed(seed)
       val ivf = new Ivf(nlist = 8, iters = 0)
       val path = buildPath(dir, "ivfpq")
@@ -357,18 +345,6 @@ object IndexQueries extends QueryRegistry {
         .write.mode("overwrite").partitionBy("cluster").parquet(path)
       (cents, pq, books, s.read.parquet(path))
     }
-
-  /** Nearest centroid by the (squared distance, cid) tiebreak — the
-    * driver-side replay of Ivf.assignExpr's struct argmin. */
-  private def nearestCell(v: Array[Float],
-      cents: Array[(Int, Array[Double])]): (Int, Array[Double]) =
-    cents.map { case (cid, c) =>
-      var d = 0.0
-      var i = 0
-      while (i < c.length) { val x = v(i).toDouble - c(i); d += x * x; i += 1 }
-      (d, cid, c)
-    }.sortBy { case (d, cid, _) => (d, cid) }
-      .headOption.map { case (_, cid, c) => (cid, c) }.get
 
   /** Persisted RESIDUAL IVF-PQ index (the standard composition, Jégou
     * et al. 2011 §IV: quantize `embedding − centroid[cluster]`, not the
@@ -383,15 +359,12 @@ object IndexQueries extends QueryRegistry {
       : (Array[(Int, Array[Double])], Pq, Array[Array[Array[Double]]], DataFrame) =
     SharedBuilds.of(s, dir, "ivfpq-res-store") {
       val emb = embeddings(s, dir)
-      val cents = emb.filter(col("vec_id") < 8).orderBy(col("vec_id"))
-        .select(col("embedding")).collect().zipWithIndex
-        .map { case (r, i) => (i, r.getSeq[Float](0).map(_.toDouble).toArray) }
+      val cents = headCentroids(emb)
       val pq = new Pq(m = 4)
       val ivf = new Ivf(nlist = 8, iters = 0)
-      val seedRows = emb.filter(col("vec_id") < 16).orderBy(col("vec_id"))
-        .select(col("embedding")).collect().map(_.getSeq[Float](0).toArray)
+      val seedRows = headVectors(emb, 16)
       val seedRes: Array[Array[Double]] = seedRows.map { v =>
-        val (_, c) = nearestCell(v, cents)
+        val (_, c) = Ivf.nearestCells(v, cents, 1).head
         Array.tabulate(v.length)(i => v(i).toDouble - c(i))
       }
       val books = pq.codebooksFromSeedD(seedRes)
@@ -434,7 +407,7 @@ object IndexQueries extends QueryRegistry {
     * written against frozen centroids, then the second half arrives as
     * a batch APPEND via `Ivf.append` — one map-only assignment pass,
     * partition-local file adds, zero touches of the existing rows.
-    * Since round 8 the centroids are DATA-DEPENDENT (the first 8
+    * The centroids are DATA-DEPENDENT (the first 8
     * embeddings, no Lloyd rounds — the ivf_cell_join precedent), so
     * cell assignment is SQL-replayable and the audit over this store is
     * CONTENT-checked by a full DuckDB re-assignment (the Lloyd-trained
@@ -445,9 +418,7 @@ object IndexQueries extends QueryRegistry {
       val emb = embeddings(s, dir)
       val half = emb.count() / 2
       val ivf = new Ivf(nlist = 8, iters = 0)
-      val cents = emb.filter(col("vec_id") < 8).orderBy(col("vec_id"))
-        .select(col("embedding")).collect().zipWithIndex
-        .map { case (r, i) => (i, r.getSeq[Float](0).map(_.toDouble).toArray) }
+      val cents = headCentroids(emb)
       val path = buildPath(dir, "ivf8-app")
       emb.filter(col("vec_id") < half)
         .repartition(s.sparkContext.defaultParallelism)
@@ -562,7 +533,7 @@ object IndexQueries extends QueryRegistry {
         .orderBy(col("query_id"))
     }),
 
-    // Index-health audit, oracle-checked (was rows-only until round 5):
+    // Index-health audit, oracle-checked:
     // the PRNG plane draw itself isn't SQL-replayable, but the audit
     // facts are — n_vectors must equal the exact corpus count (the
     // build dropped/duplicated nothing), and the bucket/max bounds are
@@ -631,9 +602,9 @@ object IndexQueries extends QueryRegistry {
         .orderBy(col("query_id"))
     }),
 
-    // Graph-structure audit, oracle-checked (was rows-only until
-    // round 5): per-level populations hang off the xxhash level draw
-    // (not SQL-replayable), but the structural contract is — level 0
+    // Graph-structure audit, oracle-checked: per-level populations
+    // hang off the xxhash level draw (not SQL-replayable), but the
+    // structural contract is — level 0
     // must hold EVERY corpus node (exact count, DuckDB-replayable),
     // degrees are pruned to <= M at every level, and level populations
     // are non-increasing (a node at level L occupies all of 0..L).
@@ -724,12 +695,8 @@ object IndexQueries extends QueryRegistry {
       val qrows = emb.filter(col("vec_id") < 5).orderBy(col("vec_id"))
         .select(col("vec_id"), col("embedding")).collect()
         .map(r => (r.getLong(0), r.getSeq[Float](1)))
-      def probeOf(q: Seq[Float]): Seq[Int] = cents.map { case (cid, c) =>
-        var d = 0.0
-        var i = 0
-        while (i < c.length) { val x = q(i).toDouble - c(i); d += x * x; i += 1 }
-        (cid, d)
-      }.sortBy { case (cid, d) => (d, cid) }.take(2).map(_._1).toSeq
+      def probeOf(q: Seq[Float]): Seq[Int] =
+        Ivf.nearestCells(q.toArray, cents, 2).map(_._1).toSeq
       val qdf = qrows.map { case (qid, qv) => (qid, qv, probeOf(qv)) }
         .toSeq.toDF("query_id", "qe", "cells")
       val allCells = qrows.flatMap(r => probeOf(r._2)).distinct.toSeq
@@ -749,20 +716,13 @@ object IndexQueries extends QueryRegistry {
     // the reference's bucket design promises (src/index.rs:109-120).
     "lsh_pruned_knn" -> ((s, dir) => {
       val emb = embeddings(s, dir)
-      val (planes, idx) = lshDataStore(s, dir)
+      val (lsh, idx) = lshDataStore(s, dir)
       val q = firstVec(emb)
-      var b = 0L
-      planes.zipWithIndex.foreach { case (p, i) =>
-        var dot = 0.0
-        var j = 0
-        while (j < q.length) { dot += q(j).toDouble * p(j); j += 1 }
-        if (dot >= 0.0) b |= (1L << i)
-      }
-      Knn.topK(idx.filter(col("bucket") === lit(b)), q, 10, Knn.Cosine)
+      Knn.topK(idx.filter(col("bucket") === lit(lsh.bucketOf(q))), q, 10, Knn.Cosine)
     }),
 
-    // Index-maintenance audit, CONTENT-checked since round 8 (the
-    // pq_append_audit pattern): data-dependent centroids make the cell
+    // Index-maintenance audit, CONTENT-checked (the pq_append_audit
+    // pattern): data-dependent centroids make the cell
     // assignment SQL-replayable, so beyond exact totals and id
     // uniqueness the oracle re-assigns every vector from scratch in
     // DuckDB and recomputes the id-weighted cell sum — a dropped batch,
@@ -773,8 +733,8 @@ object IndexQueries extends QueryRegistry {
       ivfAppendAudit(half, idx)
     }),
 
-    // LSH append audit, mirroring ivf_append_audit and CONTENT-checked
-    // since round 8: data-dependent planes make every bucket key
+    // LSH append audit, mirroring ivf_append_audit and CONTENT-checked:
+    // data-dependent planes make every bucket key
     // SQL-replayable, so the oracle recomputes all signatures from
     // scratch in DuckDB and checks the id-weighted bucket sum plus the
     // derived range bound — because the planes are frozen,
@@ -853,15 +813,7 @@ object IndexQueries extends QueryRegistry {
       val emb = embeddings(s, dir)
       val (cents, pq, books, idx) = ivfPqStore(s, dir)
       val q = firstVec(emb)
-      // left-to-right double fold, same order as assignExpr / the oracle
-      val probe = cents.map { case (cid, c) =>
-        var d = 0.0
-        var i = 0
-        while (i < c.length) {
-          val x = q(i).toDouble - c(i); d += x * x; i += 1
-        }
-        (cid, d)
-      }.sortBy { case (cid, d) => (d, cid) }.take(2).map(_._1)
+      val probe = Ivf.nearestCells(q, cents, 2).map(_._1)
       val tab = pq.adcTable(q, books)
       idx.filter(col("cluster").isin(probe: _*))
         .select(col("vec_id"),
@@ -880,14 +832,8 @@ object IndexQueries extends QueryRegistry {
       val emb = embeddings(s, dir)
       val (cents, pq, books, idx) = ivfPqResStore(s, dir)
       val q = firstVec(emb)
-      val probe = cents.map { case (cid, c) =>
-        var d = 0.0
-        var i = 0
-        while (i < c.length) { val x = q(i).toDouble - c(i); d += x * x; i += 1 }
-        (cid, d)
-      }.sortBy { case (cid, d) => (d, cid) }.take(2).map(_._1)
-      val tabs = probe.map { cid =>
-        val c = cents.find(_._1 == cid).get._2
+      val probe = Ivf.nearestCells(q, cents, 2)
+      val tabs = probe.map { case (cid, c) =>
         val qres = Array.tabulate(q.length)(i => q(i).toDouble - c(i))
         cid -> pq.adcTableD(qres, books)
       }
@@ -897,7 +843,7 @@ object IndexQueries extends QueryRegistry {
         case (acc, (cid, tab)) =>
           acc.when(col("cluster") === cid, pq.adcScoreExpr(col("codes"), tab))
       }
-      idx.filter(col("cluster").isin(probe.toSeq: _*))
+      idx.filter(col("cluster").isin(probe.map(_._1).toSeq: _*))
         .select(col("vec_id"), (round(adc, 6) + 0.0).as("adc_dist"))
         .orderBy(col("adc_dist").asc, col("vec_id").asc)
         .limit(10)
@@ -915,9 +861,8 @@ object IndexQueries extends QueryRegistry {
       val qrows = emb.filter(col("vec_id") < 5).orderBy(col("vec_id"))
         .select(col("vec_id"), col("embedding")).collect()
         .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-      // ONE q-keyed shortlist job over ONE codes scan (the round-5
-      // verdict's #4: the driver loop that unioned 5 per-query plans is
-      // replaced by the broadcast-table + bounded-heap aggregate path;
+      // ONE q-keyed shortlist job over ONE codes scan (a broadcast
+      // table + bounded-heap aggregate, not a union of per-query plans;
       // identical ids by the shared adc ASC, vec_id ASC tie order)
       val tables = qrows.map { case (qid, qv) => (qid, pq.adcTable(qv, books)) }.toSeq
       val shortlist = pq.adcTopKMulti(codes, tables, 50)
@@ -1030,9 +975,7 @@ object IndexQueries extends QueryRegistry {
     "ivf_cell_join" -> ((s, dir) => {
       val emb = embeddings(s, dir)
       val ivf = new Ivf(nlist = 8, iters = 0)
-      val cents = emb.filter(col("vec_id") < 8).orderBy(col("vec_id"))
-        .select(col("embedding")).collect().zipWithIndex
-        .map { case (r, i) => (i, r.getSeq[Float](0).map(_.toDouble).toArray) }
+      val cents = headCentroids(emb)
       // spread before assigning: argmin over 8 centroids is an
       // interpreted HOF fold, and the single-row-group scan would run
       // it on one core of 32
@@ -1048,8 +991,8 @@ object IndexQueries extends QueryRegistry {
         .orderBy(col("a"), col("b"))
     }),
 
-    // SemDeDup-style centroid-cell semantic PURGE (Abbas et al. 2023,
-    // r13 verdict task #4): cluster embeddings into centroid cells,
+    // SemDeDup-style centroid-cell semantic PURGE (Abbas et al. 2023):
+    // cluster embeddings into centroid cells,
     // pair ONLY within a cell, and purge every vector that has an
     // above-threshold cosine twin CLOSER to the cell centroid (ties
     // to the lower id) — keep-the-medoid-side dedup. This is the
@@ -1070,9 +1013,7 @@ object IndexQueries extends QueryRegistry {
     "semdedup_cell_purge" -> ((s, dir) => {
       val emb = embeddings(s, dir)
       val ivf = new Ivf(nlist = 8, iters = 0)
-      val cents = emb.filter(col("vec_id") < 8).orderBy(col("vec_id"))
-        .select(col("embedding")).collect().zipWithIndex
-        .map { case (r, i) => (i, r.getSeq[Float](0).map(_.toDouble).toArray) }
+      val cents = headCentroids(emb)
       val assigned = emb.repartition(s.sparkContext.defaultParallelism)
         .select(col("vec_id"), col("embedding"),
           ivf.assignExpr(col("embedding"), cents).as("cell"))
@@ -1099,10 +1040,9 @@ object IndexQueries extends QueryRegistry {
     // embedding-cosine near-dup: top-20 most-similar pairs among the
     // BANDED sign-LSH candidates (the same Σ|bucket|² candidate
     // generation as lsh_similarity_join, topped with cos DESC LIMIT 20).
-    // The full-corpus crossJoin this query carried through round 5 is
-    // demoted to the test-only equivalence baseline (KnnSpec) — the
-    // same precedent as the r4 all-pairs-simhash demotion: an unbounded
-    // cartesian must never sit on a declared/benched path, because at
+    // The full-corpus crossJoin lives on only as the test-only
+    // equivalence baseline (KnnSpec), like the all-pairs simhash: an
+    // unbounded cartesian must never sit on a declared/benched path, because at
     // 100× rows it is 10,000× pairs. The banded oracle replays the
     // identical candidate set, so the 20 values stay hash-checked.
     "embedding_near_dup" -> ((s, dir) =>
@@ -1261,7 +1201,7 @@ object IndexQueries extends QueryRegistry {
         |       true AS degree_le_m, true AS levels_monotone
         |FROM embeddings""".stripMargin,
 
-    // Every field DERIVED, none literal (closes the r7 judge task):
+    // Every field DERIVED, none literal:
     // totals and ids_unique from the source table; n_cells_ok and the
     // id-weighted cell sum from a FULL re-assignment — the cells CTE
     // replays Ivf.assignExpr's argmin-by-(squared distance, centroid

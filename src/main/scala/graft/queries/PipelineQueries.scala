@@ -197,9 +197,9 @@ object PipelineQueries extends QueryRegistry {
       }
       val feats = featsOf
       // the bounded (≤ 4096-row) importance count table is the model
-      // artifact — memoized like the NB/LM tables (r14 optimization
-      // round); without the memo the corpus tokenized TWICE per
-      // invocation (once under the count subtree, once as the probe)
+      // artifact — memoized like the NB/LM tables; without the memo
+      // the corpus tokenized TWICE per invocation (once under the
+      // count subtree, once as the probe)
       val cnt = SharedBuilds.of(s, dir, "dsir-counts") {
         graft.operators.Cuts.cut(featsOf.groupBy(col("f")).agg(
           sum(when(col("doc_id") < 10, 1L).otherwise(0L)).as("n_t"),
@@ -216,15 +216,14 @@ object PipelineQueries extends QueryRegistry {
         .select(col("doc_id"), col("lang"), col("weight"))
     }),
 
-    // LEARNED quality classifier (r12 verdict task #3 — the one
-    // pipeline stage that was still rule-only): integer-exact Naive
+    // LEARNED quality classifier: integer-exact Naive
     // Bayes over the SAME 4096-bucket hashed unigram+bigram features
     // as the DSIR weighting, trained with the reference-target
     // convention this corpus supports (doc_id < 10 = the curated
     // reference class — the GPT-3/CCNet quality-filter shape: positive
     // = reference corpus, negative = crawl) on the EVEN doc_ids and
     // scored on the HELD-OUT odd docs, top-30 most reference-like.
-    // Weak supervision honesty note, measured r13: the synthetic
+    // Weak supervision honesty note, measured: the synthetic
     // corpus's source/lang columns carry NO lexical signal (per-doc NB
     // scores under a source-group split differ by < 0.1% of their
     // within-class spread), so source labels would train a coin-flip;
@@ -241,7 +240,7 @@ object PipelineQueries extends QueryRegistry {
     "nb_quality_score" -> ((s, dir) => {
       // the trained count table is the classifier's INDEX (bounded at
       // 4096 rows whatever the corpus) — memoized per (session, dir)
-      // like every index store (r14 optimization round), so the
+      // like every index store, so the
       // recurring cost is scoring the held-out docs, not re-tokenizing
       // and re-counting the training half per invocation; at 100 TB
       // this is the persisted model table a daily scoring job reads
@@ -258,8 +257,7 @@ object PipelineQueries extends QueryRegistry {
         .limit(30)
     }),
 
-    // CCNet-style n-gram LM FLUENCY filter (r13 verdict task #3 — the
-    // one published quality stage the pipeline still lacked): a
+    // CCNet-style n-gram LM FLUENCY filter: a
     // Laplace-smoothed token-3-gram LM trained on the curated
     // reference docs (doc_id < 10, the decontamination/NB reference
     // split), scoring every crawl doc by its integer mean per-position
@@ -280,8 +278,7 @@ object PipelineQueries extends QueryRegistry {
     "lm_fluency_score" -> ((s, dir) => {
       import graft.operators.NgramLm
       // both LM count tables are bounded (8192/4096 rows) model
-      // artifacts — memoized like the NB counts above (r14
-      // optimization round): train once, score per invocation
+      // artifacts — memoized like the NB counts above: train once, score per invocation
       val (c3, c2) = SharedBuilds.of(s, dir, "lm-fluency-counts") {
         val t = NgramLm.train(
           NgramLm.feats(documents(s, dir), Seq("doc_id"))
@@ -420,7 +417,7 @@ object PipelineQueries extends QueryRegistry {
     // costs the same per round as 100 MB once the vocab is built.
     // Each round's top pair is a 1-row driver head (the bounded-
     // collect discipline); the merge applies as two sentinel-space
-    // replace passes. DEVIATION, stated exactly (r10 advisory): for a
+    // replace passes. DEVIATION, stated exactly: for a
     // same-symbol pair (x,x) inside an odd run of >= 5 x's, the two
     // passes merge around an isolated MIDDLE singleton ("x x x x x" →
     // "xx x xx") where Sennrich greedy left-to-right leaves the LAST

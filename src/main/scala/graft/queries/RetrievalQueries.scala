@@ -52,7 +52,7 @@ object RetrievalQueries extends QueryRegistry {
 
   /** idf literals the LAST bm25 scoring computed, captured so the
     * oracle SQL can interpolate the exact same doubles instead of
-    * recomputing ln() in DuckDB (r8 advisory: rint-vs-round tie rules
+    * recomputing ln() in DuckDB (rint-vs-round tie rules
     * differ AND a 1-ulp libm divergence near a 6th-decimal boundary
     * could flip the rounded value — a literal cannot diverge). Safe as
     * a plain var: Verify runs every query before dumping oracleSql in

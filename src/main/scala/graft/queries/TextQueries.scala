@@ -173,13 +173,13 @@ object TextQueries extends QueryRegistry {
         .cut()
     }
 
-  /** Per-source cap applied inside the funnel (r11): keep the top
+  /** Per-source cap applied inside the funnel: keep the top
     * [[FunnelCapK]] decon survivors per source by redacted-text
     * quality score — 20 sources × 25–250 docs each in the testdata,
     * so the cap genuinely drops rows at every sf. */
   private[graft] val FunnelCapK = 15
 
-  /** The funnel's PII stage (r11): a deterministic synthetic triple
+  /** The funnel's PII stage: a deterministic synthetic triple
     * (same formula as pii_redaction_audit) is planted on the doc_id%7
     * minority — the "dirty docs" — then ALL text is scrubbed through
     * the three typed-placeholder replaces. Redaction is a TRANSFORM,
@@ -414,7 +414,7 @@ object TextQueries extends QueryRegistry {
       val path = Tables.buildPath(dir, "incr-funnel")
       CollectionManager.deleteRecursively(Paths.get(path))
       Files.createDirectories(Paths.get(path))
-      // source rides the stored shards: the funnel's cap stage (r11)
+      // source rides the stored shards: the funnel's cap stage
       // partitions by it and phase B must see it on the diff shards
       val docsAll = documents(s, dir).select(col("doc_id"), col("source"), col("text"))
       val maxId = docsAll.agg(max(col("doc_id"))).collect()(0).getLong(0)
@@ -475,8 +475,8 @@ object TextQueries extends QueryRegistry {
   /** Phase B: the incremental run — TEXT reads only the `1..2` diff
     * shards; everything else comes off the persisted state tables.
     * NOT memoized (callers memoize the result): Bench's scale probe
-    * re-executes this whole diff-read + merge to time the r10
-    * headline composition at 1× and 10× (the r10 verdict's task 6). */
+    * re-executes this whole diff-read + merge to time the headline
+    * composition at 1× and 10×. */
   private[graft] def incrFunnelPhaseB(s: SparkSession, dir: String): DataFrame = {
     val path = incrFunnelState(s, dir)
     val stateDir = s"$path.state"
@@ -796,8 +796,8 @@ object TextQueries extends QueryRegistry {
         .orderBy(col("split"), col("source"))
     }),
 
-    // the export MATERIALIZED (r12 — the census counted the
-    // deliverable; this writes it): funnel survivors land as
+    // the export MATERIALIZED (the census counts the deliverable;
+    // this writes it): funnel survivors land as
     // split×source hive-partitioned parquet shards carrying the
     // REDACTED text (the funnel's budgets — per-source cap, quality,
     // diversity — are enforced by final_keep upstream), and THIS query
@@ -1210,7 +1210,7 @@ object TextQueries extends QueryRegistry {
          |  UNION ALL
          |  SELECT doc_id + 10000 AS doc_id, text FROM documents WHERE doc_id < 10),
          |g AS (SELECT ${F.md5L("text")} AS ch, count(*) AS cnt, min(doc_id) AS keep_id
-         |      FROM u GROUP BY 1)
+         |      FROM u WHERE text IS NOT NULL GROUP BY 1)
          |SELECT keep_id, CAST(cnt AS BIGINT) AS group_size
          |FROM g WHERE cnt > 1 ORDER BY keep_id""".stripMargin,
 
@@ -1287,7 +1287,8 @@ object TextQueries extends QueryRegistry {
          |FROM q GROUP BY source ORDER BY source""".stripMargin,
 
     "exact_dup_hist" ->
-      s"""WITH g AS (SELECT ${F.md5L("text")} AS ch, count(*) AS cnt FROM documents GROUP BY 1)
+      s"""WITH g AS (SELECT ${F.md5L("text")} AS ch, count(*) AS cnt FROM documents
+         |           WHERE text IS NOT NULL GROUP BY 1)
          |SELECT CAST(cnt AS BIGINT) AS group_size, CAST(count(*) AS BIGINT) AS n_groups
          |FROM g GROUP BY 1 ORDER BY group_size""".stripMargin,
 

@@ -56,7 +56,7 @@ class CutsSpec extends SparkSpec {
     withReliable { _ =>
       val d0 = seeds.select(col("node"), lit(0L).as("cost"))
       var planChars = List.empty[Int]
-      Supersteps.loop(d0, 20, checkpointEvery = 1, None) { dist =>
+      Supersteps.loop(d0, 20, checkpointEvery = 1) { dist =>
         planChars ::= dist.queryExecution.optimizedPlan.toString.length
         val relax = edges.join(dist, edges("src") === dist("node"))
           .select(edges("dst").as("node"), (dist("cost") + edges("cost")).as("cost"))

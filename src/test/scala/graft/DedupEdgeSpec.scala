@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import graft.functions.TextOps
 import graft.operators.{Components, Dedup}
 import graft.streaming.DedupStream
 
@@ -41,10 +42,10 @@ class DedupEdgeSpec extends SparkSpec {
   private def pairs(df: DataFrame): Seq[(Long, Long)] =
     df.select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
 
-  test("exactDupGroups: NULL texts group together; empty corpus has no groups") {
+  test("exactDupGroups: NULL texts are in no group; empty corpus has no groups") {
     val g = Dedup.exactDupGroups(degenerate).collect()
       .map(r => (Option(r.get(0)).isEmpty, r.getLong(1), r.getLong(2))).sortBy(_._3).toSeq
-    assert(g == Seq((true, 2L, 0L), (false, 1L, 1L), (false, 1L, 2L), (false, 2L, 4L), (false, 1L, 6L)))
+    assert(g == Seq((false, 1L, 1L), (false, 1L, 2L), (false, 2L, 4L), (false, 1L, 6L)))
     assert(Dedup.exactDupGroups(empty).count() == 0L)
   }
 
@@ -67,9 +68,19 @@ class DedupEdgeSpec extends SparkSpec {
   }
 
   test("simhashPairsBanded: NULL, empty and token-free docs share the zero sketch") {
-    val got = pairs(Dedup.simhashPairsBanded(degenerate, 3))
-    val zero = for (a <- Seq(0L, 1L, 2L, 3L); b <- Seq(0L, 1L, 2L, 3L) if a < b) yield (a, b)
-    assert(got == (zero :+ ((4L, 5L))).sorted)
+    // the raw kernel gives each of them 0, the sketch they would all share
+    val raw = degenerate.select(col("doc_id"), TextOps.simhash16(TextOps.tokens(col("text"))))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(Seq(0L, 1L, 2L, 3L).forall(raw(_) == 0L) && raw(4L) != 0L)
+    // so the pair generator must drop them rather than pair them all at Hamming 0
+    assert(pairs(Dedup.simhashPairsBanded(degenerate, 3)).forall(p => p._1 >= 4L))
+  }
+
+  test("simhashPairsBanded: NULL, empty and token-free docs get no sketch and never pair") {
+    assert(pairs(Dedup.simhashPairsBanded(degenerate, 3)) == Seq((4L, 5L)))
+    val sketched = Dedup.simhashSketch(Dedup.tokenHashes(degenerate), 16)
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(sketched == Seq(4L, 5L, 6L))
     assert(Dedup.simhashPairsBanded(empty, 3).count() == 0L)
   }
 
@@ -87,7 +98,7 @@ class DedupEdgeSpec extends SparkSpec {
   test("connectedComponents over the degenerate pairs and over no pairs") {
     val got = Components.connectedComponents(Dedup.simhashPairsBanded(degenerate, 3))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 0L, 4L -> 4L, 5L -> 4L))
+    assert(got == Map(4L -> 4L, 5L -> 4L))
     assert(Components.connectedComponents(Dedup.simhashPairsBanded(empty, 3)).count() == 0L)
   }
 }

@@ -1,24 +1,27 @@
 package graft
 
-import graft.operators.{Components, Traversal, Triangles}
+import graft.operators.{Components, HyperBall, Traversal, Triangles}
 
-/** The iterative graph loops fold their per-round probes into the job
-  * that materializes each round: a converged k-core or k-truss census
-  * runs a bounded number of Spark jobs per peel round (its edge counts
-  * come from the round's own counted cuts) and a BFS a bounded number
-  * per level (a level's emptiness is read off the visited cut's count),
-  * and connected components a bounded number per star round (its
-  * convergence fingerprint is taken by the round's measured cut).
-  * All equal in-memory replicas under any AQE and shuffle-partition
-  * setting. */
+/** The iterative graph loops take every stop test from the measured
+  * cut of each round ([[graft.operators.Supersteps.converge]]), so
+  * each runs a bounded number of Spark jobs per round: a converged
+  * k-core or k-truss census per peel round (the census row is the
+  * round's measure), a BFS per level (a level is empty when the visited
+  * count did not grow), connected components per star round (an
+  * unchanged edge fingerprint) and HyperBall per absorption round (an
+  * unchanged register certificate). All equal in-memory replicas under
+  * any AQE and shuffle-partition setting. */
 class SuperstepJobsSpec extends SparkSpec with JobCounting {
   import spark.implicits._
 
   private val JobsPerRound = 6
-  private val KCoreRound0Jobs = 4
+  private val KCoreJobsPerRound = 3
+  private val KCoreRound0Jobs = 3
   private val MaxHops = 8
-  private val TrussJobsPerRound = 11
+  private val TrussJobsPerRound = 7
   private val TrussRound0Jobs = 4
+  private val HyperBallJobsPerRound = 3
+  private val HyperBallRound0Jobs = 2
   private val StarJobsPerRound = 5
   private val StarRound0Jobs = 4
 
@@ -102,6 +105,25 @@ class SuperstepJobsSpec extends SparkSpec with JobCounting {
     (rounds, edges.flatMap { case (u, v) => Seq(u -> v, v -> v) }.toMap)
   }
 
+  /** HyperBall.converge's absorption from the given hop-0 registers:
+    * the supersteps up to and including the first unchanged one, and
+    * the converged (root, b, r) rows. */
+  private def hyperBallReplica(regs0: Map[Long, Map[Long, Long]]): (Int, Set[(Long, Long, Long)]) = {
+    val out = graph.groupBy(_._1).map { case (s, es) => s -> es.map(_._2) }
+    def merge(a: Map[Long, Long], b: Map[Long, Long]) =
+      (a.keySet ++ b.keySet).map(k => k -> math.max(a.getOrElse(k, 0L), b.getOrElse(k, 0L))).toMap
+    var cur = regs0
+    var rounds = 0
+    var done = false
+    while (!done) {
+      val next = cur.map { case (v, r) => v -> out.getOrElse(v, Vector.empty).map(cur).foldLeft(r)(merge) }
+      done = next == cur
+      cur = next
+      rounds += 1
+    }
+    (rounds, cur.toSet[(Long, Map[Long, Long])].flatMap { case (v, m) => m.map { case (b, r) => (v, b, r) } })
+  }
+
   private def bfsReplica: Map[Long, Long] = {
     val adj = graph.groupBy(_._1).map { case (s, es) => s -> es.map(_._2) }
     var dist = seeds.map(_ -> 0L).toMap
@@ -125,7 +147,7 @@ class SuperstepJobsSpec extends SparkSpec with JobCounting {
       }
       info(s"aqe=$aqe partitions=$p: $jobs jobs, $rounds peel rounds")
       assert(got == expect, s"aqe=$aqe partitions=$p")
-      assert(jobs <= JobsPerRound * rounds + KCoreRound0Jobs,
+      assert(jobs <= KCoreJobsPerRound * rounds + KCoreRound0Jobs,
         s"aqe=$aqe partitions=$p: $jobs jobs for $rounds peel rounds")
     }
   }
@@ -184,6 +206,25 @@ class SuperstepJobsSpec extends SparkSpec with JobCounting {
       assert(got == expect, s"aqe=$aqe partitions=$p")
       assert(jobs <= StarJobsPerRound * rounds + StarRound0Jobs,
         s"aqe=$aqe partitions=$p: $jobs jobs for $rounds star rounds")
+    }
+  }
+
+  test("HyperBall.converge: at most 3 jobs per absorption round, equal to the replica") {
+    val nodes = graph.map(_._1).distinct.toDF("node")
+    val regs0 = HyperBall.registers0(nodes).collect()
+      .groupBy(_.getLong(0)).map { case (v, rs) => v -> rs.map(r => r.getLong(1) -> r.getLong(2)).toMap }
+    val (rounds, expect) = hyperBallReplica(regs0)
+    assert(rounds >= 4, s"the fixture should take several rounds: $rounds")
+    for ((aqe, p) <- knobs) withKnobs(aqe, p) {
+      val edges = graph.toDF("src", "dst")
+      val (got, jobs) = jobsOf {
+        HyperBall.converge(edges, HyperBall.registers0(nodes), maxRounds = 64)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      }
+      info(s"aqe=$aqe partitions=$p: $jobs jobs, $rounds absorption rounds")
+      assert(got == expect, s"aqe=$aqe partitions=$p")
+      assert(jobs <= HyperBallJobsPerRound * rounds + HyperBallRound0Jobs,
+        s"aqe=$aqe partitions=$p: $jobs jobs for $rounds absorption rounds")
     }
   }
 }

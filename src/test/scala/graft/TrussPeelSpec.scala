@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
   * row-identical support frames to the full re-enumeration backend on
   * every round of randomized peels — including rounds where triangles
   * with 2–3 simultaneously-removed edges exercise the dedupe, and
-  * rounds where surviving edges drop to support 0 and must LOSE their
-  * row (the "no row for no-triangle edges" invariant). */
+  * rounds where surviving edges drop to support 0 and must keep their
+  * row at 0 (the round's edge count is the support frame's row
+  * count). */
 class TrussPeelSpec extends SparkSpec {
 
   private def supSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long)] =
