@@ -28,28 +28,44 @@ object Dedup {
   val Bands = 6
   val Rows = 2 // MinhashH / Bands
 
-  /** doc_id, tokens, shingles, shingle hashes — the shared prefix. */
-  def shingled(docs: DataFrame): DataFrame = {
-    val toks = TextOps.tokens(col("text"))
-    docs.select(
-      col("doc_id"),
-      TextOps.shingles(toks, ShingleN).as("sh"))
+  /** The `ShingleN`-token shingles of a text column. */
+  def shingles(text: Column): Column = TextOps.shingles(TextOps.tokens(text), ShingleN)
+
+  /** doc_id, shingles, shingle hashes — the shared prefix. */
+  def shingled(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), shingles(col("text")).as("sh"))
       .withColumn("shh", TextOps.shingleHashes(col("sh")))
-  }
 
   /** MinHash signatures (length MinhashH) per doc. */
   def signatures(docs: DataFrame): DataFrame =
     shingled(docs).withColumn(
       "sig", TextOps.minhashSignature(col("shh"), MinhashH))
 
-  /** Explode each signature into (doc_id, band, band_hash) — the LSH
-    * bucket table. At scale this parquet would be written bucketed by
-    * (band, band_hash) so the candidate join is shuffle-free. */
-  def bandTable(sigs: DataFrame): DataFrame =
-    sigs.select(col("doc_id"), col("sig"),
-      explode(sequence(lit(0), lit(Bands - 1))).as("band"))
-      .select(col("doc_id"), col("band"),
-        TextOps.bandHash(col("sig"), col("band"), Rows).as("band_hash"))
+  /** The one MinHash band recipe: the `keep` columns of `rows` with
+    * (band, band_hash) for each of the `Bands` bands of the signature
+    * of the shingle hashes `shh`, and the signature itself when
+    * `withSig`. The signature is projected once, then one explode
+    * fans it out; at scale the result is written bucketed by
+    * (band, band_hash) so the candidate join is shuffle-free.
+    *
+    * A doc with an empty shingle set (NULL, empty or token-free text,
+    * or fewer than `ShingleN` tokens) is in no band: its signature is
+    * the all-P sentinel, and since h₀ is the identity mod P only a
+    * non-empty set has sig[0] &lt; P, so the sentinel explodes a NULL
+    * band array. An explode, not a filter, which Catalyst would push
+    * below the projection that tokenizes the text and so tokenize
+    * every doc twice. */
+  def minhashBands(rows: DataFrame, keep: Seq[String], shh: Column,
+      withSig: Boolean = false): DataFrame = {
+    val kept = keep.map(col)
+    val sig = col("sig")
+    val bandIds = when(element_at(sig, 1) < TextOps.P, sequence(lit(0), lit(Bands - 1)))
+    rows.select(kept :+ TextOps.minhashSignature(shh, MinhashH).as("sig"): _*)
+      .select(kept :+ sig :+ explode(bandIds).as("band"): _*)
+      .select(kept ++ Seq(col("band"),
+        TextOps.bandHash(sig, col("band"), Rows).as("band_hash")) ++
+        (if (withSig) Seq(sig) else Nil): _*)
+  }
 
   /** Candidate pairs: docs sharing any band bucket (a < b, distinct). */
   def candidatePairs(bands: DataFrame): DataFrame = {
@@ -81,8 +97,7 @@ object Dedup {
     * table — the probe-able dedup index surface (also the static side
     * of the streaming rerank, graft.streaming.DedupStream). */
   def candidateBands(hashed: DataFrame): DataFrame =
-    bandTable(hashed.withColumn(
-      "sig", TextOps.minhashSignature(col("shh"), MinhashH)))
+    minhashBands(hashed, Seq("doc_id"), col("shh"))
 
   /** Band-bucket candidate pairs from a materialized shingle table —
     * the build phase of the dedup index (callers may persist and reuse

@@ -475,11 +475,7 @@ object IndexQueries extends QueryRegistry {
     * invariants and the id-weighted content sum — an appended store and
     * its compacted rewrite must both hash-match it. */
   private[graft] def lshMaintenanceOracle: String =
-    s"""WITH p AS (SELECT vec_id AS pid, embedding AS pe FROM embeddings WHERE vec_id < $LshAppendPlanes),
-       |keys AS (SELECT e.vec_id,
-       |           CAST(sum(CASE WHEN ${dot("e.embedding", "p.pe")} >= 0
-       |                         THEN (1::BIGINT << p.pid) ELSE 0 END) AS BIGINT) AS bucket
-       |         FROM embeddings e CROSS JOIN p GROUP BY e.vec_id),
+    s"""WITH ${lshKeys(LshAppendPlanes)},
        |n AS (SELECT count(*) AS cnt, count(DISTINCT vec_id) AS dt FROM embeddings)
        |SELECT CAST(cnt AS BIGINT) AS total_vectors,
        |       CAST((SELECT count(*) FROM embeddings WHERE vec_id < cnt // 2) AS BIGINT) AS n_base,
@@ -1178,6 +1174,76 @@ object IndexQueries extends QueryRegistry {
       s"CASE WHEN CAST($v[${off + i + 1}] AS DOUBLE) > 0.0 THEN ${1L << i} ELSE 0 END")
       .mkString("(", " + ", ")")
 
+  // The oracle replays' index geometry, as the declared stores build
+  // it: the first 8 embeddings are the IVF centroids; PQ splits the 64
+  // dims into 4 subspaces of 16 with the first 16 embeddings as seed
+  // codes.
+  private val cellsCtes = ivfCells(8)
+  private val seedCodesCtes = pqCodes("embeddings", "embedding", 4, 16, 16)
+  private def adc(q: String, vec: String, key: String*): String = pqAdc(q, vec, 16, key: _*)
+
+  /** Fallback ⇒ exact: the brute-force cosine top-10 of vector 0. */
+  private val exactCosineTop10 = VectorQueries.knnOracle(cosine("e.embedding", "q.qe"), 10)
+
+  /** The seed-codebook ADC shortlist of 50 per query (vec_id &lt; 5),
+    * reranked by exact euclidean (`rr`), next to the exact euclidean
+    * ranking (`ex`) — shared by the two PQ recall oracles. */
+  private val pqRerankCtes =
+    s"""$seedCodesCtes,
+       |qs AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 5),
+       |${adc("qs", "qe", "query_id")},
+       |adc AS (SELECT t.query_id, c.vec_id, round(sum(t.d), 6) + 0.0 AS adc
+       |        FROM codes c JOIN qt t ON c.s = t.s AND c.code = t.j
+       |        GROUP BY t.query_id, c.vec_id),
+       |short AS (SELECT query_id, vec_id FROM (
+       |    SELECT query_id, vec_id,
+       |           row_number() OVER (PARTITION BY query_id ORDER BY adc ASC, vec_id ASC) AS rn
+       |    FROM adc) WHERE rn <= 50),
+       |rr AS (SELECT sh.query_id, sh.vec_id,
+       |          row_number() OVER (PARTITION BY sh.query_id
+       |            ORDER BY round(${negEuclidean("e.embedding", "qs.qe")}, 6) DESC, sh.vec_id ASC) AS rn
+       |       FROM short sh JOIN embeddings e ON e.vec_id = sh.vec_id
+       |         JOIN qs ON qs.query_id = sh.query_id),
+       |ex AS (SELECT qs.query_id, e.vec_id,
+       |         row_number() OVER (PARTITION BY qs.query_id
+       |           ORDER BY round(${negEuclidean("e.embedding", "qs.qe")}, 6) DESC, e.vec_id ASC) AS rn
+       |       FROM embeddings e CROSS JOIN qs)""".stripMargin
+
+  /** The banded sign-bit candidates of 16 planes in bands of 4,
+    * cosine-reranked at 0.3, in the given order. */
+  private def signBandPairs(order: String): String =
+    s"""WITH ${signBands(16, 4)}
+       |SELECT c.a, c.b, round(${cosine("x.embedding", "y.embedding")}, 6) + 0.0 AS cos
+       |FROM cand c JOIN embeddings x ON c.a = x.vec_id JOIN embeddings y ON c.b = y.vec_id
+       |WHERE round(${cosine("x.embedding", "y.embedding")}, 6) >= 0.3
+       |""".stripMargin + order
+
+  /** Per query (vec_id &lt; 5), the share of its exact euclidean top 10
+    * found in its exact cosine top `cosK`, as `name`. */
+  private def cosEuclidOverlap(cosK: Int, name: String): String =
+    s"""WITH q AS (
+       |  SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 5),
+       |cos_ranked AS (
+       |  SELECT q.query_id, e.vec_id,
+       |         row_number() OVER (PARTITION BY q.query_id
+       |           ORDER BY round(${cosine("e.embedding", "q.qe")}, 6) DESC, e.vec_id ASC) AS rnk
+       |  FROM embeddings e, q),
+       |euc_ranked AS (
+       |  SELECT q.query_id, e.vec_id,
+       |         row_number() OVER (PARTITION BY q.query_id
+       |           ORDER BY round(${negEuclidean("e.embedding", "q.qe")}, 6) DESC, e.vec_id ASC) AS rnk
+       |  FROM embeddings e, q),
+       |cos_lists AS (
+       |  SELECT query_id, list(vec_id ORDER BY rnk) AS cos_ids
+       |  FROM cos_ranked WHERE rnk <= $cosK GROUP BY query_id),
+       |euc_lists AS (
+       |  SELECT query_id, list(vec_id ORDER BY rnk) AS euc_ids
+       |  FROM euc_ranked WHERE rnk <= 10 GROUP BY query_id)
+       |SELECT c.query_id,
+       |       round(CAST(len(list_intersect(c.cos_ids, e.euc_ids)) AS DOUBLE) / 10.0, 6) AS $name
+       |FROM cos_lists c JOIN euc_lists e ON c.query_id = e.query_id
+       |ORDER BY c.query_id""".stripMargin
+
   override def oracle: Map[String, String] = Map(
     // Index-audit oracles: the exact totals come from the corpus, the
     // contract invariants arrive as must-be-true booleans (same shape
@@ -1210,15 +1276,7 @@ object IndexQueries extends QueryRegistry {
     // merged build+append store; any drift from a from-scratch
     // assignment hash-fails on cell_weight_sum.
     "ivf_append_audit" ->
-      """WITH c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings WHERE vec_id < 8),
-        |d AS (SELECT e.vec_id, c.cid,
-        |        list_sum(list_transform(list_zip(e.embedding, c.ce),
-        |          x -> (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)) * (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)))) AS d
-        |      FROM embeddings e CROSS JOIN c),
-        |cells AS (SELECT vec_id, cid AS cell FROM (
-        |    SELECT vec_id, cid,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY d ASC, cid ASC) AS rn
-        |    FROM d) WHERE rn = 1),
+      s"""WITH $cellsCtes,
         |n AS (SELECT count(*) AS cnt, count(DISTINCT vec_id) AS dt FROM embeddings)
         |SELECT CAST(cnt AS BIGINT) AS total_vectors,
         |       CAST((SELECT count(*) FROM embeddings WHERE vec_id < cnt // 2) AS BIGINT) AS n_base,
@@ -1243,17 +1301,7 @@ object IndexQueries extends QueryRegistry {
     // against the same seed codebooks (the pq_adc_knn codes CTE):
     // append ≡ rebuild, content-checked, not just invariant-checked
     "pq_append_audit" ->
-      """WITH sp AS (SELECT s FROM range(0, 4) t(s)),
-        |b AS (SELECT vec_id AS j, embedding AS be FROM embeddings WHERE vec_id < 16),
-        |d AS (SELECT e.vec_id, sp.s, b.j,
-        |        list_sum(list_transform(generate_series(1, 16),
-        |          i -> (CAST(e.embedding[sp.s * 16 + i] AS DOUBLE) - CAST(b.be[sp.s * 16 + i] AS DOUBLE))
-        |             * (CAST(e.embedding[sp.s * 16 + i] AS DOUBLE) - CAST(b.be[sp.s * 16 + i] AS DOUBLE)))) AS d
-        |      FROM embeddings e CROSS JOIN b CROSS JOIN sp),
-        |codes AS (SELECT vec_id, s, j AS code FROM (
-        |    SELECT vec_id, s, j,
-        |           row_number() OVER (PARTITION BY vec_id, s ORDER BY d ASC, j ASC) AS rn
-        |    FROM d) WHERE rn = 1),
+      s"""WITH $seedCodesCtes,
         |n AS (SELECT count(*) AS c, count(DISTINCT vec_id) AS dt FROM embeddings)
         |SELECT CAST(c AS BIGINT) AS total_vectors,
         |       CAST((SELECT count(*) FROM embeddings WHERE vec_id < c // 2) AS BIGINT) AS n_base,
@@ -1272,23 +1320,9 @@ object IndexQueries extends QueryRegistry {
     // replayable. Tie order on code assignment mirrors the struct
     // array_min: distance ASC, code ordinal ASC.
     "pq_adc_knn" ->
-      """WITH sp AS (SELECT s FROM range(0, 4) t(s)),
-        |b AS (SELECT vec_id AS j, embedding AS be FROM embeddings WHERE vec_id < 16),
+      s"""WITH $seedCodesCtes,
         |q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-        |d AS (SELECT e.vec_id, sp.s, b.j,
-        |        list_sum(list_transform(generate_series(1, 16),
-        |          i -> (CAST(e.embedding[sp.s * 16 + i] AS DOUBLE) - CAST(b.be[sp.s * 16 + i] AS DOUBLE))
-        |             * (CAST(e.embedding[sp.s * 16 + i] AS DOUBLE) - CAST(b.be[sp.s * 16 + i] AS DOUBLE)))) AS d
-        |      FROM embeddings e CROSS JOIN b CROSS JOIN sp),
-        |codes AS (SELECT vec_id, s, j AS code FROM (
-        |    SELECT vec_id, s, j,
-        |           row_number() OVER (PARTITION BY vec_id, s ORDER BY d ASC, j ASC) AS rn
-        |    FROM d) WHERE rn = 1),
-        |qt AS (SELECT sp.s, b.j,
-        |        list_sum(list_transform(generate_series(1, 16),
-        |          i -> (CAST(q.qe[sp.s * 16 + i] AS DOUBLE) - CAST(b.be[sp.s * 16 + i] AS DOUBLE))
-        |             * (CAST(q.qe[sp.s * 16 + i] AS DOUBLE) - CAST(b.be[sp.s * 16 + i] AS DOUBLE)))) AS d
-        |      FROM b CROSS JOIN sp, q),
+        |${adc("q", "qe")},
         |scores AS (SELECT c.vec_id, sum(t.d) AS adc
         |           FROM codes c JOIN qt t ON c.s = t.s AND c.code = t.j
         |           GROUP BY c.vec_id)
@@ -1299,37 +1333,11 @@ object IndexQueries extends QueryRegistry {
     // codebooks give the codes, ADC scores the survivors — every stage
     // replayed.
     "ivfpq_knn" ->
-      """WITH sp AS (SELECT s FROM range(0, 4) t(s)),
-        |b AS (SELECT vec_id AS j, embedding AS be FROM embeddings WHERE vec_id < 16),
-        |c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings WHERE vec_id < 8),
+      s"""WITH $cellsCtes,
         |q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-        |cd AS (SELECT e.vec_id, c.cid,
-        |        list_sum(list_transform(list_zip(e.embedding, c.ce),
-        |          x -> (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)) * (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)))) AS d
-        |      FROM embeddings e CROSS JOIN c),
-        |cells AS (SELECT vec_id, cid AS cell FROM (
-        |    SELECT vec_id, cid,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY d ASC, cid ASC) AS rn
-        |    FROM cd) WHERE rn = 1),
-        |qcd AS (SELECT c.cid,
-        |        list_sum(list_transform(list_zip(q.qe, c.ce),
-        |          x -> (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)) * (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)))) AS d
-        |      FROM c, q),
-        |probe AS (SELECT cid FROM qcd ORDER BY d ASC, cid ASC LIMIT 2),
-        |d AS (SELECT e.vec_id, sp.s, b.j,
-        |        list_sum(list_transform(generate_series(1, 16),
-        |          i -> (CAST(e.embedding[sp.s * 16 + i] AS DOUBLE) - CAST(b.be[sp.s * 16 + i] AS DOUBLE))
-        |             * (CAST(e.embedding[sp.s * 16 + i] AS DOUBLE) - CAST(b.be[sp.s * 16 + i] AS DOUBLE)))) AS d
-        |      FROM embeddings e CROSS JOIN b CROSS JOIN sp),
-        |codes AS (SELECT vec_id, s, j AS code FROM (
-        |    SELECT vec_id, s, j,
-        |           row_number() OVER (PARTITION BY vec_id, s ORDER BY d ASC, j ASC) AS rn
-        |    FROM d) WHERE rn = 1),
-        |qt AS (SELECT sp.s, b.j,
-        |        list_sum(list_transform(generate_series(1, 16),
-        |          i -> (CAST(q.qe[sp.s * 16 + i] AS DOUBLE) - CAST(b.be[sp.s * 16 + i] AS DOUBLE))
-        |             * (CAST(q.qe[sp.s * 16 + i] AS DOUBLE) - CAST(b.be[sp.s * 16 + i] AS DOUBLE)))) AS d
-        |      FROM b CROSS JOIN sp, q),
+        |${ivfProbe(2, perQuery = false)},
+        |$seedCodesCtes,
+        |${adc("q", "qe")},
         |scores AS (SELECT cs.vec_id, sum(t.d) AS adc
         |           FROM codes cs JOIN qt t ON cs.s = t.s AND cs.code = t.j
         |           GROUP BY cs.vec_id)
@@ -1344,45 +1352,19 @@ object IndexQueries extends QueryRegistry {
     // over residual-subspace distances, per-probed-cell query tables
     // from q − centroid[cell].
     "ivfpq_residual_knn" ->
-      """WITH sp AS (SELECT s FROM range(0, 4) t(s)),
-        |c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings WHERE vec_id < 8),
+      s"""WITH $cellsCtes,
         |q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-        |cd AS (SELECT e.vec_id, c.cid,
-        |        list_sum(list_transform(list_zip(e.embedding, c.ce),
-        |          x -> (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)) * (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)))) AS d
-        |      FROM embeddings e CROSS JOIN c),
-        |cells AS (SELECT vec_id, cid AS cell FROM (
-        |    SELECT vec_id, cid,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY d ASC, cid ASC) AS rn
-        |    FROM cd) WHERE rn = 1),
         |res AS (SELECT e.vec_id, cells.cell,
         |          list_transform(list_zip(e.embedding, c.ce),
         |            x -> CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)) AS re
         |        FROM embeddings e JOIN cells ON e.vec_id = cells.vec_id
         |          JOIN c ON c.cid = cells.cell),
-        |b AS (SELECT vec_id AS j, re AS be FROM res WHERE vec_id < 16),
-        |d AS (SELECT r.vec_id, sp.s, b.j,
-        |        list_sum(list_transform(generate_series(1, 16),
-        |          i -> (r.re[sp.s * 16 + i] - b.be[sp.s * 16 + i])
-        |             * (r.re[sp.s * 16 + i] - b.be[sp.s * 16 + i]))) AS d
-        |      FROM res r CROSS JOIN b CROSS JOIN sp),
-        |codes AS (SELECT vec_id, s, j AS code FROM (
-        |    SELECT vec_id, s, j,
-        |           row_number() OVER (PARTITION BY vec_id, s ORDER BY d ASC, j ASC) AS rn
-        |    FROM d) WHERE rn = 1),
-        |qcd AS (SELECT c.cid,
-        |        list_sum(list_transform(list_zip(q.qe, c.ce),
-        |          x -> (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)) * (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)))) AS d
-        |      FROM c, q),
-        |probe AS (SELECT cid FROM qcd ORDER BY d ASC, cid ASC LIMIT 2),
+        |${pqCodes("res", "re", 4, 16, 16)},
+        |${ivfProbe(2, perQuery = false)},
         |qres AS (SELECT c.cid, list_transform(list_zip(q.qe, c.ce),
         |           x -> CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)) AS qre
         |         FROM c, q WHERE c.cid IN (SELECT cid FROM probe)),
-        |qt AS (SELECT qres.cid, sp.s, b.j,
-        |        list_sum(list_transform(generate_series(1, 16),
-        |          i -> (qres.qre[sp.s * 16 + i] - b.be[sp.s * 16 + i])
-        |             * (qres.qre[sp.s * 16 + i] - b.be[sp.s * 16 + i]))) AS d
-        |      FROM qres CROSS JOIN b CROSS JOIN sp),
+        |${adc("qres", "qre", "cid")},
         |scores AS (SELECT cs.vec_id, sum(t.d) AS adc
         |           FROM codes cs JOIN cells ON cs.vec_id = cells.vec_id
         |             JOIN qt t ON t.cid = cells.cell AND cs.s = t.s AND cs.code = t.j
@@ -1394,23 +1376,9 @@ object IndexQueries extends QueryRegistry {
     // with a per-query row_number ≤ 10 — the SQL replay of the batched
     // one-scan multi-query probe
     "pq_multi_knn" ->
-      """WITH sp AS (SELECT s FROM range(0, 4) t(s)),
-        |b AS (SELECT vec_id AS j, embedding AS be FROM embeddings WHERE vec_id < 16),
+      s"""WITH $seedCodesCtes,
         |qs AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 5),
-        |d AS (SELECT e.vec_id, sp.s, b.j,
-        |        list_sum(list_transform(generate_series(1, 16),
-        |          i -> (CAST(e.embedding[sp.s * 16 + i] AS DOUBLE) - CAST(b.be[sp.s * 16 + i] AS DOUBLE))
-        |             * (CAST(e.embedding[sp.s * 16 + i] AS DOUBLE) - CAST(b.be[sp.s * 16 + i] AS DOUBLE)))) AS d
-        |      FROM embeddings e CROSS JOIN b CROSS JOIN sp),
-        |codes AS (SELECT vec_id, s, j AS code FROM (
-        |    SELECT vec_id, s, j,
-        |           row_number() OVER (PARTITION BY vec_id, s ORDER BY d ASC, j ASC) AS rn
-        |    FROM d) WHERE rn = 1),
-        |qt AS (SELECT qs.query_id, sp.s, b.j,
-        |        list_sum(list_transform(generate_series(1, 16),
-        |          i -> (CAST(qs.qe[sp.s * 16 + i] AS DOUBLE) - CAST(b.be[sp.s * 16 + i] AS DOUBLE))
-        |             * (CAST(qs.qe[sp.s * 16 + i] AS DOUBLE) - CAST(b.be[sp.s * 16 + i] AS DOUBLE)))) AS d
-        |      FROM b CROSS JOIN sp CROSS JOIN qs),
+        |${adc("qs", "qe", "query_id")},
         |scores AS (SELECT t.query_id, c.vec_id, round(sum(t.d), 6) + 0.0 AS adc_dist
         |           FROM codes c JOIN qt t ON c.s = t.s AND c.code = t.j
         |           GROUP BY t.query_id, c.vec_id),
@@ -1422,41 +1390,9 @@ object IndexQueries extends QueryRegistry {
         |ORDER BY query_id ASC, adc_dist ASC, vec_id ASC""".stripMargin,
 
     "pq_rerank_recall" ->
-      s"""WITH sp AS (SELECT s FROM range(0, 4) t(s)),
-         |b AS (SELECT vec_id AS j, embedding AS be FROM embeddings WHERE vec_id < 16),
-         |qs AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 5),
-         |d AS (SELECT e.vec_id, sp.s, b.j,
-         |        list_sum(list_transform(generate_series(1, 16),
-         |          i -> (CAST(e.embedding[sp.s * 16 + i] AS DOUBLE) - CAST(b.be[sp.s * 16 + i] AS DOUBLE))
-         |             * (CAST(e.embedding[sp.s * 16 + i] AS DOUBLE) - CAST(b.be[sp.s * 16 + i] AS DOUBLE)))) AS d
-         |      FROM embeddings e CROSS JOIN b CROSS JOIN sp),
-         |codes AS (SELECT vec_id, s, j AS code FROM (
-         |    SELECT vec_id, s, j,
-         |           row_number() OVER (PARTITION BY vec_id, s ORDER BY d ASC, j ASC) AS rn
-         |    FROM d) WHERE rn = 1),
-         |qt AS (SELECT qs.query_id, sp.s, b.j,
-         |        list_sum(list_transform(generate_series(1, 16),
-         |          i -> (CAST(qs.qe[sp.s * 16 + i] AS DOUBLE) - CAST(b.be[sp.s * 16 + i] AS DOUBLE))
-         |             * (CAST(qs.qe[sp.s * 16 + i] AS DOUBLE) - CAST(b.be[sp.s * 16 + i] AS DOUBLE)))) AS d
-         |      FROM b CROSS JOIN sp CROSS JOIN qs),
-         |adc AS (SELECT t.query_id, c.vec_id, round(sum(t.d), 6) + 0.0 AS adc
-         |        FROM codes c JOIN qt t ON c.s = t.s AND c.code = t.j
-         |        GROUP BY t.query_id, c.vec_id),
-         |short AS (SELECT query_id, vec_id FROM (
-         |    SELECT query_id, vec_id,
-         |           row_number() OVER (PARTITION BY query_id ORDER BY adc ASC, vec_id ASC) AS rn
-         |    FROM adc) WHERE rn <= 50),
-         |rr AS (SELECT sh.query_id, sh.vec_id,
-         |          row_number() OVER (PARTITION BY sh.query_id
-         |            ORDER BY round(${negEuclidean("e.embedding", "qs.qe")}, 6) DESC, sh.vec_id ASC) AS rn
-         |       FROM short sh JOIN embeddings e ON e.vec_id = sh.vec_id
-         |         JOIN qs ON qs.query_id = sh.query_id),
+      s"""WITH $pqRerankCtes,
          |pq_lists AS (SELECT query_id, list(vec_id ORDER BY rn) AS pq_ids
          |             FROM rr WHERE rn <= 10 GROUP BY query_id),
-         |ex AS (SELECT qs.query_id, e.vec_id,
-         |         row_number() OVER (PARTITION BY qs.query_id
-         |           ORDER BY round(${negEuclidean("e.embedding", "qs.qe")}, 6) DESC, e.vec_id ASC) AS rn
-         |       FROM embeddings e CROSS JOIN qs),
          |ex_lists AS (SELECT query_id, list(vec_id ORDER BY rn) AS exact_ids
          |             FROM ex WHERE rn <= 10 GROUP BY query_id)
          |SELECT p.query_id,
@@ -1468,39 +1404,7 @@ object IndexQueries extends QueryRegistry {
     // folded to integer hit counts); trained side is Spark-verified
     // booleans (fused Lloyd is not SQL-expressible).
     "pq_trained_recall" ->
-      s"""WITH sp AS (SELECT s FROM range(0, 4) t(s)),
-         |b AS (SELECT vec_id AS j, embedding AS be FROM embeddings WHERE vec_id < 16),
-         |qs AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 5),
-         |d AS (SELECT e.vec_id, sp.s, b.j,
-         |        list_sum(list_transform(generate_series(1, 16),
-         |          i -> (CAST(e.embedding[sp.s * 16 + i] AS DOUBLE) - CAST(b.be[sp.s * 16 + i] AS DOUBLE))
-         |             * (CAST(e.embedding[sp.s * 16 + i] AS DOUBLE) - CAST(b.be[sp.s * 16 + i] AS DOUBLE)))) AS d
-         |      FROM embeddings e CROSS JOIN b CROSS JOIN sp),
-         |codes AS (SELECT vec_id, s, j AS code FROM (
-         |    SELECT vec_id, s, j,
-         |           row_number() OVER (PARTITION BY vec_id, s ORDER BY d ASC, j ASC) AS rn
-         |    FROM d) WHERE rn = 1),
-         |qt AS (SELECT qs.query_id, sp.s, b.j,
-         |        list_sum(list_transform(generate_series(1, 16),
-         |          i -> (CAST(qs.qe[sp.s * 16 + i] AS DOUBLE) - CAST(b.be[sp.s * 16 + i] AS DOUBLE))
-         |             * (CAST(qs.qe[sp.s * 16 + i] AS DOUBLE) - CAST(b.be[sp.s * 16 + i] AS DOUBLE)))) AS d
-         |      FROM b CROSS JOIN sp CROSS JOIN qs),
-         |adc AS (SELECT t.query_id, c.vec_id, round(sum(t.d), 6) + 0.0 AS adc
-         |        FROM codes c JOIN qt t ON c.s = t.s AND c.code = t.j
-         |        GROUP BY t.query_id, c.vec_id),
-         |short AS (SELECT query_id, vec_id FROM (
-         |    SELECT query_id, vec_id,
-         |           row_number() OVER (PARTITION BY query_id ORDER BY adc ASC, vec_id ASC) AS rn
-         |    FROM adc) WHERE rn <= 50),
-         |rr AS (SELECT sh.query_id, sh.vec_id,
-         |          row_number() OVER (PARTITION BY sh.query_id
-         |            ORDER BY round(${negEuclidean("e.embedding", "qs.qe")}, 6) DESC, sh.vec_id ASC) AS rn
-         |       FROM short sh JOIN embeddings e ON e.vec_id = sh.vec_id
-         |         JOIN qs ON qs.query_id = sh.query_id),
-         |ex AS (SELECT qs.query_id, e.vec_id,
-         |         row_number() OVER (PARTITION BY qs.query_id
-         |           ORDER BY round(${negEuclidean("e.embedding", "qs.qe")}, 6) DESC, e.vec_id ASC) AS rn
-         |       FROM embeddings e CROSS JOIN qs),
+      s"""WITH $pqRerankCtes,
          |h AS (SELECT count(*) AS sh FROM rr JOIN ex
          |        ON rr.query_id = ex.query_id AND rr.vec_id = ex.vec_id
          |       WHERE rr.rn <= 10 AND ex.rn <= 10),
@@ -1513,82 +1417,22 @@ object IndexQueries extends QueryRegistry {
          |FROM h, nq""".stripMargin,
 
     // LSH fallback ⇒ exact: same oracle as brute-force cosine.
-    "lsh_knn" ->
-      s"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
-         |SELECT e.vec_id AS vec_id, round(${cosine("e.embedding", "q.qe")}, 6) + 0.0 AS score
-         |FROM embeddings e, q
-         |ORDER BY score DESC, vec_id ASC
-         |LIMIT 10""".stripMargin,
+    "lsh_knn" -> exactCosineTop10,
 
     // multi-probe under-fills at this scale ⇒ fallback ⇒ exact.
-    "lsh_multiprobe_knn" ->
-      s"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
-         |SELECT e.vec_id AS vec_id, round(${cosine("e.embedding", "q.qe")}, 6) + 0.0 AS score
-         |FROM embeddings e, q
-         |ORDER BY score DESC, vec_id ASC
-         |LIMIT 10""".stripMargin,
+    "lsh_multiprobe_knn" -> exactCosineTop10,
 
-    "precision_euclid_in_cos20" ->
-      s"""WITH q AS (
-         |  SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 5),
-         |cos_ranked AS (
-         |  SELECT q.query_id, e.vec_id,
-         |         row_number() OVER (PARTITION BY q.query_id
-         |           ORDER BY round(${cosine("e.embedding", "q.qe")}, 6) DESC, e.vec_id ASC) AS rnk
-         |  FROM embeddings e, q),
-         |euc_ranked AS (
-         |  SELECT q.query_id, e.vec_id,
-         |         row_number() OVER (PARTITION BY q.query_id
-         |           ORDER BY round(${negEuclidean("e.embedding", "q.qe")}, 6) DESC, e.vec_id ASC) AS rnk
-         |  FROM embeddings e, q),
-         |cos_lists AS (
-         |  SELECT query_id, list(vec_id ORDER BY rnk) AS cos_ids
-         |  FROM cos_ranked WHERE rnk <= 20 GROUP BY query_id),
-         |euc_lists AS (
-         |  SELECT query_id, list(vec_id ORDER BY rnk) AS euc_ids
-         |  FROM euc_ranked WHERE rnk <= 10 GROUP BY query_id)
-         |SELECT c.query_id,
-         |       round(CAST(len(list_intersect(e.euc_ids, c.cos_ids)) AS DOUBLE) / 10.0, 6) AS precision
-         |FROM cos_lists c JOIN euc_lists e ON c.query_id = e.query_id
-         |ORDER BY c.query_id""".stripMargin,
+    "precision_euclid_in_cos20" -> cosEuclidOverlap(20, "precision"),
 
-    "lsh_similarity_join" ->
-      s"""WITH p AS (SELECT vec_id AS plane_id, embedding AS pe FROM embeddings WHERE vec_id < 16),
-         |bits AS (
-         |  SELECT e.vec_id, p.plane_id,
-         |         CASE WHEN ${dot("e.embedding", "p.pe")} >= 0 THEN 1 ELSE 0 END AS bit
-         |  FROM embeddings e CROSS JOIN p),
-         |keys AS (
-         |  SELECT vec_id, plane_id // 4 AS band,
-         |         CAST(sum(bit * (1 << (plane_id % 4))) AS BIGINT) AS key
-         |  FROM bits GROUP BY 1, 2),
-         |cand AS (
-         |  SELECT DISTINCT x.vec_id AS a, y.vec_id AS b
-         |  FROM keys x JOIN keys y ON x.band = y.band AND x.key = y.key AND x.vec_id < y.vec_id)
-         |SELECT c.a, c.b, round(${cosine("x.embedding", "y.embedding")}, 6) + 0.0 AS cos
-         |FROM cand c JOIN embeddings x ON c.a = x.vec_id JOIN embeddings y ON c.b = y.vec_id
-         |WHERE round(${cosine("x.embedding", "y.embedding")}, 6) >= 0.3
-         |ORDER BY a, b""".stripMargin,
+    "lsh_similarity_join" -> signBandPairs("ORDER BY a, b"),
 
     // data-dependent centroids ⇒ the PRUNING ITSELF replays in SQL:
     // per-vector argmin cell, nearest-2 cells to the query by the same
     // (distance, cid) tiebreak, exact rerank inside the probed cells
     "ivf_pruned_knn" ->
-      s"""WITH c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings WHERE vec_id < 8),
+      s"""WITH $cellsCtes,
          |q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-         |d AS (SELECT e.vec_id, c.cid,
-         |        list_sum(list_transform(list_zip(e.embedding, c.ce),
-         |          x -> (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)) * (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)))) AS d
-         |      FROM embeddings e CROSS JOIN c),
-         |cells AS (SELECT vec_id, cid AS cell FROM (
-         |    SELECT vec_id, cid,
-         |           row_number() OVER (PARTITION BY vec_id ORDER BY d ASC, cid ASC) AS rn
-         |    FROM d) WHERE rn = 1),
-         |qd AS (SELECT c.cid,
-         |        list_sum(list_transform(list_zip(q.qe, c.ce),
-         |          x -> (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)) * (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)))) AS d
-         |      FROM c, q),
-         |probe AS (SELECT cid FROM qd ORDER BY d ASC, cid ASC LIMIT 2)
+         |${ivfProbe(2, perQuery = false)}
          |SELECT e.vec_id AS vec_id, round(${cosine("e.embedding", "q.qe")}, 6) + 0.0 AS score
          |FROM embeddings e JOIN cells ON e.vec_id = cells.vec_id, q
          |WHERE cells.cell IN (SELECT cid FROM probe)
@@ -1599,24 +1443,9 @@ object IndexQueries extends QueryRegistry {
     // (distance, cid) tiebreak, exact cosine rerank of each query's
     // probed cells only, top-10 per query
     "ivf_multi_knn" ->
-      s"""WITH c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings WHERE vec_id < 8),
+      s"""WITH $cellsCtes,
          |qs AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 5),
-         |d AS (SELECT e.vec_id, c.cid,
-         |        list_sum(list_transform(list_zip(e.embedding, c.ce),
-         |          x -> (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)) * (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)))) AS d
-         |      FROM embeddings e CROSS JOIN c),
-         |cells AS (SELECT vec_id, cid AS cell FROM (
-         |    SELECT vec_id, cid,
-         |           row_number() OVER (PARTITION BY vec_id ORDER BY d ASC, cid ASC) AS rn
-         |    FROM d) WHERE rn = 1),
-         |qd AS (SELECT qs.query_id, c.cid,
-         |        list_sum(list_transform(list_zip(qs.qe, c.ce),
-         |          x -> (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)) * (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)))) AS d
-         |      FROM qs CROSS JOIN c),
-         |probe AS (SELECT query_id, cid FROM (
-         |    SELECT query_id, cid,
-         |           row_number() OVER (PARTITION BY query_id ORDER BY d ASC, cid ASC) AS rn
-         |    FROM qd) WHERE rn <= 2),
+         |${ivfProbe(2, perQuery = true)},
          |ranked AS (SELECT qs.query_id, e.vec_id,
          |    round(${cosine("e.embedding", "qs.qe")}, 6) + 0.0 AS score,
          |    row_number() OVER (PARTITION BY qs.query_id
@@ -1632,15 +1461,9 @@ object IndexQueries extends QueryRegistry {
     // reranks exactly ONE bucket (no fallback at these scales), and
     // every returned value is hash-checked
     "lsh_pruned_knn" ->
-      s"""WITH p AS (SELECT vec_id AS pid, embedding AS pe FROM embeddings WHERE vec_id < 4),
+      s"""WITH ${lshKeys(4)},
          |q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-         |keys AS (SELECT e.vec_id,
-         |           CAST(sum(CASE WHEN ${dot("e.embedding", "p.pe")} >= 0
-         |                         THEN (1::BIGINT << p.pid) ELSE 0 END) AS BIGINT) AS bucket
-         |         FROM embeddings e CROSS JOIN p GROUP BY e.vec_id),
-         |qb AS (SELECT CAST(sum(CASE WHEN ${dot("q.qe", "p.pe")} >= 0
-         |                            THEN (1::BIGINT << p.pid) ELSE 0 END) AS BIGINT) AS bucket
-         |       FROM p, q)
+         |qb AS (SELECT ${lshBucket("q.qe")} AS bucket FROM p, q)
          |SELECT e.vec_id AS vec_id, round(${cosine("e.embedding", "q.qe")}, 6) + 0.0 AS score
          |FROM embeddings e JOIN keys k ON e.vec_id = k.vec_id, q, qb
          |WHERE k.bucket = qb.bucket
@@ -1648,25 +1471,12 @@ object IndexQueries extends QueryRegistry {
          |LIMIT 10""".stripMargin,
 
     // full probe ⇒ exact: same oracle as brute-force cosine.
-    "ivf_knn" ->
-      s"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
-         |SELECT e.vec_id AS vec_id, round(${cosine("e.embedding", "q.qe")}, 6) + 0.0 AS score
-         |FROM embeddings e, q
-         |ORDER BY score DESC, vec_id ASC
-         |LIMIT 10""".stripMargin,
+    "ivf_knn" -> exactCosineTop10,
 
     // cells replayed in SQL: argmin by (squared distance, centroid id)
     // — the exact tiebreak of Ivf.assignExpr's (d, c) struct min
     "ivf_cell_join" ->
-      s"""WITH c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings WHERE vec_id < 8),
-         |d AS (SELECT e.vec_id, c.cid,
-         |        list_sum(list_transform(list_zip(e.embedding, c.ce),
-         |          x -> (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)) * (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)))) AS d
-         |      FROM embeddings e CROSS JOIN c),
-         |cells AS (SELECT vec_id, cid AS cell FROM (
-         |    SELECT vec_id, cid,
-         |           row_number() OVER (PARTITION BY vec_id ORDER BY d ASC, cid ASC) AS rn
-         |    FROM d) WHERE rn = 1),
+      s"""WITH $cellsCtes,
          |cand AS (SELECT x.vec_id AS a, y.vec_id AS b
          |         FROM cells x JOIN cells y ON x.cell = y.cell AND x.vec_id < y.vec_id)
          |SELECT cn.a, cn.b, round(${cosine("ex.embedding", "ey.embedding")}, 6) + 0.0 AS cos
@@ -1678,15 +1488,8 @@ object IndexQueries extends QueryRegistry {
     // directed within-cell dominance pairs (closer-to-centroid wins,
     // ties to the lower id), per-purged-vector rollup
     "semdedup_cell_purge" ->
-      s"""WITH c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings WHERE vec_id < 8),
-         |d AS (SELECT e.vec_id, c.cid,
-         |        list_sum(list_transform(list_zip(e.embedding, c.ce),
-         |          x -> (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)) * (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)))) AS d
-         |      FROM embeddings e CROSS JOIN c),
-         |m AS (SELECT vec_id, cid AS cell, round(d, 6) + 0.0 AS dc FROM (
-         |    SELECT vec_id, cid, d,
-         |           row_number() OVER (PARTITION BY vec_id ORDER BY d ASC, cid ASC) AS rn
-         |    FROM d) WHERE rn = 1),
+      s"""WITH $cellsCtes,
+         |m AS (SELECT vec_id, cell, round(d, 6) + 0.0 AS dc FROM cells),
          |pr AS (SELECT x.vec_id AS a, x.cell,
          |         round(${cosine("ex.embedding", "ey.embedding")}, 6) + 0.0 AS cos
          |       FROM m x JOIN m y ON x.cell = y.cell AND x.vec_id <> y.vec_id
@@ -1700,24 +1503,7 @@ object IndexQueries extends QueryRegistry {
 
     // identical banded-candidate pipeline as lsh_similarity_join's
     // oracle, topped with the cos DESC LIMIT 20 the declared query takes
-    "embedding_near_dup" ->
-      s"""WITH p AS (SELECT vec_id AS plane_id, embedding AS pe FROM embeddings WHERE vec_id < 16),
-         |bits AS (
-         |  SELECT e.vec_id, p.plane_id,
-         |         CASE WHEN ${dot("e.embedding", "p.pe")} >= 0 THEN 1 ELSE 0 END AS bit
-         |  FROM embeddings e CROSS JOIN p),
-         |keys AS (
-         |  SELECT vec_id, plane_id // 4 AS band,
-         |         CAST(sum(bit * (1 << (plane_id % 4))) AS BIGINT) AS key
-         |  FROM bits GROUP BY 1, 2),
-         |cand AS (
-         |  SELECT DISTINCT x.vec_id AS a, y.vec_id AS b
-         |  FROM keys x JOIN keys y ON x.band = y.band AND x.key = y.key AND x.vec_id < y.vec_id)
-         |SELECT c.a, c.b, round(${cosine("x.embedding", "y.embedding")}, 6) + 0.0 AS cos
-         |FROM cand c JOIN embeddings x ON c.a = x.vec_id JOIN embeddings y ON c.b = y.vec_id
-         |WHERE round(${cosine("x.embedding", "y.embedding")}, 6) >= 0.3
-         |ORDER BY cos DESC, a ASC, b ASC
-         |LIMIT 20""".stripMargin,
+    "embedding_near_dup" -> signBandPairs("ORDER BY cos DESC, a ASC, b ASC\nLIMIT 20"),
 
     // the invariant itself: every self-query hits rank 1.
     "hnsw_self_recall" ->
@@ -1787,29 +1573,7 @@ object IndexQueries extends QueryRegistry {
          |FROM exact_lists x JOIN quant_lists n ON x.query_id = n.query_id
          |ORDER BY x.query_id""".stripMargin,
 
-    "recall_euclid_vs_cosine" ->
-      s"""WITH q AS (
-         |  SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 5),
-         |cos_ranked AS (
-         |  SELECT q.query_id, e.vec_id,
-         |         row_number() OVER (PARTITION BY q.query_id
-         |           ORDER BY round(${cosine("e.embedding", "q.qe")}, 6) DESC, e.vec_id ASC) AS rnk
-         |  FROM embeddings e, q),
-         |euc_ranked AS (
-         |  SELECT q.query_id, e.vec_id,
-         |         row_number() OVER (PARTITION BY q.query_id
-         |           ORDER BY round(${negEuclidean("e.embedding", "q.qe")}, 6) DESC, e.vec_id ASC) AS rnk
-         |  FROM embeddings e, q),
-         |cos_lists AS (
-         |  SELECT query_id, list(vec_id ORDER BY rnk) AS cos_ids
-         |  FROM cos_ranked WHERE rnk <= 10 GROUP BY query_id),
-         |euc_lists AS (
-         |  SELECT query_id, list(vec_id ORDER BY rnk) AS euc_ids
-         |  FROM euc_ranked WHERE rnk <= 10 GROUP BY query_id)
-         |SELECT c.query_id,
-         |       round(CAST(len(list_intersect(c.cos_ids, e.euc_ids)) AS DOUBLE) / 10.0, 6) AS recall
-         |FROM cos_lists c JOIN euc_lists e ON c.query_id = e.query_id
-         |ORDER BY c.query_id""".stripMargin,
+    "recall_euclid_vs_cosine" -> cosEuclidOverlap(10, "recall"),
 
     "bq_hamming_recall" ->
       s"""WITH q AS (

@@ -343,11 +343,10 @@ object StreamQueries extends QueryRegistry {
     * sink. */
   private def decontamReplaySink(s: SparkSession, dir: String): String =
     SharedBuilds.of(s, dir, "stream-decontam-replay") {
-      val toks = TextOps.tokens(col("text"))
       val bits = Dedup.bloomBitsOf(
         documents(s, dir).filter(col("doc_id") < 10)
           .select(explode(array_distinct(
-            TextOps.shingleHashes(TextOps.shingles(toks, Dedup.ShingleN)))).as("h")))
+            TextOps.shingleHashes(Dedup.shingles(col("text"))))).as("h")))
       sinkReplay(s, dir, "dc", docsStreamInput(s, dir))(st =>
         DedupStream.contaminationScreen(st.filter(col("doc_id") >= 10), bits)
           .select(col("doc_id"), col("maybe_contaminated")))
@@ -886,26 +885,12 @@ object StreamQueries extends QueryRegistry {
       s.read.parquet(store)
     }
 
-  // the shared minhash signature/band CTE prefix (same fragments as
-  // TextQueries' minhash_near_dups oracle — one formula, many replays)
-  private def sigBndCtes: String =
-    s"""WITH t AS (SELECT doc_id, ${F.toks("text")} AS toks FROM documents),
-       |sh AS (SELECT doc_id, ${F.sh} AS sh FROM t),
-       |hs AS (SELECT doc_id, list_transform(sh, s -> ${F.md5L("s")} % ${F.P}) AS shh FROM sh),
-       |sig AS (SELECT doc_id, list_transform(generate_series(0, ${Dedup.MinhashH - 1}), i ->
-       |          coalesce(list_min(list_transform(shh, x -> ((i*2+1)*x + 7919*i) % ${F.P})), ${F.P})) AS sig
-       |        FROM hs),
-       |bnd AS (SELECT doc_id, b AS band,
-       |          list_reduce(list_prepend(0::BIGINT, sig[b*${Dedup.Rows}+1 : b*${Dedup.Rows}+${Dedup.Rows}]),
-       |                      (h, x) -> (h * 31 + x) % ${F.P}) AS band_hash
-       |        FROM sig, (SELECT unnest(generate_series(0, ${Dedup.Bands - 1})) AS b))""".stripMargin
-
   private def F = TextQueries.F
 
   override def oracle: Map[String, String] = Map(
 
     "stream_near_dup_replay" ->
-      s"""$sigBndCtes,
+      s"""WITH ${F.sigBndCtes},
          |cand AS (SELECT x.doc_id AS a, y.doc_id AS b, x.band
          |         FROM bnd x JOIN bnd y
          |           ON x.band = y.band AND x.band_hash = y.band_hash AND x.doc_id < y.doc_id)

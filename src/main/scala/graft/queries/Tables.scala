@@ -270,11 +270,116 @@ object OracleFrag {
   def cosine(a: String, b: String): String =
     s"(CASE WHEN ${norm(a)} = 0 OR ${norm(b)} = 0 THEN 0.0 ELSE ${dot(a, b)} / (${norm(a)} * ${norm(b)}) END)"
 
+  /** Σ (aᵢ−bᵢ)² in double. */
+  def sqDist(a: String, b: String): String =
+    s"list_sum(list_transform(list_zip($a, $b), x -> (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)) * (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE))))"
+
   /** negated ‖a−b‖₂ (descending-sort-uniform euclidean, src/index.rs:36-38). */
-  def negEuclidean(a: String, b: String): String =
-    s"(-sqrt(list_sum(list_transform(list_zip($a, $b), x -> (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)) * (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE))))))"
+  def negEuclidean(a: String, b: String): String = s"(-sqrt(${sqDist(a, b)}))"
 
   /** negated Σ|aᵢ−bᵢ|. */
   def negManhattan(a: String, b: String): String =
     s"(-list_sum(list_transform(list_zip($a, $b), x -> abs(CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)))))"
+
+  // The index replays below render CTE lists without a leading WITH, so
+  // a caller can open its own (plain or RECURSIVE) WITH and add CTEs
+  // around them. None has a line that starts with `|`, so each may be
+  // interpolated into a stripMargin template.
+
+  /** `Ivf.assignExpr` replayed over the data-dependent centroids (the
+    * first `nCells` embeddings, cell id = vec_id): each vector's cell is
+    * the argmin by (squared distance, centroid id), the tiebreak of
+    * assignExpr's (d, c) struct min. Defines `c` (cid, ce), `cd`
+    * (vec_id, cid, d) and `cells` (vec_id, cell, d). */
+  def ivfCells(nCells: Int): String =
+    s"""c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings WHERE vec_id < $nCells),
+       |cd AS (SELECT e.vec_id, c.cid, ${sqDist("e.embedding", "c.ce")} AS d
+       |      FROM embeddings e CROSS JOIN c),
+       |cells AS (SELECT vec_id, cid AS cell, d FROM (
+       |    SELECT vec_id, cid, d,
+       |           row_number() OVER (PARTITION BY vec_id ORDER BY d ASC, cid ASC) AS rn
+       |    FROM cd) WHERE rn = 1)""".stripMargin
+
+  /** `Ivf.nearestCells` replayed: the `nProbe` centroids of `c` (see
+    * [[ivfCells]]) nearest the query by the same (distance, cid)
+    * tiebreak. The query CTE is `qs` (query_id, qe) with `perQuery`,
+    * and the cells are picked per query_id; else it is the one-row `q`
+    * (qe). Defines `qcd` ([query_id,] cid, d) and `probe`
+    * ([query_id,] cid). */
+  def ivfProbe(nProbe: Int, perQuery: Boolean): String = {
+    val (q, key, part) =
+      if (perQuery) ("qs", "query_id, ", "PARTITION BY query_id ") else ("q", "", "")
+    s"""qcd AS (SELECT ${key}c.cid, ${sqDist(s"$q.qe", "c.ce")} AS d FROM $q CROSS JOIN c),
+       |probe AS (SELECT ${key}cid FROM (
+       |    SELECT ${key}cid, row_number() OVER (${part}ORDER BY d ASC, cid ASC) AS rn
+       |    FROM qcd) WHERE rn <= $nProbe)""".stripMargin
+  }
+
+  /** Squared distance between the `sub`-dim slices of subspace `sp.s`
+    * of two vectors, in double. */
+  private def subDist(a: String, b: String, sub: Int): String = {
+    def at(v: String) = s"CAST($v[sp.s * $sub + i] AS DOUBLE)"
+    s"list_sum(list_transform(generate_series(1, $sub), i -> (${at(a)} - ${at(b)}) * (${at(a)} - ${at(b)})))"
+  }
+
+  /** `Pq.encodeExpr` replayed with data-dependent seed codebooks: the
+    * rows of `src` with vec_id &lt; `k` give code j's slices, and each
+    * vector's code in each of the `m` subspaces of `sub` dims is the
+    * argmin by (subspace distance, code), the tiebreak of encodeExpr's
+    * struct min. `vec` names the encoded array column of `src` (the
+    * embedding, or a residual for IVF-PQ). Defines `sp` (s), `b` (j,
+    * be), `d` (vec_id, s, j, d) and `codes` (vec_id, s, code). */
+  def pqCodes(src: String, vec: String, m: Int, sub: Int, k: Int): String =
+    s"""sp AS (SELECT s FROM range(0, $m) t(s)),
+       |b AS (SELECT vec_id AS j, $vec AS be FROM $src WHERE vec_id < $k),
+       |d AS (SELECT e.vec_id, sp.s, b.j, ${subDist(s"e.$vec", "b.be", sub)} AS d
+       |      FROM $src e CROSS JOIN b CROSS JOIN sp),
+       |codes AS (SELECT vec_id, s, j AS code FROM (
+       |    SELECT vec_id, s, j,
+       |           row_number() OVER (PARTITION BY vec_id, s ORDER BY d ASC, j ASC) AS rn
+       |    FROM d) WHERE rn = 1)""".stripMargin
+
+  /** `Pq.adcTable` replayed: the subspace distance from the query
+    * vector `q.vec` to every seed code of [[pqCodes]]'s `b` and `sp`.
+    * `key` columns of `q` ride along, one table per query row: none
+    * for a single query, query_id for a query batch, cid for IVF-PQ's
+    * per-probed-cell residual queries. Defines `qt` (key…, s, j, d). */
+  def pqAdc(q: String, vec: String, sub: Int, key: String*): String =
+    s"""qt AS (SELECT ${key.map(k => s"$q.$k, ").mkString}sp.s, b.j, ${subDist(s"$q.$vec", "b.be", sub)} AS d
+       |      FROM $q CROSS JOIN b CROSS JOIN sp)""".stripMargin
+
+  /** `Lsh.bucketCol` over explicit planes: bit p of the bucket is set
+    * when the vector `v` lies on the non-negative side of plane p (the
+    * embedding with vec_id = p). Aggregates over the plane rows `p`
+    * (pid, pe) of [[lshKeys]]. */
+  def lshBucket(v: String): String =
+    s"CAST(sum(CASE WHEN ${dot(v, "p.pe")} >= 0 THEN (1::BIGINT << p.pid) ELSE 0 END) AS BIGINT)"
+
+  /** The data-plane LSH store replayed: defines `p` (pid, pe), the first
+    * `nPlanes` embeddings as planes, and `keys` (vec_id, bucket), every
+    * vector's [[lshBucket]]. */
+  def lshKeys(nPlanes: Int): String =
+    s"""p AS (SELECT vec_id AS pid, embedding AS pe FROM embeddings WHERE vec_id < $nPlanes),
+       |keys AS (SELECT e.vec_id, ${lshBucket("e.embedding")} AS bucket
+       |         FROM embeddings e CROSS JOIN p GROUP BY e.vec_id)""".stripMargin
+
+  /** `Dedup.lshEmbeddingPairs`'s banded sign bits replayed: the first
+    * `nPlanes` embeddings are planes, plane i sets bit i mod `bandBits`
+    * of band i / `bandBits`, and two vectors are candidates when they
+    * share a (band, key). Defines `p` (plane_id, pe), `bits` (vec_id,
+    * plane_id, bit), `keys` (vec_id, band, key) and `cand` (a, b),
+    * distinct with a &lt; b. */
+  def signBands(nPlanes: Int, bandBits: Int): String =
+    s"""p AS (SELECT vec_id AS plane_id, embedding AS pe FROM embeddings WHERE vec_id < $nPlanes),
+       |bits AS (
+       |  SELECT e.vec_id, p.plane_id,
+       |         CASE WHEN ${dot("e.embedding", "p.pe")} >= 0 THEN 1 ELSE 0 END AS bit
+       |  FROM embeddings e CROSS JOIN p),
+       |keys AS (
+       |  SELECT vec_id, plane_id // $bandBits AS band,
+       |         CAST(sum(bit * (1 << (plane_id % $bandBits))) AS BIGINT) AS key
+       |  FROM bits GROUP BY 1, 2),
+       |cand AS (
+       |  SELECT DISTINCT x.vec_id AS a, y.vec_id AS b
+       |  FROM keys x JOIN keys y ON x.band = y.band AND x.key = y.key AND x.vec_id < y.vec_id)""".stripMargin
 }

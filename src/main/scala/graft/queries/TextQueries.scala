@@ -30,9 +30,7 @@ object TextQueries extends QueryRegistry {
   private[queries] def bloomScreenCtes: String = {
     val probeIdx = (0 until graft.operators.Dedup.BloomK).mkString("[", ",", "]")
     val probe = graft.operators.Dedup.bloomProbeSql("i", "h")
-    s"""WITH t AS (SELECT doc_id, ${F.toks("text")} AS toks FROM documents),
-       |sh AS (SELECT doc_id, ${F.sh} AS sh FROM t),
-       |hs AS (SELECT doc_id, list_transform(sh, s -> ${F.md5L("s")} % ${F.P}) AS shh FROM sh),
+    s"""WITH ${F.hsCtes},
        |bh AS (SELECT DISTINCT unnest(list_distinct(shh)) AS h FROM hs WHERE doc_id < 10),
        |bset AS (SELECT DISTINCT $probe AS p
        |         FROM bh, (SELECT unnest($probeIdx) AS i)),
@@ -76,6 +74,98 @@ object TextQueries extends QueryRegistry {
       s"""(CASE WHEN ${md5L(s"'split:'||$id")} % 100 < 90 THEN 'train'
          |      WHEN ${md5L(s"'split:'||$id")} % 100 < 95 THEN 'val'
          |      ELSE 'test' END)""".stripMargin
+
+    // The CTE lists below carry no leading WITH, so a caller opens its
+    // own (plain or RECURSIVE) WITH; none has a line that starts with
+    // `|`, so each may be interpolated into a stripMargin template.
+
+    /** `Dedup.shingled` over every document: `t` (doc_id, toks), `sh`
+      * (doc_id, sh) and `hs` (doc_id, shh). */
+    val hsCtes: String =
+      s"""t AS (SELECT doc_id, ${toks("text")} AS toks FROM documents),
+         |sh AS (SELECT doc_id, $sh AS sh FROM t),
+         |hs AS (SELECT doc_id, list_transform(sh, s -> ${md5L("s")} % $P) AS shh FROM sh)""".stripMargin
+
+    /** The `Dedup.minhashBands` recipe over [[hsCtes]]: `sig` (doc_id,
+      * shh, sig) is the MinHash signature under
+      * hᵢ(x) = ((2i+1)·x + 7919·i) mod P, all-P for an empty set, and
+      * `bnd` (doc_id, band, band_hash) folds each band's slice as
+      * (h·31 + x) mod P from 0. A doc with an empty shingle set is in
+      * no band. */
+    val sigBndCtes: String =
+      s"""$hsCtes,
+         |sig AS (SELECT doc_id, shh, list_transform(generate_series(0, ${Dedup.MinhashH - 1}), i ->
+         |          coalesce(list_min(list_transform(shh, x -> ((i*2+1)*x + 7919*i) % $P)), $P)) AS sig
+         |        FROM hs),
+         |bnd AS (SELECT doc_id, b AS band,
+         |          list_reduce(list_prepend(0::BIGINT, sig[b*${Dedup.Rows}+1 : b*${Dedup.Rows}+${Dedup.Rows}]),
+         |                      (h, x) -> (h * 31 + x) % $P) AS band_hash
+         |        FROM sig, (SELECT unnest(generate_series(0, ${Dedup.Bands - 1})) AS b)
+         |        WHERE len(shh) > 0)""".stripMargin
+
+    /** `Dedup.candidatePairs` over [[sigBndCtes]]: `cand` (a, b), each
+      * pair of docs sharing a (band, band_hash) bucket once, a &lt; b. */
+    val candCte: String =
+      """cand AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
+        |         FROM bnd x JOIN bnd y
+        |           ON x.band = y.band AND x.band_hash = y.band_hash AND x.doc_id < y.doc_id)""".stripMargin
+
+    /** `Dedup.minhashNearDupsFrom` at Jaccard 0.3: [[sigBndCtes]] and
+      * [[candCte]], then `j` (a, b, jaccard), every candidate's
+      * rounded shingle Jaccard, and `pairs` (a, b), those at 0.3 or
+      * above. */
+    val nearDupCtes: String =
+      s"""$sigBndCtes,
+         |$candCte,
+         |j AS (SELECT c.a, c.b, round(${jac("x.sh", "y.sh")}, 6) AS jaccard
+         |      FROM cand c JOIN sh x ON c.a = x.doc_id JOIN sh y ON c.b = y.doc_id),
+         |pairs AS (SELECT a, b FROM j WHERE jaccard >= 0.3)""".stripMargin
+
+    /** `Components.connectedComponents` over `pairs`: `edges` (u, v)
+      * both ways, `reach` (node, r), recursive, so the caller's WITH
+      * must be RECURSIVE, and `cc` (node, component), the smallest id
+      * a node reaches. */
+    val componentCtes: String =
+      """edges AS (SELECT a AS u, b AS v FROM pairs UNION SELECT b AS u, a AS v FROM pairs),
+        |reach AS (SELECT u AS node, u AS r FROM edges
+        |          UNION
+        |          SELECT e.v AS node, reach.r AS r FROM reach JOIN edges e ON reach.node = e.u),
+        |cc AS (SELECT node, min(r) AS component FROM reach GROUP BY node)""".stripMargin
+
+    /** `TextOps.simhashFromHashes` over the token md5s of the documents
+      * `where` selects: `t`, `h` (doc_id, tok), `th` (doc_id, th),
+      * `bits` (doc_id, b, bit), bit b set when the ±1 vote of bit b
+      * across the tokens is positive, and `sh` (doc_id, simhash). A doc
+      * with no token has no row. */
+    def simhashCtes(bits: Int, where: String = "TRUE"): String =
+      s"""t AS (SELECT doc_id, ${toks("text")} AS toks FROM documents WHERE $where),
+         |h AS (SELECT doc_id, unnest(toks) AS tok FROM t),
+         |th AS (SELECT doc_id, ${md5L("tok")} AS th FROM h),
+         |bits AS (SELECT doc_id, b,
+         |           CASE WHEN sum(CASE WHEN (th % (2*(1::BIGINT<<b))) >= (1::BIGINT<<b)
+         |                              THEN 1 ELSE -1 END) > 0
+         |                THEN (1::BIGINT<<b) ELSE 0 END AS bit
+         |         FROM th, (SELECT unnest(generate_series(0, ${bits - 1})) AS b) GROUP BY doc_id, b),
+         |sh AS (SELECT doc_id, CAST(sum(bit) AS BIGINT) AS simhash FROM bits GROUP BY doc_id)""".stripMargin
+
+    /** `dupSpans` over [[hsCtes]]: shingle positions `pe`/`p`, the
+      * hashes held by at most 10 docs (`keep`), aligned matches `m`
+      * (a, b, pa, pb, diff) and `r`, and `spans` (a, b, diff, grp,
+      * a_start, b_start, n_sh), runs of two or more consecutive
+      * shared shingles. */
+    val spanCtes: String =
+      s"""$hsCtes,
+         |pe AS (SELECT doc_id, unnest(list_transform(generate_series(1, len(shh)),
+         |                       i -> {'pos': i - 1, 'h': shh[i]})) AS e FROM hs),
+         |p AS (SELECT doc_id, e.pos AS pos, e.h AS h FROM pe),
+         |keep AS (SELECT p.* FROM p JOIN
+         |           (SELECT h FROM p GROUP BY h HAVING count(DISTINCT doc_id) <= 10) d USING (h)),
+         |m AS (SELECT x.doc_id AS a, y.doc_id AS b, x.pos AS pa, y.pos AS pb, x.pos - y.pos AS diff
+         |      FROM keep x JOIN keep y ON x.h = y.h AND x.doc_id < y.doc_id),
+         |r AS (SELECT a, b, diff, pa, pb,
+         |        pa - row_number() OVER (PARTITION BY a, b, diff ORDER BY pa) AS grp FROM m),
+         |spans AS (SELECT a, b, diff, grp, min(pa) AS a_start, min(pb) AS b_start, count(*) AS n_sh
+         |          FROM r GROUP BY a, b, diff, grp HAVING count(*) >= 2)""".stripMargin
   }
 
   /** Shared dedup-index build: the three minhash-family queries
@@ -587,8 +677,7 @@ object TextQueries extends QueryRegistry {
     // winnowing: per-doc fingerprint-set profile (w=4 over 5-gram
     // hashes); shared fingerprints between docs = containment signal
     "winnow_fingerprints" -> ((s, dir) => {
-      val toks = TextOps.tokens(col("text"))
-      val shh = TextOps.shingleHashes(TextOps.shingles(toks, Dedup.ShingleN))
+      val shh = TextOps.shingleHashes(Dedup.shingles(col("text")))
       // materialize the shingle hashes before winnowing: winnow embeds
       // its input 4x and `fps` is consumed twice more, so the inlined
       // tree grows to ~8 copies of the tokenize→shingle→md5 pipeline —
@@ -1258,9 +1347,7 @@ object TextQueries extends QueryRegistry {
          |FROM win ORDER BY doc_id""".stripMargin,
 
     "winnow_containment" ->
-      s"""WITH t AS (SELECT doc_id, ${F.toks("text")} AS toks FROM documents),
-         |sh AS (SELECT doc_id, ${F.sh} AS sh FROM t),
-         |hs AS (SELECT doc_id, list_transform(sh, s -> ${F.md5L("s")} % ${F.P}) AS shh FROM sh),
+      s"""WITH ${F.hsCtes},
          |win AS (SELECT doc_id,
          |          CASE WHEN len(shh) < 4 THEN list_distinct(shh)
          |               ELSE list_distinct(list_transform(generate_series(1, len(shh)-3),
@@ -1293,37 +1380,12 @@ object TextQueries extends QueryRegistry {
          |FROM g GROUP BY 1 ORDER BY group_size""".stripMargin,
 
     "minhash_near_dups" ->
-      s"""WITH t AS (SELECT doc_id, ${F.toks("text")} AS toks FROM documents),
-         |sh AS (SELECT doc_id, ${F.sh} AS sh FROM t),
-         |hs AS (SELECT doc_id, list_transform(sh, s -> ${F.md5L("s")} % ${F.P}) AS shh FROM sh),
-         |sig AS (SELECT doc_id, list_transform(generate_series(0, ${Dedup.MinhashH - 1}), i ->
-         |          coalesce(list_min(list_transform(shh, x -> ((i*2+1)*x + 7919*i) % ${F.P})), ${F.P})) AS sig
-         |        FROM hs),
-         |bnd AS (SELECT doc_id, b AS band,
-         |          list_reduce(list_prepend(0::BIGINT, sig[b*${Dedup.Rows}+1 : b*${Dedup.Rows}+${Dedup.Rows}]),
-         |                      (h, x) -> (h * 31 + x) % ${F.P}) AS band_hash
-         |        FROM sig, (SELECT unnest(generate_series(0, ${Dedup.Bands - 1})) AS b)),
-         |cand AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-         |         FROM bnd x JOIN bnd y
-         |           ON x.band = y.band AND x.band_hash = y.band_hash AND x.doc_id < y.doc_id),
-         |j AS (SELECT c.a, c.b, round(${F.jac("x.sh", "y.sh")}, 6) AS jaccard
-         |      FROM cand c JOIN sh x ON c.a = x.doc_id JOIN sh y ON c.b = y.doc_id)
+      s"""WITH ${F.nearDupCtes}
          |SELECT a, b, jaccard FROM j WHERE jaccard >= 0.3 ORDER BY a, b""".stripMargin,
 
     "semantic_dedup" ->
-      s"""WITH t AS (SELECT doc_id, ${F.toks("text")} AS toks FROM documents),
-         |sh AS (SELECT doc_id, ${F.sh} AS sh FROM t),
-         |hs AS (SELECT doc_id, list_transform(sh, s -> ${F.md5L("s")} % ${F.P}) AS shh FROM sh),
-         |sig AS (SELECT doc_id, list_transform(generate_series(0, ${Dedup.MinhashH - 1}), i ->
-         |          coalesce(list_min(list_transform(shh, x -> ((i*2+1)*x + 7919*i) % ${F.P})), ${F.P})) AS sig
-         |        FROM hs),
-         |bnd AS (SELECT doc_id, b AS band,
-         |          list_reduce(list_prepend(0::BIGINT, sig[b*${Dedup.Rows}+1 : b*${Dedup.Rows}+${Dedup.Rows}]),
-         |                      (h, x) -> (h * 31 + x) % ${F.P}) AS band_hash
-         |        FROM sig, (SELECT unnest(generate_series(0, ${Dedup.Bands - 1})) AS b)),
-         |cand AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-         |         FROM bnd x JOIN bnd y
-         |           ON x.band = y.band AND x.band_hash = y.band_hash AND x.doc_id < y.doc_id),
+      s"""WITH ${F.sigBndCtes},
+         |${F.candCte},
          |j AS (SELECT c.a, c.b,
          |        round(${F.jac("sa.sh", "sb.sh")}, 6) AS jaccard,
          |        round(${cosine("ex.embedding", "ey.embedding")}, 6) + 0.0 AS cos
@@ -1356,69 +1418,23 @@ object TextQueries extends QueryRegistry {
          |FROM d GROUP BY split ORDER BY split""".stripMargin,
 
     "split_leakage_audit" ->
-      s"""WITH t AS (SELECT doc_id, ${F.toks("text")} AS toks FROM documents),
-         |sh AS (SELECT doc_id, ${F.sh} AS sh FROM t),
-         |hs AS (SELECT doc_id, list_transform(sh, s -> ${F.md5L("s")} % ${F.P}) AS shh FROM sh),
-         |sig AS (SELECT doc_id, list_transform(generate_series(0, ${Dedup.MinhashH - 1}), i ->
-         |          coalesce(list_min(list_transform(shh, x -> ((i*2+1)*x + 7919*i) % ${F.P})), ${F.P})) AS sig
-         |        FROM hs),
-         |bnd AS (SELECT doc_id, b AS band,
-         |          list_reduce(list_prepend(0::BIGINT, sig[b*${Dedup.Rows}+1 : b*${Dedup.Rows}+${Dedup.Rows}]),
-         |                      (h, x) -> (h * 31 + x) % ${F.P}) AS band_hash
-         |        FROM sig, (SELECT unnest(generate_series(0, ${Dedup.Bands - 1})) AS b)),
-         |cand AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-         |         FROM bnd x JOIN bnd y
-         |           ON x.band = y.band AND x.band_hash = y.band_hash AND x.doc_id < y.doc_id),
-         |j AS (SELECT c.a, c.b, round(${F.jac("x.sh", "y.sh")}, 6) AS jaccard
-         |      FROM cand c JOIN sh x ON c.a = x.doc_id JOIN sh y ON c.b = y.doc_id),
+      s"""WITH ${F.nearDupCtes},
          |pr AS (SELECT a, b, ${F.split("a")} AS split_a, ${F.split("b")} AS split_b
-         |       FROM j WHERE jaccard >= 0.3)
+         |       FROM pairs)
          |SELECT split_a, split_b, CAST(count(*) AS BIGINT) AS n_pairs,
          |       CAST(sum(CASE WHEN split_a <> split_b THEN 1 ELSE 0 END) AS BIGINT) AS n_cross
          |FROM pr GROUP BY split_a, split_b ORDER BY split_a, split_b""".stripMargin,
 
     "near_dup_purge" ->
-      s"""WITH t AS (SELECT doc_id, ${F.toks("text")} AS toks FROM documents),
-         |sh AS (SELECT doc_id, ${F.sh} AS sh FROM t),
-         |hs AS (SELECT doc_id, list_transform(sh, s -> ${F.md5L("s")} % ${F.P}) AS shh FROM sh),
-         |sig AS (SELECT doc_id, list_transform(generate_series(0, ${Dedup.MinhashH - 1}), i ->
-         |          coalesce(list_min(list_transform(shh, x -> ((i*2+1)*x + 7919*i) % ${F.P})), ${F.P})) AS sig
-         |        FROM hs),
-         |bnd AS (SELECT doc_id, b AS band,
-         |          list_reduce(list_prepend(0::BIGINT, sig[b*${Dedup.Rows}+1 : b*${Dedup.Rows}+${Dedup.Rows}]),
-         |                      (h, x) -> (h * 31 + x) % ${F.P}) AS band_hash
-         |        FROM sig, (SELECT unnest(generate_series(0, ${Dedup.Bands - 1})) AS b)),
-         |cand AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-         |         FROM bnd x JOIN bnd y
-         |           ON x.band = y.band AND x.band_hash = y.band_hash AND x.doc_id < y.doc_id),
-         |pairs AS (SELECT c.a, c.b FROM cand c JOIN sh x ON c.a = x.doc_id JOIN sh y ON c.b = y.doc_id
-         |          WHERE round(${F.jac("x.sh", "y.sh")}, 6) >= 0.3),
+      s"""WITH ${F.nearDupCtes},
          |drops AS (SELECT DISTINCT b AS doc_id FROM pairs)
          |SELECT CAST((SELECT count(*) FROM documents) AS BIGINT) AS n_total,
          |       CAST((SELECT count(*) FROM drops) AS BIGINT) AS n_dropped,
          |       CAST((SELECT count(*) FROM documents WHERE doc_id NOT IN (SELECT doc_id FROM drops)) AS BIGINT) AS n_kept""".stripMargin,
 
     "dedup_components" ->
-      s"""WITH RECURSIVE t AS (SELECT doc_id, ${F.toks("text")} AS toks FROM documents),
-         |sh AS (SELECT doc_id, ${F.sh} AS sh FROM t),
-         |hs AS (SELECT doc_id, list_transform(sh, s -> ${F.md5L("s")} % ${F.P}) AS shh FROM sh),
-         |sig AS (SELECT doc_id, list_transform(generate_series(0, ${Dedup.MinhashH - 1}), i ->
-         |          coalesce(list_min(list_transform(shh, x -> ((i*2+1)*x + 7919*i) % ${F.P})), ${F.P})) AS sig
-         |        FROM hs),
-         |bnd AS (SELECT doc_id, b AS band,
-         |          list_reduce(list_prepend(0::BIGINT, sig[b*${Dedup.Rows}+1 : b*${Dedup.Rows}+${Dedup.Rows}]),
-         |                      (h, x) -> (h * 31 + x) % ${F.P}) AS band_hash
-         |        FROM sig, (SELECT unnest(generate_series(0, ${Dedup.Bands - 1})) AS b)),
-         |cand AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-         |         FROM bnd x JOIN bnd y
-         |           ON x.band = y.band AND x.band_hash = y.band_hash AND x.doc_id < y.doc_id),
-         |pairs AS (SELECT c.a, c.b FROM cand c JOIN sh x ON c.a = x.doc_id JOIN sh y ON c.b = y.doc_id
-         |          WHERE round(${F.jac("x.sh", "y.sh")}, 6) >= 0.3),
-         |edges AS (SELECT a AS u, b AS v FROM pairs UNION SELECT b AS u, a AS v FROM pairs),
-         |reach AS (SELECT u AS node, u AS r FROM edges
-         |          UNION
-         |          SELECT e.v AS node, reach.r AS r FROM reach JOIN edges e ON reach.node = e.u),
-         |cc AS (SELECT node, min(r) AS component FROM reach GROUP BY node)
+      s"""WITH RECURSIVE ${F.nearDupCtes},
+         |${F.componentCtes}
          |SELECT component, CAST(count(*) AS BIGINT) AS n_docs, max(node) AS max_doc
          |FROM cc GROUP BY component ORDER BY component""".stripMargin,
 
@@ -1454,26 +1470,8 @@ object TextQueries extends QueryRegistry {
   /** The funnel stage chain through st4 (per-doc keep flags) — shared
     * by the census oracle and the export-census oracle. */
   private lazy val funnelOracleCtes: String =
-      s"""WITH RECURSIVE t AS (SELECT doc_id, ${F.toks("text")} AS toks FROM documents),
-         |sh AS (SELECT doc_id, ${F.sh} AS sh FROM t),
-         |hs AS (SELECT doc_id, list_transform(sh, s -> ${F.md5L("s")} % ${F.P}) AS shh FROM sh),
-         |sig AS (SELECT doc_id, list_transform(generate_series(0, ${Dedup.MinhashH - 1}), i ->
-         |          coalesce(list_min(list_transform(shh, x -> ((i*2+1)*x + 7919*i) % ${F.P})), ${F.P})) AS sig
-         |        FROM hs),
-         |bnd AS (SELECT doc_id, b AS band,
-         |          list_reduce(list_prepend(0::BIGINT, sig[b*${Dedup.Rows}+1 : b*${Dedup.Rows}+${Dedup.Rows}]),
-         |                      (h, x) -> (h * 31 + x) % ${F.P}) AS band_hash
-         |        FROM sig, (SELECT unnest(generate_series(0, ${Dedup.Bands - 1})) AS b)),
-         |cand AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-         |         FROM bnd x JOIN bnd y
-         |           ON x.band = y.band AND x.band_hash = y.band_hash AND x.doc_id < y.doc_id),
-         |pairs AS (SELECT c.a, c.b FROM cand c JOIN sh x ON c.a = x.doc_id JOIN sh y ON c.b = y.doc_id
-         |          WHERE round(${F.jac("x.sh", "y.sh")}, 6) >= 0.3),
-         |edges AS (SELECT a AS u, b AS v FROM pairs UNION SELECT b AS u, a AS v FROM pairs),
-         |reach AS (SELECT u AS node, u AS r FROM edges
-         |          UNION
-         |          SELECT e.v AS node, reach.r AS r FROM reach JOIN edges e ON reach.node = e.u),
-         |cc AS (SELECT node, min(r) AS component FROM reach GROUP BY node),
+      s"""WITH RECURSIVE ${F.nearDupCtes},
+         |${F.componentCtes},
          |bh AS (SELECT DISTINCT unnest(list_distinct(shh)) AS h FROM hs WHERE doc_id < 10),
          |chh AS (SELECT doc_id, unnest(list_distinct(shh)) AS h FROM hs WHERE doc_id >= 10),
          |contam AS (SELECT DISTINCT doc_id FROM chh JOIN bh USING (h)),
@@ -1540,41 +1538,26 @@ object TextQueries extends QueryRegistry {
          |WHERE st4.final_keep
          |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
+  /** Every doc pair within Hamming `maxDist` of each other's
+    * `bits`-bit SimHash, all pairs: pigeonhole banding is lossless, so
+    * the banded pair search must return exactly these. */
+  private def simhashPairsOracle(bits: Int, maxDist: Int): String =
+    s"""WITH ${F.simhashCtes(bits)}
+       |SELECT x.doc_id AS a, y.doc_id AS b,
+       |       CAST(bit_count(xor(x.simhash, y.simhash)) AS BIGINT) AS hamming
+       |FROM sh x JOIN sh y ON x.doc_id < y.doc_id
+       |WHERE bit_count(xor(x.simhash, y.simhash)) <= $maxDist
+       |ORDER BY a, b""".stripMargin
+
   private lazy val oracleTail: Map[String, String] = Map(
     "dup_span_stats" ->
-      s"""WITH t AS (SELECT doc_id, ${F.toks("text")} AS toks FROM documents),
-         |sh AS (SELECT doc_id, ${F.sh} AS sh FROM t),
-         |hs AS (SELECT doc_id, list_transform(sh, s -> ${F.md5L("s")} % ${F.P}) AS shh FROM sh),
-         |pe AS (SELECT doc_id, unnest(list_transform(generate_series(1, len(shh)),
-         |                       i -> {'pos': i - 1, 'h': shh[i]})) AS e FROM hs),
-         |p AS (SELECT doc_id, e.pos AS pos, e.h AS h FROM pe),
-         |keep AS (SELECT p.* FROM p JOIN
-         |           (SELECT h FROM p GROUP BY h HAVING count(DISTINCT doc_id) <= 10) d USING (h)),
-         |m AS (SELECT x.doc_id AS a, y.doc_id AS b, x.pos AS pa, y.pos AS pb, x.pos - y.pos AS diff
-         |      FROM keep x JOIN keep y ON x.h = y.h AND x.doc_id < y.doc_id),
-         |r AS (SELECT a, b, diff, pa, pb,
-         |        pa - row_number() OVER (PARTITION BY a, b, diff ORDER BY pa) AS grp FROM m),
-         |spans AS (SELECT a, b, diff, grp, min(pa) AS a_start, min(pb) AS b_start, count(*) AS n_sh
-         |          FROM r GROUP BY a, b, diff, grp HAVING count(*) >= 2)
+      s"""WITH ${F.spanCtes}
          |SELECT a, b, CAST(a_start AS BIGINT) AS a_start, CAST(b_start AS BIGINT) AS b_start,
          |       CAST(n_sh + ${Dedup.ShingleN - 1} AS BIGINT) AS span_tokens
          |FROM spans ORDER BY span_tokens DESC, a, b, a_start, b_start LIMIT 30""".stripMargin,
 
     "dup_span_trim_stats" ->
-      s"""WITH t AS (SELECT doc_id, ${F.toks("text")} AS toks FROM documents),
-         |sh AS (SELECT doc_id, ${F.sh} AS sh FROM t),
-         |hs AS (SELECT doc_id, list_transform(sh, s -> ${F.md5L("s")} % ${F.P}) AS shh FROM sh),
-         |pe AS (SELECT doc_id, unnest(list_transform(generate_series(1, len(shh)),
-         |                       i -> {'pos': i - 1, 'h': shh[i]})) AS e FROM hs),
-         |p AS (SELECT doc_id, e.pos AS pos, e.h AS h FROM pe),
-         |keep AS (SELECT p.* FROM p JOIN
-         |           (SELECT h FROM p GROUP BY h HAVING count(DISTINCT doc_id) <= 10) d USING (h)),
-         |m AS (SELECT x.doc_id AS a, y.doc_id AS b, x.pos AS pa, y.pos AS pb, x.pos - y.pos AS diff
-         |      FROM keep x JOIN keep y ON x.h = y.h AND x.doc_id < y.doc_id),
-         |r AS (SELECT a, b, diff, pa, pb,
-         |        pa - row_number() OVER (PARTITION BY a, b, diff ORDER BY pa) AS grp FROM m),
-         |spans AS (SELECT a, b, diff, grp, min(pa) AS a_start, min(pb) AS b_start, count(*) AS n_sh
-         |          FROM r GROUP BY a, b, diff, grp HAVING count(*) >= 2),
+      s"""WITH ${F.spanCtes},
          |s2 AS (SELECT b AS doc_id, b_start AS s0,
          |              b_start + n_sh + ${Dedup.ShingleN - 1} AS e0 FROM spans),
          |o AS (SELECT doc_id, s0, e0,
@@ -1678,51 +1661,15 @@ object TextQueries extends QueryRegistry {
          |FROM d ORDER BY rep_ratio DESC, doc_id ASC LIMIT 20""".stripMargin,
 
     "simhash_head" ->
-      s"""WITH t AS (SELECT doc_id, ${F.toks("text")} AS toks FROM documents WHERE doc_id < 20),
-         |h AS (SELECT doc_id, unnest(toks) AS tok FROM t),
-         |th AS (SELECT doc_id, ${F.md5L("tok")} AS th FROM h),
-         |bits AS (SELECT doc_id, b,
-         |           CASE WHEN sum(CASE WHEN (th % (2*(1::BIGINT<<b))) >= (1::BIGINT<<b)
-         |                              THEN 1 ELSE -1 END) > 0
-         |                THEN (1::BIGINT<<b) ELSE 0 END AS bit
-         |         FROM th, (SELECT unnest(generate_series(0,15)) AS b) GROUP BY doc_id, b)
-         |SELECT doc_id, CAST(sum(bit) AS BIGINT) AS simhash
-         |FROM bits GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+      s"""WITH ${F.simhashCtes(16, "doc_id < 20")}
+         |SELECT doc_id, simhash FROM sh ORDER BY doc_id""".stripMargin,
 
     // 60-bit sketch, all-pairs replay (banding is lossless, so the
     // oracle never needs to know about bands)
-    "simhash_wide_banded" ->
-      s"""WITH t AS (SELECT doc_id, ${F.toks("text")} AS toks FROM documents),
-         |h AS (SELECT doc_id, unnest(toks) AS tok FROM t),
-         |th AS (SELECT doc_id, ${F.md5L("tok")} AS th FROM h),
-         |bits AS (SELECT doc_id, b,
-         |           CASE WHEN sum(CASE WHEN (th % (2*(1::BIGINT<<b))) >= (1::BIGINT<<b)
-         |                              THEN 1 ELSE -1 END) > 0
-         |                THEN (1::BIGINT<<b) ELSE 0 END AS bit
-         |         FROM th, (SELECT unnest(generate_series(0,59)) AS b) GROUP BY doc_id, b),
-         |sh AS (SELECT doc_id, CAST(sum(bit) AS BIGINT) AS simhash FROM bits GROUP BY doc_id)
-         |SELECT x.doc_id AS a, y.doc_id AS b,
-         |       CAST(bit_count(xor(x.simhash, y.simhash)) AS BIGINT) AS hamming
-         |FROM sh x JOIN sh y ON x.doc_id < y.doc_id
-         |WHERE bit_count(xor(x.simhash, y.simhash)) <= 7
-         |ORDER BY a, b""".stripMargin,
+    "simhash_wide_banded" -> simhashPairsOracle(60, 7),
 
     // banding is recall-lossless, so the oracle is the same all-pairs SQL
-    "simhash_pairs_banded" ->
-      s"""WITH t AS (SELECT doc_id, ${F.toks("text")} AS toks FROM documents),
-         |h AS (SELECT doc_id, unnest(toks) AS tok FROM t),
-         |th AS (SELECT doc_id, ${F.md5L("tok")} AS th FROM h),
-         |bits AS (SELECT doc_id, b,
-         |           CASE WHEN sum(CASE WHEN (th % (2*(1::BIGINT<<b))) >= (1::BIGINT<<b)
-         |                              THEN 1 ELSE -1 END) > 0
-         |                THEN (1::BIGINT<<b) ELSE 0 END AS bit
-         |         FROM th, (SELECT unnest(generate_series(0,15)) AS b) GROUP BY doc_id, b),
-         |sh AS (SELECT doc_id, CAST(sum(bit) AS BIGINT) AS simhash FROM bits GROUP BY doc_id)
-         |SELECT x.doc_id AS a, y.doc_id AS b,
-         |       CAST(bit_count(xor(x.simhash, y.simhash)) AS BIGINT) AS hamming
-         |FROM sh x JOIN sh y ON x.doc_id < y.doc_id
-         |WHERE bit_count(xor(x.simhash, y.simhash)) <= 3
-         |ORDER BY a, b""".stripMargin,
+    "simhash_pairs_banded" -> simhashPairsOracle(16, 3),
 
     "ingest_drift_audit" ->
       """WITH per AS (

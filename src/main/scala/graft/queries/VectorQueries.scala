@@ -113,12 +113,29 @@ object VectorQueries extends QueryRegistry {
     }),
   )
 
-  private def knnOracle(scoreExpr: String, k: Int): String =
+  private[queries] def knnOracle(scoreExpr: String, k: Int): String =
     s"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
        |SELECT e.vec_id AS vec_id, round($scoreExpr, 6) + 0.0 AS score
        |FROM embeddings e, q
        |ORDER BY score DESC, vec_id ASC
        |LIMIT $k""".stripMargin
+
+  /** Cosine top-3 per query (vec_id &lt; 5): knn_multi and
+    * knn_multi_agg return the same rows. */
+  private val knnMultiOracle =
+    s"""WITH q AS (
+       |  SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 5),
+       |scored AS (
+       |  SELECT q.query_id, e.vec_id,
+       |         round(${cosine("e.embedding", "q.qe")}, 6) + 0.0 AS score
+       |  FROM embeddings e, q),
+       |ranked AS (
+       |  SELECT query_id, vec_id, score,
+       |         row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id ASC) AS rank
+       |  FROM scored)
+       |SELECT query_id, vec_id, score, CAST(rank AS BIGINT) AS rank
+       |FROM ranked WHERE rank <= 3
+       |ORDER BY query_id ASC, rank ASC""".stripMargin
 
   override def oracle: Map[String, String] = Map(
     "knn_cosine" -> knnOracle(cosine("e.embedding", "q.qe"), 10),
@@ -165,34 +182,7 @@ object VectorQueries extends QueryRegistry {
         |WHERE json_extract_string(to_json(struct_pack(label := label)), '$.label') = '3'
         |ORDER BY vec_id LIMIT 25""".stripMargin,
 
-    "knn_multi_agg" ->
-      s"""WITH q AS (
-         |  SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 5),
-         |scored AS (
-         |  SELECT q.query_id, e.vec_id,
-         |         round(${cosine("e.embedding", "q.qe")}, 6) + 0.0 AS score
-         |  FROM embeddings e, q),
-         |ranked AS (
-         |  SELECT query_id, vec_id, score,
-         |         row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id ASC) AS rank
-         |  FROM scored)
-         |SELECT query_id, vec_id, score, CAST(rank AS BIGINT) AS rank
-         |FROM ranked WHERE rank <= 3
-         |ORDER BY query_id ASC, rank ASC""".stripMargin,
-
-    "knn_multi" ->
-      s"""WITH q AS (
-         |  SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 5),
-         |scored AS (
-         |  SELECT q.query_id, e.vec_id,
-         |         round(${cosine("e.embedding", "q.qe")}, 6) + 0.0 AS score
-         |  FROM embeddings e, q),
-         |ranked AS (
-         |  SELECT query_id, vec_id, score,
-         |         row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id ASC) AS rank
-         |  FROM scored)
-         |SELECT query_id, vec_id, score, CAST(rank AS BIGINT) AS rank
-         |FROM ranked WHERE rank <= 3
-         |ORDER BY query_id ASC, rank ASC""".stripMargin,
+    "knn_multi_agg" -> knnMultiOracle,
+    "knn_multi" -> knnMultiOracle,
   )
 }

@@ -22,6 +22,8 @@ import org.apache.spark.sql.types._
   * Semantics pinned from the reference:
   *   - fixed dimension per collection, validated at insert
   *     (collection_manager.rs:146-152) → DimensionMismatchException;
+  *   - finite components, validated at insert and upsert →
+  *     NonFiniteVectorException;
   *   - root-crate strict CRUD: DuplicateId on re-insert
   *     (src/storage.rs:30-36), MissingId on absent delete (:42-47);
   *   - `upsert` keeps the subcrate's INSERT-OR-REPLACE behavior
@@ -129,9 +131,10 @@ class CollectionManager(spark: SparkSession, basePath: String) {
   def getVector(name: String, id: String): DataFrame =
     scan(name).filter(col("id") === lit(id))
 
-  /** Strict insert: errors on any duplicate id (src/storage.rs:30-36) or
-    * dimension mismatch (collection_manager.rs:146-152). `rows` needs
-    * columns (id, embedding, metadata?). An id is a duplicate when it is
+  /** Strict insert: errors on any duplicate id (src/storage.rs:30-36),
+    * dimension mismatch (collection_manager.rs:146-152) or non-finite
+    * component. `rows` needs columns (id, embedding, metadata?). An id
+    * is a duplicate when it is
     * already stored or repeats within the batch — the reference inserts
     * row by row, so the second copy raises. Both kinds are found in one
     * action: a broadcast-friendly semi join against the stored ids (no
@@ -141,12 +144,7 @@ class CollectionManager(spark: SparkSession, basePath: String) {
   def insert(name: String, rows: DataFrame): Unit = {
     val meta = collectionInfo(name)
     val incoming = normalize(rows)
-
-    val badDims = incoming
-      .filter(size(col("embedding")) =!= meta.dimension)
-      .select(size(col("embedding"))).limit(5)
-      .collect().map(_.getInt(0)).toSeq
-    if (badDims.nonEmpty) throw DimensionMismatchException(meta.dimension, badDims)
+    validate(incoming, meta.dimension)
 
     val stored = incoming.join(scan(name).select("id"), Seq("id"), "left_semi")
       .select("id")
@@ -167,11 +165,7 @@ class CollectionManager(spark: SparkSession, basePath: String) {
   def upsert(name: String, rows: DataFrame): Unit = {
     val meta = collectionInfo(name)
     val incoming = normalize(rows)
-    val badDims = incoming
-      .filter(size(col("embedding")) =!= meta.dimension)
-      .select(size(col("embedding"))).limit(5)
-      .collect().map(_.getInt(0)).toSeq
-    if (badDims.nonEmpty) throw DimensionMismatchException(meta.dimension, badDims)
+    validate(incoming, meta.dimension)
 
     // Rebase incoming ingest_seq past the current max (as appendRows does):
     // raw monotonically_increasing_id values would collide with existing
@@ -230,6 +224,23 @@ class CollectionManager(spark: SparkSession, basePath: String) {
 
   private def requireExists(name: String): Unit =
     if (!Files.exists(metaPath(name))) throw NoSuchCollectionException(name)
+
+  /** Reject a batch holding a vector of the wrong dimension
+    * (DimensionMismatchException, which wins) or with a NaN or
+    * infinite component (NonFiniteVectorException): a NaN score sorts
+    * above every real one under `score DESC`, so one such stored
+    * vector would top every search. One action finds both kinds. */
+  private def validate(incoming: DataFrame, dimension: Int): Unit = {
+    val emb = col("embedding")
+    val dimOk = size(emb) === dimension
+    val finite = !exists(emb, x => isnan(x) || abs(x) === Float.PositiveInfinity)
+    val bad = incoming.filter(!dimOk || !finite)
+      .select(col("id"), size(emb).as("dim"), dimOk.as("dim_ok"))
+      .orderBy(col("dim_ok"), col("id")).limit(5).collect()
+    val badDims = bad.filterNot(_.getBoolean(2)).map(_.getInt(1)).toSeq
+    if (badDims.nonEmpty) throw DimensionMismatchException(dimension, badDims)
+    if (bad.nonEmpty) throw NonFiniteVectorException(bad.map(_.getString(0)).toSeq)
+  }
 
   /** Conform incoming rows to the canonical schema; assign ingest_seq
     * after the current max so insertion order is preserved across

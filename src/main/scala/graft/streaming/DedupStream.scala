@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.TextOps
+import graft.operators.Dedup
 
 /** Streaming deduplication — the in-flight twin of graft.operators.Dedup
   * for an unbounded document feed (the shape of a continuously-ingesting
@@ -22,13 +23,21 @@ import graft.functions.TextOps
   */
 object DedupStream {
 
+  /** The shingle hashes of the `text` column. */
+  private def shingleHashes = TextOps.shingleHashes(Dedup.shingles(col("text")))
+
   /** Drop exact duplicate documents (by content hash) within the
-    * watermark horizon. Input needs (doc_id, ts, text). */
+    * watermark horizon. Input needs (doc_id, ts, text). A NULL text
+    * has no content, so it duplicates nothing: its hash is NULL, which
+    * the dedup state would treat as equal to every other NULL, so the
+    * key also carries the doc_id of a NULL-text doc. */
   def dropExactDuplicates(docs: DataFrame, watermarkDelay: String = "1 hour"): DataFrame =
     docs
       .withColumn("content_hash", TextOps.md5Long(col("text")))
+      .withColumn("null_text_id", when(col("text").isNull, col("doc_id")))
       .withWatermark("ts", watermarkDelay)
-      .dropDuplicatesWithinWatermark("content_hash")
+      .dropDuplicatesWithinWatermark("content_hash", "null_text_id")
+      .drop("null_text_id")
 
   /** Streaming contamination screen: drop (or route) documents whose
     * shingles might overlap the eval set, using the SAME deterministic
@@ -42,29 +51,15 @@ object DedupStream {
     * quarantine; false negatives are impossible, so a clean flag is
     * trustworthy. */
   def contaminationScreen(docs: DataFrame, bloomBits: Seq[Boolean]): DataFrame = {
-    import graft.operators.Dedup
     val bits = typedLit(bloomBits)
-    val toks = TextOps.tokens(col("text"))
     docs.withColumn("maybe_contaminated",
-      exists(
-        array_distinct(TextOps.shingleHashes(
-          TextOps.shingles(toks, Dedup.ShingleN))),
-        h => Dedup.bloomMightContain(h, bits)))
+      exists(array_distinct(shingleHashes), h => Dedup.bloomMightContain(h, bits)))
   }
 
   /** Map-only MinHash band-bucket emission for a document stream:
     * (doc_id, ts, band, band_hash) — joinable by the batch rerank job. */
-  def bandStream(docs: DataFrame): DataFrame = {
-    import graft.operators.Dedup.{Bands, MinhashH, Rows, ShingleN}
-    val toks = TextOps.tokens(col("text"))
-    docs.select(col("doc_id"), col("ts"),
-      TextOps.minhashSignature(
-        TextOps.shingleHashes(TextOps.shingles(toks, ShingleN)), MinhashH).as("sig"))
-      .select(col("doc_id"), col("ts"),
-        explode(sequence(lit(0), lit(Bands - 1))).as("band"), col("sig"))
-      .select(col("doc_id"), col("ts"), col("band"),
-        TextOps.bandHash(col("sig"), col("band"), Rows).as("band_hash"))
-  }
+  def bandStream(docs: DataFrame): DataFrame =
+    Dedup.minhashBands(docs, Seq("doc_id", "ts"), shingleHashes)
 
   /** Rows of the banded signature stream feeding the stateful
     * in-stream pairing. */
@@ -98,19 +93,12 @@ object DedupStream {
     * stateful aggregation for no semantic gain. */
   def inStreamNearDups(docs: DataFrame, watermarkDelay: String = "1 hour",
       stateTtlMs: Long = 3600L * 1000L, maxPerBucket: Int = 64): DataFrame = {
-    import graft.operators.Dedup.{Bands, MinhashH, Rows, ShingleN}
+    import graft.operators.Dedup.MinhashH
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = docs.sparkSession
     import spark.implicits._
-    val toks = TextOps.tokens(col("text"))
-    val banded = docs.withWatermark("ts", watermarkDelay)
-      .select(col("doc_id"), col("ts"),
-        TextOps.minhashSignature(
-          TextOps.shingleHashes(TextOps.shingles(toks, ShingleN)), MinhashH).as("sig"))
-      .select(col("doc_id"), col("ts"),
-        explode(sequence(lit(0), lit(Bands - 1))).as("band"), col("sig"))
-      .select(col("doc_id"), col("ts"), col("band"),
-        TextOps.bandHash(col("sig"), col("band"), Rows).as("band_hash"), col("sig"))
+    val banded = Dedup.minhashBands(docs.withWatermark("ts", watermarkDelay),
+        Seq("doc_id", "ts"), shingleHashes, withSig = true)
       .as[BandedDoc]
     def onBucket(key: (Int, Long), rows: Iterator[BandedDoc],
         state: GroupState[List[BucketEntry]]): Iterator[CandidatePair] =
@@ -173,17 +161,10 @@ object DedupStream {
     * @param corpusHashed static (doc_id, sh, shh) from Dedup.shingled */
   def nearDupAgainstCorpus(docs: DataFrame, corpusHashed: DataFrame,
       threshold: Double): DataFrame = {
-    import graft.operators.Dedup.{Bands, MinhashH, Rows, ShingleN}
-    val toks = TextOps.tokens(col("text"))
-    val streamSide = docs.select(col("doc_id"), col("ts"),
-      TextOps.shingles(toks, ShingleN).as("sh"))
-      .withColumn("sig",
-        TextOps.minhashSignature(TextOps.shingleHashes(col("sh")), MinhashH))
-      .select(col("doc_id"), col("ts"), col("sh"),
-        explode(sequence(lit(0), lit(Bands - 1))).as("band"), col("sig"))
-      .select(col("doc_id"), col("ts"), col("sh"), col("band"),
-        TextOps.bandHash(col("sig"), col("band"), Rows).as("band_hash"))
-    val corpusBands = graft.operators.Dedup.candidateBands(corpusHashed)
+    val streamSide = Dedup.minhashBands(
+      docs.select(col("doc_id"), col("ts"), Dedup.shingles(col("text")).as("sh")),
+      Seq("doc_id", "ts", "sh"), TextOps.shingleHashes(col("sh")))
+    val corpusBands = Dedup.candidateBands(corpusHashed)
       .select(col("doc_id").as("corpus_doc_id"), col("band"), col("band_hash"))
     val corpusSh = corpusHashed
       .select(col("doc_id").as("corpus_doc_id"), col("sh").as("corpus_sh"))

@@ -7,7 +7,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.functions.TextOps
 import graft.operators.{Components, Dedup}
-import graft.streaming.DedupStream
+import graft.streaming.{DedupStream, EventStreams}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Adversarial corpora through every dedup operator: an empty corpus,
   * and one whose texts are NULL, empty or token-free next to a planted
@@ -84,15 +86,45 @@ class DedupEdgeSpec extends SparkSpec {
     assert(Dedup.simhashPairsBanded(empty, 3).count() == 0L)
   }
 
-  test("bandStream: NULL docs emit NULL band hashes; empty corpus emits nothing") {
+  test("bandStream: docs with no shingle are in no band") {
     val rows = DedupStream.bandStream(degenerate).collect()
-    assert(rows.length == 7 * Dedup.Bands)
-    assert(rows.filter(_.isNullAt(3)).map(_.getLong(0)).distinct.sorted.toSeq == Seq(0L, 3L))
-    // the four token-free docs carry the empty-set signature: one bucket per band
-    val emptySet = rows.filter(r => Set(1L, 2L).contains(r.getLong(0)))
-      .groupBy(_.getInt(2)).values.map(_.map(_.getLong(3)).distinct.length)
-    assert(emptySet.size == Dedup.Bands && emptySet.forall(_ == 1))
+    // the NULL, empty and token-free docs 0-3 emit no row, so no NULL
+    // band hash and no shared empty-set bucket
+    assert(rows.map(_.getLong(0)).distinct.sorted.toSeq == Seq(4L, 5L, 6L))
+    assert(rows.length == 3 * Dedup.Bands && rows.forall(!_.isNullAt(3)))
     assert(DedupStream.bandStream(empty).count() == 0L)
+  }
+
+  /** 10-13 hold 1-4 tokens, fewer than a shingle; 15 copies 14. Every
+    * embedding is the same, so cosine alone would pair any two. */
+  private lazy val short = frame(Seq(
+    Row(10L, "alpha", t0), Row(11L, "alpha beta", t0), Row(12L, "alpha beta gamma", t0),
+    Row(13L, "alpha beta gamma delta", t0), Row(14L, body, t0), Row(15L, body, t0)), docSchema)
+
+  test("docs of 1-4 tokens are in no band and never pair") {
+    val banded = DedupStream.bandStream(short).collect().map(_.getLong(0)).distinct.sorted.toSeq
+    assert(banded == Seq(14L, 15L))
+    assert(pairs(Dedup.candidatesFrom(Dedup.shingled(short))) == Seq((14L, 15L)))
+    val sameEmb = frame((10 to 15).map(i => Row(i.toLong, Seq.fill(8)(1.0f))), embSchema)
+    // a short pair would score 0.5 (Jaccard 0, cosine 1) and pass
+    assert(pairs(Dedup.semanticNearDups(short, sameEmb, 0.4)) == Seq((14L, 15L)))
+
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val in = MemoryStream[(Long, Timestamp, String)]
+    val q = EventStreams.toMemorySink(
+      DedupStream.inStreamNearDups(in.toDF().toDF("doc_id", "ts", "text")),
+      "short_instream", OutputMode.Append())
+    try {
+      // event time 0 would sit at the first batch's watermark, and the
+      // stateful operator drops such rows as late
+      val ts = Timestamp.valueOf("2024-01-01 00:00:00")
+      in.addData(short.collect().map(r => (r.getLong(0), ts, r.getString(1))).toSeq)
+      q.processAllAvailable()
+      val got = spark.table("short_instream").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(3))).toSeq
+      assert(got.length == Dedup.Bands && got.forall(_ == ((14L, 15L, 1.0))), got.mkString(";"))
+    } finally q.stop()
   }
 
   test("connectedComponents over the degenerate pairs and over no pairs") {

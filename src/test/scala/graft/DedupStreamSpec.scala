@@ -29,6 +29,24 @@ class DedupStreamSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("streaming exact dedup keeps every NULL-text doc") {
+    implicit val sqlCtx = spark.sqlContext
+    val in = MemoryStream[Doc]
+    val q = EventStreams.toMemorySink(
+      DedupStream.dropExactDuplicates(in.toDF()), "dedup_null_test", OutputMode.Append())
+    try {
+      // a NULL text has no content, so two of them are not duplicates;
+      // the repeated text still collapses to its first copy
+      in.addData(Doc(0, ts(1), null), Doc(1, ts(2), null),
+        Doc(2, ts(3), "alpha beta"), Doc(3, ts(4), "alpha beta"))
+      q.processAllAvailable()
+      in.addData(Doc(4, ts(5), null))
+      q.processAllAvailable()
+      val ids = spark.table("dedup_null_test").collect().map(_.getLong(0)).sorted.toSeq
+      assert(ids == Seq(0L, 1L, 2L, 4L))
+    } finally q.stop()
+  }
+
   test("streaming band emission matches the batch band table") {
     implicit val sqlCtx = spark.sqlContext
     val body = (1 to 30).map(i => "w" + ('a' + i % 26).toChar).mkString(" ")
@@ -40,8 +58,8 @@ class DedupStreamSpec extends SparkSpec {
       q.processAllAvailable()
       val streamed = spark.table("bands_test")
         .collect().map(r => (r.getLong(0), r.getInt(2), r.getLong(3))).sorted.toSeq
-      val batch = graft.operators.Dedup.bandTable(
-        graft.operators.Dedup.signatures(Seq((0L, body)).toDF("doc_id", "text")))
+      val batch = graft.operators.Dedup.candidateBands(
+        graft.operators.Dedup.shingled(Seq((0L, body)).toDF("doc_id", "text")))
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq
       assert(streamed == batch)
     } finally q.stop()

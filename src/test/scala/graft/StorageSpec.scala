@@ -136,6 +136,31 @@ class StorageSpec extends SparkSpec {
     assert(cm.countVectors("c") === 1L)
   }
 
+  test("insert rejects NaN and infinite components; a bad dimension wins") {
+    val cm = new CollectionManager(spark, freshBase())
+    cm.createCollection("c", 3)
+    val nan = Array(1.0f, Float.NaN, 3.0f)
+    val inf = Array(Float.NegativeInfinity, 2.0f, 3.0f)
+    val e = intercept[NonFiniteVectorException](
+      cm.insert("c", rows("ok" -> v3a, "n" -> nan, "i" -> inf)))
+    assert(e.ids === Seq("i", "n"))
+    assert(cm.countVectors("c") === 0L)
+    intercept[DimensionMismatchException](cm.insert("c", rows("n" -> nan, "d" -> Array(1.0f))))
+    cm.insert("c", rows("ok" -> v3a))
+    assert(cm.countVectors("c") === 1L)
+  }
+
+  test("upsert rejects NaN and infinite components") {
+    val cm = new CollectionManager(spark, freshBase())
+    cm.createCollection("c", 3)
+    cm.insert("c", rows("a" -> v3a))
+    val e = intercept[NonFiniteVectorException](
+      cm.upsert("c", rows("a" -> Array(Float.PositiveInfinity, 0.0f, 0.0f))))
+    assert(e.ids === Seq("a"))
+    assert(cm.getVector("c", "a").select($"embedding")
+      .collect()(0).getSeq[Float](0) === v3a.toSeq)
+  }
+
   test("upsert replaces existing ids (sqlite INSERT OR REPLACE parity)") {
     val cm = new CollectionManager(spark, freshBase())
     cm.createCollection("c", 3)
