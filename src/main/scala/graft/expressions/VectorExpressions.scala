@@ -2,290 +2,180 @@ package graft.expressions
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
-/** Fused single-pass cosine similarity as a native codegen Expression —
-  * the one §7.6 "perf-optional" custom Catalyst piece this engine
-  * needs. The HOF formulation (aggregate ∘ zip_with ×3) walks both
-  * arrays three times through iterator-shaped generated code; at 100 TB
-  * pair-join scale (n² rerank work) that tripling is the dominant cost.
-  * This expression computes dot, ‖a‖² and ‖b‖² in ONE primitive loop
-  * inside WholeStageCodegen.
+/** Single-pass vector kernels behind `graft_dot`, `graft_sqdist`,
+  * `graft_euclidean`, `graft_manhattan` and `graft_cosine` (reference
+  * semantics: kowari src/utils.rs:4-24). Each operand is an
+  * `array<float>` or `array<double>`, with a flag saying which; every
+  * element is widened to double before any arithmetic and the sums fold
+  * left to right, so the DuckDB oracle replays them bit for bit.
   *
-  * Semantics are BIT-IDENTICAL to graft.functions.VectorOps.cosine
-  * (left-to-right double accumulation, zero-norm guard of kowari
-  * src/utils.rs:9-13) — pinned by VectorOpsSpec — so oracle-checked
-  * results are unchanged when the fast path is swapped in.
-  */
-case class CosineSim(left: Expression, right: Expression)
-    extends BinaryExpression {
+  * Each one is bit-identical to the higher-order-function formula it
+  * replaced (the test suite keeps those formulas as references): operands
+  * of different lengths give NULL, and so does a NULL element, so a
+  * wrong-dimension or incomplete vector never gets a prefix score that
+  * could displace a real neighbour from a top-k. Interpreted and
+  * generated code call the same methods here. */
+object VectorKernels {
 
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_cosine"
-  // EXACT HOF semantics on degenerate inputs (elements assumed
-  // non-null — the engine's vector schema is containsNull=false):
-  // each norm is computed over its OWN full array, and the zero-norm
-  // guard fires BEFORE the ragged check — so a zero-norm operand
-  // yields 0.0 even against a different-length vector (the HOF guard
-  // short-circuits the null-poisoned dot), while ragged non-zero pairs
-  // yield NULL (zip_with null-pads and the fold poisons). A
-  // wrong-dimension vector can therefore never sneak a prefix score
-  // into a top-k. Nullable regardless of the children.
-  override def nullable: Boolean = true
+  @inline private def at(v: ArrayData, isFloat: Boolean, i: Int): Double =
+    if (isFloat) v.getFloat(i).toDouble else v.getDouble(i)
 
-  private def elemIsFloat(e: Expression): Boolean = e.dataType match {
-    case ArrayType(FloatType, _) => true
-    case ArrayType(DoubleType, _) => false
-    case t => throw new IllegalArgumentException(
-      s"graft_cosine expects array<float|double>, got $t")
-  }
+  private final val Dot = 0
+  private final val SqDist = 1
+  private final val Manhattan = 2
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val xa = a.asInstanceOf[ArrayData]
-    val xb = b.asInstanceOf[ArrayData]
-    val fa = elemIsFloat(left); val fb = elemIsFloat(right)
-    val la = xa.numElements(); val lb = xb.numElements()
-    val n = math.min(la, lb)
-    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+  /** Left-to-right Σ of one elementwise term; NULL when the lengths
+    * differ or an element is NULL. */
+  private def fold(term: Int, a: ArrayData, fa: Boolean, b: ArrayData, fb: Boolean): java.lang.Double = {
+    val n = a.numElements()
+    if (n != b.numElements()) return null
+    var s = 0.0
+    var i = 0
     while (i < n) {
-      val x = if (fa) xa.getFloat(i).toDouble else xa.getDouble(i)
-      val y = if (fb) xb.getFloat(i).toDouble else xb.getDouble(i)
-      dot += x * y; na += x * x; nb += y * y
-      i += 1
-    }
-    while (i < la) {
-      val x = if (fa) xa.getFloat(i).toDouble else xa.getDouble(i)
-      na += x * x; i += 1
-    }
-    i = n
-    while (i < lb) {
-      val y = if (fb) xb.getFloat(i).toDouble else xb.getDouble(i)
-      nb += y * y; i += 1
-    }
-    if (na == 0.0 || nb == 0.0) 0.0
-    else if (la != lb) null
-    else dot / (math.sqrt(na) * math.sqrt(nb))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      // fresh names: the expression may appear several times in one
-      // generated function (e.g. HOF-vs-native comparison plans)
-      val la = ctx.freshName("la"); val lb = ctx.freshName("lb")
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot"); val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val getA = if (elemIsFloat(left)) s"(double) $a.getFloat($i)" else s"$a.getDouble($i)"
-      val getB = if (elemIsFloat(right)) s"(double) $b.getFloat($i)" else s"$b.getDouble($i)"
-      s"""
-         |int $la = $a.numElements();
-         |int $lb = $b.numElements();
-         |int $n = java.lang.Math.min($la, $lb);
-         |double $dot = 0.0, $na = 0.0, $nb = 0.0;
-         |int $i = 0;
-         |for (; $i < $n; $i++) {
-         |  double x$i = $getA;
-         |  double y$i = $getB;
-         |  $dot += x$i * y$i; $na += x$i * x$i; $nb += y$i * y$i;
-         |}
-         |for (; $i < $la; $i++) { double x$i = $getA; $na += x$i * x$i; }
-         |for ($i = $n; $i < $lb; $i++) { double y$i = $getB; $nb += y$i * y$i; }
-         |if ($na == 0.0 || $nb == 0.0) {
-         |  ${ev.value} = 0.0;
-         |} else if ($la != $lb) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CosineSim =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Same treatment for the plain dot product (LSH plane hashing, IVF
-  * assignment): one primitive loop instead of aggregate ∘ zip_with. */
-case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_dot"
-  // ragged inputs -> NULL; elements assumed non-null (the engine's
-  // vector schema is containsNull=false) — see CosineSim
-  override def nullable: Boolean = true
-
-  private def elemIsFloat(e: Expression): Boolean = e.dataType match {
-    case ArrayType(FloatType, _) => true
-    case ArrayType(DoubleType, _) => false
-    case t => throw new IllegalArgumentException(
-      s"graft_dot expects array<float|double>, got $t")
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val xa = a.asInstanceOf[ArrayData]
-    val xb = b.asInstanceOf[ArrayData]
-    if (xa.numElements() != xb.numElements()) return null
-    val fa = elemIsFloat(left); val fb = elemIsFloat(right)
-    val n = xa.numElements()
-    var dot = 0.0; var i = 0
-    while (i < n) {
-      val x = if (fa) xa.getFloat(i).toDouble else xa.getDouble(i)
-      val y = if (fb) xb.getFloat(i).toDouble else xb.getDouble(i)
-      dot += x * y
-      i += 1
-    }
-    dot
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      val getA = if (elemIsFloat(left)) s"(double) $a.getFloat($i)" else s"$a.getDouble($i)"
-      val getB = if (elemIsFloat(right)) s"(double) $b.getFloat($i)" else s"$b.getDouble($i)"
-      s"""
-         |if ($a.numElements() != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $n = $a.numElements();
-         |  double $dot = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) { $dot += ($getA) * ($getB); }
-         |  ${ev.value} = $dot;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotProduct =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Euclidean distance ‖a−b‖₂ in one primitive loop — bit-identical to
-  * the HOF `sqrt(aggregate(zip_with(...)))` chain (left-to-right double
-  * accumulation of squared diffs, then one sqrt), so oracle-checked
-  * results are unchanged when the fast path is swapped in. Reference
-  * semantics: kowari src/utils.rs:16-19. */
-case class EuclideanDist(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_euclidean"
-  // ragged inputs -> NULL; elements assumed non-null (the engine's
-  // vector schema is containsNull=false) — see CosineSim
-  override def nullable: Boolean = true
-
-  private def elemIsFloat(e: Expression): Boolean = e.dataType match {
-    case ArrayType(FloatType, _) => true
-    case ArrayType(DoubleType, _) => false
-    case t => throw new IllegalArgumentException(
-      s"graft_euclidean expects array<float|double>, got $t")
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val xa = a.asInstanceOf[ArrayData]
-    val xb = b.asInstanceOf[ArrayData]
-    if (xa.numElements() != xb.numElements()) return null
-    val fa = elemIsFloat(left); val fb = elemIsFloat(right)
-    val n = xa.numElements()
-    var s = 0.0; var i = 0
-    while (i < n) {
-      val x = if (fa) xa.getFloat(i).toDouble else xa.getDouble(i)
-      val y = if (fb) xb.getFloat(i).toDouble else xb.getDouble(i)
-      val diff = x - y
-      s += diff * diff
-      i += 1
-    }
-    math.sqrt(s)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val s = ctx.freshName("s"); val diff = ctx.freshName("diff")
-      val getA = if (elemIsFloat(left)) s"(double) $a.getFloat($i)" else s"$a.getDouble($i)"
-      val getB = if (elemIsFloat(right)) s"(double) $b.getFloat($i)" else s"$b.getDouble($i)"
-      s"""
-         |if ($a.numElements() != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $n = $a.numElements();
-         |  double $s = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    double $diff = ($getA) - ($getB);
-         |    $s += $diff * $diff;
-         |  }
-         |  ${ev.value} = java.lang.Math.sqrt($s);
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): EuclideanDist =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Manhattan distance Σ|aᵢ−bᵢ| in one primitive loop — bit-identical
-  * to the HOF chain (kowari src/utils.rs:21-24 semantics). */
-case class ManhattanDist(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_manhattan"
-  // ragged inputs -> NULL; elements assumed non-null (the engine's
-  // vector schema is containsNull=false) — see CosineSim
-  override def nullable: Boolean = true
-
-  private def elemIsFloat(e: Expression): Boolean = e.dataType match {
-    case ArrayType(FloatType, _) => true
-    case ArrayType(DoubleType, _) => false
-    case t => throw new IllegalArgumentException(
-      s"graft_manhattan expects array<float|double>, got $t")
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val xa = a.asInstanceOf[ArrayData]
-    val xb = b.asInstanceOf[ArrayData]
-    if (xa.numElements() != xb.numElements()) return null
-    val fa = elemIsFloat(left); val fb = elemIsFloat(right)
-    val n = xa.numElements()
-    var s = 0.0; var i = 0
-    while (i < n) {
-      val x = if (fa) xa.getFloat(i).toDouble else xa.getDouble(i)
-      val y = if (fb) xb.getFloat(i).toDouble else xb.getDouble(i)
-      s += math.abs(x - y)
+      if (a.isNullAt(i) || b.isNullAt(i)) return null
+      val x = at(a, fa, i)
+      val y = at(b, fb, i)
+      s += ((term: @annotation.switch) match {
+        case Dot => x * y
+        case SqDist => (x - y) * (x - y)
+        case _ => math.abs(x - y)
+      })
       i += 1
     }
     s
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      val getA = if (elemIsFloat(left)) s"(double) $a.getFloat($i)" else s"$a.getDouble($i)"
-      val getB = if (elemIsFloat(right)) s"(double) $b.getFloat($i)" else s"$b.getDouble($i)"
-      s"""
-         |if ($a.numElements() != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $n = $a.numElements();
-         |  double $s = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $s += java.lang.Math.abs(($getA) - ($getB));
-         |  }
-         |  ${ev.value} = $s;
-         |}
-       """.stripMargin
-    })
+  /** Σ aᵢ·bᵢ. */
+  def dot(a: ArrayData, fa: Boolean, b: ArrayData, fb: Boolean): java.lang.Double =
+    fold(Dot, a, fa, b, fb)
 
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): ManhattanDist =
-    copy(left = newLeft, right = newRight)
+  /** Σ (aᵢ−bᵢ)². */
+  def sqdist(a: ArrayData, fa: Boolean, b: ArrayData, fb: Boolean): java.lang.Double =
+    fold(SqDist, a, fa, b, fb)
+
+  /** ‖a−b‖₂ = sqrt of [[sqdist]]. */
+  def euclidean(a: ArrayData, fa: Boolean, b: ArrayData, fb: Boolean): java.lang.Double = {
+    val s = sqdist(a, fa, b, fb)
+    if (s == null) null else math.sqrt(s)
+  }
+
+  /** Σ |aᵢ−bᵢ|. */
+  def manhattan(a: ArrayData, fa: Boolean, b: ArrayData, fb: Boolean): java.lang.Double =
+    fold(Manhattan, a, fa, b, fb)
+
+  /** dot/(‖a‖·‖b‖) in one pass over both operands. Each norm is taken
+    * over its own whole array, and the zero-norm guard (src/utils.rs:9-13)
+    * fires before the length and NULL tests, as the reference's
+    * three-valued `OR` does: a zero-norm operand gives 0.0 even against a
+    * longer vector or one with a NULL element. */
+  def cosine(a: ArrayData, fa: Boolean, b: ArrayData, fb: Boolean): java.lang.Double = {
+    val la = a.numElements()
+    val lb = b.numElements()
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var nullA = false; var nullB = false
+    var i = 0
+    // past the shorter operand its element reads as 0.0, which leaves
+    // its norm unchanged; `dot` is only used when the lengths agree
+    while (i < la || i < lb) {
+      var x = 0.0; var y = 0.0
+      if (i < la) { if (a.isNullAt(i)) nullA = true else x = at(a, fa, i) }
+      if (i < lb) { if (b.isNullAt(i)) nullB = true else y = at(b, fb, i) }
+      dot += x * y; na += x * x; nb += y * y
+      i += 1
+    }
+    if ((!nullA && na == 0.0) || (!nullB && nb == 0.0)) 0.0
+    else if (nullA || nullB || la != lb) null
+    else dot / (math.sqrt(na) * math.sqrt(nb))
+  }
+}
+
+/** A kernel of [[VectorKernels]] as a binary expression over two
+  * `array<float|double>` operands: one call, in interpreted and
+  * generated code alike. A NULL operand gives NULL, also for cosine
+  * against a zero-norm operand, where the HOF reference's guard gives
+  * 0.0; ingest stores no NULL vector. */
+private[expressions] trait VectorKernelCall extends BinaryExpression {
+  /** The [[VectorKernels]] method; the SQL name is `graft_<kernel>`. */
+  protected def kernel: String
+  protected def run(a: ArrayData, fa: Boolean, b: ArrayData, fb: Boolean): java.lang.Double
+
+  override def prettyName: String = s"graft_$kernel"
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
+
+  private def isFloat(e: Expression): Boolean = e.dataType match {
+    case ArrayType(FloatType, _) => true
+    case _ => false
+  }
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (ArrayType(FloatType | DoubleType, _), ArrayType(FloatType | DoubleType, _)) =>
+        TypeCheckResult.TypeCheckSuccess
+      case (a, b) => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName expects (array<float|double>, array<float|double>), got ($a, $b)")
+    }
+
+  override def nullSafeEval(a: Any, b: Any): Any =
+    run(a.asInstanceOf[ArrayData], isFloat(left), b.asInstanceOf[ArrayData], isFloat(right))
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val a = left.genCode(ctx)
+    val b = right.genCode(ctx)
+    val r = ctx.freshName("r")
+    ev.copy(code = code"""
+      ${a.code}
+      ${b.code}
+      boolean ${ev.isNull} = true;
+      double ${ev.value} = 0.0;
+      if (!${a.isNull} && !${b.isNull}) {
+        java.lang.Double $r = graft.expressions.VectorKernels.$kernel(
+          ${a.value}, ${isFloat(left)}, ${b.value}, ${isFloat(right)});
+        if ($r != null) { ${ev.isNull} = false; ${ev.value} = $r; }
+      }""")
+  }
+}
+
+/** `graft_dot(a, b)`: see [[VectorKernels.dot]]. */
+case class DotProduct(left: Expression, right: Expression) extends VectorKernelCall {
+  override protected def kernel: String = "dot"
+  override protected def run(a: ArrayData, fa: Boolean, b: ArrayData, fb: Boolean) = VectorKernels.dot(a, fa, b, fb)
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): DotProduct = copy(l, r)
+}
+
+/** `graft_sqdist(a, b)`: see [[VectorKernels.sqdist]]. */
+case class SqDist(left: Expression, right: Expression) extends VectorKernelCall {
+  override protected def kernel: String = "sqdist"
+  override protected def run(a: ArrayData, fa: Boolean, b: ArrayData, fb: Boolean) = VectorKernels.sqdist(a, fa, b, fb)
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): SqDist = copy(l, r)
+}
+
+/** `graft_euclidean(a, b)`: see [[VectorKernels.euclidean]]. */
+case class EuclideanDist(left: Expression, right: Expression) extends VectorKernelCall {
+  override protected def kernel: String = "euclidean"
+  override protected def run(a: ArrayData, fa: Boolean, b: ArrayData, fb: Boolean) = VectorKernels.euclidean(a, fa, b, fb)
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): EuclideanDist = copy(l, r)
+}
+
+/** `graft_manhattan(a, b)`: see [[VectorKernels.manhattan]]. */
+case class ManhattanDist(left: Expression, right: Expression) extends VectorKernelCall {
+  override protected def kernel: String = "manhattan"
+  override protected def run(a: ArrayData, fa: Boolean, b: ArrayData, fb: Boolean) = VectorKernels.manhattan(a, fa, b, fb)
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): ManhattanDist = copy(l, r)
+}
+
+/** `graft_cosine(a, b)`: see [[VectorKernels.cosine]]. */
+case class CosineSim(left: Expression, right: Expression) extends VectorKernelCall {
+  override protected def kernel: String = "cosine"
+  override protected def run(a: ArrayData, fa: Boolean, b: ArrayData, fb: Boolean) = VectorKernels.cosine(a, fa, b, fb)
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSim = copy(l, r)
 }
 
 /** Session registration (idempotent): makes the expressions reachable
@@ -296,6 +186,7 @@ object GraftFunctions {
   val all: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
     ("graft_cosine", classOf[CosineSim].getName, c => CosineSim(c(0), c(1))),
     ("graft_dot", classOf[DotProduct].getName, c => DotProduct(c(0), c(1))),
+    ("graft_sqdist", classOf[SqDist].getName, c => SqDist(c(0), c(1))),
     ("graft_euclidean", classOf[EuclideanDist].getName, c => EuclideanDist(c(0), c(1))),
     ("graft_manhattan", classOf[ManhattanDist].getName, c => ManhattanDist(c(0), c(1))),
     ("graft_shingles", classOf[Shingles].getName, c => Shingles(c(0), c(1))),

@@ -161,7 +161,7 @@ object Dedup {
     cand.join(shA, "a").join(shB, "b").join(ea, "a").join(eb, "b")
       .select(col("a"), col("b"),
         round(TextOps.jaccard(col("sha"), col("shb")), 6).as("jaccard"),
-        (round(VectorOps.fastCosine(col("ea"), col("eb")), 6) + lit(0.0)).as("cos"))
+        (round(VectorOps.cosine(col("ea"), col("eb")), 6) + lit(0.0)).as("cos"))
       .withColumn("combined",
         round(col("jaccard") * 0.5 + greatest(col("cos"), lit(0.0)) * 0.5, 6))
       .filter(col("combined") >= threshold)
@@ -208,7 +208,7 @@ object Dedup {
     val bandKeys = (0 until nBands).map { b =>
       val bits = (0 until bandBits).filter(j => b * bandBits + j < nPlanes)
       val key = bits.map { j =>
-        when(VectorOps.fastDot(col("embedding"),
+        when(VectorOps.dot(col("embedding"),
           typedLit(planes(b * bandBits + j).toSeq)) >= 0.0, lit(1L << j))
           .otherwise(lit(0L))
       }.reduce(_ + _)
@@ -225,7 +225,7 @@ object Dedup {
     val eb = emb.select(col("vec_id").as("b"), col("embedding").as("eb"))
     cand.join(ea, "a").join(eb, "b")
       .select(col("a"), col("b"),
-        round(VectorOps.fastCosine(col("ea"), col("eb")), 6).as("cos"))
+        round(VectorOps.cosine(col("ea"), col("eb")), 6).as("cos"))
       .filter(col("cos") >= threshold)
       .orderBy(col("a"), col("b"))
   }

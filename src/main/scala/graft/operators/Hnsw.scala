@@ -128,7 +128,7 @@ class Hnsw(val m: Int = 16, val ef: Int = 32, val seed: Long = 42L,
       .orderBy(col("dist").asc, col("dst").asc)
     pairs
       .select(col("level"), col("src"), col("dst"),
-        (lit(1.0) - VectorOps.fastCosine(col("src_vec"), col("dst_vec"))).as("dist"))
+        (lit(1.0) - VectorOps.cosine(col("src_vec"), col("dst_vec"))).as("dist"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= m)
       .select(col("src").as("node_id"), col("level"),
@@ -221,7 +221,7 @@ class Hnsw(val m: Int = 16, val ef: Int = 32, val seed: Long = 42L,
       .orderBy(col("dist").asc, col("dst").asc)
     val repruned = newSrcPairs.unionByName(oldNewPairs).unionByName(storedTouched)
       .select(col("level"), col("src"), col("dst"),
-        (lit(1.0) - VectorOps.fastCosine(col("src_vec"), col("dst_vec"))).as("dist"))
+        (lit(1.0) - VectorOps.cosine(col("src_vec"), col("dst_vec"))).as("dist"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= m)
       .select(col("src").as("node_id"), col("level"),

@@ -27,10 +27,6 @@ import graft.functions.VectorOps
   */
 class Ivf(nlist: Int, iters: Int) {
 
-  private def sqDist(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0.0), (s, x) => s + x)
-
   /** Deterministic init: stride the corpus by vec_id rank. May yield
     * fewer than nlist centroids when the corpus is small or stride
     * seeds collide — downstream sizing must use the returned length,
@@ -67,15 +63,13 @@ class Ivf(nlist: Int, iters: Int) {
 
   /** Expression-only argmin assignment against broadcast centroids:
     * array_min over (dist, idx) structs gives min-dist with min-idx
-    * tiebreak; the embedding is cast to double once per row, not once
-    * per centroid. */
+    * tiebreak. */
   def assignExpr(emb: Column, cents: Array[(Int, Array[Double])]): Column = {
     val cl = centroidLit(cents)
     // size the probe sequence from the actual centroid count: initCentroids
     // can return < nlist, and probing past the array end yields null dists
-    VectorOps.let(VectorOps.toDouble(emb))(e =>
-      array_min(transform(sequence(lit(0), lit(cents.length - 1)),
-        i => struct(sqDist(e, element_at(cl, i + 1)).as("d"), i.as("c")))))
+    array_min(transform(sequence(lit(0), lit(cents.length - 1)),
+      i => struct(VectorOps.sqdist(emb, element_at(cl, i + 1)).as("d"), i.as("c"))))
       .getField("c")
   }
 
@@ -86,7 +80,7 @@ class Ivf(nlist: Int, iters: Int) {
     * so the DuckDB oracle replays it bit-for-bit. */
   def centroidDistExpr(emb: Column, cents: Array[(Int, Array[Double])],
       cluster: Column): Column =
-    sqDist(VectorOps.toDouble(emb), element_at(centroidLit(cents), cluster + 1))
+    VectorOps.sqdist(emb, element_at(centroidLit(cents), cluster + 1))
 
   /** Residual `embedding − centroid[cluster]` as an ARRAY&lt;DOUBLE&gt;
     * column — the IVF-PQ composition input (encode the residual, not

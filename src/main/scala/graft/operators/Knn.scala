@@ -42,20 +42,18 @@ object Knn {
   private[graft] def stableScore(c: Column): Column = round(c, 6) + lit(0.0)
 
   sealed trait Metric { def score(a: Column, b: Column): Column }
-  /** cosine similarity, higher = closer — fused native expression on
-    * the hot scan (bit-identical to the HOF kernel). */
+  /** cosine similarity (`graft_cosine`), higher = closer. */
   case object Cosine extends Metric {
-    def score(a: Column, b: Column): Column = VectorOps.fastCosine(a, b)
+    def score(a: Column, b: Column): Column = VectorOps.cosine(a, b)
   }
-  /** negated euclidean distance, higher = closer (src/index.rs:36-38) —
-    * native fused expression on the hot scan. */
+  /** negated euclidean distance (`graft_euclidean`), higher = closer
+    * (src/index.rs:36-38). */
   case object NegEuclidean extends Metric {
-    def score(a: Column, b: Column): Column = -VectorOps.fastEuclidean(a, b)
+    def score(a: Column, b: Column): Column = -VectorOps.euclidean(a, b)
   }
-  /** negated manhattan distance, higher = closer — native fused
-    * expression on the hot scan. */
+  /** negated manhattan distance (`graft_manhattan`), higher = closer. */
   case object NegManhattan extends Metric {
-    def score(a: Column, b: Column): Column = -VectorOps.fastManhattan(a, b)
+    def score(a: Column, b: Column): Column = -VectorOps.manhattan(a, b)
   }
 
   /** The query side of a single-query search. An `Array[Float]` held on

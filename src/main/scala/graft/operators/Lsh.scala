@@ -46,10 +46,10 @@ class Lsh(val numPlanes: Int = 16, val seed: Long = 42L,
   }
 
   /** The 64-bit signature as a column expression (distributed hash path,
-    * src/index.rs:99-107). One dot product per plane, all built-in HOFs. */
+    * src/index.rs:99-107). One native `graft_dot` per plane. */
   def bucketCol(vec: Column, dim: Int): Column =
     planes(dim).zipWithIndex.map { case (p, i) =>
-      when(VectorOps.fastDot(vec, typedLit(p.toSeq)) >= 0.0, lit(1L << i))
+      when(VectorOps.dot(vec, typedLit(p.toSeq)) >= 0.0, lit(1L << i))
         .otherwise(lit(0L))
     }.reduce(_ + _)
 

@@ -40,12 +40,6 @@ import graft.functions.VectorOps
 class Pq(val m: Int) {
   require(m >= 1, "m (number of subspaces) must be positive")
 
-  /** Left-to-right fold of squared differences — bit-compatible with
-    * OracleFrag's list_sum(list_transform(...)) double arithmetic. */
-  private def sqDist(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0.0), (s, x) => s + x)
-
   /** Data-dependent codebooks: subspace s's codebook = the s-th slice
     * of each seed vector, cast to double. ksub = seed.length. */
   def codebooksFromSeed(seed: Array[Array[Float]]): Array[Array[Array[Double]]] =
@@ -71,12 +65,11 @@ class Pq(val m: Int) {
     * replays). Map-only against broadcast codebook literals. */
   def encodeExpr(emb: Column, books: Array[Array[Array[Double]]]): Column = {
     val sub = books(0)(0).length
-    val dEmb = VectorOps.toDouble(emb)
     array(books.zipWithIndex.map { case (book, s) =>
       val bl = typedLit(book.map(_.toSeq).toSeq)
-      val sv = slice(dEmb, s * sub + 1, sub)
+      val sv = slice(emb, s * sub + 1, sub)
       array_min(transform(sequence(lit(0), lit(book.length - 1)),
-        j => struct(sqDist(sv, element_at(bl, j + 1)).as("d"), j.as("c"))))
+        j => struct(VectorOps.sqdist(sv, element_at(bl, j + 1)).as("d"), j.as("c"))))
         .getField("c")
     }: _*)
   }
@@ -144,7 +137,8 @@ class Pq(val m: Int) {
       .write.mode("append").parquet(path)
 
   /** Driver-side ADC lookup table: table(s)(j) = ‖q_s − books(s)(j)‖²,
-    * accumulated left-to-right in double (matches sqDist/OracleFrag). */
+    * accumulated left-to-right in double (matches VectorOps.sqdist and
+    * OracleFrag.sqDist). */
   def adcTable(q: Array[Float], books: Array[Array[Array[Double]]]): Array[Array[Double]] =
     adcTableD(q.map(_.toDouble), books)
 

@@ -700,7 +700,7 @@ object IndexQueries extends QueryRegistry {
         .join(broadcast(qdf), array_contains(col("cells"), col("cluster")))
         .select(col("query_id").as("qid"), col("vec_id").as("id"),
           Knn.stableScore(graft.functions.VectorOps
-            .fastCosine(col("embedding"), col("qe"))).as("score"))
+            .cosine(col("embedding"), col("qe"))).as("score"))
         .as[(Long, Long, Double)]
       Knn.topKScoredAgg(scored, 10)
     }),
@@ -982,7 +982,7 @@ object IndexQueries extends QueryRegistry {
       val b = assigned.select(col("vec_id").as("b"), col("embedding").as("eb"), col("cell"))
       a.join(b, "cell").filter(col("a") < col("b"))
         .select(col("a"), col("b"),
-          (round(graft.functions.VectorOps.fastCosine(col("ea"), col("eb")), 6) + lit(0.0)).as("cos"))
+          (round(graft.functions.VectorOps.cosine(col("ea"), col("eb")), 6) + lit(0.0)).as("cos"))
         .filter(col("cos") >= 0.3)
         .orderBy(col("a"), col("b"))
     }),
@@ -1021,7 +1021,7 @@ object IndexQueries extends QueryRegistry {
         col("cell"), col("dc").as("db"))
       x.join(y, "cell").filter(col("a") =!= col("b"))
         .withColumn("cos",
-          round(graft.functions.VectorOps.fastCosine(col("ea"), col("eb")), 6) + lit(0.0))
+          round(graft.functions.VectorOps.cosine(col("ea"), col("eb")), 6) + lit(0.0))
         .filter(col("cos") >= 0.4)
         .filter(col("db") < col("da") ||
           (col("db") === col("da") && col("b") < col("a")))
@@ -1149,7 +1149,7 @@ object IndexQueries extends QueryRegistry {
       val rerScored = emb.join(broadcast(cand), Seq("vec_id"))
         .join(broadcast(qs), Seq("query_id"))
         .select(col("query_id").as("qid"), col("vec_id").as("id"),
-          (round(VectorOps.fastCosine(col("embedding"), col("qe")), 6) + 0.0)
+          (round(VectorOps.cosine(col("embedding"), col("qe")), 6) + 0.0)
             .as("score"))
         .as[(Long, Long, Double)]
       def ids(ranked: DataFrame, out: String): DataFrame =

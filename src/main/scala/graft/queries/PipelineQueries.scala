@@ -29,6 +29,42 @@ object PipelineQueries extends QueryRegistry {
       value: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     Folds.orderedSum(sortKey, value)
 
+  /** Per-label, per-dimension embedding means: `per` holds one row per
+    * element (label, vec_id, pos, v) and `m` one row per (label, pos)
+    * with its count `n` and mean `m`, summed in vec_id order. The oracle
+    * side is `labelMeanCtes`. */
+  private def labelMeans(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val per = embeddings(s, dir).select(col("label"), col("vec_id"),
+      posexplode(col("embedding")).as(Seq("pos", "v")))
+    val m = per.groupBy(col("label"), col("pos"))
+      .agg(count(lit(1)).as("n"),
+        orderedSum(col("vec_id"), col("v").cast("double")).as("s"))
+      .withColumn("m", col("s") / col("n"))
+    (per, m)
+  }
+
+  /** One row per source: n_docs, n_tokens, sq = sqrt(n_tokens) and the
+    * cross-domain totals tot_tokens and tot_sq (Σ sq folded in source
+    * order) — the α = 1/2 mixture both mixture queries read. The oracle
+    * side is `mixtureCtes`. */
+  private def mixtureTotals(s: SparkSession, dir: String): DataFrame = {
+    val w = Window.partitionBy().rowsBetween(
+      Window.unboundedPreceding, Window.unboundedFollowing)
+    documents(s, dir)
+      .groupBy(col("source"))
+      .agg(count(lit(1)).as("n_docs"),
+        sum(TextOps.tokenCount(col("text")).cast("long")).as("n_tokens"))
+      .withColumn("sq", sqrt(col("n_tokens").cast("double")))
+      .withColumn("tot_tokens", sum(col("n_tokens")).over(w))
+      .withColumn("tot_sq",
+        aggregate(
+          transform(
+            array_sort(collect_list(struct(col("source").as("k"),
+              col("sq").as("x"))).over(w)),
+            e => e.getField("x")),
+          lit(0.0), (a, x) => a + x))
+  }
+
   /** NB feature hash-space size (the bounded count-table row cap). */
   private[graft] val NbBuckets = 4096
 
@@ -110,13 +146,8 @@ object PipelineQueries extends QueryRegistry {
     // label (posexplode + (label, pos) aggregation — the same shape as
     // the IVF Lloyd step), reduced to its L2 norm
     "label_centroid_profile" -> ((s, dir) => {
-      val per = embeddings(s, dir).select(col("label"), col("vec_id"),
-        posexplode(col("embedding")).as(Seq("pos", "v")))
-      val dimMeans = per.groupBy(col("label"), col("pos"))
-        .agg(count(lit(1)).as("n"),
-          orderedSum(col("vec_id"), col("v").cast("double")).as("s"))
-        .withColumn("m", col("s") / col("n"))
-      dimMeans.groupBy(col("label"))
+      val (_, m) = labelMeans(s, dir)
+      m.groupBy(col("label"))
         .agg(max(col("n")).cast("long").as("n_vectors"),
           round(sqrt(orderedSum(col("pos"), col("m") * col("m"))), 6)
             .as("centroid_norm"))
@@ -132,11 +163,7 @@ object PipelineQueries extends QueryRegistry {
     // centroid FRAME is the state, never the corpus), distance summed
     // in pos order so IEEE addition cannot reorder
     "centroid_separation_audit" -> ((s, dir) => {
-      val per = embeddings(s, dir).select(col("label"), col("vec_id"),
-        posexplode(col("embedding")).as(Seq("pos", "v")))
-      val m = per.groupBy(col("label"), col("pos"))
-        .agg((orderedSum(col("vec_id"), col("v").cast("double")) /
-          count(lit(1))).as("m"))
+      val (_, m) = labelMeans(s, dir)
       val a = m.select(col("label").as("la"), col("pos"), col("m").as("ma"))
       val b = m.select(col("label").as("lb"), col("pos"), col("m").as("mb"))
       a.join(b, "pos").filter(col("la") < col("lb"))
@@ -155,11 +182,7 @@ object PipelineQueries extends QueryRegistry {
     // rows, but the centroid side is labels×dims (broadcast-sized at
     // any corpus scale) and the fold is pos-ordered
     "label_outlier_audit" -> ((s, dir) => {
-      val per = embeddings(s, dir).select(col("label"), col("vec_id"),
-        posexplode(col("embedding")).as(Seq("pos", "v")))
-      val m = per.groupBy(col("label"), col("pos"))
-        .agg((orderedSum(col("vec_id"), col("v").cast("double")) /
-          count(lit(1))).as("m"))
+      val (per, m) = labelMeans(s, dir)
       per.join(broadcast(m), Seq("label", "pos"))
         .groupBy(col("label"), col("vec_id"))
         .agg(round(sqrt(orderedSum(col("pos"),
@@ -305,31 +328,15 @@ object PipelineQueries extends QueryRegistry {
     // over that BOUNDED frame — the corpus is scanned ONCE (pinned in
     // PlanSpec) and never shuffled on anything wider than the domain
     // key; only #domains rows ever single-partition.
-    "domain_mixture_weights" -> ((s, dir) => {
-      val w = Window.partitionBy().rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing)
-      val per = documents(s, dir)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(TextOps.tokenCount(col("text")).cast("long")).as("n_tokens"))
-        .withColumn("sq", sqrt(col("n_tokens").cast("double")))
-      per
-        .withColumn("tot_tokens", sum(col("n_tokens")).over(w))
-        .withColumn("tot_sq",
-          aggregate(
-            transform(
-              array_sort(collect_list(struct(col("source").as("k"),
-                col("sq").as("x"))).over(w)),
-              e => e.getField("x")),
-            lit(0.0), (a, x) => a + x))
+    "domain_mixture_weights" -> ((s, dir) =>
+      mixtureTotals(s, dir)
         .select(col("source"), col("n_docs"), col("n_tokens"),
           (round(col("sq") / col("tot_sq"), 6) + 0.0).as("weight"),
           (round((col("sq") / col("tot_sq")) * col("tot_tokens").cast("double")
             / col("n_tokens").cast("double"), 6) + 0.0).as("boost"),
           floor((col("sq") / col("tot_sq")) * lit(100000.0)).cast("long")
             .as("alloc_tokens_100k"))
-        .orderBy(col("source"))
-    }),
+        .orderBy(col("source"))),
 
     // the SAMPLING step the mixture weights exist for: per-source
     // acceptance rate min(1, boost) (boost = the α=1/2 temperature
@@ -344,21 +351,7 @@ object PipelineQueries extends QueryRegistry {
     // ordered-fold tot_sq discipline, then FLOORS into integers, so
     // the oracle replay is exact.
     "mixture_resample_audit" -> ((s, dir) => {
-      val w = Window.partitionBy().rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing)
-      val rates = documents(s, dir)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(TextOps.tokenCount(col("text")).cast("long")).as("n_tokens"))
-        .withColumn("sq", sqrt(col("n_tokens").cast("double")))
-        .withColumn("tot_tokens", sum(col("n_tokens")).over(w))
-        .withColumn("tot_sq",
-          aggregate(
-            transform(
-              array_sort(collect_list(struct(col("source").as("k"),
-                col("sq").as("x"))).over(w)),
-              e => e.getField("x")),
-            lit(0.0), (a, x) => a + x))
+      val rates = mixtureTotals(s, dir)
         .select(col("source"), col("n_docs"),
           least(lit(1000000L),
             floor((col("sq") / col("tot_sq")) * col("tot_tokens").cast("double")
@@ -545,6 +538,41 @@ object PipelineQueries extends QueryRegistry {
        |     (SELECT count(DISTINCT sm) AS v FROM (SELECT unnest(string_split(sym, ' ')) AS sm FROM w0)) vb,
        |     (SELECT count(DISTINCT sm) AS v FROM (SELECT unnest(string_split(sym, ' ')) AS sm FROM w5)) va""".stripMargin
 
+  // The shared CTE chains below are concatenated onto each oracle, not
+  // interpolated into a stripMargin template (see the TextQueries NOTE).
+
+  /** DuckDB side of `labelMeans`: `per` (label, vec_id, pos, v) and `m`
+    * (label, pos, n, m). */
+  private val labelMeanCtes =
+    """WITH per AS (
+      |  SELECT label, vec_id,
+      |         unnest(range(1, len(embedding)+1)) AS pos,
+      |         CAST(unnest(embedding) AS DOUBLE) AS v
+      |  FROM embeddings),
+      |dm AS (
+      |  SELECT label, pos, count(*) AS n,
+      |         list_reduce(list_prepend(CAST(0 AS DOUBLE), list(v ORDER BY vec_id)), (a, x) -> a + x) AS s
+      |  FROM per GROUP BY label, pos),
+      |m AS (SELECT label, pos, n, s / n AS m FROM dm)""".stripMargin
+
+  /** DuckDB side of `mixtureTotals`: `t` (doc_id, source, toks), `p2`
+    * (source, n_docs, n_tokens, sq) and the one-row `tot` (tot_tokens,
+    * tot_sq). */
+  private val mixtureCtes =
+    """WITH t AS (
+      |  SELECT doc_id, source,
+      |         list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '') AS toks
+      |  FROM documents),
+      |per AS (SELECT source, count(*) AS n_docs, sum(len(toks)) AS n_tokens
+      |        FROM t GROUP BY source),
+      |p2 AS (SELECT source, n_docs, n_tokens,
+      |              sqrt(CAST(n_tokens AS DOUBLE)) AS sq
+      |       FROM per),
+      |tot AS (SELECT sum(n_tokens) AS tot_tokens,
+      |               list_reduce(list_prepend(CAST(0 AS DOUBLE), list(sq ORDER BY source)),
+      |                           (a, x) -> a + x) AS tot_sq
+      |        FROM p2)""".stripMargin
+
   override def oracle: Map[String, String] = Map(
     "bpe_train_merges" -> bpeOracleSql,
     "bpe_vocab_compression" -> bpeCompressionOracleSql,
@@ -592,54 +620,27 @@ object PipelineQueries extends QueryRegistry {
          |GROUP BY source, shard ORDER BY source, shard""".stripMargin,
 
     "label_outlier_audit" ->
-      """WITH per AS (
-        |  SELECT label, vec_id,
-        |         unnest(range(1, len(embedding)+1)) AS pos,
-        |         CAST(unnest(embedding) AS DOUBLE) AS v
-        |  FROM embeddings),
-        |dm AS (
-        |  SELECT label, pos, count(*) AS n,
-        |         list_reduce(list_prepend(CAST(0 AS DOUBLE), list(v ORDER BY vec_id)), (a, x) -> a + x) AS s
-        |  FROM per GROUP BY label, pos),
-        |m AS (SELECT label, pos, s / n AS m FROM dm),
+      (labelMeanCtes + """,
         |d AS (SELECT p.label, p.vec_id, p.pos, p.v - m.m AS d
         |      FROM per p JOIN m ON p.label = m.label AND p.pos = m.pos)
         |SELECT vec_id, label,
         |       round(sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE), list(d * d ORDER BY pos)), (a, x) -> a + x)), 6) AS dist
         |FROM d GROUP BY vec_id, label
-        |ORDER BY dist DESC, vec_id ASC LIMIT 15""".stripMargin,
+        |ORDER BY dist DESC, vec_id ASC LIMIT 15""".stripMargin),
 
     "centroid_separation_audit" ->
-      """WITH per AS (
-        |  SELECT label, vec_id,
-        |         unnest(range(1, len(embedding)+1)) AS pos,
-        |         CAST(unnest(embedding) AS DOUBLE) AS v
-        |  FROM embeddings),
-        |dm AS (
-        |  SELECT label, pos, count(*) AS n,
-        |         list_reduce(list_prepend(CAST(0 AS DOUBLE), list(v ORDER BY vec_id)), (a, x) -> a + x) AS s
-        |  FROM per GROUP BY label, pos),
-        |m AS (SELECT label, pos, s / n AS m FROM dm),
+      (labelMeanCtes + """,
         |p AS (SELECT x.label AS la, y.label AS lb, x.pos, x.m - y.m AS d
         |      FROM m x JOIN m y ON x.pos = y.pos AND x.label < y.label)
         |SELECT la, lb,
         |       round(sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE), list(d * d ORDER BY pos)), (a, x) -> a + x)), 6) AS dist
-        |FROM p GROUP BY la, lb ORDER BY dist ASC, la, lb LIMIT 15""".stripMargin,
+        |FROM p GROUP BY la, lb ORDER BY dist ASC, la, lb LIMIT 15""".stripMargin),
 
     "label_centroid_profile" ->
-      """WITH per AS (
-        |  SELECT label, vec_id,
-        |         unnest(range(1, len(embedding)+1)) AS pos,
-        |         CAST(unnest(embedding) AS DOUBLE) AS v
-        |  FROM embeddings),
-        |dm AS (
-        |  SELECT label, pos, count(*) AS n,
-        |         list_reduce(list_prepend(CAST(0 AS DOUBLE), list(v ORDER BY vec_id)), (a, x) -> a + x) AS s
-        |  FROM per GROUP BY label, pos),
-        |m AS (SELECT label, pos, n, s / n AS m FROM dm)
+      (labelMeanCtes + """
         |SELECT label, CAST(max(n) AS BIGINT) AS n_vectors,
         |       round(sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE), list(m * m ORDER BY pos)), (a, x) -> a + x)), 6) AS centroid_norm
-        |FROM m GROUP BY label ORDER BY label""".stripMargin,
+        |FROM m GROUP BY label ORDER BY label""".stripMargin),
 
     // training + scoring replayed from raw text: the same fe CTE as
     // dsir's, class counts over the even half, per-occurrence
@@ -731,40 +732,16 @@ object PipelineQueries extends QueryRegistry {
         |FROM scored ORDER BY weight DESC, doc_id LIMIT 30""".stripMargin,
 
     "domain_mixture_weights" ->
-      """WITH t AS (
-        |  SELECT source,
-        |         list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '') AS toks
-        |  FROM documents),
-        |per AS (SELECT source, count(*) AS n_docs, sum(len(toks)) AS n_tokens
-        |        FROM t GROUP BY source),
-        |p2 AS (SELECT source, n_docs, n_tokens,
-        |              sqrt(CAST(n_tokens AS DOUBLE)) AS sq
-        |       FROM per),
-        |tot AS (SELECT sum(n_tokens) AS tot_tokens,
-        |               list_reduce(list_prepend(CAST(0 AS DOUBLE), list(sq ORDER BY source)),
-        |                           (a, x) -> a + x) AS tot_sq
-        |        FROM p2)
+      (mixtureCtes + """
         |SELECT source, CAST(n_docs AS BIGINT) AS n_docs,
         |       CAST(n_tokens AS BIGINT) AS n_tokens,
         |       round(sq / tot_sq, 6) + 0.0 AS weight,
         |       round((sq / tot_sq) * CAST(tot_tokens AS DOUBLE) / CAST(n_tokens AS DOUBLE), 6) + 0.0 AS boost,
         |       CAST(floor((sq / tot_sq) * 100000.0) AS BIGINT) AS alloc_tokens_100k
-        |FROM p2, tot ORDER BY source""".stripMargin,
+        |FROM p2, tot ORDER BY source""".stripMargin),
 
     "mixture_resample_audit" ->
-      """WITH t AS (
-        |  SELECT doc_id, source,
-        |         list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '') AS toks
-        |  FROM documents),
-        |per AS (SELECT source, count(*) AS n_docs, sum(len(toks)) AS n_tokens
-        |        FROM t GROUP BY source),
-        |p2 AS (SELECT source, n_docs, n_tokens,
-        |              sqrt(CAST(n_tokens AS DOUBLE)) AS sq
-        |       FROM per),
-        |tot AS (SELECT sum(n_tokens) AS tot_tokens,
-        |               list_reduce(list_prepend(CAST(0 AS DOUBLE), list(sq ORDER BY source)),
-        |                           (a, x) -> a + x) AS tot_sq
-        |        FROM p2),
+      (mixtureCtes + """,
         |rates AS (SELECT source, n_docs,
         |            least(1000000,
         |              CAST(floor((sq / tot_sq) * CAST(tot_tokens AS DOUBLE)
@@ -777,7 +754,7 @@ object PipelineQueries extends QueryRegistry {
         |       CAST(max(r.micro) AS BIGINT) AS accept_micro,
         |       CAST(sum(CASE WHEN h.h < r.micro THEN 1 ELSE 0 END) AS BIGINT) AS n_sampled
         |FROM h JOIN rates r ON h.source = r.source
-        |GROUP BY h.source ORDER BY h.source""".stripMargin,
+        |GROUP BY h.source ORDER BY h.source""".stripMargin),
 
     "cooccurrence_lift" ->
       """WITH t AS (

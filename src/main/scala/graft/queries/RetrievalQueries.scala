@@ -262,7 +262,7 @@ object RetrievalQueries extends QueryRegistry {
         .select(col("embedding")).collect()(0).getSeq[Float](0)
       val vec = emb
         .select(col("vec_id"),
-          (round(VectorOps.fastCosine(col("embedding"), typedLit(q)), 6) + 0.0)
+          (round(VectorOps.cosine(col("embedding"), typedLit(q)), 6) + 0.0)
             .as("cos"))
         .orderBy(col("cos").desc, col("vec_id").asc).limit(20)
         .withColumn("crank",
@@ -299,7 +299,7 @@ object RetrievalQueries extends QueryRegistry {
         .select(col("embedding")).collect()(0).getSeq[Float](0)
       val sem = emb
         .select(col("vec_id").as("doc_id"),
-          (round(VectorOps.fastCosine(col("embedding"), typedLit(q)), 6) + 0.0)
+          (round(VectorOps.cosine(col("embedding"), typedLit(q)), 6) + 0.0)
             .as("cos"))
         .orderBy(col("cos").desc, col("doc_id").asc).limit(20)
         .select(col("doc_id"))
@@ -333,7 +333,7 @@ object RetrievalQueries extends QueryRegistry {
         .select(col("embedding")).collect()(0).getSeq[Float](0)
       val rel = emb
         .select(col("vec_id"),
-          (round(VectorOps.fastCosine(col("embedding"), typedLit(q)), 6) + 0.0)
+          (round(VectorOps.cosine(col("embedding"), typedLit(q)), 6) + 0.0)
             .as("cos"))
         .orderBy(col("cos").desc, col("vec_id").asc).limit(10)
         .select(col("vec_id").as("doc_id"))
@@ -376,7 +376,7 @@ object RetrievalQueries extends QueryRegistry {
       val score = (0 until m).map { qi =>
         val qc = typedLit(q.slice(qi * sub, qi * sub + sub))
         greatest((0 until m).map { dj =>
-          VectorOps.fastCosine(slice(col("embedding"), dj * sub + 1, sub), qc)
+          VectorOps.cosine(slice(col("embedding"), dj * sub + 1, sub), qc)
         }: _*)
       }.reduce(_ + _)
       emb.select(col("vec_id"), (round(score, 6) + 0.0).as("maxsim"))

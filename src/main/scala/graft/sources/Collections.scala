@@ -22,8 +22,8 @@ import org.apache.spark.sql.types._
   * Semantics pinned from the reference:
   *   - fixed dimension per collection, validated at insert
   *     (collection_manager.rs:146-152) → DimensionMismatchException;
-  *   - finite components, validated at insert and upsert →
-  *     NonFiniteVectorException;
+  *   - a non-NULL vector of finite, non-NULL components, validated at
+  *     insert and upsert → NonFiniteVectorException;
   *   - root-crate strict CRUD: DuplicateId on re-insert
   *     (src/storage.rs:30-36), MissingId on absent delete (:42-47);
   *   - `upsert` keeps the subcrate's INSERT-OR-REPLACE behavior
@@ -132,14 +132,14 @@ class CollectionManager(spark: SparkSession, basePath: String) {
     scan(name).filter(col("id") === lit(id))
 
   /** Strict insert: errors on any duplicate id (src/storage.rs:30-36),
-    * dimension mismatch (collection_manager.rs:146-152) or non-finite
-    * component. `rows` needs columns (id, embedding, metadata?). An id
-    * is a duplicate when it is
-    * already stored or repeats within the batch — the reference inserts
-    * row by row, so the second copy raises. Both kinds are found in one
-    * action: a broadcast-friendly semi join against the stored ids (no
-    * full shuffle of the existing data) beside a count over the batch's
-    * own ids.
+    * dimension mismatch (collection_manager.rs:146-152), NULL vector or
+    * NULL or non-finite component. `rows` needs columns (id, embedding,
+    * metadata?). An id is a duplicate when it is already stored or
+    * repeats within the batch — the reference inserts row by row, so the
+    * second copy raises. Both kinds are found in one action: a
+    * broadcast-friendly semi join against the stored ids (no full
+    * shuffle of the existing data) beside a count over the batch's own
+    * ids.
     */
   def insert(name: String, rows: DataFrame): Unit = {
     val meta = collectionInfo(name)
@@ -226,14 +226,17 @@ class CollectionManager(spark: SparkSession, basePath: String) {
     if (!Files.exists(metaPath(name))) throw NoSuchCollectionException(name)
 
   /** Reject a batch holding a vector of the wrong dimension
-    * (DimensionMismatchException, which wins) or with a NaN or
-    * infinite component (NonFiniteVectorException): a NaN score sorts
-    * above every real one under `score DESC`, so one such stored
-    * vector would top every search. One action finds both kinds. */
+    * (DimensionMismatchException, which wins), a NULL vector, or one with
+    * a NULL, NaN or infinite component (NonFiniteVectorException): a NaN
+    * score sorts above every real one under `score DESC`, so one such
+    * stored vector would top every search, and a NULL one has no score
+    * at all. One action finds every kind. Both tests are written to be
+    * true or false, never NULL, so the filter cannot drop a bad row. */
   private def validate(incoming: DataFrame, dimension: Int): Unit = {
     val emb = col("embedding")
-    val dimOk = size(emb) === dimension
-    val finite = !exists(emb, x => isnan(x) || abs(x) === Float.PositiveInfinity)
+    val dimOk = emb.isNull || size(emb) === dimension
+    val finite = emb.isNotNull &&
+      !exists(emb, x => x.isNull || isnan(x) || abs(x) === Float.PositiveInfinity)
     val bad = incoming.filter(!dimOk || !finite)
       .select(col("id"), size(emb).as("dim"), dimOk.as("dim_ok"))
       .orderBy(col("dim_ok"), col("id")).limit(5).collect()

@@ -19,9 +19,10 @@ final case class DimensionMismatchException(expected: Int, got: Seq[Int])
   extends VectorDbException(
     s"dimension mismatch: expected $expected, got ${got.take(5).mkString(", ")}")
 
-/** Insert of a vector with a NaN or infinite component. */
+/** Insert of a NULL vector, or of one with a NULL, NaN or infinite
+  * component. */
 final case class NonFiniteVectorException(ids: Seq[String])
-  extends VectorDbException(s"non-finite vector component(s) in id(s): ${ids.take(5).mkString(", ")}")
+  extends VectorDbException(s"NULL or non-finite vector component(s) in id(s): ${ids.take(5).mkString(", ")}")
 
 /** Unknown collection name. */
 final case class NoSuchCollectionException(name: String)

@@ -1,48 +1,61 @@
 package graft
 
+import org.apache.spark.sql.{AnalysisException, Column}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorOps
 
-/** The native codegen expressions must be BIT-identical to the HOF
-  * kernels — they share result responsibility with the DuckDB oracle,
-  * so even a 1-ulp divergence (e.g. different accumulation order)
-  * would surface as a hash mismatch. */
+/** The native vector kernels must be BIT-identical to the HOF formulas
+  * of [[VectorHof]] — they share result responsibility with the DuckDB
+  * oracle, so even a 1-ulp divergence (e.g. different accumulation
+  * order) would surface as a hash mismatch. */
 class ExpressionSpec extends SparkSpec {
 
   private lazy val emb = spark.read.parquet(s"$sfDir/embeddings.parquet").cache()
 
-  test("fastCosine == HOF cosine exactly, all pairs vs first vector") {
+  private type Kernel = (Column, Column) => Column
+  private val kernels: Seq[(String, Kernel, Kernel)] = Seq(
+    ("dot", VectorOps.dot, VectorHof.dot),
+    ("sqdist", VectorOps.sqdist, VectorHof.sqdist),
+    ("euclidean", VectorOps.euclidean, VectorHof.euclidean),
+    ("manhattan", VectorOps.manhattan, VectorHof.manhattan),
+    ("cosine", VectorOps.cosine, VectorHof.cosine))
+
+  test("graft_cosine == HOF cosine exactly, all pairs vs first vector") {
     val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
     val diff = emb.crossJoin(q)
       .select(
-        VectorOps.cosine(col("embedding"), col("qe")).as("hof"),
-        VectorOps.fastCosine(col("embedding"), col("qe")).as("fast"))
+        VectorHof.cosine(col("embedding"), col("qe")).as("hof"),
+        VectorOps.cosine(col("embedding"), col("qe")).as("fast"))
       .filter(col("hof") =!= col("fast"))
       .count()
     assert(diff == 0L)
   }
 
-  test("fastDot == HOF dot exactly, including double-literal side") {
+  test("graft_dot/graft_sqdist == HOF exactly, including double-literal side") {
+    // the double side is how Lsh passes its planes and Ivf/Pq their
+    // centroids and codebooks
     val p = typedLit((1 to 64).map(i => (i * 0.37) - 12.0))
     val diff = emb
       .select(
-        VectorOps.dot(col("embedding"), p).as("hof"),
-        VectorOps.fastDot(col("embedding"), p).as("fast"))
-      .filter(col("hof") =!= col("fast"))
+        VectorHof.dot(col("embedding"), p).as("hd"),
+        VectorOps.dot(col("embedding"), p).as("fd"),
+        VectorHof.sqdist(col("embedding"), p).as("hs"),
+        VectorOps.sqdist(col("embedding"), p).as("fs"))
+      .filter(col("hd") =!= col("fd") || col("hs") =!= col("fs"))
       .count()
     assert(diff == 0L)
   }
 
-  test("fastEuclidean/fastManhattan == HOF exactly on column data (codegen path)") {
+  test("graft_euclidean/graft_manhattan == HOF exactly on column data (codegen path)") {
     // column inputs are non-foldable, so this exercises doGenCode, not
     // the constant-folded eval the literal-based property test hits
     val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
     val diff = emb.crossJoin(q)
       .select(
-        VectorOps.euclidean(col("embedding"), col("qe")).as("he"),
-        VectorOps.fastEuclidean(col("embedding"), col("qe")).as("fe"),
-        VectorOps.manhattan(col("embedding"), col("qe")).as("hm"),
-        VectorOps.fastManhattan(col("embedding"), col("qe")).as("fm"))
+        VectorHof.euclidean(col("embedding"), col("qe")).as("he"),
+        VectorOps.euclidean(col("embedding"), col("qe")).as("fe"),
+        VectorHof.manhattan(col("embedding"), col("qe")).as("hm"),
+        VectorOps.manhattan(col("embedding"), col("qe")).as("fm"))
       .filter(col("he") =!= col("fe") || col("hm") =!= col("fm"))
       .count()
     assert(diff == 0L)
@@ -53,33 +66,60 @@ class ExpressionSpec extends SparkSpec {
     // displace a real neighbor from a top-k — HOF zip_with null-pads and
     // the fold returns null; the fused kernels must agree
     val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
+    val short = slice(col("embedding"), 1, 16)
     val rows = emb.limit(3).crossJoin(q)
-      .select(
-        VectorOps.fastCosine(slice(col("embedding"), 1, 16), col("qe")).as("fc"),
-        VectorOps.fastDot(slice(col("embedding"), 1, 16), col("qe")).as("fd"),
-        VectorOps.fastEuclidean(slice(col("embedding"), 1, 16), col("qe")).as("fe"),
-        VectorOps.fastManhattan(slice(col("embedding"), 1, 16), col("qe")).as("fm"),
-        VectorOps.cosine(slice(col("embedding"), 1, 16), col("qe")).as("hc"),
-        VectorOps.euclidean(slice(col("embedding"), 1, 16), col("qe")).as("he"))
+      .select(kernels.flatMap { case (k, native, hof) =>
+        Seq(native(short, col("qe")).as(s"f$k"), hof(short, col("qe")).as(s"h$k"))
+      }: _*)
       .collect()
     rows.foreach { r =>
-      (0 until 6).foreach(i => assert(r.isNullAt(i), s"column $i not null"))
+      (0 until r.length).foreach(i => assert(r.isNullAt(i), s"column ${r.schema(i).name} not null"))
     }
     // the one degenerate corner where the HOF chain does NOT go null:
     // a zero-norm operand hits the reference guard BEFORE the ragged
     // dot, so both paths must yield 0.0 even across lengths
     val z16 = typedLit(Array.fill(16)(0.0f))
     val zrow = emb.limit(1).crossJoin(q)
-      .select(VectorOps.fastCosine(z16, col("qe")).as("fz"),
-        VectorOps.cosine(z16, col("qe")).as("hz"))
+      .select(VectorOps.cosine(z16, col("qe")).as("fz"),
+        VectorHof.cosine(z16, col("qe")).as("hz"))
       .collect()(0)
     assert(zrow.getDouble(0) == 0.0 && zrow.getDouble(1) == 0.0)
+
+    // a NULL element poisons the HOF fold: every kernel gives NULL, except
+    // that cosine's zero-norm guard still fires on the other operand;
+    // float and double operands alike (repartition keeps the projection
+    // out of the local-relation folding, so it runs generated code)
+    import spark.implicits._
+    val f = None: Option[Float]
+    val withNulls = Seq(
+      (Seq(Some(1f), f, Some(3f)), Seq(Some(1f), Some(1f), Some(1f)), Seq(Some(1.0), Some(1.0), Some(1.0))),
+      (Seq(Some(1f), f), Seq(Some(0f), Some(0f)), Seq(Some(0.0), Some(0.0))),
+      (Seq(Some(0f), Some(0f), Some(0f)), Seq(f, Some(1f)), Seq(None, Some(2.0))),
+      (Seq(f), Seq(f), Seq(None)),
+      (Seq(Some(2f), Some(-1f)), Seq(Some(2f), f), Seq(Some(0.5), Some(0.25))))
+      .toDF("a", "b", "c").repartition(2)
+    val pairs = Seq(("a", "b"), ("b", "a"), ("a", "c"), ("c", "b"))
+    val cmp = withNulls.select(kernels.flatMap { case (k, native, hof) =>
+      pairs.map { case (x, y) =>
+        (native(col(x), col(y)) <=> hof(col(x), col(y))).as(s"$k($x,$y)")
+      }
+    }: _*).collect()
+    cmp.foreach(r => r.schema.fieldNames.zipWithIndex.foreach { case (n, i) =>
+      assert(r.getBoolean(i), s"$n differs from the HOF reference in $r")
+    })
+    val cos = withNulls.select(VectorOps.cosine(col("a"), col("b")).as("ab"),
+      VectorOps.cosine(col("a"), col("c")).as("ac"),
+      VectorOps.dot(col("a"), col("b")).as("d")).collect()
+    // [1, NULL] against a zero-norm vector scores 0.0; [1, NULL, 3] is NULL
+    assert(cos.count(r => !r.isNullAt(0) && r.getDouble(0) == 0.0) == 2)
+    assert(cos.count(r => !r.isNullAt(1) && r.getDouble(1) == 0.0) == 2)
+    assert(cos.forall(_.isNullAt(2)))
   }
 
   test("zero-vector guard matches the reference (cosine -> 0.0)") {
     val z = typedLit(Array.fill(64)(0.0f))
     val r = emb.limit(1)
-      .select(VectorOps.fastCosine(col("embedding"), z)).collect()(0).getDouble(0)
+      .select(VectorOps.cosine(col("embedding"), z)).collect()(0).getDouble(0)
     assert(r == 0.0)
   }
 
@@ -90,25 +130,35 @@ class ExpressionSpec extends SparkSpec {
     val r = spark.sql("SELECT graft_cosine(array(1.0F, 0.0F), array(1.0F, 0.0F))")
       .collect()(0).getDouble(0)
     assert(r == 1.0)
+    assert(spark.sql("SELECT graft_sqdist(array(1.0F, 0.0F), array(0.0D, 2.0D))")
+      .collect()(0).getDouble(0) == 5.0)
+    // only array<float|double> operands pass analysis
+    val e = intercept[AnalysisException](
+      spark.sql("SELECT graft_cosine(array(1, 2), array(1, 2))"))
+    assert(e.getCondition.startsWith("DATATYPE_MISMATCH"), e.getMessage)
     new graft.expressions.GraftExtensions()
       .apply(new org.apache.spark.sql.SparkSessionExtensions) // must not throw
   }
 
   test("interpreted eval path agrees with codegen path") {
-    // force interpreted evaluation by turning codegen off in a local op
+    // force interpreted evaluation by turning codegen off in a local op;
+    // every kernel, with a float column and a double literal operand
+    val q = emb.filter(col("vec_id") === 1).select(col("embedding").as("qe"))
+    val p = typedLit((1 to 64).map(i => (i * 0.37) - 12.0))
+    def scores() = emb.crossJoin(q)
+      .select(col("vec_id") +: kernels.flatMap { case (k, native, _) =>
+        Seq(native(col("embedding"), col("qe")).as(s"$k-q"), native(col("embedding"), p).as(s"$k-p"))
+      }: _*)
+      .collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
     val prev = spark.conf.get("spark.sql.codegen.wholeStage", "true")
     try {
       spark.conf.set("spark.sql.codegen.wholeStage", "false")
       spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-      val q = emb.filter(col("vec_id") === 1).select(col("embedding").as("qe"))
-      val interp = emb.crossJoin(q)
-        .select(col("vec_id"), VectorOps.fastCosine(col("embedding"), col("qe")).as("c"))
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
+      val interp = scores()
       spark.conf.set("spark.sql.codegen.wholeStage", "true")
       spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-      val gen = emb.crossJoin(q)
-        .select(col("vec_id"), VectorOps.fastCosine(col("embedding"), col("qe")).as("c"))
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
+      val gen = scores()
+      assert(interp.size == emb.count())
       assert(interp == gen)
     } finally {
       spark.conf.set("spark.sql.codegen.wholeStage", prev)

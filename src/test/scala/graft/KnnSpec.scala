@@ -74,7 +74,7 @@ class KnnSpec extends SparkSpec {
     val b = emb.select($"vec_id".as("b"), $"embedding".as("eb"))
     val brute = a.crossJoin(b).filter($"a" < $"b")
       .select($"a", $"b",
-        round(graft.functions.VectorOps.fastCosine($"ea", $"eb"), 6).as("cos"))
+        round(graft.functions.VectorOps.cosine($"ea", $"eb"), 6).as("cos"))
       .filter($"cos" >= 0.3)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     val banded = graft.operators.Dedup.lshEmbeddingPairs(emb, 16, 4, 0.3)

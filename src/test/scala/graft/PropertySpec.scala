@@ -28,9 +28,9 @@ class PropertySpec extends SparkSpec {
   test("cosine is symmetric and bounded; fast == HOF on every case") {
     cases(vecGen).foreach { a =>
       val b = a.map(x => x * 0.5f + 1.0f)
-      val ab = evalKernel(a, b, VectorOps.cosine)
-      val ba = evalKernel(b, a, VectorOps.cosine)
-      val fast = evalKernel(a, b, VectorOps.fastCosine)
+      val ab = evalKernel(a, b, VectorHof.cosine)
+      val ba = evalKernel(b, a, VectorHof.cosine)
+      val fast = evalKernel(a, b, VectorOps.cosine)
       assert(math.abs(ab - ba) < 1e-12, s"asymmetric for ${a.toSeq}")
       assert(ab >= -1.0 - 1e-9 && ab <= 1.0 + 1e-9)
       assert(ab == fast, s"fast != hof for ${a.toSeq}")
@@ -40,10 +40,10 @@ class PropertySpec extends SparkSpec {
   test("euclidean/manhattan: fast native == HOF bit-for-bit on every case") {
     cases(vecGen).foreach { a =>
       val b = a.map(x => x * -0.3f + 2.0f)
-      assert(evalKernel(a, b, VectorOps.euclidean) ==
-        evalKernel(a, b, VectorOps.fastEuclidean), s"euclid ${a.toSeq}")
-      assert(evalKernel(a, b, VectorOps.manhattan) ==
-        evalKernel(a, b, VectorOps.fastManhattan), s"manhattan ${a.toSeq}")
+      assert(evalKernel(a, b, VectorHof.euclidean) ==
+        evalKernel(a, b, VectorOps.euclidean), s"euclid ${a.toSeq}")
+      assert(evalKernel(a, b, VectorHof.manhattan) ==
+        evalKernel(a, b, VectorOps.manhattan), s"manhattan ${a.toSeq}")
     }
   }
 

@@ -19,6 +19,10 @@ class StorageSpec extends SparkSpec {
   private val v3a = Array(1.0f, 2.0f, 3.0f)
   private val v3b = Array(4.0f, 5.0f, 6.0f)
 
+  /** A vector with a NULL component ("u") and a NULL vector ("z"). */
+  private def nullRows =
+    Seq(("u", Some(Seq(Some(1.0f), None, Some(3.0f)))), ("z", None)).toDF("id", "embedding")
+
   test("create/list/info/delete collection with _meta.json sidecar") {
     val base = freshBase()
     val cm = new CollectionManager(spark, base)
@@ -142,10 +146,11 @@ class StorageSpec extends SparkSpec {
     val nan = Array(1.0f, Float.NaN, 3.0f)
     val inf = Array(Float.NegativeInfinity, 2.0f, 3.0f)
     val e = intercept[NonFiniteVectorException](
-      cm.insert("c", rows("ok" -> v3a, "n" -> nan, "i" -> inf)))
-    assert(e.ids === Seq("i", "n"))
+      cm.insert("c", rows("ok" -> v3a, "n" -> nan, "i" -> inf).union(nullRows)))
+    assert(e.ids === Seq("i", "n", "u", "z"))
     assert(cm.countVectors("c") === 0L)
-    intercept[DimensionMismatchException](cm.insert("c", rows("n" -> nan, "d" -> Array(1.0f))))
+    intercept[DimensionMismatchException](
+      cm.insert("c", rows("n" -> nan, "d" -> Array(1.0f)).union(nullRows)))
     cm.insert("c", rows("ok" -> v3a))
     assert(cm.countVectors("c") === 1L)
   }
@@ -155,8 +160,8 @@ class StorageSpec extends SparkSpec {
     cm.createCollection("c", 3)
     cm.insert("c", rows("a" -> v3a))
     val e = intercept[NonFiniteVectorException](
-      cm.upsert("c", rows("a" -> Array(Float.PositiveInfinity, 0.0f, 0.0f))))
-    assert(e.ids === Seq("a"))
+      cm.upsert("c", rows("a" -> Array(Float.PositiveInfinity, 0.0f, 0.0f)).union(nullRows)))
+    assert(e.ids === Seq("a", "u", "z"))
     assert(cm.getVector("c", "a").select($"embedding")
       .collect()(0).getSeq[Float](0) === v3a.toSeq)
   }
