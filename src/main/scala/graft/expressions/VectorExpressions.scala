@@ -21,7 +21,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * of different lengths give NULL, and so does a NULL element, so a
   * wrong-dimension or incomplete vector never gets a prefix score that
   * could displace a real neighbour from a top-k. Interpreted and
-  * generated code call the same methods here. */
+  * generated code call the same methods here, and so does the driver:
+  * the HNSW walk, the IVF cell probe, the PQ lookup table and the LSH
+  * query signature pass their arrays wrapped by
+  * `UnsafeArrayData.fromPrimitiveArray`. The dimension rule holds there
+  * too: a stored vector of another dimension than the query's is never
+  * scored, and a query whose dimension differs from the index's fails
+  * with an `IllegalArgumentException`. */
 object VectorKernels {
 
   @inline private def at(v: ArrayData, isFloat: Boolean, i: Int): Double =

@@ -1,8 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.expressions.VectorKernels
 import graft.functions.VectorOps
 
 import scala.collection.mutable
@@ -124,6 +126,12 @@ class Hnsw(val m: Int = 16, val ef: Int = 32, val seed: Long = 42L,
         lb.join(rb, Seq("level", "bucket")).filter(col("src") =!= col("dst"))
           .drop("bucket")
     }
+    topM(pairs)
+  }
+
+  /** The top-`m` prune: each (level, src) keeps its `m` nearest
+    * candidates by (1 − cosine, dst), with the distance rounded to 6. */
+  private def topM(pairs: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("level"), col("src"))
       .orderBy(col("dist").asc, col("dst").asc)
     pairs
@@ -217,15 +225,7 @@ class Hnsw(val m: Int = 16, val ef: Int = 32, val seed: Long = 42L,
       .join(touched, Seq("level", "src"), "left_semi")
       .join(sv, "src").join(dv, "dst")
       .select(col("level"), col("src"), col("dst"), col("src_vec"), col("dst_vec"))
-    val w = Window.partitionBy(col("level"), col("src"))
-      .orderBy(col("dist").asc, col("dst").asc)
-    val repruned = newSrcPairs.unionByName(oldNewPairs).unionByName(storedTouched)
-      .select(col("level"), col("src"), col("dst"),
-        (lit(1.0) - VectorOps.cosine(col("src_vec"), col("dst_vec"))).as("dist"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= m)
-      .select(col("src").as("node_id"), col("level"),
-        col("dst").as("neighbor_id"), round(col("dist"), 6).as("dist"))
+    val repruned = topM(newSrcPairs.unionByName(oldNewPairs).unionByName(storedTouched))
     // untouched stored rows pass through without vectors or windows
     val untouched = existing.join(touched
         .select(col("level"), col("src").as("node_id")),
@@ -262,6 +262,13 @@ class Hnsw(val m: Int = 16, val ef: Int = 32, val seed: Long = 42L,
     * standard HNSW ef-beam). Same visited-set bound, same rerank —
     * strictly better recall per visited node, which matters once the
     * graph is LSH-blocked and mediocre edges exist.
+    *
+    * Scores come from `VectorKernels.cosine`, which gives NULL for
+    * operands of different lengths; so a stored vector whose dimension
+    * differs from the query's is treated like a missing one and is
+    * never a candidate. The entry point must have a usable vector:
+    * without one the walk has no start, and the call fails with an
+    * `IllegalArgumentException` naming the id and both dimensions.
     */
   def serveQuery(
       adjacency: ((Long, Int)) => Seq[Long],
@@ -270,16 +277,21 @@ class Hnsw(val m: Int = 16, val ef: Int = 32, val seed: Long = 42L,
       q: Array[Float],
       k: Int): Seq[(Long, Double)] = {
 
-    // per-query memo: ≤ one point read and one cosine per distinct id
+    // per-query memo: ≤ one point read and one cosine per distinct id;
+    // a vector of another dimension is kept out like a missing one
     val vecCache = mutable.Map.empty[Long, Option[Array[Float]]]
     def vecOf(id: Long): Option[Array[Float]] =
-      vecCache.getOrElseUpdate(id, fetch(id))
+      vecCache.getOrElseUpdate(id, fetch(id).filter(_.length == q.length))
+    val qa = UnsafeArrayData.fromPrimitiveArray(q)
     val simCache = mutable.Map.empty[Long, Double]
-    def sim(id: Long): Double =
-      simCache.getOrElseUpdate(id, cosineScala(vecOf(id).get, q))
+    def sim(id: Long): Double = simCache.getOrElseUpdate(id,
+      VectorKernels.cosine(UnsafeArrayData.fromPrimitiveArray(vecOf(id).get), true, qa, true))
     def dist(id: Long): Double = 1.0 - sim(id)
 
     var (current, level) = entry
+    require(vecOf(current).isDefined,
+      s"hnsw entry point $current has no vector of the query's dimension ${q.length} " +
+        s"(stored dimension: ${fetch(current).fold("none")(_.length.toString)})")
     // greedy descent, levels max..1 (src/index.rs:321-324)
     while (level > 0) {
       var improved = true
@@ -360,17 +372,6 @@ class Hnsw(val m: Int = 16, val ef: Int = 32, val seed: Long = 42L,
     grouped.collect()
       .map(r => (r.getLong(0), r.getInt(1)) -> r.getSeq[Long](2))
       .toMap
-  }
-
-  private[graft] def cosineScala(a: Array[Float], b: Array[Float]): Double = {
-    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-    while (i < a.length) {
-      dot += a(i).toDouble * b(i).toDouble
-      na += a(i).toDouble * a(i).toDouble
-      nb += b(i).toDouble * b(i).toDouble
-      i += 1
-    }
-    if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
   }
 }
 

@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
+import graft.expressions.VectorKernels
 import graft.functions.VectorOps
 
 /** IVF (inverted-file) approximate nearest neighbor: deterministic
@@ -177,16 +179,18 @@ class Ivf(nlist: Int, iters: Int) {
 object Ivf {
   /** The `n` cells nearest to `q` with their centroids, nearest first,
     * ties to the smaller cell id — the driver-side replay of
-    * [[Ivf.assignExpr]]'s (squared distance, cell id) struct argmin.
-    * The squared distance is a left-to-right double fold, the order
-    * of assignExpr and of the SQL oracles. */
+    * [[Ivf.assignExpr]]'s (squared distance, cell id) struct argmin,
+    * through the same `VectorKernels.sqdist`. A query whose dimension
+    * differs from the centroids' fails with an
+    * `IllegalArgumentException`. */
   def nearestCells(q: Array[Float], cents: Array[(Int, Array[Double])],
       n: Int): Array[(Int, Array[Double])] = {
-    def d2(c: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < c.length) { val diff = q(i).toDouble - c(i); s += diff * diff; i += 1 }
-      s
+    cents.foreach { case (cid, c) =>
+      require(c.length == q.length, s"query dim ${q.length} != dim ${c.length} of cell $cid")
     }
-    cents.sortBy { case (cid, c) => (d2(c), cid) }.take(n)
+    val qa = UnsafeArrayData.fromPrimitiveArray(q)
+    cents.sortBy { case (cid, c) =>
+      (VectorKernels.sqdist(qa, true, UnsafeArrayData.fromPrimitiveArray(c), false).doubleValue, cid)
+    }.take(n)
   }
 }

@@ -123,16 +123,10 @@ object Knn {
       queryIdCol: String = "query_id",
       queryVecCol: String = "qe"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val scored = vectors
-      .crossJoin(broadcast(queries.select(col(queryIdCol), col(queryVecCol))))
-      .select(
-        col(queryIdCol),
-        col(idCol),
-        stableScore(metric.score(col(vecCol), col(queryVecCol))).as("score"))
     val w = Window
       .partitionBy(col(queryIdCol))
       .orderBy(col("score").desc, col(idCol).asc)
-    scored
+    scoredPairs(vectors, queries, metric, idCol, vecCol, queryIdCol, queryVecCol)
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .orderBy(col(queryIdCol).asc, col("rank").asc)
@@ -153,15 +147,21 @@ object Knn {
       queryVecCol: String = "qe"): DataFrame = {
     val spark = vectors.sparkSession
     import spark.implicits._
-    val scored = vectors
-      .crossJoin(broadcast(queries.select(col(queryIdCol), col(queryVecCol))))
-      .select(
-        col(queryIdCol).as("qid"),
-        col(idCol).as("id"),
-        stableScore(metric.score(col(vecCol), col(queryVecCol))).as("score"))
-      .as[(Long, Long, Double)]
+    val scored = scoredPairs(vectors, queries, metric, idCol, vecCol, queryIdCol, queryVecCol)
+      .toDF("qid", "id", "score").as[(Long, Long, Double)]
     topKScoredAgg(scored, k, idCol, queryIdCol)
   }
+
+  /** Every (query, vector) pair of the broadcast cross join with its
+    * rounded score: (queryIdCol, idCol, score). */
+  private def scoredPairs(vectors: DataFrame, queries: DataFrame, metric: Metric,
+      idCol: String, vecCol: String, queryIdCol: String, queryVecCol: String): DataFrame =
+    vectors
+      .crossJoin(broadcast(queries.select(col(queryIdCol), col(queryVecCol))))
+      .select(
+        col(queryIdCol),
+        col(idCol),
+        stableScore(metric.score(col(vecCol), col(queryVecCol))).as("score"))
 
   /** Per-query bounded-heap top-k over an ALREADY-SCORED
     * (query_id, id, score) dataset — the shared tail of

@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
+import graft.expressions.VectorKernels
 import graft.functions.VectorOps
 
 /** Random-hyperplane LSH — the reference's `LSHIndex`
@@ -54,29 +56,25 @@ class Lsh(val numPlanes: Int = 16, val seed: Long = 42L,
     }.reduce(_ + _)
 
   /** Driver-side signature of a single query vector (the serve-time
-    * `compute_hash` on the probe path). */
+    * `compute_hash` on the probe path), through the `graft_dot` kernel
+    * of [[bucketCol]]. */
   def bucketOf(v: Array[Float]): Long = {
-    val ps = planes(v.length)
-    var h = 0L
-    var i = 0
-    while (i < numPlanes) {
-      var dot = 0.0
-      var j = 0
-      while (j < v.length) { dot += v(j).toDouble * ps(i)(j); j += 1 }
-      if (dot >= 0.0) h |= (1L << i)
-      i += 1
-    }
-    h
+    val va = UnsafeArrayData.fromPrimitiveArray(v)
+    planes(v.length).zipWithIndex.map { case (p, i) =>
+      if (VectorKernels.dot(va, true, UnsafeArrayData.fromPrimitiveArray(p), false) >= 0.0) 1L << i
+      else 0L
+    }.sum
   }
 
-  /** Materialize the index: source vectors + bucket key, written as
-    * bucket-partitioned parquet (src/index.rs:124-156's HashMap of
-    * buckets, durably). */
-  def build(vectors: DataFrame, path: String,
-            idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val dim = vectors.select(size(col(vecCol))).limit(1).collect()(0).getInt(0)
-    vectors
-      .select(col(idCol), col(vecCol), bucketCol(col(vecCol), dim).as("bucket"))
+  /** `vectors` with its bucket key: (idCol, vecCol, bucket). */
+  private def bucketed(vectors: DataFrame, dim: Int, idCol: String, vecCol: String): DataFrame =
+    vectors.select(col(idCol), col(vecCol), bucketCol(col(vecCol), dim).as("bucket"))
+
+  /** Write [[bucketed]] `vectors` into the bucket-partitioned store at
+    * `path`, clustered by bucket first; `build` and `append` share it. */
+  private def writeBucketed(vectors: DataFrame, dim: Int, idCol: String, vecCol: String,
+      path: String, mode: String): Unit =
+    bucketed(vectors, dim, idCol, vecCol)
       // cluster by bucket before the partitioned write: a 16-plane
       // store has up to 2^16 bucket directories, and an unclustered
       // write makes EACH input task open a parquet writer per bucket it
@@ -98,10 +96,20 @@ class Lsh(val numPlanes: Int = 16, val seed: Long = 42L,
       // parallelism is FILE-metadata-bound here, not byte-bound, so
       // the session's shuffle-partition setting — not AQE's
       // byte-advisory target — is the right width at any scale.
+      // The same clustering keeps appends O(batch) and leaves the store
+      // far fewer small files between compactions.
       .repartition(
         vectors.sparkSession.sessionState.conf.numShufflePartitions,
         col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(path)
+      .write.mode(mode).partitionBy("bucket").parquet(path)
+
+  /** Materialize the index: source vectors + bucket key, written as
+    * bucket-partitioned parquet (src/index.rs:124-156's HashMap of
+    * buckets, durably). */
+  def build(vectors: DataFrame, path: String,
+            idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
+    val dim = vectors.select(size(col(vecCol))).limit(1).collect()(0).getInt(0)
+    writeBucketed(vectors, dim, idCol, vecCol, path, "overwrite")
     Lsh.writeDim(vectors.sparkSession.sparkContext.hadoopConfiguration, path, dim)
   }
 
@@ -156,43 +164,18 @@ class Lsh(val numPlanes: Int = 16, val seed: Long = 42L,
     }
     storeDim.foreach(sd => require(dim == sd,
       s"Lsh.append: batch dimension $dim != index dimension $sd at $path"))
-    batch
-      .select(col(idCol), col(vecCol), bucketCol(col(vecCol), dim).as("bucket"))
-      // same bucket-clustering as build(): one file per bucket per
-      // append instead of one per (task × bucket) — appends stay
-      // O(batch) and the store accumulates far fewer small files
-      // between compactions; count pinned for the same AQE-coalescing
-      // reason as build()
-      .repartition(
-        batch.sparkSession.sessionState.conf.numShufflePartitions,
-        col("bucket"))
-      .write.mode("append").partitionBy("bucket").parquet(path)
+    writeBucketed(batch, dim, idCol, vecCol, path, "append")
     // bootstrap AND backfill: whenever the sidecar was missing, record
     // the (verified or bootstrapped) dimension so future appends take
     // the O(1) path
     if (sidecarDim.isEmpty) Lsh.writeDim(hconf, path, storeDim.getOrElse(dim))
   }
 
-  /** Compact a bucket-partitioned parquet index in place: every
-    * `append` adds partition-local files, so a long-lived index
-    * accumulates many small files per bucket — the classic small-files
-    * problem that throttles a 100 TB scan (per-file open cost, tiny
-    * row groups, starved readers). One clustered rewrite
-    * (`repartition(bucket)` routes each bucket to one task →
-    * one output file per bucket), staged to a sibling directory and
-    * swapped via two renames — a reader can never see mixed or
-    * half-written content, and a crashed swap is recovered losslessly
-    * on the next call (see `compactPartitioned`). Content is
-    * bit-preserved — the audits' id-weighted sums are unchanged, which
-    * the lsh_compact_audit oracle hash-verifies. */
-  def compact(spark: SparkSession, path: String): Unit =
-    Lsh.compactPartitioned(spark, path, "bucket")
-
   /** In-memory variant for tests/small corpora: same frame, not written. */
   def index(vectors: DataFrame,
             idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val dim = vectors.select(size(col(vecCol))).limit(1).collect()(0).getInt(0)
-    vectors.select(col(idCol), col(vecCol), bucketCol(col(vecCol), dim).as("bucket"))
+    bucketed(vectors, dim, idCol, vecCol)
   }
 
   /** Bucket-size histogram collected to a driver map — #buckets entries
@@ -314,8 +297,19 @@ object Lsh {
       }
     } catch { case _: Exception => None }
 
-  /** Object-level alias of the instance `compact` (compaction needs no
-    * plane state — it is a pure layout rewrite). */
+  /** Compact a bucket-partitioned parquet index in place: every
+    * `append` adds partition-local files, so a long-lived index
+    * accumulates many small files per bucket — the classic small-files
+    * problem that throttles a 100 TB scan (per-file open cost, tiny
+    * row groups, starved readers). One clustered rewrite
+    * (`repartition(bucket)` routes each bucket to one task →
+    * one output file per bucket), staged to a sibling directory and
+    * swapped via two renames — a reader can never see mixed or
+    * half-written content, and a crashed swap is recovered losslessly
+    * on the next call (see `compactPartitioned`). Content is
+    * bit-preserved — the audits' id-weighted sums are unchanged, which
+    * the lsh_compact_audit oracle hash-verifies. Compaction needs no
+    * plane state: it is a pure layout rewrite. */
   def compact(spark: SparkSession, path: String): Unit =
     compactPartitioned(spark, path, "bucket")
 

@@ -1,7 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import graft.expressions.VectorKernels
 import graft.functions.VectorOps
 
 /** Product quantization (PQ) — compressed-domain ANN, the codebook
@@ -136,27 +139,27 @@ class Pq(val m: Int) {
     batch.select(col(idCol), encodeExpr(col(vecCol), books).as("codes"))
       .write.mode("append").parquet(path)
 
-  /** Driver-side ADC lookup table: table(s)(j) = ‖q_s − books(s)(j)‖²,
-    * accumulated left-to-right in double (matches VectorOps.sqdist and
-    * OracleFrag.sqDist). */
+  /** Driver-side ADC lookup table: table(s)(j) = ‖q_s − books(s)(j)‖²
+    * through `VectorKernels.sqdist`, the kernel of VectorOps.sqdist
+    * (and the fold OracleFrag.sqDist replays). */
   def adcTable(q: Array[Float], books: Array[Array[Array[Double]]]): Array[Array[Double]] =
-    adcTableD(q.map(_.toDouble), books)
+    adc(q.length, books, isFloat = true)((from, until) =>
+      UnsafeArrayData.fromPrimitiveArray(q.slice(from, until)))
 
   /** Double-query variant — for residual queries (q − centroid). */
-  def adcTableD(q: Array[Double], books: Array[Array[Array[Double]]]): Array[Array[Double]] = {
+  def adcTableD(q: Array[Double], books: Array[Array[Array[Double]]]): Array[Array[Double]] =
+    adc(q.length, books, isFloat = false)((from, until) =>
+      UnsafeArrayData.fromPrimitiveArray(q.slice(from, until)))
+
+  /** The table over the query's sub-slices, `part(from, until)`. */
+  private def adc(dim: Int, books: Array[Array[Array[Double]]], isFloat: Boolean)(
+      part: (Int, Int) => ArrayData): Array[Array[Double]] = {
     val sub = books(0)(0).length
-    require(q.length == m * sub, s"query dim ${q.length} != ${m * sub}")
+    require(dim == m * sub, s"query dim $dim != ${m * sub}")
     Array.tabulate(m) { s =>
-      books(s).map { c =>
-        var d = 0.0
-        var i = 0
-        while (i < sub) {
-          val diff = q(s * sub + i) - c(i)
-          d += diff * diff
-          i += 1
-        }
-        d
-      }
+      val qs = part(s * sub, (s + 1) * sub)
+      books(s).map(c =>
+        VectorKernels.sqdist(qs, isFloat, UnsafeArrayData.fromPrimitiveArray(c), false).doubleValue)
     }
   }
 

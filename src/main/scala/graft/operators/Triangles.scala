@@ -170,25 +170,34 @@ object Triangles {
     val newBoth = newBoth0.select(col("src"), col("dst")).cut()
     val adjM = oldBoth.select(col("src"), col("dst"))
       .unionByName(newBoth.select(col("src"), col("dst")))
+    // the closure semis' build side: the merged edges whose src is a
+    // batch endpoint. Exact, because the first component of every
+    // closure probe key (c1's v, c2's x) is a batch endpoint; it keeps
+    // the build O(batch neighbourhood) instead of O(corpus). Measured
+    // at sf0.1 (4 cores, min of 2) against the whole merged set as the
+    // build, at batches of l_orderkey % 10, % 100 and % 1000:
+    // 18.45 vs 19.90 s, 3.71 vs 5.51 s and 4.62 vs 5.97 s
+    val closure = adjM.join(broadcast(newBoth.select(col("src")).distinct()),
+      Seq("src"), "left_semi")
     val nCanon = newBoth.filter(col("src") < col("dst"))
     val c1 = nCanon.select(col("src").as("u"), col("dst").as("v"))
       .join(adjM.select(col("src").as("u"), col("dst").as("wn")), "u")
       .filter(col("wn") =!= col("v"))
       .select(col("v"), col("wn")) // bare key before the big exchange
-      .join(adjM.select(col("src").as("v"), col("dst").as("wn")),
+      .join(closure.select(col("src").as("v"), col("dst").as("wn")),
         Seq("v", "wn"), "left_semi")
       .agg(F.count(lit(1)).cast("long").as("c1"))
-    // the c2 closure semi probes with x < y pairs, and adjM carries both
-    // directions, so the build side needs NO src < dst pre-filter — and
-    // dropping it makes this build side canonically IDENTICAL to c1's
-    // (v, wn) build, so the planner reuses ONE broadcast/exchange of the
-    // merged edge set for both closure semis instead of building the
-    // ~|old|+|batch| hash relation twice per tick (ReusedExchange,
-    // verified on the executed plan)
+    // the c2 closure semi probes with x < y pairs, and `closure` carries
+    // both directions, so the build side needs NO src < dst pre-filter —
+    // and dropping it makes this build side canonically IDENTICAL to
+    // c1's (v, wn) build, so the planner reuses ONE broadcast/exchange
+    // of it for both closure semis instead of building the hash
+    // relation twice per tick (ReusedExchange, verified on the
+    // executed plan)
     val c2 = newBoth.select(col("src").as("ctr"), col("dst").as("x"))
       .join(newBoth.select(col("src").as("ctr"), col("dst").as("y")), "ctr")
       .filter(col("x") < col("y"))
-      .join(adjM.select(col("src").as("x"), col("dst").as("y")),
+      .join(closure.select(col("src").as("x"), col("dst").as("y")),
         Seq("x", "y"), "left_semi")
       .agg(F.count(lit(1)).cast("long").as("c2"))
     val c3 = count(newBoth, newEdgeRowBound)

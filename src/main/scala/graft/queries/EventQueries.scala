@@ -20,6 +20,39 @@ object EventQueries extends QueryRegistry {
   private val Dec = "decimal(18,4)"
   private val SessionGapMs = 1800000L // 30 min
 
+  /** Each user's events in time order, event id breaking ties. */
+  private val byUserTime = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
+
+  /** `ev` with `new_session` = 1 on each user's first event and after
+    * every >30-min silence, else 0. */
+  private def sessionFlags(ev: DataFrame): DataFrame = ev
+    .withColumn("prev_ms", lag(unix_millis(col("ts")), 1).over(byUserTime))
+    .withColumn("new_session",
+      when(col("prev_ms").isNull ||
+        unix_millis(col("ts")) - col("prev_ms") > SessionGapMs, 1L).otherwise(0L))
+
+  /** The session number of each event of [[sessionFlags]]: the running
+    * count of session starts, per user. */
+  private val sessionId = sum(col("new_session")).over(
+    byUserTime.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+
+  /** `ev` (event_type, event_id, value) with `rnk`, the 1-based rank of
+    * each event by (value, event_id) within its type, and `n`, the
+    * type's count. */
+  private def rankedByValue(ev: DataFrame): DataFrame = {
+    val n = ev.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
+    ev.withColumn("rnk", row_number().over(
+      Window.partitionBy(col("event_type"))
+        .orderBy(col("value").asc, col("event_id").asc)))
+      .join(broadcast(n), Seq("event_type"))
+  }
+
+  /** The discrete q-quantile of [[rankedByValue]] rows (percentile_disc:
+    * the value whose rank is ceil(q·n)), as an aggregate. */
+  private def pick(q: Double, alias: String) =
+    max(when(col("rnk") === ceil(lit(q) * col("n")).cast("long"),
+      col("value"))).as(alias)
+
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // tumbling 1-hour windows (batch window(); streaming reuses it)
     "events_hourly" -> ((s, dir) =>
@@ -238,18 +271,12 @@ object EventQueries extends QueryRegistry {
         .orderBy(col("event_type"))),
 
     // sessionization: a >30-min silence starts a new session
-    "events_user_sessions" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      events(s, dir)
-        .withColumn("prev_ms", lag(unix_millis(col("ts")), 1).over(w))
-        .withColumn("new_session",
-          when(col("prev_ms").isNull ||
-            unix_millis(col("ts")) - col("prev_ms") > SessionGapMs, 1L).otherwise(0L))
+    "events_user_sessions" -> ((s, dir) =>
+      sessionFlags(events(s, dir))
         .groupBy(col("user_id"))
         .agg(sum(col("new_session")).as("n_sessions"),
           count(lit(1)).as("n_events"))
-        .orderBy(col("user_id"))
-    }),
+        .orderBy(col("user_id"))),
 
     // JSON props extraction: histogram of k mod 10. One from_json with
     // an explicit schema — get_json_object re-parses the document on
@@ -268,22 +295,14 @@ object EventQueries extends QueryRegistry {
     // session-window aggregation: events grouped into lag-gap sessions,
     // value attributed per session (the batch twin of the streaming
     // session state in graft.streaming.EventStreams)
-    "events_session_values" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      events(s, dir)
-        .withColumn("prev_ms", lag(unix_millis(col("ts")), 1).over(w))
-        .withColumn("new_session",
-          when(col("prev_ms").isNull ||
-            unix_millis(col("ts")) - col("prev_ms") > SessionGapMs, 1L).otherwise(0L))
-        .withColumn("session_id",
-          sum(col("new_session")).over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    "events_session_values" -> ((s, dir) =>
+      sessionFlags(events(s, dir))
+        .withColumn("session_id", sessionId)
         .groupBy(col("user_id"), col("session_id"))
         .agg(count(lit(1)).as("n_events"),
           sum(col("value").cast(Dec)).cast("double").as("session_value"))
         .filter(col("user_id") < 3)
-        .orderBy(col("user_id"), col("session_id"))
-    }),
+        .orderBy(col("user_id"), col("session_id"))),
 
     // pivot: event counts per user across the 5 fixed event types
     "events_type_pivot" -> ((s, dir) =>
@@ -556,15 +575,7 @@ object EventQueries extends QueryRegistry {
     "events_value_quantiles" -> ((s, dir) => {
       val ev = events(s, dir)
         .select(col("event_type"), col("event_id"), col("value"))
-      val n = ev.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
-      val ranked = ev.withColumn("rnk", row_number().over(
-        Window.partitionBy(col("event_type"))
-          .orderBy(col("value").asc, col("event_id").asc)))
-        .join(broadcast(n), Seq("event_type"))
-      def pick(q: Double, alias: String) =
-        max(when(col("rnk") === ceil(lit(q) * col("n")).cast("long"),
-          col("value"))).as(alias)
-      ranked.groupBy(col("event_type"))
+      rankedByValue(ev).groupBy(col("event_type"))
         .agg(max(col("n")).as("n"),
           pick(0.5, "p50"), pick(0.9, "p90"), pick(0.99, "p99"))
         .orderBy(col("event_type"))
@@ -616,15 +627,7 @@ object EventQueries extends QueryRegistry {
     "events_winsorized_stats" -> ((s, dir) => {
       val ev = events(s, dir)
         .select(col("event_type"), col("event_id"), col("value"))
-      val n = ev.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
-      val ranked = ev.withColumn("rnk", row_number().over(
-        Window.partitionBy(col("event_type"))
-          .orderBy(col("value").asc, col("event_id").asc)))
-        .join(broadcast(n), Seq("event_type"))
-      def pick(q: Double, alias: String) =
-        max(when(col("rnk") === ceil(lit(q) * col("n")).cast("long"),
-          col("value"))).as(alias)
-      val bounds = ranked.groupBy(col("event_type"))
+      val bounds = rankedByValue(ev).groupBy(col("event_type"))
         .agg(pick(0.05, "p05"), pick(0.95, "p95"))
       ev.join(broadcast(bounds), Seq("event_type"))
         .withColumn("clipped", least(greatest(col("value"), col("p05")), col("p95")))
@@ -645,14 +648,7 @@ object EventQueries extends QueryRegistry {
     // a (types × types)-bounded rollup; "_start" rows count session
     // entry points.
     "session_transitions" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      val sess = events(s, dir)
-        .withColumn("prev_ms", lag(unix_millis(col("ts")), 1).over(w))
-        .withColumn("new_session",
-          when(col("prev_ms").isNull ||
-            unix_millis(col("ts")) - col("prev_ms") > SessionGapMs, 1L).otherwise(0L))
-        .withColumn("sid", sum(col("new_session")).over(
-          w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      val sess = sessionFlags(events(s, dir)).withColumn("sid", sessionId)
       sess.withColumn("prev_type", lag(col("event_type"), 1).over(
           Window.partitionBy(col("user_id"), col("sid"))
             .orderBy(col("ts"), col("event_id"))))
@@ -710,6 +706,32 @@ object EventQueries extends QueryRegistry {
       .orderBy(col("event_type"))
   }
 
+  /** DuckDB twin of [[sessionFlags]]: CTE `s`, every events column
+    * plus `new_session`. */
+  private val sessionSql =
+    """x AS (
+      |  SELECT *, epoch_ms(ts) AS ms,
+      |         lag(epoch_ms(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ms
+      |  FROM events),
+      |s AS (
+      |  SELECT *,
+      |         CASE WHEN prev_ms IS NULL OR ms - prev_ms > 1800000 THEN 1 ELSE 0 END AS new_session
+      |  FROM x)""".stripMargin
+
+  /** DuckDB twin of [[sessionId]] over `s`. */
+  private val sessionIdSql =
+    """sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
+      |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)""".stripMargin
+
+  /** DuckDB twin of [[rankedByValue]]: CTE `r` (event_type, value, n,
+    * rnk). */
+  private val rankedSql =
+    """n AS (SELECT event_type, count(*) AS n FROM events GROUP BY event_type),
+      |r AS (SELECT e.event_type, e.value, n.n,
+      |        row_number() OVER (PARTITION BY e.event_type
+      |          ORDER BY e.value ASC, e.event_id ASC) AS rnk
+      |      FROM events e JOIN n ON e.event_type = n.event_type)""".stripMargin
+
   override def oracle: Map[String, String] = Map(
     "events_hourly" ->
       """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
@@ -758,14 +780,7 @@ object EventQueries extends QueryRegistry {
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
 
     "events_user_sessions" ->
-      """WITH x AS (
-        |  SELECT user_id, epoch_ms(ts) AS ms,
-        |         lag(epoch_ms(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ms
-        |  FROM events),
-        |s AS (
-        |  SELECT user_id,
-        |         CASE WHEN prev_ms IS NULL OR ms - prev_ms > 1800000 THEN 1 ELSE 0 END AS new_session
-        |  FROM x)
+      s"""WITH $sessionSql
         |SELECT user_id, CAST(sum(new_session) AS BIGINT) AS n_sessions,
         |       CAST(count(*) AS BIGINT) AS n_events
         |FROM s GROUP BY user_id ORDER BY user_id""".stripMargin,
@@ -776,19 +791,8 @@ object EventQueries extends QueryRegistry {
         |FROM events GROUP BY 1 ORDER BY k_mod""".stripMargin,
 
     "events_session_values" ->
-      """WITH x AS (
-        |  SELECT user_id, event_id, ts, value, epoch_ms(ts) AS ms,
-        |         lag(epoch_ms(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ms
-        |  FROM events),
-        |s AS (
-        |  SELECT user_id, event_id, ts, value,
-        |         CASE WHEN prev_ms IS NULL OR ms - prev_ms > 1800000 THEN 1 ELSE 0 END AS new_session
-        |  FROM x),
-        |sid AS (
-        |  SELECT user_id, value,
-        |         sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-        |  FROM s)
+      s"""WITH $sessionSql,
+        |sid AS (SELECT user_id, value, $sessionIdSql AS session_id FROM s)
         |SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
         |       CAST(count(*) AS BIGINT) AS n_events,
         |       CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS session_value
@@ -947,11 +951,7 @@ object EventQueries extends QueryRegistry {
         |FROM p ORDER BY day""".stripMargin,
 
     "events_value_quantiles" ->
-      """WITH n AS (SELECT event_type, count(*) AS n FROM events GROUP BY event_type),
-        |r AS (SELECT e.event_type, e.value, n.n,
-        |        row_number() OVER (PARTITION BY e.event_type
-        |          ORDER BY e.value ASC, e.event_id ASC) AS rnk
-        |      FROM events e JOIN n ON e.event_type = n.event_type)
+      s"""WITH $rankedSql
         |SELECT event_type, CAST(max(n) AS BIGINT) AS n,
         |       max(CASE WHEN rnk = CAST(ceil(0.5 * n) AS BIGINT) THEN value END) AS p50,
         |       max(CASE WHEN rnk = CAST(ceil(0.9 * n) AS BIGINT) THEN value END) AS p90,
@@ -1058,11 +1058,7 @@ object EventQueries extends QueryRegistry {
         |FROM cm GROUP BY event_type ORDER BY event_type""".stripMargin,
 
     "events_winsorized_stats" ->
-      """WITH n AS (SELECT event_type, count(*) AS n FROM events GROUP BY event_type),
-        |r AS (SELECT e.event_type, e.value, n.n,
-        |        row_number() OVER (PARTITION BY e.event_type
-        |          ORDER BY e.value ASC, e.event_id ASC) AS rnk
-        |      FROM events e JOIN n ON e.event_type = n.event_type),
+      s"""WITH $rankedSql,
         |b AS (SELECT event_type,
         |        max(CASE WHEN rnk = CAST(ceil(0.05 * n) AS BIGINT) THEN value END) AS p05,
         |        max(CASE WHEN rnk = CAST(ceil(0.95 * n) AS BIGINT) THEN value END) AS p95
@@ -1074,21 +1070,13 @@ object EventQueries extends QueryRegistry {
         |GROUP BY e.event_type ORDER BY e.event_type""".stripMargin,
 
     "session_transitions" ->
-      """WITH x AS (
-        |  SELECT user_id, event_id, ts, event_type, epoch_ms(ts) AS ms,
-        |         lag(epoch_ms(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ms
-        |  FROM events),
-        |s AS (
-        |  SELECT user_id, event_id, ts, event_type,
-        |         sum(CASE WHEN prev_ms IS NULL OR ms - prev_ms > 1800000 THEN 1 ELSE 0 END)
-        |           OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |  FROM x),
+      s"""WITH $sessionSql,
+        |ss AS (SELECT user_id, event_id, ts, event_type, $sessionIdSql AS sid FROM s),
         |p AS (
         |  SELECT coalesce(lag(event_type) OVER (PARTITION BY user_id, sid ORDER BY ts, event_id),
         |                  '_start') AS from_type,
         |         event_type AS to_type
-        |  FROM s)
+        |  FROM ss)
         |SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n_transitions
         |FROM p GROUP BY from_type, to_type ORDER BY from_type, to_type""".stripMargin,
   )

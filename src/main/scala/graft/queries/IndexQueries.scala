@@ -39,6 +39,54 @@ object IndexQueries extends QueryRegistry {
   private def headCentroids(emb: DataFrame): Array[(Int, Array[Double])] =
     headVectors(emb, 8).zipWithIndex.map { case (v, i) => (i, v.map(_.toDouble)) }
 
+  /** `emb` assigned to the [[headCentroids]] cells: (vec_id, embedding,
+    * cell), beside the index and its centroids. Spread before
+    * assigning: argmin over 8 centroids is an interpreted HOF fold, and
+    * the single-row-group scan would run it on one core of 32. */
+  private def headCells(s: SparkSession, emb: DataFrame)
+      : (Ivf, Array[(Int, Array[Double])], DataFrame) = {
+    val ivf = new Ivf(nlist = 8, iters = 0)
+    val cents = headCentroids(emb)
+    (ivf, cents, emb.repartition(s.sparkContext.defaultParallelism)
+      .select(col("vec_id"), col("embedding"),
+        ivf.assignExpr(col("embedding"), cents).as("cell")))
+  }
+
+  /** The PQ recall queries' query set: the first five embeddings as
+    * (query_id, qe). */
+  private def pqQueries(emb: DataFrame): DataFrame =
+    emb.filter(col("vec_id") < 5)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
+
+  /** [[pqQueries]] on the driver, in query order. */
+  private def pqQueryRows(emb: DataFrame): Array[(Long, Array[Float])] =
+    pqQueries(emb).orderBy(col("query_id")).collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+
+  /** The ADC top-`n` of each of `qrows` over `codes`: ONE q-keyed job
+    * over ONE codes scan (a broadcast table + bounded-heap aggregate,
+    * not a union of per-query plans; ties by adc ASC, vec_id ASC). */
+  private def adcTopPerQuery(pq: Pq, books: Array[Array[Array[Double]]], codes: DataFrame,
+      qrows: Array[(Long, Array[Float])], n: Int): DataFrame =
+    pq.adcTopKMulti(codes, qrows.map { case (qid, qv) => (qid, pq.adcTable(qv, books)) }.toSeq, n)
+
+  /** The ADC top-50 shortlist of each [[pqQueries]] row, exact-reranked
+    * by NegEuclidean to its top 10: (query_id, vec_id, score, rn). */
+  private def pqReranked(emb: DataFrame, pq: Pq, books: Array[Array[Array[Double]]],
+      codes: DataFrame, qrows: Array[(Long, Array[Float])]): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("score").desc, col("vec_id").asc)
+    adcTopPerQuery(pq, books, codes, qrows, 50)
+      .select(col("query_id"), col("vec_id"))
+      .join(emb.select(col("vec_id"), col("embedding")), "vec_id")
+      .join(broadcast(pqQueries(emb)), "query_id")
+      .select(col("query_id"), col("vec_id"),
+        Knn.stableScore(Knn.NegEuclidean.score(col("embedding"), col("qe")))
+          .as("score"))
+      .withColumn("rn", row_number().over(w)).filter(col("rn") <= 10)
+  }
+
   // Durable build-once/query-many artifacts (the reference's
   // build→save→load→probe contract, vector_db/src/binary_index.rs:29-60):
   // each index is BUILT to disk once per (session, data dir) and every
@@ -851,33 +899,13 @@ object IndexQueries extends QueryRegistry {
     // SQL-replayable (data-dependent codebooks), so the recall VALUES
     // are hash-checked, not just bounded.
     "pq_rerank_recall" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
       val emb = embeddings(s, dir)
       val (pq, books, codes) = pqStore(s, dir)
-      val qrows = emb.filter(col("vec_id") < 5).orderBy(col("vec_id"))
-        .select(col("vec_id"), col("embedding")).collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-      // ONE q-keyed shortlist job over ONE codes scan (a broadcast
-      // table + bounded-heap aggregate, not a union of per-query plans;
-      // identical ids by the shared adc ASC, vec_id ASC tie order)
-      val tables = qrows.map { case (qid, qv) => (qid, pq.adcTable(qv, books)) }.toSeq
-      val shortlist = pq.adcTopKMulti(codes, tables, 50)
-        .select(col("query_id"), col("vec_id"))
-      val qs = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("score").desc, col("vec_id").asc)
-      val pqIds = shortlist
-        .join(emb.select(col("vec_id"), col("embedding")), "vec_id")
-        .join(broadcast(qs), "query_id")
-        .select(col("query_id"), col("vec_id"),
-          Knn.stableScore(Knn.NegEuclidean.score(col("embedding"), col("qe")))
-            .as("score"))
-        .withColumn("rn", row_number().over(w)).filter(col("rn") <= 10)
+      val pqIds = pqReranked(emb, pq, books, codes, pqQueryRows(emb))
         .groupBy(col("query_id"))
         .agg(transform(array_sort(collect_list(struct(col("rn"), col("vec_id")))),
           x => x.getField("vec_id")).as("pq_ids"))
-      val exactIds = Knn.topKPerQueryAgg(emb, qs, 10, Knn.NegEuclidean)
+      val exactIds = Knn.topKPerQueryAgg(emb, pqQueries(emb), 10, Knn.NegEuclidean)
         .groupBy(col("query_id"))
         .agg(transform(array_sort(collect_list(struct(col("rank"), col("vec_id")))),
           x => x.getField("vec_id")).as("exact_ids"))
@@ -897,32 +925,16 @@ object IndexQueries extends QueryRegistry {
     // is pinned by must-be-true booleans: training never loses to the
     // seed books, and clears the 0.7 mean-recall bar
     "pq_trained_recall" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
       val emb = embeddings(s, dir)
       val (pq, seedBooks, trainedBooks) = pqTrainedBooks(s, dir)
-      val qrows = emb.filter(col("vec_id") < 5).orderBy(col("vec_id"))
-        .select(col("vec_id"), col("embedding")).collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-      val qs = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      val exact = Knn.topKPerQueryAgg(emb, qs, 10, Knn.NegEuclidean)
+      val qrows = pqQueryRows(emb)
+      val exact = Knn.topKPerQueryAgg(emb, pqQueries(emb), 10, Knn.NegEuclidean)
         .select(col("query_id"), col("vec_id"))
       val (seedCodes, trainedCodes) = pqTrainedCodes(s, dir)
-      def hits(books: Array[Array[Array[Double]]], codes: DataFrame): DataFrame = {
-        val tables = qrows.map { case (qid, qv) => (qid, pq.adcTable(qv, books)) }.toSeq
-        val w = Window.partitionBy(col("query_id"))
-          .orderBy(col("score").desc, col("vec_id").asc)
-        pq.adcTopKMulti(codes, tables, 50)
-          .select(col("query_id"), col("vec_id"))
-          .join(emb.select(col("vec_id"), col("embedding")), "vec_id")
-          .join(broadcast(qs), "query_id")
-          .select(col("query_id"), col("vec_id"),
-            Knn.stableScore(Knn.NegEuclidean.score(col("embedding"), col("qe")))
-              .as("score"))
-          .withColumn("rn", row_number().over(w)).filter(col("rn") <= 10)
+      def hits(books: Array[Array[Array[Double]]], codes: DataFrame): DataFrame =
+        pqReranked(emb, pq, books, codes, qrows)
           .join(exact, Seq("query_id", "vec_id"))
           .agg(coalesce(count(lit(1)), lit(0L)).cast("long").as("n_hits"))
-      }
       val nq = qrows.length.toLong
       emb.agg(count(lit(1)).cast("long").as("n_vectors"))
         .crossJoin(hits(seedBooks, seedCodes).select(col("n_hits").as("sh")))
@@ -945,11 +957,7 @@ object IndexQueries extends QueryRegistry {
     "pq_multi_knn" -> ((s, dir) => {
       val emb = embeddings(s, dir)
       val (pq, books, codes) = pqStore(s, dir)
-      val qrows = emb.filter(col("vec_id") < 5).orderBy(col("vec_id"))
-        .select(col("vec_id"), col("embedding")).collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-      val tables = qrows.map { case (qid, qv) => (qid, pq.adcTable(qv, books)) }.toSeq
-      pq.adcTopKMulti(codes, tables, 10)
+      adcTopPerQuery(pq, books, codes, pqQueryRows(emb), 10)
         .select(col("query_id"), col("vec_id"), col("adc_dist"))
         .orderBy(col("query_id").asc, col("adc_dist").asc, col("vec_id").asc)
     }),
@@ -969,15 +977,7 @@ object IndexQueries extends QueryRegistry {
     // assignment parquet partitioned by cell the candidate join is
     // shuffle-free at 100 TB.
     "ivf_cell_join" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      val ivf = new Ivf(nlist = 8, iters = 0)
-      val cents = headCentroids(emb)
-      // spread before assigning: argmin over 8 centroids is an
-      // interpreted HOF fold, and the single-row-group scan would run
-      // it on one core of 32
-      val assigned = emb.repartition(s.sparkContext.defaultParallelism)
-        .select(col("vec_id"), col("embedding"),
-          ivf.assignExpr(col("embedding"), cents).as("cell"))
+      val (_, _, assigned) = headCells(s, embeddings(s, dir))
       val a = assigned.select(col("vec_id").as("a"), col("embedding").as("ea"), col("cell"))
       val b = assigned.select(col("vec_id").as("b"), col("embedding").as("eb"), col("cell"))
       a.join(b, "cell").filter(col("a") < col("b"))
@@ -1007,12 +1007,8 @@ object IndexQueries extends QueryRegistry {
     // cosines. IvfSpec pins the rule against an in-memory replica;
     // the PlanSpec sweep pins no-cartesian over the declared frame.
     "semdedup_cell_purge" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      val ivf = new Ivf(nlist = 8, iters = 0)
-      val cents = headCentroids(emb)
-      val assigned = emb.repartition(s.sparkContext.defaultParallelism)
-        .select(col("vec_id"), col("embedding"),
-          ivf.assignExpr(col("embedding"), cents).as("cell"))
+      val (ivf, cents, cells) = headCells(s, embeddings(s, dir))
+      val assigned = cells
         .withColumn("dc",
           round(ivf.centroidDistExpr(col("embedding"), cents, col("cell")), 6) + lit(0.0))
       val x = assigned.select(col("vec_id").as("a"), col("embedding").as("ea"),

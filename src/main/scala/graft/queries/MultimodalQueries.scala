@@ -92,21 +92,8 @@ object MultimodalQueries extends QueryRegistry {
       // hash table — without the boundary the BMP encode/decode map
       // runs three times (the minhash-signature-table discipline)
       val ah = Multimodal.aHash(media).toDF().cut()
-      val br = ah.select(col("media_id"), posexplode(col("bands")).as(Seq("bi", "bv")))
-      val cand = br.as("x").join(br.as("y"),
-          col("x.bi") === col("y.bi") && col("x.bv") === col("y.bv") &&
-            col("x.media_id") < col("y.media_id"))
-        .select(col("x.media_id").as("a"), col("y.media_id").as("b"))
-        .distinct()
-      val ham = (0 until 4).map(j =>
-          TextOps.hamming16(element_at(col("ba"), j + 1).cast("long"),
-            element_at(col("bb"), j + 1).cast("long")))
-        .reduce(_ + _)
-      cand
-        .join(ah.select(col("media_id").as("a"), col("bands").as("ba")), "a")
-        .join(ah.select(col("media_id").as("b"), col("bands").as("bb")), "b")
-        .select(col("a"), col("b"), ham.cast("long").as("hamming"))
-        .filter(col("hamming") <= 3)
+      bandPairs(ah, Nil, "media_id", "a", "b")
+        .select(col("a"), col("b"), col("hamming"))
         .orderBy(col("hamming"), col("a"), col("b"))
         .limit(20)
     }),
@@ -257,27 +244,9 @@ object MultimodalQueries extends QueryRegistry {
         // sides) must not re-run the GIF encode/decode map — the same
         // build/probe split as the minhash signature table
       }.toDF("media_id", "frame", "bands").cut()
-      val br = fr.select(col("media_id"), col("frame"),
-        posexplode(col("bands")).as(Seq("bi", "bv")))
-      val cand = br.as("x").join(br.as("y"),
-          col("x.media_id") === col("y.media_id") &&
-            col("x.bi") === col("y.bi") && col("x.bv") === col("y.bv") &&
-            col("x.frame") < col("y.frame"))
-        .select(col("x.media_id").as("media_id"),
-          col("x.frame").as("fa"), col("y.frame").as("fb"))
-        .distinct()
-      val ham = (0 until 4).map(j =>
-          TextOps.hamming16(element_at(col("ba"), j + 1).cast("long"),
-            element_at(col("bb"), j + 1).cast("long")))
-        .reduce(_ + _)
-      cand
-        .join(fr.select(col("media_id"), col("frame").as("fa"),
-          col("bands").as("ba")), Seq("media_id", "fa"))
-        .join(fr.select(col("media_id"), col("frame").as("fb"),
-          col("bands").as("bb")), Seq("media_id", "fb"))
+      bandPairs(fr, Seq("media_id"), "frame", "fa", "fb")
         .select(col("media_id"), col("fa").cast("long").as("frame_a"),
-          col("fb").cast("long").as("frame_b"), ham.cast("long").as("hamming"))
-        .filter(col("hamming") <= 3)
+          col("fb").cast("long").as("frame_b"), col("hamming"))
         .orderBy(col("media_id"), col("frame_a"), col("frame_b"))
     }),
 
@@ -344,6 +313,32 @@ object MultimodalQueries extends QueryRegistry {
     * oracle's ascii() from UTF-8 byte values. octet_length = char
     * length iff every char is single-byte; the oracles mirror it with
     * strlen (DuckDB's byte length). */
+  /** The pairs of `hashes` rows (`keys`, `item`, `bands`: 4 band values)
+    * that agree on every key and on at least one band (pigeonhole:
+    * Hamming ≤ 3 pairs always share a band), with the `item`s as `a` <
+    * `b` and the Hamming distance of their bands, kept at ≤ 3:
+    * (keys, a, b, hamming). */
+  private def bandPairs(hashes: DataFrame, keys: Seq[String], item: String,
+      a: String, b: String): DataFrame = {
+    val br = hashes.select(keys.map(col) ++ Seq(col(item),
+      posexplode(col("bands")).as(Seq("bi", "bv"))): _*)
+    val cand = br.as("x").join(br.as("y"),
+        (keys ++ Seq("bi", "bv")).map(k => col(s"x.$k") === col(s"y.$k")).reduce(_ && _) &&
+          col(s"x.$item") < col(s"y.$item"))
+      .select(keys.map(k => col(s"x.$k").as(k)) ++
+        Seq(col(s"x.$item").as(a), col(s"y.$item").as(b)): _*)
+      .distinct()
+    def side(name: String, bands: String) =
+      hashes.select(keys.map(col) ++ Seq(col(item).as(name), col("bands").as(bands)): _*)
+    val ham = (0 until 4).map(j =>
+        TextOps.hamming16(element_at(col("ba"), j + 1).cast("long"),
+          element_at(col("bb"), j + 1).cast("long")))
+      .reduce(_ + _)
+    cand.join(side(a, "ba"), keys :+ a).join(side(b, "bb"), keys :+ b)
+      .withColumn("hamming", ham.cast("long"))
+      .filter(col("hamming") <= 3)
+  }
+
   private def asciiHeads(s: SparkSession, dir: String, maxId: Long,
       len: Int): Dataset[(Long, String)] = {
     import s.implicits._

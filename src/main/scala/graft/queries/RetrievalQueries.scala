@@ -48,57 +48,58 @@ object RetrievalQueries extends QueryRegistry {
     * and hybrid_rrf_fusion (the SharedBuilds discipline every other
     * expensive shared artifact follows). */
   private def bm25Scores(s: SparkSession, dir: String): DataFrame =
-    SharedBuilds.of(s, dir, "bm25-scores")(bm25ScoresUncached(s, dir))
+    SharedBuilds.of(s, dir, "bm25-scores")(bm25(documents(s, dir)
+      .select(col("doc_id"), TextOps.tokens(col("text")).as("toks")), "toks", Seq("doc_id")))
 
-  /** idf literals the LAST bm25 scoring computed, captured so the
-    * oracle SQL can interpolate the exact same doubles instead of
-    * recomputing ln() in DuckDB (rint-vs-round tie rules
-    * differ AND a 1-ulp libm divergence near a 6th-decimal boundary
-    * could flip the rounded value — a literal cannot diverge). Safe as
-    * a plain var: Verify runs every query before dumping oracleSql in
-    * the same JVM, and the value is a pure function of (corpus, Terms)
-    * so any interleaving writes the same map. */
-  @volatile private var capturedIdf: Option[Map[String, Double]] = None
+  /** idf literals the LAST bm25 scoring of each corpus computed, keyed
+    * by its token column, captured so the oracle SQL can interpolate
+    * the exact same doubles instead of recomputing ln() in DuckDB
+    * (rint-vs-round tie rules differ AND a 1-ulp libm divergence near a
+    * 6th-decimal boundary could flip the rounded value — a literal
+    * cannot diverge). Verify runs every query before dumping oracleSql
+    * in the same JVM, and each value is a pure function of (corpus,
+    * Terms), so any interleaving writes the same map. */
+  private val capturedIdf = scala.collection.concurrent.TrieMap.empty[String, Map[String, Double]]
 
-  private def bm25ScoresUncached(s: SparkSession, dir: String): DataFrame = {
-    val docs = documents(s, dir)
-      .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
-      .withColumn("dlen", size(col("toks")).cast("double"))
+  /** Okapi BM25 of the fixed query over `units`, map-only: the `keys`
+    * columns and the rounded score `bm25`. `units` holds the keys and
+    * the token array column `toks`; the df counts and the average
+    * length come from one 1-row aggregate, and the idf literals,
+    * pre-rounded to 6 decimals, are captured for [[bm25Ctes]]. */
+  private def bm25(units: DataFrame, toks: String, keys: Seq[String]): DataFrame = {
+    val docs = units.withColumn("dlen", size(col(toks)).cast("double"))
     val row = docs.agg(
       count(lit(1)).as("n"),
       sum(col("dlen")).as("sl") +:
-        Terms.map(t => sum(when(array_contains(col("toks"), t), 1L)
+        Terms.map(t => sum(when(array_contains(col(toks), t), 1L)
           .otherwise(0L)).as(s"df_$t")): _*)
       .collect()(0) // 1-row head: N, Σlen, |Terms| df counts
     val n = row.getAs[Long]("n")
     val avglen = row.getAs[Double]("sl") / n
-    // idf pre-rounded to 6 decimals, shared with the oracle as a
-    // verbatim literal via capturedIdf
     val idfs = Terms.map { t =>
       val df = row.getAs[Long](s"df_$t")
       t -> math.rint(math.log(1.0 + (n - df + 0.5) / (df + 0.5)) * 1e6) / 1e6
     }.toMap
-    capturedIdf = Some(idfs)
+    capturedIdf(toks) = idfs
     val score: Column = Terms.map { t =>
       val idf = idfs(t)
-      val tf = size(filter(col("toks"), x => x === t)).cast("double")
+      val tf = size(filter(col(toks), x => x === t)).cast("double")
       (lit(idf) * (tf * lit(K1Plus1.toDouble))) /
         (tf + lit(K1.toDouble) *
           (lit(OneMinusB.toDouble) + (lit(B.toDouble) * col("dlen")) / lit(avglen)))
     }.reduce(_ + _)
-    docs.select(col("doc_id"), (round(score, 6) + 0.0).as("bm25"))
+    docs.select(keys.map(col) :+ (round(score, 6) + 0.0).as("bm25"): _*)
   }
 
-  /** The same scoring as a DuckDB SQL query (shared literals/shape).
-    * The idf factor is interpolated as the EXACT rounded literal the
-    * Spark side computed (capturedIdf — Verify runs every query before
-    * dumping oracleSql, so it is always set by then); recomputing
-    * ln() in DuckDB risked rint-vs-round tie rules and 1-ulp libm
-    * divergence flipping the 6th decimal. Fallback (oracle requested
-    * before any scoring ran) keeps the in-engine ln() twin. */
-  private def bm25Sql: String = {
-    import graft.queries.TextQueries.{F => TF}
-    def idfSql(t: String): String = capturedIdf match {
+  /** [[bm25]] as DuckDB CTEs (shared literals/shape): `units` are CTEs
+    * whose last, `src`, holds the `keys` and the token column `toks`;
+    * then `n` and `tf`, and `sc` (keys, bm25). The idf factor is
+    * interpolated as the EXACT rounded literal the Spark side computed
+    * (capturedIdf — Verify runs every query before dumping oracleSql,
+    * so it is always set by then). Fallback (oracle requested before
+    * any scoring ran) keeps the in-engine ln() twin. */
+  private def bm25Ctes(units: String, src: String, toks: String, keys: String): String = {
+    def idfSql(t: String): String = capturedIdf.get(toks) match {
       case Some(m) => "CAST(" + String.format(java.util.Locale.ROOT,
         "%.6f", Double.box(m(t))) + " AS DOUBLE)" // locale-pinned dot
       case None =>
@@ -112,17 +113,24 @@ object RetrievalQueries extends QueryRegistry {
         .stripMargin.replaceAll("\n", " ")
     }.mkString(" + ")
     val dfSel = Terms.map(t =>
-      s"sum(CASE WHEN list_contains(toks, '$t') THEN 1 ELSE 0 END) AS df_$t")
+      s"sum(CASE WHEN list_contains($toks, '$t') THEN 1 ELSE 0 END) AS df_$t")
       .mkString(", ")
     val tfSel = Terms.map(t =>
-      s"CAST(len(list_filter(toks, x -> x = '$t')) AS DOUBLE) AS tf_$t")
+      s"CAST(len(list_filter($toks, x -> x = '$t')) AS DOUBLE) AS tf_$t")
       .mkString(", ")
-    s"""WITH t AS (SELECT doc_id, ${TF.toks("text")} AS toks FROM documents),
-       |n AS (SELECT count(*) AS n, CAST(sum(len(toks)) AS DOUBLE) / count(*) AS avglen,
+    s"""WITH $units,
+       |n AS (SELECT count(*) AS n, CAST(sum(len($toks)) AS DOUBLE) / count(*) AS avglen,
        |             $dfSel
-       |      FROM t),
-       |tf AS (SELECT doc_id, CAST(len(toks) AS DOUBLE) AS dlen, $tfSel FROM t),
-       |sc AS (SELECT doc_id, round($contrib, 6) + 0.0 AS bm25 FROM tf, n)""".stripMargin
+       |      FROM $src),
+       |tf AS (SELECT $keys, CAST(len($toks) AS DOUBLE) AS dlen, $tfSel FROM $src),
+       |sc AS (SELECT $keys, round($contrib, 6) + 0.0 AS bm25 FROM tf, n)""".stripMargin
+  }
+
+  /** The document scoring as DuckDB CTEs (t → n/tf → sc). */
+  private def bm25Sql: String = {
+    import graft.queries.TextQueries.{F => TF}
+    bm25Ctes(s"t AS (SELECT doc_id, ${TF.toks("text")} AS toks FROM documents)",
+      "t", "toks", "doc_id")
   }
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -427,7 +435,7 @@ object RetrievalQueries extends QueryRegistry {
     // final top-k head — and the chunk-level df/avglen constants ride
     // in from one bounded 1-row aggregate exactly like the doc-level
     // scorer. idf literals are captured and interpolated verbatim
-    // into the oracle (capturedChunkIdf, same rint/libm defense).
+    // into the oracle (capturedIdf, same rint/libm defense).
     "chunk_bm25_topk" -> ((s, dir) =>
       chunkBm25Scores(s, dir)
         .orderBy(col("bm25").desc, col("doc_id").asc, col("cidx").asc)
@@ -518,70 +526,23 @@ object RetrievalQueries extends QueryRegistry {
       .select(col("doc_id"), col("cidx").cast("long").as("cidx"),
         slice(col("toks"), col("cidx") * ChunkS + 1, lit(ChunkW)).as("ctoks"))
 
-  @volatile private var capturedChunkIdf: Option[Map[String, Double]] = None
-
   private def chunkBm25Scores(s: SparkSession, dir: String): DataFrame =
-    SharedBuilds.of(s, dir, "chunk-bm25-scores") {
-      val chunks = chunkTable(s, dir)
-        .withColumn("dlen", size(col("ctoks")).cast("double"))
-      val row = chunks.agg(
-        count(lit(1)).as("n"),
-        sum(col("dlen")).as("sl") +:
-          Terms.map(t => sum(when(array_contains(col("ctoks"), t), 1L)
-            .otherwise(0L)).as(s"df_$t")): _*)
-        .collect()(0) // 1-row head: N_chunks, Σlen, |Terms| df counts
-      val n = row.getAs[Long]("n")
-      val avglen = row.getAs[Double]("sl") / n
-      val idfs = Terms.map { t =>
-        val df = row.getAs[Long](s"df_$t")
-        t -> math.rint(math.log(1.0 + (n - df + 0.5) / (df + 0.5)) * 1e6) / 1e6
-      }.toMap
-      capturedChunkIdf = Some(idfs)
-      val score: Column = Terms.map { t =>
-        val idf = idfs(t)
-        val tf = size(filter(col("ctoks"), x => x === t)).cast("double")
-        (lit(idf) * (tf * lit(K1Plus1.toDouble))) /
-          (tf + lit(K1.toDouble) *
-            (lit(OneMinusB.toDouble) + (lit(B.toDouble) * col("dlen")) / lit(avglen)))
-      }.reduce(_ + _)
-      chunks.select(col("doc_id"), col("cidx"), (round(score, 6) + 0.0).as("bm25"))
-    }
+    SharedBuilds.of(s, dir, "chunk-bm25-scores")(
+      bm25(chunkTable(s, dir), "ctoks", Seq("doc_id", "cidx")))
 
   /** The chunk-corpus scoring as DuckDB CTEs (t → ct → n/tf → sc). */
   private def chunkBm25Sql: String = {
     import graft.queries.TextQueries.{F => TF}
-    def idfSql(t: String): String = capturedChunkIdf match {
-      case Some(m) => "CAST(" + String.format(java.util.Locale.ROOT,
-        "%.6f", Double.box(m(t))) + " AS DOUBLE)"
-      case None =>
-        s"round(ln(1 + (CAST(n.n AS DOUBLE) - df_$t + 0.5) / (df_$t + 0.5)), 6)"
-    }
-    val contrib = Terms.map { t =>
-      s"""(${idfSql(t)}
-         | * (tf_$t * CAST($K1Plus1 AS DOUBLE)))
-         | / (tf_$t + CAST($K1 AS DOUBLE)
-         |    * (CAST($OneMinusB AS DOUBLE) + (CAST($B AS DOUBLE) * dlen) / n.avglen))"""
-        .stripMargin.replaceAll("\n", " ")
-    }.mkString(" + ")
-    val dfSel = Terms.map(t =>
-      s"sum(CASE WHEN list_contains(ctoks, '$t') THEN 1 ELSE 0 END) AS df_$t")
-      .mkString(", ")
-    val tfSel = Terms.map(t =>
-      s"CAST(len(list_filter(ctoks, x -> x = '$t')) AS DOUBLE) AS tf_$t")
-      .mkString(", ")
-    s"""WITH t AS (SELECT doc_id, ${TF.toks("text")} AS toks FROM documents),
-       |d AS (SELECT doc_id, toks,
-       |        CAST(ceil(len(toks) / $ChunkS.0) AS INT) AS nc
-       |      FROM t WHERE len(toks) > 0),
-       |cx AS (SELECT doc_id, toks, unnest(range(nc)) AS cidx FROM d),
-       |ct AS (SELECT doc_id, CAST(cidx AS BIGINT) AS cidx,
-       |         toks[CAST(cidx * $ChunkS + 1 AS INT):CAST(cidx * $ChunkS + $ChunkW AS INT)] AS ctoks
-       |       FROM cx),
-       |n AS (SELECT count(*) AS n, CAST(sum(len(ctoks)) AS DOUBLE) / count(*) AS avglen,
-       |             $dfSel
-       |      FROM ct),
-       |tf AS (SELECT doc_id, cidx, CAST(len(ctoks) AS DOUBLE) AS dlen, $tfSel FROM ct),
-       |sc AS (SELECT doc_id, cidx, round($contrib, 6) + 0.0 AS bm25 FROM tf, n)""".stripMargin
+    bm25Ctes(
+      s"""t AS (SELECT doc_id, ${TF.toks("text")} AS toks FROM documents),
+         |d AS (SELECT doc_id, toks,
+         |        CAST(ceil(len(toks) / $ChunkS.0) AS INT) AS nc
+         |      FROM t WHERE len(toks) > 0),
+         |cx AS (SELECT doc_id, toks, unnest(range(nc)) AS cidx FROM d),
+         |ct AS (SELECT doc_id, CAST(cidx AS BIGINT) AS cidx,
+         |         toks[CAST(cidx * $ChunkS + 1 AS INT):CAST(cidx * $ChunkS + $ChunkW AS INT)] AS ctoks
+         |       FROM cx)""".stripMargin,
+      "ct", "ctoks", "doc_id, cidx")
   }
 
   /** Unrolled 8-step MMR greedy chain for the DuckDB oracle — each

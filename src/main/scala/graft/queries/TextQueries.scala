@@ -294,6 +294,24 @@ object TextQueries extends QueryRegistry {
       size(regexp_extract_all(c, lit(PiiIp), lit(0))) +
       size(regexp_extract_all(c, lit(PiiPhone), lit(0)))).cast("long")
 
+  /** The Gopher word statistics of `text` (Rae et al. 2021, appendix
+    * A): `ws` (the non-empty whitespace-split words) and `nw` (their
+    * count), `mean_len` (mean word length), `sym_ratio` ('#' and '...'
+    * per word) and `alpha_ratio` (the share of words with a letter);
+    * each ratio is 0.0 for a doc with no words. */
+  private def gopherWordStats(docs: DataFrame): DataFrame = docs
+    .withColumn("ws", filter(split(col("text"), "\\s+"), w => length(w) > lit(0)))
+    .withColumn("nw", size(col("ws")).cast("long"))
+    .withColumn("mean_len", when(col("nw") === 0, lit(0.0)).otherwise(
+      aggregate(col("ws"), lit(0L), (acc, w) => acc + length(w).cast("long"))
+        .cast("double") / col("nw")))
+    .withColumn("sym_ratio", when(col("nw") === 0, lit(0.0)).otherwise(
+      ((length(col("text")) - length(regexp_replace(col("text"), "#", ""))).cast("double") +
+        (length(col("text")) - length(regexp_replace(col("text"), "\\.\\.\\.", ""))).cast("double") / 3.0)
+        / col("nw")))
+    .withColumn("alpha_ratio", when(col("nw") === 0, lit(0.0)).otherwise(
+      size(filter(col("ws"), w => w.rlike("[A-Za-z]"))).cast("double") / col("nw")))
+
   /** Map-only per-doc PII scrub + quality + lexical-diversity metrics —
     * the text work of the funnel's post-dedup stages, factored out so
     * the FULL pipeline (curation_funnel) and the INCREMENTAL pipeline
@@ -309,17 +327,7 @@ object TextQueries extends QueryRegistry {
     .drop("praw")
     .withColumn("q", round(TextOps.qualityScore(col("text")), 6))
     .withColumn("toks", TextOps.tokens(col("text")))
-    .withColumn("ws", filter(split(col("text"), "\\s+"), w => length(w) > lit(0)))
-    .withColumn("nw", size(col("ws")).cast("long"))
-    .withColumn("mean_len", when(col("nw") === 0, lit(0.0)).otherwise(
-      aggregate(col("ws"), lit(0L), (acc, w) => acc + length(w).cast("long"))
-        .cast("double") / col("nw")))
-    .withColumn("sym_ratio", when(col("nw") === 0, lit(0.0)).otherwise(
-      ((length(col("text")) - length(regexp_replace(col("text"), "#", ""))).cast("double") +
-        (length(col("text")) - length(regexp_replace(col("text"), "\\.\\.\\.", ""))).cast("double") / 3.0)
-        / col("nw")))
-    .withColumn("alpha_ratio", when(col("nw") === 0, lit(0.0)).otherwise(
-      size(filter(col("ws"), w => w.rlike("[A-Za-z]"))).cast("double") / col("nw")))
+    .transform(gopherWordStats)
     .select(col("doc_id"), col("source"), col("pii_hit"), col("q"),
       (col("nw").between(50L, 100000L) &&
         col("mean_len") >= 3.0 && col("mean_len") <= 10.0 &&
@@ -977,25 +985,14 @@ object TextQueries extends QueryRegistry {
     // IEEE-identical without rounding
     "gopher_quality_flags" -> ((s, dir) => {
       val gopherStops = Seq("the", "be", "to", "of", "and", "that", "have", "with")
-      val perDoc = documents(s, dir)
-        .withColumn("ws", filter(split(col("text"), "\\s+"), w => length(w) > lit(0)))
+      val perDoc = gopherWordStats(documents(s, dir))
         .withColumn("lns", split(col("text"), "\n"))
-        .withColumn("nw", size(col("ws")).cast("long"))
-        .withColumn("mean_len", when(col("nw") === 0, lit(0.0)).otherwise(
-          aggregate(col("ws"), lit(0L), (acc, w) => acc + length(w).cast("long"))
-            .cast("double") / col("nw")))
-        .withColumn("sym_ratio", when(col("nw") === 0, lit(0.0)).otherwise(
-          ((length(col("text")) - length(regexp_replace(col("text"), "#", ""))).cast("double") +
-            (length(col("text")) - length(regexp_replace(col("text"), "\\.\\.\\.", ""))).cast("double") / 3.0)
-            / col("nw")))
         .withColumn("bullet_ratio",
           size(filter(col("lns"), l => ltrim(l).rlike("^[-*]"))).cast("double") /
             size(col("lns")))
         .withColumn("ell_ratio",
           size(filter(col("lns"), l => rtrim(l).endsWith("..."))).cast("double") /
             size(col("lns")))
-        .withColumn("alpha_ratio", when(col("nw") === 0, lit(0.0)).otherwise(
-          size(filter(col("ws"), w => w.rlike("[A-Za-z]"))).cast("double") / col("nw")))
         .withColumn("n_stop", size(array_distinct(
           filter(transform(col("ws"), w => lower(w)),
             w => w.isin(gopherStops: _*)))).cast("long"))

@@ -355,7 +355,7 @@ class KwiReaderFactory(required: StructType,
         // column pruning reaches the byte level: an embedding-free
         // projection byte-skips every record's dim·4 payload, a
         // metadata-free one skips the metadata bytes
-        private val it = KwiFormat.readRecords(Paths.get(file),
+        private val it = new KwiFormat.RecordIterator(Paths.get(file),
           needEmbedding = required.fieldNames.contains("embedding"),
           needMetadata = required.fieldNames.contains("metadata"))
         private var cur: (String, Array[Float], Option[String]) = _

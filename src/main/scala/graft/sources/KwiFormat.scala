@@ -4,7 +4,7 @@ import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, EOFE
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 
 /** Reader/writer for the reference's `.kwi` single-file vector format.
   *
@@ -24,8 +24,10 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   *
   * A `.kwi` file is single-file by design (it is the reference's
   * interchange artifact, not our scale path — parquet is). Write runs on
-  * the driver via `toLocalIterator` (constant memory); read parses
-  * sequentially and returns a DataFrame.
+  * the driver via `toLocalIterator` (constant memory); reads go through
+  * the `kwi` data source (`spark.read.format("kwi").load(path)`), whose
+  * scan is a [[RecordIterator]]. One function, `readRecord`, decodes a
+  * record and one, `writeRecordBytes`, encodes it (tombstones too).
   *
   * Deletes follow `BinaryIndex`'s tombstone + compaction split
   * (binary_index.rs:197-212 delete drops only the entry-table row, the
@@ -74,16 +76,6 @@ object KwiFormat {
     count
   }
 
-  /** Parse `path` into a DataFrame (id, embedding, metadata). */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val rows = readRecords(Paths.get(path)).map {
-      case (id, vec, meta) => Row(id, vec, meta.orNull)
-    }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toSeq),
-      CollectionManager.schema.copy(fields = CollectionManager.schema.fields.take(3)))
-  }
-
   /** Append records to an existing file and bump the header's live
     * count — `LocalStorage::add_vector` semantics, batched
     * (local_storage.rs:103-124: append + header count bump). Returns
@@ -111,16 +103,13 @@ object KwiFormat {
   def appendTombstone(path: String, id: String): Unit = {
     val p = Paths.get(path)
     val live = {
-      val it = readRecords(p)
+      val it = new RecordIterator(p)
       try it.exists(_._1 == id) finally it.close()
     }
     require(live, s"no live record with id $id in $path")
-    val idBytes = id.getBytes("UTF-8")
-    val bb = ByteBuffer.allocate(4 + idBytes.length + 4)
-      .order(ByteOrder.LITTLE_ENDIAN)
-    bb.putInt(idBytes.length).put(idBytes).putInt(TombstoneLen)
     val out = new FileOutputStream(p.toFile, true)
-    try out.write(bb.array()) finally out.close()
+    try writeRecordBytes(out, id.getBytes("UTF-8"), null, Array.emptyByteArray)
+    finally out.close()
     patchCount(p, count(path) - 1)
   }
 
@@ -130,7 +119,7 @@ object KwiFormat {
   def optimize(path: String): Long = {
     val p = Paths.get(path)
     val tmp = Paths.get(path + ".compact.tmp")
-    val it = readRecords(p)
+    val it = new RecordIterator(p)
     val out = new BufferedOutputStream(new FileOutputStream(tmp.toFile))
     var n = 0L
     try {
@@ -206,20 +195,27 @@ object KwiFormat {
       if (hasMeta && !r.isNullAt(2)) r.getString(2).getBytes("UTF-8")
       else Array.emptyByteArray)
 
+  /** Encode one record; `vec == null` encodes a tombstone marker
+    * (`data_len` = [[TombstoneLen]], nothing after it). */
   private def writeRecordBytes(out: java.io.OutputStream, id: Array[Byte],
       vec: Seq[Float], meta: Array[Byte]): Unit = {
-    val bb = ByteBuffer
-      .allocate(4 + id.length + 4 + vec.length * 4 + 4 + meta.length)
+    val body = if (vec == null) 0 else vec.length * 4 + 4 + meta.length
+    val bb = ByteBuffer.allocate(4 + id.length + 4 + body)
       .order(ByteOrder.LITTLE_ENDIAN)
     bb.putInt(id.length).put(id)
-    bb.putInt(vec.length)
-    vec.foreach(bb.putFloat)
-    bb.putInt(meta.length).put(meta)
+    if (vec == null) bb.putInt(TombstoneLen)
+    else {
+      bb.putInt(vec.length)
+      vec.foreach(bb.putFloat)
+      bb.putInt(meta.length).put(meta)
+    }
     out.write(bb.array())
   }
 
-  /** One physical record; `data == null` marks a tombstone. */
-  private final case class Raw(id: String, data: Array[Float], meta: Option[String]) {
+  /** One physical record, which spans bytes [`offset`, `end`) of its
+    * file; `data == null` marks a tombstone. */
+  private final case class Raw(id: String, data: Array[Float], meta: Option[String],
+      offset: Long, end: Long) {
     def tombstone: Boolean = data == null
   }
 
@@ -228,60 +224,71 @@ object KwiFormat {
 
   /** Diagnostic counter: how many records had their float payload
     * actually DECODED (not byte-skipped). Only ever incremented in
-    * RawIterator's decode branch, so a column-pruned scan that claims
+    * readRecord's decode branch, so a column-pruned scan that claims
     * to skip embedding bytes can be held to it in tests
     * (KwiDataSourceSpec) — the counter not moving IS the proof that
     * id-only projections never touch float bytes. Process-global and
     * monotone; tests compare deltas. */
   private[graft] val floatDecodes = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** EOF-driven iterator over physical records incl. tombstone markers.
-    * Callers that stop early must close() or the handle leaks. With
-    * `decodeFloats = false` the dim·4 payload bytes are SKIPPED, not
-    * parsed (`data` comes back as a shared empty array, still non-null
-    * so tombstone detection is unaffected); `decodeMeta = false` skips
-    * the metadata bytes the same way — the read paths for column-pruned
-    * scans and the tombstone pre-scan. */
+  /** Decode the record that starts at byte `offset`, the stream's
+    * position: null at a clean end of file, and a record cut short
+    * throws `EOFException`. With `decodeFloats = false` the dim·4
+    * payload bytes are SKIPPED, not parsed (`data` comes back as a
+    * shared empty array, still non-null so tombstone detection is
+    * unaffected); `decodeMeta = false` skips the metadata bytes the
+    * same way — the read paths for column-pruned scans, the tombstone
+    * pre-scan and the offset table. */
+  private def readRecord(in: DataInputStream, offset: Long, decodeFloats: Boolean,
+      decodeMeta: Boolean): Raw = {
+    val first = in.read()
+    if (first < 0) return null
+    val rest = new Array[Byte](3)
+    in.readFully(rest)
+    val idLen = ByteBuffer.wrap(Array(first.toByte) ++ rest)
+      .order(ByteOrder.LITTLE_ENDIAN).getInt
+    val idBytes = new Array[Byte](idLen)
+    in.readFully(idBytes)
+    val id = new String(idBytes, "UTF-8")
+    val dim = readIntLE(in)
+    val head = offset + 4L + idLen + 4L
+    if (dim == TombstoneLen) Raw(id, null, None, offset, head)
+    else {
+      val data = if (decodeFloats) {
+        floatDecodes.incrementAndGet()
+        val d = new Array[Float](dim)
+        val buf = new Array[Byte](dim * 4)
+        in.readFully(buf)
+        val fb = ByteBuffer.wrap(buf).order(ByteOrder.LITTLE_ENDIAN)
+        var i = 0
+        while (i < dim) { d(i) = fb.getFloat(); i += 1 }
+        d
+      } else { in.skipNBytes(dim.toLong * 4); SkippedFloats }
+      val metaLen = readIntLE(in)
+      val meta = if (decodeMeta) {
+        val metaBytes = new Array[Byte](metaLen)
+        in.readFully(metaBytes)
+        if (metaBytes.isEmpty) None else Some(new String(metaBytes, "UTF-8"))
+      } else { in.skipNBytes(metaLen.toLong); None }
+      Raw(id, data, meta, offset, head + dim * 4L + 4L + metaLen)
+    }
+  }
+
+  /** EOF-driven iterator over physical records incl. tombstone markers,
+    * each decoded by [[readRecord]]. Callers that stop early must
+    * close() or the handle leaks. */
   private final class RawIterator(p: Path, decodeFloats: Boolean = true,
       decodeMeta: Boolean = true)
       extends Iterator[Raw] with AutoCloseable {
     private val in = new DataInputStream(
       new BufferedInputStream(new FileInputStream(p.toFile)))
     in.skipNBytes(HeaderSize)
+    private var pos = HeaderSize.toLong
     private var closed = false
     private var pending: Raw = _
     def close(): Unit = if (!closed) { closed = true; in.close() }
     private def readOne(): Raw = {
-      val first = if (closed) -1 else in.read()
-      if (first < 0) { close(); null }
-      else try {
-        val rest = new Array[Byte](3)
-        in.readFully(rest)
-        val idLen = ByteBuffer.wrap(Array(first.toByte) ++ rest)
-          .order(ByteOrder.LITTLE_ENDIAN).getInt
-        val idBytes = new Array[Byte](idLen)
-        in.readFully(idBytes)
-        val id = new String(idBytes, "UTF-8")
-        val dim = readIntLE(in)
-        if (dim == TombstoneLen) Raw(id, null, None)
-        else {
-          val data = if (decodeFloats) {
-            floatDecodes.incrementAndGet()
-            val d = new Array[Float](dim)
-            val buf = new Array[Byte](dim * 4)
-            in.readFully(buf)
-            val fb = ByteBuffer.wrap(buf).order(ByteOrder.LITTLE_ENDIAN)
-            var i = 0
-            while (i < dim) { d(i) = fb.getFloat(); i += 1 }
-            d
-          } else { in.skipNBytes(dim.toLong * 4); SkippedFloats }
-          val meta = if (decodeMeta) {
-            val metaBytes = readLenPrefixed(in)
-            if (metaBytes.isEmpty) None else Some(new String(metaBytes, "UTF-8"))
-          } else { in.skipNBytes(readIntLE(in).toLong); None }
-          Raw(id, data, meta)
-        }
-      } catch {
+      val r = if (closed) null else try readRecord(in, pos, decodeFloats, decodeMeta) catch {
         // a torn trailing record (crash mid-append — append() writes in
         // place, unlike write()/optimize()'s temp+rename) must not make
         // the whole file unreadable: serve the intact prefix and stop,
@@ -292,8 +299,10 @@ object KwiFormat {
         case _: EOFException =>
           System.err.println(
             s"[kwi] WARN truncated trailing record in $p — serving the intact prefix")
-          close(); null
+          null
       }
+      if (r == null) close() else pos = r.end
+      r
     }
     def hasNext: Boolean = {
       if (pending == null && !closed) pending = readOne()
@@ -310,9 +319,15 @@ object KwiFormat {
     * in-memory entry table, binary_index.rs:14-26), pass 2 streams the
     * records with each id's first `tombstones(id)` occurrences dropped
     * (a marker always follows the occurrence it kills, so the oldest
-    * occurrences are exactly the dead ones). Callers that stop early
-    * (limit pushdown, task kill) must call `close()` or the file handle
-    * leaks — the DSv2 PartitionReader wires this into its own close(). */
+    * occurrences are exactly the dead ones). This is the one tombstone
+    * replay: the `kwi` scan and [[IndexedReader]]'s offset table both
+    * read it. Column-pruned: with `needEmbedding` or `needMetadata`
+    * false those byte ranges are skipped, never decoded — an id-only
+    * SQL projection over a kwi store reads only ids and length words
+    * (float skipping asserted via `floatDecodes` in KwiDataSourceSpec).
+    * Callers that stop early (limit pushdown, task kill) must call
+    * `close()` or the file handle leaks — the DSv2 PartitionReader
+    * wires this into its own close(). */
   final class RecordIterator(p: Path, needEmbedding: Boolean = true,
       needMetadata: Boolean = true)
       extends Iterator[(String, Array[Float], Option[String])]
@@ -328,7 +343,10 @@ object KwiFormat {
     private val raw = new RawIterator(p, decodeFloats = needEmbedding,
       decodeMeta = needMetadata)
     private var pending: Raw = _
+    private var last: Raw = _
     def close(): Unit = raw.close()
+    /** Byte offset of the record `next` returned last. */
+    def offset: Long = last.offset
     private def advance(): Unit =
       while (pending == null && raw.hasNext) {
         val r = raw.next()
@@ -341,84 +359,27 @@ object KwiFormat {
     def hasNext: Boolean = { advance(); pending != null }
     def next(): (String, Array[Float], Option[String]) = {
       if (!hasNext) throw new NoSuchElementException
-      val r = pending; pending = null
-      (r.id, r.data, r.meta)
+      last = pending; pending = null
+      (last.id, last.data, last.meta)
     }
   }
 
-  private[sources] def readRecords(p: Path): RecordIterator = new RecordIterator(p)
-
-  /** Column-pruned scan: when the projection dropped `embedding`
-    * and/or `metadata`, those byte ranges are skipped, never decoded —
-    * an id-only SQL projection over a kwi store reads only ids and
-    * length words (float skipping asserted via `floatDecodes` in
-    * KwiDataSourceSpec). */
-  private[sources] def readRecords(p: Path, needEmbedding: Boolean,
-      needMetadata: Boolean): RecordIterator =
-    new RecordIterator(p, needEmbedding, needMetadata)
-
   /** Random-access point reads via an in-memory offset table — the
     * reference's `BinaryIndex` read path (binary_index.rs:14-26 entry
-    * table, :148-160 seek+read). One sequential scan at open records
-    * each LIVE record's byte offset with the identical tombstone replay
-    * as the streaming reader (a tombstone pops the OLDEST occurrence of
-    * its id; later occurrences stay live), so point reads and scans can
-    * never disagree; `get` then seeks straight to the latest live
-    * record. O(1) per lookup after O(n) open, vs O(n) per lookup for a
-    * scan — the same trade the reference makes, and the single-process
-    * analogue of a parquet point read with pushdown. */
+    * table, :148-160 seek+read). The table is the live-record stream of
+    * a [[RecordIterator]] with payloads and metadata skipped, grouped
+    * by id: its offsets, oldest first. Point reads and scans therefore
+    * can never disagree, by construction (one replay, one torn-tail
+    * rule); `get` then seeks straight to the latest live record. O(1)
+    * per lookup after O(n) open, vs O(n) per lookup for a scan — the
+    * same trade the reference makes, and the single-process analogue
+    * of a parquet point read with pushdown. */
   final class IndexedReader(path: String) extends AutoCloseable {
     private val p = Paths.get(path)
-    // per-id QUEUE of live offsets, so duplicate live ids replay exactly
-    // like the streaming RecordIterator: a tombstone pops the OLDEST
-    // occurrence, later occurrences stay live
     private val offsets: Map[String, Seq[Long]] = {
-      val m = scala.collection.mutable.LinkedHashMap
-        .empty[String, scala.collection.mutable.ArrayDeque[Long]]
-      val in = new DataInputStream(
-        new BufferedInputStream(new FileInputStream(p.toFile)))
-      try {
-        in.skipNBytes(HeaderSize)
-        var pos = HeaderSize.toLong
-        var done = false
-        while (!done) {
-          val first = in.read()
-          if (first < 0) done = true
-          else try {
-            val rest = new Array[Byte](3)
-            in.readFully(rest)
-            val idLen = ByteBuffer.wrap(Array(first.toByte) ++ rest)
-              .order(ByteOrder.LITTLE_ENDIAN).getInt
-            val idBytes = new Array[Byte](idLen)
-            in.readFully(idBytes)
-            val id = new String(idBytes, "UTF-8")
-            val dim = readIntLE(in)
-            if (dim == TombstoneLen) {
-              m.get(id).foreach { q =>
-                if (q.nonEmpty) q.removeHead()
-                if (q.isEmpty) m.remove(id)
-              }
-              pos += 4L + idLen + 4L
-            } else {
-              val dataBytes = dim.toLong * 4
-              in.skipNBytes(dataBytes)
-              val metaLen = readIntLE(in)
-              in.skipNBytes(metaLen.toLong)
-              m.getOrElseUpdate(id,
-                scala.collection.mutable.ArrayDeque.empty[Long]) += pos
-              pos += 4L + idLen + 4L + dataBytes + 4L + metaLen
-            }
-          } catch {
-            // torn trailing record: index the intact prefix (matches
-            // the streaming reader's tolerance), loudly
-            case _: EOFException =>
-              System.err.println(
-                s"[kwi] WARN truncated trailing record in $p — indexing the intact prefix")
-              done = true
-          }
-        }
-      } finally in.close()
-      m.view.mapValues(_.toSeq).toMap
+      val it = new RecordIterator(p, needEmbedding = false, needMetadata = false)
+      try it.map(r => r._1 -> it.offset).toSeq.groupMap(_._1)(_._2)
+      finally it.close()
     }
     private val ch = java.nio.channels.FileChannel.open(p,
       java.nio.file.StandardOpenOption.READ)
@@ -437,22 +398,12 @@ object KwiFormat {
       offsets.get(id).getOrElse(Seq.empty).map(readAt)
 
     private def readAt(off: Long): (String, Array[Float], Option[String]) = {
-        ch.position(off)
-        val in = new DataInputStream(
-          new BufferedInputStream(java.nio.channels.Channels.newInputStream(ch)))
-        // do NOT close `in` — it would close the shared channel
-        val idBytes = new Array[Byte](readIntLE(in)); in.readFully(idBytes)
-        val dim = readIntLE(in)
-        val buf = new Array[Byte](dim * 4)
-        in.readFully(buf)
-        val fb = ByteBuffer.wrap(buf).order(ByteOrder.LITTLE_ENDIAN)
-        val data = new Array[Float](dim)
-        var i = 0
-        while (i < dim) { data(i) = fb.getFloat(); i += 1 }
-        val metaBytes = new Array[Byte](readIntLE(in)); in.readFully(metaBytes)
-        (new String(idBytes, "UTF-8"), data,
-          if (metaBytes.isEmpty) None else Some(new String(metaBytes, "UTF-8")))
-      }
+      ch.position(off)
+      // do NOT close the stream — it would close the shared channel
+      val r = readRecord(new DataInputStream(new BufferedInputStream(
+        java.nio.channels.Channels.newInputStream(ch))), off, decodeFloats = true, decodeMeta = true)
+      (r.id, r.data, r.meta)
+    }
 
     def close(): Unit = ch.close()
   }
@@ -461,13 +412,6 @@ object KwiFormat {
     val b = new Array[Byte](4)
     in.readFully(b)
     ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN).getInt
-  }
-
-  private def readLenPrefixed(in: DataInputStream): Array[Byte] = {
-    val n = readIntLE(in)
-    val b = new Array[Byte](n)
-    in.readFully(b)
-    b
   }
 
   private def readN(p: Path, n: Int): Array[Byte] = {

@@ -166,6 +166,24 @@ class IndexSpec extends SparkSpec {
     }
   }
 
+  test("hnsw: a stored vector of another dimension is never a candidate; a ragged entry point fails") {
+    val hnsw = new Hnsw(m = 4, ef = 8)
+    // one level-0 clique: 2 is longer than the query, 3 shorter
+    val ids = Seq(0L, 1L, 2L, 3L)
+    val adj = ids.map(i => (i, 0) -> ids.filter(_ != i)).toMap
+    val vecs = Map(0L -> Array(1f, 0f, 0f), 1L -> Array(0.9f, 0.1f, 0f),
+      2L -> Array(1f, 0f, 0f, 0f), 3L -> Array(1f, 0f))
+    val q = Array(1f, 0f, 0f)
+    val top = hnsw.serveQuery(adj, vecs, (0L, 0), q, 4)
+    assert(top.map(_._1) === Seq(0L, 1L))
+    for (entry <- Seq(2L, 3L)) {
+      val e = intercept[IllegalArgumentException](hnsw.serveQuery(adj, vecs, (entry, 0), q, 4))
+      assert(e.getMessage.contains(s"entry point $entry") &&
+        e.getMessage.contains("dimension 3") && e.getMessage.contains(vecs(entry).length.toString),
+        e.getMessage)
+    }
+  }
+
   test("hnsw: serve is candidate-scoped — O(ef) point reads, never a corpus collect") {
     val small = emb.filter($"vec_id" < 400).cache()
     val n = small.count()

@@ -36,6 +36,14 @@ class IvfSpec extends SparkSpec {
     assert(ivfAll == exact)
   }
 
+  test("nearestCells ranks by squared distance and rejects a query of another dimension") {
+    val cents = Array((0, Array(0.0, 0.0, 0.0)), (1, Array(1.0, 1.0, 1.0)), (2, Array(1.0, 0.0, 0.0)))
+    assert(Ivf.nearestCells(Array(0.9f, 0.1f, 0f), cents, 2).map(_._1).toSeq == Seq(2, 0))
+    // shorter (a prefix would score) and longer (would read past the centroid)
+    for (q <- Seq(Array(0.9f, 0.1f), Array(0.9f, 0.1f, 0f, 0f)))
+      intercept[IllegalArgumentException](Ivf.nearestCells(q, cents, 2))
+  }
+
   test("recall@10 with nprobe=3 of 8 cells is >= 0.7 and self is rank 1") {
     val ivf = new Ivf(nlist = 8, iters = 2)
     val (cents, assigned) = ivf.build(vecs)

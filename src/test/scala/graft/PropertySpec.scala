@@ -100,7 +100,7 @@ class PropertySpec extends SparkSpec {
           KwiFormat.appendTombstone(path, id); model.remove(id)
         case Del(_) => ()
       }
-      def survivors() = KwiFormat.read(spark, path).collect()
+      def survivors() = spark.read.format("kwi").load(path).collect()
         .map(r => r.getString(0) -> r.getSeq[Float](1).head).toMap
       assert(survivors() == model.toMap, s"ops=$ops (pre-optimize)")
       KwiFormat.optimize(path)

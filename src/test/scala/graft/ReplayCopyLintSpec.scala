@@ -14,7 +14,7 @@ class ReplayCopyLintSpec extends AnyFunSuite {
 
   /** The repeat count `src/main` may not exceed; lower it when a change
     * removes repeats. */
-  private val MaxRepeatedLines = 94
+  private val MaxRepeatedLines = 14
 
   private val Anchors = Seq(
     // the MinHash signature of TextQueries.F.sigBndCtes
@@ -31,34 +31,49 @@ class ReplayCopyLintSpec extends AnyFunSuite {
   private def count(text: String, anchor: String): Int =
     java.util.regex.Pattern.quote(anchor).r.findAllIn(text).size
 
-  /** The main sources in sorted path order. */
+  /** The main sources in sorted path order: (path, text). */
   private lazy val sources = {
     val files = Files.walk(Paths.get("src/main")).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
     assert(files.size > 50, s"expected the main sources, found ${files.size} files")
-    files.map(Files.readString(_))
+    files.map(f => f.toString -> Files.readString(f))
   }
 
   /** Lines that lie in a window of 6 consecutive kept lines of one file
     * whose texts already occurred as an earlier window, the files taken
-    * in order. A kept line is trimmed and, as `tools/loc.sh` counts
-    * them, neither blank nor starting with a line comment, `*` or a
-    * block-comment opener. */
-  private def repeatedLines(files: Seq[String]): Int = {
-    val seen = scala.collection.mutable.HashSet.empty[Seq[String]]
-    files.map { text =>
-      val kept = text.split("\n", -1).toSeq.map(_.trim)
-        .filterNot(l => l.isEmpty || l.startsWith("//") || l.startsWith("*") || l.startsWith("/*"))
+    * in order; and each such window as "file:line repeats file:line",
+    * the first line of the window and of its earlier occurrence. A kept
+    * line is trimmed and, as `tools/loc.sh` counts them, neither blank
+    * nor starting with a line comment, `*` or a block-comment opener. */
+  private def repeats(files: Seq[(String, String)]): (Int, Seq[String]) = {
+    val seen = scala.collection.mutable.HashMap.empty[Seq[String], String]
+    val where = Seq.newBuilder[String]
+    val n = files.map { case (name, text) =>
+      val kept = text.split("\n", -1).toSeq.map(_.trim).zipWithIndex
+        .filterNot { case (l, _) =>
+          l.isEmpty || l.startsWith("//") || l.startsWith("*") || l.startsWith("/*") }
       val hit = new Array[Boolean](kept.length)
       kept.sliding(6).zipWithIndex.foreach { case (w, i) =>
-        if (w.size == 6 && !seen.add(w)) (i until i + 6).foreach(hit(_) = true)
+        if (w.size == 6) {
+          val at = s"$name:${w.head._2 + 1}"
+          seen.get(w.map(_._1)) match {
+            case Some(first) =>
+              (i until i + 6).foreach(hit(_) = true)
+              where += s"$at repeats $first"
+            case None => seen(w.map(_._1)) = at
+          }
+        }
       }
       hit.count(identity)
     }.sum
+    (n, where.result())
   }
 
+  private def repeatedLines(files: Seq[String]): Int =
+    repeats(files.zipWithIndex.map { case (t, i) => s"file$i" -> t })._1
+
   test("each replay and band recipe is written out once in src/main") {
-    val text = sources.mkString("\n")
+    val text = sources.map(_._2).mkString("\n")
     val off = Anchors.map(a => a -> count(text, a)).filter(_._2 != 1)
     assert(off.isEmpty, off.map { case (a, n) => s"$n x $a" }.mkString("\n"))
   }
@@ -69,8 +84,10 @@ class ReplayCopyLintSpec extends AnyFunSuite {
   }
 
   test("src/main repeats no more 6-line windows than the ratchet allows") {
-    val n = repeatedLines(sources)
-    assert(n <= MaxRepeatedLines, s"$n lines repeat an earlier 6-line window (ratchet $MaxRepeatedLines)")
+    val (n, where) = repeats(sources)
+    assert(n <= MaxRepeatedLines,
+      s"$n lines repeat an earlier 6-line window (ratchet $MaxRepeatedLines):\n" +
+        where.mkString("\n"))
   }
 
   test("the repeat scan sees every line of a repeated window") {
@@ -83,5 +100,7 @@ class ReplayCopyLintSpec extends AnyFunSuite {
     assert(repeatedLines(Seq((block ++ ("mid" +: block)).mkString("\n"))) == 6)
     assert(repeatedLines(Seq(block.take(5).mkString("\n"), block.take(5).mkString("\n"))) == 0)
     assert(repeatedLines(Seq(a, a)) == 7)
+    // each repeated window names itself and its first occurrence
+    assert(repeats(Seq("a" -> a, "b" -> b))._2 == Seq("b:3 repeats a:1"))
   }
 }

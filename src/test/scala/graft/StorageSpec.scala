@@ -229,7 +229,7 @@ class StorageSpec extends SparkSpec {
     val n = KwiFormat.write(df, path)
     assert(n === 3L)
     assert(KwiFormat.count(path) === 3L)
-    val back = KwiFormat.read(spark, path).collect()
+    val back = spark.read.format("kwi").load(path).collect()
       .map(r => (r.getString(0), r.getSeq[Float](1), Option(r.getString(2)))).toSeq
     assert(back.map(_._1).sorted === Seq("a", "b", "c"))
     val byId = back.map(t => t._1 -> t).toMap
@@ -244,10 +244,10 @@ class StorageSpec extends SparkSpec {
     val path = s"$base/vectors.kwi"
     val df = Seq(("a", v3a), ("b", v3b)).toDF("id", "embedding")
     KwiFormat.write(df, path)
-    val survivors = KwiFormat.read(spark, path).filter($"id" =!= "a")
+    val survivors = spark.read.format("kwi").load(path).filter($"id" =!= "a")
     KwiFormat.write(survivors, path)
     assert(KwiFormat.count(path) === 1L)
-    assert(KwiFormat.read(spark, path).select("id").as[String].collect() === Array("b"))
+    assert(spark.read.format("kwi").load(path).select("id").as[String].collect() === Array("b"))
   }
 
   test("kwi: tombstone delete skips the record; optimize compacts it away") {
@@ -266,7 +266,7 @@ class StorageSpec extends SparkSpec {
     KwiFormat.appendTombstone(path, "b")
     assert(KwiFormat.count(path) === 2L)
     assert(java.nio.file.Files.size(java.nio.file.Paths.get(path)) > sizeBefore)
-    assert(KwiFormat.read(spark, path).select("id").as[String].collect().sorted
+    assert(spark.read.format("kwi").load(path).select("id").as[String].collect().sorted
       === Array("a", "c"))
     // strict contract: a dead or unknown id cannot be deleted again
     intercept[IllegalArgumentException](KwiFormat.appendTombstone(path, "b"))
@@ -277,7 +277,7 @@ class StorageSpec extends SparkSpec {
     assert(KwiFormat.optimize(path) === 2L)
     assert(java.nio.file.Files.size(java.nio.file.Paths.get(path)) < sizeBefore)
     assert(KwiFormat.count(path) === 2L)
-    val back = KwiFormat.read(spark, path).collect()
+    val back = spark.read.format("kwi").load(path).collect()
       .map(r => (r.getString(0), r.getSeq[Float](1), Option(r.getString(2))))
       .sortBy(_._1)
     assert(back.map(_._1).toSeq === Seq("a", "c"))
@@ -291,7 +291,7 @@ class StorageSpec extends SparkSpec {
       Seq(("a", Array(9f, 9f, 9f), """{"k":9}""")).toDF("id", "embedding", "metadata"),
       path)
     assert(KwiFormat.count(path) === 2L) // 2 live - 1 deleted + 1 appended
-    val ids = KwiFormat.read(spark, path).collect()
+    val ids = spark.read.format("kwi").load(path).collect()
       .map(r => (r.getString(0), r.getSeq[Float](1))).sortBy(_._1)
     assert(ids.map(_._1).toSeq === Seq("a", "c"))
     assert(ids(0)._2 === Seq(9f, 9f, 9f)) // the NEW "a", not the tombstoned one
@@ -320,6 +320,29 @@ class StorageSpec extends SparkSpec {
       assert(rdr.get("nope").isEmpty)
       // random-access order doesn't matter: read c after b
       assert(rdr.get("c").get._2.toSeq === Seq(7f, 8f, 9f))
+    } finally rdr.close()
+  }
+
+  test("kwi: a record cut mid-payload — the scan and the indexed reader serve the same intact prefix") {
+    val base = freshBase()
+    val path = s"$base/vectors.kwi"
+    KwiFormat.write(Seq(("a", v3a), ("b", v3b), ("c", Array(7f, 8f, 9f)))
+      .toDF("id", "embedding"), path)
+    KwiFormat.appendTombstone(path, "b")
+    KwiFormat.append(Seq(("d", Array(1f, 1f, 1f))).toDF("id", "embedding"), path)
+    // a crash mid-append: the last record loses the tail of its payload
+    val p = Paths.get(path)
+    val bytes = Files.readAllBytes(p)
+    Files.write(p, bytes.take(bytes.length - 10))
+
+    val scanned = spark.read.format("kwi").load(path).collect()
+      .map(r => r.getString(0) -> r.getSeq[Float](1)).sortBy(_._1).toSeq
+    assert(scanned.map(_._1) === Seq("a", "c"))
+    val rdr = new KwiFormat.IndexedReader(path)
+    try {
+      val indexed = Seq("a", "b", "c", "d").flatMap(rdr.getAll).map(r => r._1 -> r._2.toSeq)
+      assert(indexed === scanned)
+      assert(rdr.liveCount === 2)
     } finally rdr.close()
   }
 
