@@ -1,13 +1,12 @@
 package graft.operators
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.expressions.VectorKernels
 import graft.functions.VectorOps
-
-import scala.collection.mutable
 import graft.operators.Cuts.CutOps
 
 /** HNSW — batch graph construction on Spark + a serve-time walk, per the
@@ -37,9 +36,9 @@ import graft.operators.Cuts.CutOps
   *     the driver over a NEIGHBOR-LIST SOURCE — either the collected
   *     adjacency map (the index HEAD: n×M edge ids — the small-corpus
   *     fast path) or, at scales where even the edge head outgrows one
-  *     driver, LAZY paged point reads of the level-partitioned
-  *     adjacency parquet (Hnsw.parquetAdjacency + CachingAdjacency:
-  *     O(walk-visited) list reads per query, LRU-bounded residency) —
+  *     driver, LAZY paged point reads of kwi neighbor pages
+  *     (`adjacencyPages` + `decodeNeighbors` behind CachingAdjacency:
+  *     O(walk-visited) page seeks per query, LRU-bounded residency) —
   *     plus LAZY point reads of only the vectors the walk visits, the
   *     reference's own offset-table seek design
   *     (vector_db/src/binary_index.rs:148-160). Driver-resident vector
@@ -131,17 +130,13 @@ class Hnsw(val m: Int = 16, val ef: Int = 32, val seed: Long = 42L,
 
   /** The top-`m` prune: each (level, src) keeps its `m` nearest
     * candidates by (1 − cosine, dst), with the distance rounded to 6. */
-  private def topM(pairs: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("level"), col("src"))
-      .orderBy(col("dist").asc, col("dst").asc)
-    pairs
-      .select(col("level"), col("src"), col("dst"),
-        (lit(1.0) - VectorOps.cosine(col("src_vec"), col("dst_vec"))).as("dist"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= m)
+  private def topM(pairs: DataFrame): DataFrame =
+    TopK.per(
+      pairs.select(col("level"), col("src"), col("dst"),
+        (lit(1.0) - VectorOps.cosine(col("src_vec"), col("dst_vec"))).as("dist")),
+      Seq(col("level"), col("src")), Seq(col("dist").asc, col("dst").asc), m)
       .select(col("src").as("node_id"), col("level"),
         col("dst").as("neighbor_id"), round(col("dist"), 6).as("dist"))
-  }
 
   /** O(batch) incremental append — the fourth index tier joins
     * LSH/IVF/PQ in taking batch maintenance without a corpus rebuild.
@@ -325,8 +320,8 @@ class Hnsw(val m: Int = 16, val ef: Int = 32, val seed: Long = 42L,
   }
 
   /** Collected-map overload — the small-corpus fast path (the map is
-    * the whole index head; at true 100 TB use the paged
-    * `Hnsw.parquetAdjacency` + `CachingAdjacency` source instead). */
+    * the whole index head; at true 100 TB use kwi neighbor pages behind
+    * `CachingAdjacency` instead). */
   def serveQuery(
       adjacency: Map[(Long, Int), Seq[Long]],
       fetch: Long => Option[Array[Float]],
@@ -351,9 +346,9 @@ class Hnsw(val m: Int = 16, val ef: Int = 32, val seed: Long = 42L,
     * at 100 TB it is a guaranteed driver OOM.
     *
     * TEST/TINY-CORPUS TIER ONLY — the declared serve path is the fully
-    * paged walk (`parquetAdjacency`/kwi neighbor pages wrapped in
-    * `CachingAdjacency`). The `maxNodes` guard makes that contract
-    * mechanical rather than conventional: a future declared query (or
+    * paged walk (kwi neighbor pages wrapped in `CachingAdjacency`). The
+    * `maxNodes` guard makes that contract mechanical rather than
+    * conventional: a future declared query (or
     * a user copying test code) that points this at a real corpus fails
     * fast with the pointer to the paged tier, instead of OOMing the
     * driver at scale. The node-count probe is one partial-agg row, not
@@ -368,7 +363,7 @@ class Hnsw(val m: Int = 16, val ef: Int = 32, val seed: Long = 42L,
       s"collectAdjacency: $n (node, level) groups exceed the tiny-corpus " +
         s"bound $maxNodes — this tier materializes the graph head on the " +
         "driver and is for tests only; serve real corpora with the paged " +
-        "walk (Hnsw.parquetAdjacency / kwi pages + CachingAdjacency)")
+        "walk (kwi neighbor pages + CachingAdjacency)")
     grouped.collect()
       .map(r => (r.getLong(0), r.getInt(1)) -> r.getSeq[Long](2))
       .toMap
@@ -428,11 +423,12 @@ object Hnsw {
 
   /** Caching NEIGHBOR-LIST source — the paged serve head. A head that
     * collected the whole adjacency (O(n·M) edge ids on the driver)
-    * would outgrow one driver at genuine 100 TB, so this
-    * wraps a neighbor-list point read (`parquetAdjacency`, or any
-    * (node, level) => neighbors lambda) with the same LRU bound and
-    * materialization counter as CachingFetch: driver-resident EDGES
-    * are O(maxEntries · M) and a walk pays O(visited) list reads. */
+    * would outgrow one driver at genuine 100 TB, so this wraps a
+    * neighbor-list point read (a kwi page seek through
+    * `decodeNeighbors`, or any (node, level) => neighbors lambda) with
+    * the same LRU bound and materialization counter as CachingFetch:
+    * driver-resident EDGES are O(maxEntries · M) and a walk pays
+    * O(visited) list reads. */
   final class CachingAdjacency(fetch: ((Long, Int)) => Seq[Long],
       maxEntries: Int = 1 << 16)
       extends (((Long, Int)) => Seq[Long]) {
@@ -452,20 +448,6 @@ object Hnsw {
     def fetched: Int = materialized
     /** Edge ids currently driver-resident. */
     def residentEdges: Long = cache.values.map(_.size.toLong).sum
-  }
-
-  /** Neighbor-list point read over the level-partitioned adjacency
-    * parquet: one pruned scan per miss (`level` is the partition
-    * column, `node_id` pushes to the row-group filter) — the graph
-    * analogue of the kwi IndexedReader vector fetch. Wrap in
-    * CachingAdjacency so a walk re-visiting a node pays once. Absent
-    * keys return Seq.empty (nodes with no edges at that level). */
-  def parquetAdjacency(adjacency: DataFrame): ((Long, Int)) => Seq[Long] = {
-    case (node, level) =>
-      adjacency
-        .filter(col("level") === level && col("node_id") === node)
-        .select(col("neighbor_id"))
-        .collect().map(_.getLong(0)).sorted.toSeq
   }
 
   /** Exact-range bound of the 2-float neighbor-id encoding: each id
@@ -511,8 +493,7 @@ object Hnsw {
     * point reads + [[decodeNeighbors]]: the serve head then pages the
     * GRAPH the same way it already pages the vectors (O(1) offset-table
     * seeks, no Spark job per miss), so driver-resident state is the
-    * CachingAdjacency LRU, never O(n·M) — the kwi twin of
-    * [[parquetAdjacency]] for single-node serving. */
+    * CachingAdjacency LRU, never O(n·M). */
   def adjacencyPages(adjacency: DataFrame): DataFrame =
     adjacency
       .groupBy(col("node_id"), col("level"))

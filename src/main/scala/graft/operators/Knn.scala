@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import scala.language.implicitConversions
 
@@ -110,9 +110,9 @@ object Knn {
 
   /** Multi-query KNN: top-k per query row — the shape a 100-TB
     * similarity-join takes. Queries are broadcast; each partition of
-    * `vectors` scores locally and the per-query top-k is taken with one
-    * shuffle of (numQueries × k) rows via window rank.
-    */
+    * `vectors` scores locally, and [[TopK.per]] keeps k rows per query
+    * on the map side, so the one shuffle carries (numQueries × k) rows
+    * per partition: (queryIdCol, idCol, score, rank). */
   def topKPerQuery(
       vectors: DataFrame,
       queries: DataFrame,
@@ -121,36 +121,12 @@ object Knn {
       idCol: String = "vec_id",
       vecCol: String = "embedding",
       queryIdCol: String = "query_id",
-      queryVecCol: String = "qe"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window
-      .partitionBy(col(queryIdCol))
-      .orderBy(col("score").desc, col(idCol).asc)
-    scoredPairs(vectors, queries, metric, idCol, vecCol, queryIdCol, queryVecCol)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .orderBy(col(queryIdCol).asc, col("rank").asc)
-  }
+      queryVecCol: String = "qe"): DataFrame =
+    TopK.per(scoredPairs(vectors, queries, metric, idCol, vecCol, queryIdCol, queryVecCol),
+      Seq(col(queryIdCol)), byScore(idCol), k)
 
-  /** Multi-query KNN via the bounded-heap typed aggregate
-    * (TopKAggregate): identical results to `topKPerQuery`, but the
-    * shuffle carries (queries × k) rows instead of (queries × n) —
-    * map-side partial top-k, the plan you want at 100 TB. */
-  def topKPerQueryAgg(
-      vectors: DataFrame,
-      queries: DataFrame,
-      k: Int,
-      metric: Metric = Cosine,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding",
-      queryIdCol: String = "query_id",
-      queryVecCol: String = "qe"): DataFrame = {
-    val spark = vectors.sparkSession
-    import spark.implicits._
-    val scored = scoredPairs(vectors, queries, metric, idCol, vecCol, queryIdCol, queryVecCol)
-      .toDF("qid", "id", "score").as[(Long, Long, Double)]
-    topKScoredAgg(scored, k, idCol, queryIdCol)
-  }
+  /** The ranking order of every KNN top-k: score DESC, id ASC. */
+  def byScore(idCol: String = "vec_id"): Seq[Column] = Seq(col("score").desc, col(idCol).asc)
 
   /** Every (query, vector) pair of the broadcast cross join with its
     * rounded score: (queryIdCol, idCol, score). */
@@ -162,28 +138,4 @@ object Knn {
         col(queryIdCol),
         col(idCol),
         stableScore(metric.score(col(vecCol), col(queryVecCol))).as("score"))
-
-  /** Per-query bounded-heap top-k over an ALREADY-SCORED
-    * (query_id, id, score) dataset — the shared tail of
-    * `topKPerQueryAgg` and of callers whose candidate generation is
-    * narrower than the full cross product (per-query cell pruning,
-    * shortlists). Same q×k-bounded shuffle, same (score DESC, id ASC)
-    * order contract on pre-rounded scores. */
-  def topKScoredAgg(scored: Dataset[(Long, Long, Double)], k: Int,
-      idCol: String = "vec_id", queryIdCol: String = "query_id"): DataFrame = {
-    val spark = scored.sparkSession
-    import spark.implicits._
-    scored
-      .groupByKey(_._1)
-      .agg(TopKAggregate.topK[(Long, Long, Double)](k)(r => (r._2, r._3))
-        .toColumn.name("top"))
-      .toDF("qid", "top")
-      .select(col("qid").as(queryIdCol),
-        posexplode(col("top")).as(Seq("pos", "entry")))
-      .select(col(queryIdCol),
-        col("entry._1").as(idCol),
-        col("entry._2").as("score"),
-        (col("pos") + 1).cast("long").as("rank"))
-      .orderBy(col(queryIdCol).asc, col("rank").asc)
-  }
 }

@@ -175,26 +175,22 @@ class Pq(val m: Int) {
   /** Multi-query ADC top-k in ONE job over ONE codes scan — the
     * many-query serving shape of the compressed tier. Each scanned row
     * fans out to every query via an explode of the literal id array
-    * (map-side, no join, no second scan), scores against that query's
-    * m×ksub table from a broadcast map literal, and the bounded-heap
-    * aggregate (TopKAggregate — the knn_multi_agg move) keeps k rows
-    * per query on the map side, so the shuffle carries q×k rows
-    * instead of q×n, and one FileScan serves all q queries (a union of
-    * per-query shortlist plans would scan q times).
+    * (map-side, no join, no second scan) and scores against that
+    * query's m×ksub table from a broadcast map literal; [[TopK.per]]
+    * keeps k rows per query on the map side, so the shuffle carries
+    * q×k rows per partition instead of q×n, and one FileScan serves all
+    * q queries (a union of per-query shortlist plans would scan q
+    * times).
     *
     * Ordering contract matches the single-query probe exactly:
-    * adc ASC, vec_id ASC (the heap holds (vec_id, −adc) so its
-    * score-DESC/id-ASC order replays row_number() OVER
-    * (ORDER BY adc ASC, vec_id ASC)). Output: (query_id, vec_id,
-    * adc_dist rounded to 6, rank 1..k). */
+    * adc ASC, vec_id ASC. Output: (query_id, vec_id, adc_dist rounded
+    * to 6, rank 1..k). */
   def adcTopKMulti(codes: DataFrame,
       tables: Seq[(Long, Array[Array[Double]])], k: Int): DataFrame = {
-    val spark = codes.sparkSession
-    import spark.implicits._
     require(tables.nonEmpty, "need at least one query table")
     // a duplicate id would collapse in the map literal while the
     // explode still fans its rows out twice — every scanned row would
-    // score doubly and the heap would hold duplicate (vec, adc) entries
+    // score doubly and the top-k would hold duplicate (vec, adc) entries
     require(tables.map(_._1).distinct.size == tables.size,
       "query ids must be distinct")
     val tmap = typedLit(tables.map { case (q, t) => q -> t.map(_.toSeq).toSeq }.toMap)
@@ -202,19 +198,10 @@ class Pq(val m: Int) {
     val adc = aggregate(transform(sequence(lit(0), lit(m - 1)),
       s => element_at(element_at(tbl, s + 1), element_at(col("codes"), s + 1) + 1)),
       lit(0.0), (acc, x) => acc + x)
-    codes
+    val scored = codes
       .select(col("vec_id"), explode(typedLit(tables.map(_._1))).as("query_id"),
         col("codes"))
-      .select(col("query_id"), col("vec_id"), (round(adc, 6) + 0.0).as("adc"))
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .agg(TopKAggregate.topK[(Long, Long, Double)](k)(r => (r._2, -r._3))
-        .toColumn.name("top"))
-      .toDF("query_id", "top")
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "entry")))
-      .select(col("query_id"),
-        col("entry._1").as("vec_id"),
-        (-col("entry._2") + 0.0).as("adc_dist"),
-        (col("pos") + 1).cast("long").as("rank"))
+      .select(col("query_id"), col("vec_id"), (round(adc, 6) + 0.0).as("adc_dist"))
+    TopK.per(scored, Seq(col("query_id")), Seq(col("adc_dist").asc, col("vec_id").asc), k)
   }
 }

@@ -11,8 +11,7 @@ import org.apache.spark.sql.expressions.Aggregator
   * input row d-fold (one row per vector POSITION) and pushes all n×d
   * rows through the (cluster, pos) exchange each round. This aggregator
   * keeps one d-length running sum per cluster on the map side, so the
-  * shuffle carries nlist×d values per round regardless of n — the same
-  * map-side-bounded shape as TopKAggregate.
+  * shuffle carries nlist×d values per round regardless of n.
   *
   * The buffer array is mutated in place and returned (the standard
   * typed-Aggregator pattern): each partial lives in exactly one buffer

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.PageRank
+import graft.operators.{PageRank, TopK}
 
 /** Graph-analytics queries over the co-purchase graph implied by the
   * relational tables: parts are nodes, an edge (a → b, weight w) means
@@ -364,13 +364,9 @@ object GraphQueries extends QueryRegistry {
     // bought"), read straight off the shared prepared graph: a
     // src-keyed window over the filtered edge frame, no rebuild
     "copurchase_top_partners" -> ((s, dir) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("src")).orderBy(col("w").desc, col("dst").asc)
-      sharedGraph(s, dir).ew
-        .filter(col("src") < 10)
-        .withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= 5)
-        .select(col("src").as("part_id"), col("rnk").cast("long").as("rnk"),
+      TopK.per(sharedGraph(s, dir).ew.filter(col("src") < 10), Seq(col("src")),
+        Seq(col("w").desc, col("dst").asc), 5, "rnk")
+        .select(col("src").as("part_id"), col("rnk"),
           col("dst").as("partner_id"), col("w").as("n_co_orders"))
         .orderBy(col("part_id"), col("rnk"))
     }),

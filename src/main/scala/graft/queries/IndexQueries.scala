@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{Metrics, VectorOps}
-import graft.operators.{Hnsw, Ivf, Knn, Lsh, Pq}
+import graft.operators.{Hnsw, Ivf, Knn, Lsh, Pq, TopK}
 import graft.operators.Cuts.CutOps
 
 /** Declared queries for the approximate indexes (LSH / HNSW) and the
@@ -63,29 +63,30 @@ object IndexQueries extends QueryRegistry {
     pqQueries(emb).orderBy(col("query_id")).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
 
+  /** Each query's ranked vec_ids as one `out` list: (query_id, out). */
+  private def rankedIds(ranked: DataFrame, out: String): DataFrame =
+    TopK.ids(ranked, Seq(col("query_id")), "vec_id", out = out)
+
   /** The ADC top-`n` of each of `qrows` over `codes`: ONE q-keyed job
-    * over ONE codes scan (a broadcast table + bounded-heap aggregate,
-    * not a union of per-query plans; ties by adc ASC, vec_id ASC). */
+    * over ONE codes scan (a broadcast table + per-query top-k, not a
+    * union of per-query plans; ties by adc ASC, vec_id ASC). */
   private def adcTopPerQuery(pq: Pq, books: Array[Array[Array[Double]]], codes: DataFrame,
       qrows: Array[(Long, Array[Float])], n: Int): DataFrame =
     pq.adcTopKMulti(codes, qrows.map { case (qid, qv) => (qid, pq.adcTable(qv, books)) }.toSeq, n)
 
   /** The ADC top-50 shortlist of each [[pqQueries]] row, exact-reranked
-    * by NegEuclidean to its top 10: (query_id, vec_id, score, rn). */
+    * by NegEuclidean to its top 10: (query_id, vec_id, score, rank). */
   private def pqReranked(emb: DataFrame, pq: Pq, books: Array[Array[Array[Double]]],
-      codes: DataFrame, qrows: Array[(Long, Array[Float])]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-    adcTopPerQuery(pq, books, codes, qrows, 50)
-      .select(col("query_id"), col("vec_id"))
-      .join(emb.select(col("vec_id"), col("embedding")), "vec_id")
-      .join(broadcast(pqQueries(emb)), "query_id")
-      .select(col("query_id"), col("vec_id"),
-        Knn.stableScore(Knn.NegEuclidean.score(col("embedding"), col("qe")))
-          .as("score"))
-      .withColumn("rn", row_number().over(w)).filter(col("rn") <= 10)
-  }
+      codes: DataFrame, qrows: Array[(Long, Array[Float])]): DataFrame =
+    TopK.per(
+      adcTopPerQuery(pq, books, codes, qrows, 50)
+        .select(col("query_id"), col("vec_id"))
+        .join(emb.select(col("vec_id"), col("embedding")), "vec_id")
+        .join(broadcast(pqQueries(emb)), "query_id")
+        .select(col("query_id"), col("vec_id"),
+          Knn.stableScore(Knn.NegEuclidean.score(col("embedding"), col("qe")))
+            .as("score")),
+      Seq(col("query_id")), Knn.byScore(), 10)
 
   // Durable build-once/query-many artifacts (the reference's
   // build→save→load→probe contract, vector_db/src/binary_index.rs:29-60):
@@ -555,22 +556,17 @@ object IndexQueries extends QueryRegistry {
     }),
 
     // precision@10 of the euclidean top-10 against the cosine top-20
-    // (Metrics.precisionAtK, utils.rs:81-96). Rankings come from the
-    // bounded-heap aggregate (shuffles q×k rows, not q×n — measured 8×
-    // faster than the window path at identical results); the window
-    // variant stays as the test-only cross-check (KnnSpec).
+    // (Metrics.precisionAtK, utils.rs:81-96). Rankings come from
+    // Knn.topKPerQuery (a per-query top-k kept on the map side, so the
+    // shuffle carries q×k rows per partition, not q×n).
     "precision_euclid_in_cos20" -> ((s, dir) => {
       val emb = embeddings(s, dir)
       val qs = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      def ids(metric: Knn.Metric, k: Int): DataFrame =
-        Knn.topKPerQueryAgg(emb, qs, k, metric)
-          .groupBy(col("query_id"))
-          .agg(transform(
-            array_sort(collect_list(struct(col("rank"), col("vec_id")))),
-            x => x.getField("vec_id")).as("ids"))
-      val cos = ids(Knn.Cosine, 20).withColumnRenamed("ids", "cos_ids")
-      val euc = ids(Knn.NegEuclidean, 10).withColumnRenamed("ids", "euc_ids")
+      def ids(metric: Knn.Metric, k: Int, out: String): DataFrame =
+        rankedIds(Knn.topKPerQuery(emb, qs, k, metric), out)
+      val cos = ids(Knn.Cosine, 20, "cos_ids")
+      val euc = ids(Knn.NegEuclidean, 10, "euc_ids")
       cos.join(euc, Seq("query_id"))
         .select(col("query_id"),
           round(Metrics.precisionAtK(col("cos_ids"), col("euc_ids"), 10), 6).as("precision"))
@@ -631,7 +627,7 @@ object IndexQueries extends QueryRegistry {
       }.toDF("query_id", "vec_id")
       val qs = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      val exact = Knn.topKPerQueryAgg(emb, qs, 10, Knn.Cosine)
+      val exact = Knn.topKPerQuery(emb, qs, 10, Knn.Cosine)
         .select(col("query_id"), col("vec_id"))
       val exactN = exact.groupBy(col("query_id"))
         .agg(count(lit(1)).cast("long").as("n_exact"))
@@ -730,8 +726,8 @@ object IndexQueries extends QueryRegistry {
     // SQL-replayable), the single scan prunes to the UNION of probed
     // partitions, a broadcast join hands each row only to the queries
     // whose probe set contains its cell (array_contains — no cross
-    // product with non-probing queries), and the bounded-heap
-    // aggregate keeps 10 per query so the shuffle carries q×k rows.
+    // product with non-probing queries), and the per-query top-k keeps
+    // 10 per query on the map side so the shuffle carries q×k rows.
     "ivf_multi_knn" -> ((s, dir) => {
       import s.implicits._
       val emb = embeddings(s, dir)
@@ -746,11 +742,11 @@ object IndexQueries extends QueryRegistry {
       val allCells = qrows.flatMap(r => probeOf(r._2)).distinct.toSeq
       val scored = assigned.filter(col("cluster").isin(allCells: _*))
         .join(broadcast(qdf), array_contains(col("cells"), col("cluster")))
-        .select(col("query_id").as("qid"), col("vec_id").as("id"),
+        .select(col("query_id"), col("vec_id"),
           Knn.stableScore(graft.functions.VectorOps
             .cosine(col("embedding"), col("qe"))).as("score"))
-        .as[(Long, Long, Double)]
-      Knn.topKScoredAgg(scored, 10)
+      TopK.per(scored, Seq(col("query_id")), Knn.byScore(), 10)
+        .orderBy(col("query_id"), col("rank"))
     }),
 
     // PRUNED single-bucket LSH probe, values hash-verified via
@@ -901,14 +897,9 @@ object IndexQueries extends QueryRegistry {
     "pq_rerank_recall" -> ((s, dir) => {
       val emb = embeddings(s, dir)
       val (pq, books, codes) = pqStore(s, dir)
-      val pqIds = pqReranked(emb, pq, books, codes, pqQueryRows(emb))
-        .groupBy(col("query_id"))
-        .agg(transform(array_sort(collect_list(struct(col("rn"), col("vec_id")))),
-          x => x.getField("vec_id")).as("pq_ids"))
-      val exactIds = Knn.topKPerQueryAgg(emb, pqQueries(emb), 10, Knn.NegEuclidean)
-        .groupBy(col("query_id"))
-        .agg(transform(array_sort(collect_list(struct(col("rank"), col("vec_id")))),
-          x => x.getField("vec_id")).as("exact_ids"))
+      val pqIds = rankedIds(pqReranked(emb, pq, books, codes, pqQueryRows(emb)), "pq_ids")
+      val exactIds = rankedIds(
+        Knn.topKPerQuery(emb, pqQueries(emb), 10, Knn.NegEuclidean), "exact_ids")
       pqIds.join(exactIds, Seq("query_id"))
         .select(col("query_id"),
           round(Metrics.recallAtK(col("exact_ids"), col("pq_ids"), 10), 6).as("recall"))
@@ -918,7 +909,7 @@ object IndexQueries extends QueryRegistry {
     // Trained-PQ recall audit (sketch-oracle pattern, the
     // events_value_sketches precedent): seed books and one-round-
     // trained books each produce an ADC top-50 shortlist (one scan,
-    // bounded-heap) that exact-reranks to top-10 against the true
+    // per-query top-k) that exact-reranks to top-10 against the true
     // NegEuclidean top-10. Hit counts are INTEGERS (no float-average
     // replay risk); the seed side is fully DuckDB-recomputed, the
     // trained side (deterministic fused Lloyd, not SQL-expressible)
@@ -928,7 +919,7 @@ object IndexQueries extends QueryRegistry {
       val emb = embeddings(s, dir)
       val (pq, seedBooks, trainedBooks) = pqTrainedBooks(s, dir)
       val qrows = pqQueryRows(emb)
-      val exact = Knn.topKPerQueryAgg(emb, pqQueries(emb), 10, Knn.NegEuclidean)
+      val exact = Knn.topKPerQuery(emb, pqQueries(emb), 10, Knn.NegEuclidean)
         .select(col("query_id"), col("vec_id"))
       val (seedCodes, trainedCodes) = pqTrainedCodes(s, dir)
       def hits(books: Array[Array[Array[Double]]], codes: DataFrame): DataFrame =
@@ -952,8 +943,8 @@ object IndexQueries extends QueryRegistry {
     // top-10 through the batched one-scan path (adcTopKMulti) — the
     // many-query serving shape of the compressed tier on the oracle
     // surface, not just single-query. Plan: one FileScan of the codes
-    // parquet, explode fan-out, bounded-heap aggregate (pinned in
-    // PlanSpec).
+    // parquet, explode fan-out, a partial per-query top-k below the
+    // query shuffle (pinned in PlanSpec).
     "pq_multi_knn" -> ((s, dir) => {
       val emb = embeddings(s, dir)
       val (pq, books, codes) = pqStore(s, dir)
@@ -1070,14 +1061,10 @@ object IndexQueries extends QueryRegistry {
       val qdb = emb.repartition(s.sparkContext.defaultParallelism)
         .select(col("vec_id"),
           graft.functions.VectorOps.int8Quantize(col("embedding")).as("embedding"))
-      def ids(db: DataFrame): DataFrame =
-        Knn.topKPerQueryAgg(db, qs, 10, Knn.Cosine)
-          .groupBy(col("query_id"))
-          .agg(transform(
-            array_sort(collect_list(struct(col("rank"), col("vec_id")))),
-            x => x.getField("vec_id")).as("ids"))
-      val exact = ids(emb).withColumnRenamed("ids", "exact_ids")
-      val quant = ids(qdb).withColumnRenamed("ids", "quant_ids")
+      def ids(db: DataFrame, out: String): DataFrame =
+        rankedIds(Knn.topKPerQuery(db, qs, 10, Knn.Cosine), out)
+      val exact = ids(emb, "exact_ids")
+      val quant = ids(qdb, "quant_ids")
       exact.join(quant, Seq("query_id"))
         .select(col("query_id"),
           round(Metrics.recallAtK(col("exact_ids"), col("quant_ids"), 10), 6)
@@ -1087,19 +1074,15 @@ object IndexQueries extends QueryRegistry {
 
     // recall@10 between the euclidean and cosine rankings, per query —
     // Metrics.recallAtK (src/utils.rs:64-79) over SQL-derivable lists;
-    // rankings via the bounded-heap aggregate (q×k shuffle).
+    // rankings via Knn.topKPerQuery (q×k shuffle).
     "recall_euclid_vs_cosine" -> ((s, dir) => {
       val emb = embeddings(s, dir)
       val qs = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      def ids(metric: Knn.Metric): DataFrame =
-        Knn.topKPerQueryAgg(emb, qs, 10, metric)
-          .groupBy(col("query_id"))
-          .agg(transform(
-            array_sort(collect_list(struct(col("rank"), col("vec_id")))),
-            x => x.getField("vec_id")).as("ids"))
-      val cos = ids(Knn.Cosine).withColumnRenamed("ids", "cos_ids")
-      val euc = ids(Knn.NegEuclidean).withColumnRenamed("ids", "euc_ids")
+      def ids(metric: Knn.Metric, out: String): DataFrame =
+        rankedIds(Knn.topKPerQuery(emb, qs, 10, metric), out)
+      val cos = ids(Knn.Cosine, "cos_ids")
+      val euc = ids(Knn.NegEuclidean, "euc_ids")
       cos.join(euc, Seq("query_id"))
         .select(col("query_id"),
           round(Metrics.recallAtK(col("cos_ids"), col("euc_ids"), 10), 6).as("recall"))
@@ -1113,12 +1096,11 @@ object IndexQueries extends QueryRegistry {
     // exact-float rerank of the top-50 shortlist, recall@10 vs the
     // float ranking. Scale shape: packing is a static 64-term codegen
     // expression on the scan (map-only); candidate selection is the
-    // same q×k bounded-heap aggregate as every other knn (shuffle
-    // carries queries×50 rows, never the corpus); the rerank touches
+    // same per-query top-k as every other knn (shuffle carries
+    // queries×50 rows per partition, never the corpus); the rerank touches
     // only the broadcast 250-row shortlist — at 100 TB the packed
     // words are the only full-width column the probe ever reads.
     "bq_hamming_recall" -> ((s, dir) => {
-      import s.implicits._
       val emb = embeddings(s, dir)
       val qs = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
@@ -1135,26 +1117,19 @@ object IndexQueries extends QueryRegistry {
         packWord(col("qe"), 0).as("q_lo"),
         packWord(col("qe"), 32).as("q_hi"))
       val hammScored = db.crossJoin(broadcast(qb))
-        .select(col("query_id").as("qid"), col("vec_id").as("id"),
-          -(bit_count(col("b_lo").bitwiseXOR(col("q_lo"))) +
-            bit_count(col("b_hi").bitwiseXOR(col("q_hi")))).cast("double")
+        .select(col("query_id"), col("vec_id"),
+          (-(bit_count(col("b_lo").bitwiseXOR(col("q_lo"))) +
+            bit_count(col("b_hi").bitwiseXOR(col("q_hi")))).cast("double"))
             .as("score"))
-        .as[(Long, Long, Double)]
-      val cand = Knn.topKScoredAgg(hammScored, 50)
+      val cand = TopK.per(hammScored, Seq(col("query_id")), Knn.byScore(), 50)
         .select(col("query_id"), col("vec_id"))
       val rerScored = emb.join(broadcast(cand), Seq("vec_id"))
         .join(broadcast(qs), Seq("query_id"))
-        .select(col("query_id").as("qid"), col("vec_id").as("id"),
+        .select(col("query_id"), col("vec_id"),
           (round(VectorOps.cosine(col("embedding"), col("qe")), 6) + 0.0)
             .as("score"))
-        .as[(Long, Long, Double)]
-      def ids(ranked: DataFrame, out: String): DataFrame =
-        ranked.groupBy(col("query_id"))
-          .agg(transform(
-            array_sort(collect_list(struct(col("rank"), col("vec_id")))),
-            x => x.getField("vec_id")).as(out))
-      val bq = ids(Knn.topKScoredAgg(rerScored, 10), "bq_ids")
-      val exact = ids(Knn.topKPerQueryAgg(emb, qs, 10, Knn.Cosine), "exact_ids")
+      val bq = rankedIds(TopK.per(rerScored, Seq(col("query_id")), Knn.byScore(), 10), "bq_ids")
+      val exact = rankedIds(Knn.topKPerQuery(emb, qs, 10, Knn.Cosine), "exact_ids")
       exact.join(bq, Seq("query_id"))
         .select(col("query_id"),
           round(Metrics.recallAtK(col("exact_ids"), col("bq_ids"), 10), 6)

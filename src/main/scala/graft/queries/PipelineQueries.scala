@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextOps
 import graft.operators.Cuts.CutOps
+import graft.operators.TopK
 
 /** Corpus-level training-data pipeline operators: TF-IDF term scoring,
   * deterministic stratified sampling, and per-label embedding centroid
@@ -94,16 +95,12 @@ object PipelineQueries extends QueryRegistry {
         .agg(count(lit(1)).as("tf"))
       val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
       val n = docs.agg(count(lit(1)).as("n_docs"))
-      val w = Window.partitionBy(col("doc_id"))
-        .orderBy(col("score").desc, col("term").asc)
-      tf.join(dfreq, "term").crossJoin(n)
+      val scored = tf.join(dfreq, "term").crossJoin(n)
         .filter(col("doc_id") < 10)
         .withColumn("score",
           round(col("tf") * (col("n_docs").cast("double") / col("df")), 6))
-        .withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= 3)
-        .select(col("doc_id"), col("rnk").cast("long").as("rnk"),
-          col("term"), col("score"))
+      TopK.per(scored, Seq(col("doc_id")), Seq(col("score").desc, col("term").asc), 3, "rnk")
+        .select(col("doc_id"), col("rnk"), col("term"), col("score"))
         .orderBy(col("doc_id"), col("rnk"))
     }),
 

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.TopK
 
 /** TPC-H-shaped relational queries over the star schema — the operators
   * a 100 TB training-data pipeline leans on: filtered scans with
@@ -162,13 +163,9 @@ object RelationalQueries extends QueryRegistry {
 
     // ranking window: top-3 customers by account balance per segment
     "segment_top_customers" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("c_mktsegment"))
-        .orderBy(col("c_acctbal").desc, col("c_custkey").asc)
-      customer(s, dir)
-        .withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= 3)
-        .select(col("c_mktsegment"), col("rnk").cast("long").as("rnk"),
+      TopK.per(customer(s, dir), Seq(col("c_mktsegment")),
+        Seq(col("c_acctbal").desc, col("c_custkey").asc), 3, "rnk")
+        .select(col("c_mktsegment"), col("rnk"),
           col("c_custkey"),
           col("c_acctbal").cast(Dec).cast("double").as("acctbal"))
         .orderBy(col("c_mktsegment"), col("rnk"))

@@ -1,10 +1,10 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{TextOps, VectorOps}
 import graft.operators.Cuts.CutOps
+import graft.operators.TopK
 
 /** Text retrieval over the documents corpus — the query-side operators
   * a RAG / training-data pipeline runs next to its dedup and ANN
@@ -50,6 +50,9 @@ object RetrievalQueries extends QueryRegistry {
   private def bm25Scores(s: SparkSession, dir: String): DataFrame =
     SharedBuilds.of(s, dir, "bm25-scores")(bm25(documents(s, dir)
       .select(col("doc_id"), TextOps.tokens(col("text")).as("toks")), "toks", Seq("doc_id")))
+
+  /** The BM25 ranking order: score DESC, doc_id ASC. */
+  private val byBm25 = Seq(col("bm25").desc, col("doc_id").asc)
 
   /** idf literals the LAST bm25 scoring of each corpus computed, keyed
     * by its token column, captured so the oracle SQL can interpolate
@@ -194,7 +197,7 @@ object RetrievalQueries extends QueryRegistry {
     // map-only scan + TakeOrderedAndProject
     "bm25_topk" -> ((s, dir) =>
       bm25Scores(s, dir)
-        .orderBy(col("bm25").desc, col("doc_id").asc)
+        .orderBy(byBm25: _*)
         .limit(15)),
 
     // pseudo-relevance-feedback expansion (Rocchio/RM1 family — the
@@ -214,7 +217,7 @@ object RetrievalQueries extends QueryRegistry {
       val base = bm25Scores(s, dir)
       val docs = documents(s, dir)
         .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
-      val fb = base.orderBy(col("bm25").desc, col("doc_id").asc).limit(3)
+      val fb = base.orderBy(byBm25: _*).limit(3)
         .select(col("doc_id"))
       val ew = docs.join(fb, "doc_id")
         .select(explode(col("toks")).as("tok"))
@@ -256,25 +259,18 @@ object RetrievalQueries extends QueryRegistry {
     // full outer join of two tiny frames — corpus touched twice,
     // shuffled never.
     "hybrid_rrf_fusion" -> ((s, dir) => {
-      // top-k FIRST (distributed TakeOrderedAndProject over the
-      // corpus), ranks assigned on the 20-row head after — a global
-      // row_number window over the full corpus would single-partition
-      // the scan, the exact anti-pattern this layering avoids
-      val lex = bm25Scores(s, dir)
-        .orderBy(col("bm25").desc, col("doc_id").asc).limit(20)
-        .withColumn("brank",
-          row_number().over(Window.orderBy(col("bm25").desc, col("doc_id").asc)))
+      // keyless top-k heads: Spark plans each as a distributed
+      // TakeOrderedAndProject over the corpus and ranks the 20-row head
+      val lex = TopK.per(bm25Scores(s, dir), Nil, byBm25, 20, "brank")
         .select(col("doc_id"), col("brank"))
       val emb = embeddings(s, dir)
       val q = emb.filter(col("vec_id") === 0)
         .select(col("embedding")).collect()(0).getSeq[Float](0)
-      val vec = emb
-        .select(col("vec_id"),
+      val vec = TopK.per(
+        emb.select(col("vec_id"),
           (round(VectorOps.cosine(col("embedding"), typedLit(q)), 6) + 0.0)
-            .as("cos"))
-        .orderBy(col("cos").desc, col("vec_id").asc).limit(20)
-        .withColumn("crank",
-          row_number().over(Window.orderBy(col("cos").desc, col("vec_id").asc)))
+            .as("cos")),
+        Nil, Seq(col("cos").desc, col("vec_id").asc), 20, "crank")
         .select(col("vec_id").as("doc_id"), col("crank"))
       lex.join(vec, Seq("doc_id"), "full_outer")
         .select(col("doc_id"),
@@ -282,8 +278,7 @@ object RetrievalQueries extends QueryRegistry {
             coalesce(lit(1.0) / (lit(60) + col("brank")), lit(0.0)) +
               coalesce(lit(1.0) / (lit(60) + col("crank")), lit(0.0)), 6) + 0.0)
             .as("rrf"),
-          col("brank").cast("long").as("bm25_rank"),
-          col("crank").cast("long").as("cos_rank"))
+          col("brank").as("bm25_rank"), col("crank").as("cos_rank"))
         .orderBy(col("rrf").desc, col("doc_id").asc)
         .limit(10)
     }),
@@ -298,10 +293,7 @@ object RetrievalQueries extends QueryRegistry {
     // distributed top-k heads + a 20-row anti-join — corpus scanned
     // twice, shuffled never
     "hard_negative_mining" -> ((s, dir) => {
-      val lex = bm25Scores(s, dir)
-        .orderBy(col("bm25").desc, col("doc_id").asc).limit(20)
-        .withColumn("brank",
-          row_number().over(Window.orderBy(col("bm25").desc, col("doc_id").asc)))
+      val lex = TopK.per(bm25Scores(s, dir), Nil, byBm25, 20, "brank")
       val emb = embeddings(s, dir)
       val q = emb.filter(col("vec_id") === 0)
         .select(col("embedding")).collect()(0).getSeq[Float](0)
@@ -312,8 +304,7 @@ object RetrievalQueries extends QueryRegistry {
         .orderBy(col("cos").desc, col("doc_id").asc).limit(20)
         .select(col("doc_id"))
       lex.join(sem, Seq("doc_id"), "left_anti")
-        .select(col("doc_id"), col("brank").cast("long").as("bm25_rank"),
-          col("bm25"))
+        .select(col("doc_id"), col("brank").as("bm25_rank"), col("bm25"))
         .orderBy(col("bm25_rank"))
     }),
 
@@ -331,10 +322,7 @@ object RetrievalQueries extends QueryRegistry {
     // distributed top-k heads (TakeOrderedAndProject over each scan),
     // then all metric arithmetic on ≤20-row frames.
     "retrieval_rank_metrics" -> ((s, dir) => {
-      val run = bm25Scores(s, dir)
-        .orderBy(col("bm25").desc, col("doc_id").asc).limit(20)
-        .withColumn("rank",
-          row_number().over(Window.orderBy(col("bm25").desc, col("doc_id").asc)))
+      val run = TopK.per(bm25Scores(s, dir), Nil, byBm25, 20)
         .select(col("doc_id"), col("rank"))
       val emb = embeddings(s, dir)
       val q = emb.filter(col("vec_id") === 0)

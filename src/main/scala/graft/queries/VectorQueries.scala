@@ -93,25 +93,19 @@ object VectorQueries extends QueryRegistry {
         .orderBy(col("vec_id"))
         .limit(25)),
 
-    // multi-query KNN via the bounded-heap typed aggregate: identical
-    // results to knn_multi (shared oracle), but the shuffle carries
-    // queries×k rows instead of queries×n
-    "knn_multi_agg" -> ((s, dir) => {
-      val qs = embeddings(s, dir).filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      Knn.topKPerQueryAgg(embeddings(s, dir), qs, 3)
-        .select(col("query_id"), col("vec_id"), col("score"), col("rank"))
-    }),
-
-    // multi-query KNN: the similarity-join shape (top-3 for vec_id<5)
-    "knn_multi" -> ((s, dir) => {
-      val qs = embeddings(s, dir).filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      Knn.topKPerQuery(embeddings(s, dir), qs, 3)
-        .select(col("query_id"), col("vec_id"), col("score"),
-          col("rank").cast("long").as("rank"))
-    }),
+    // one multi-query top-k under both declared names, as their oracle
+    // is one
+    "knn_multi_agg" -> knnMulti,
+    "knn_multi" -> knnMulti,
   )
+
+  /** Multi-query KNN: the similarity-join shape (top-3 for vec_id < 5). */
+  private val knnMulti: (SparkSession, String) => DataFrame = (s, dir) => {
+    val qs = embeddings(s, dir).filter(col("vec_id") < 5)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
+    Knn.topKPerQuery(embeddings(s, dir), qs, 3)
+      .orderBy(col("query_id"), col("rank"))
+  }
 
   private[queries] def knnOracle(scoreExpr: String, k: Int): String =
     s"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)

@@ -5,9 +5,9 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.Comparator
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.operators.TopK
 
 /** Collection catalog — the Spark-native replacement for the reference's
   * `CollectionManager` (kowari vector_db/src/collection_manager.rs).
@@ -173,10 +173,8 @@ class CollectionManager(spark: SparkSession, basePath: String) {
     // insertion-ordered allVectors contract (sqlite_storage.rs:122-138).
     val base = scan(name)
       .agg(coalesce(max(col("ingest_seq")), lit(-1L))).collect()(0).getLong(0)
-    val lastCopy = Window.partitionBy("id").orderBy(col("ingest_seq").desc)
-    val rebased = incoming
-      .withColumn("__copy", row_number().over(lastCopy))
-      .filter(col("__copy") === 1).drop("__copy")
+    val rebased = TopK.per(incoming, Seq(col("id")), Seq(col("ingest_seq").desc), 1, "__copy")
+      .drop("__copy")
       .withColumn("ingest_seq", col("ingest_seq") + lit(base + 1))
     val survivors = scan(name)
       .join(incoming.select("id"), Seq("id"), "left_anti")

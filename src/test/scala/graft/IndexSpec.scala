@@ -210,33 +210,6 @@ class IndexSpec extends SparkSpec {
     } finally reader.close()
   }
 
-  test("hnsw: paged serve head — adjacency reads are O(walk-visited), not O(n·M)") {
-    // the round-6 paging of the serve HEAD: neighbor lists arrive
-    // through lazy partition-pruned point reads of the adjacency
-    // parquet (CachingAdjacency over parquetAdjacency), so the driver
-    // never holds the n×M edge set — the graph analogue of the O(ef)
-    // vector-fetch bound below
-    val small = emb.filter($"vec_id" < 120).cache()
-    val hnsw = new Hnsw(m = 8, ef = 12, seed = 42L)
-    val dir = java.nio.file.Files.createTempDirectory("hnswadj")
-    hnsw.buildAdjacency(small)
-      .write.mode("overwrite").partitionBy("level").parquet(dir.resolve("adj").toString)
-    val onDisk = spark.read.parquet(dir.resolve("adj").toString)
-    val totalLists = onDisk.select($"node_id", $"level").distinct().count()
-    val entry = hnsw.entryPoint(onDisk)
-    val adjFetch = new Hnsw.CachingAdjacency(Hnsw.parquetAdjacency(onDisk))
-    val vecs = vecMap(small)
-    val top = hnsw.serveQuery(adjFetch, vecs.get _, entry, vecs(7L), 1)
-    assert(top.head._1 === 7L)
-    // neighbor-list reads = level-0 beam (≤ ef) + the greedy descent
-    // path — a function of ef and the level count, NOT of corpus size
-    assert(adjFetch.fetched <= 12 + 48, s"fetched ${adjFetch.fetched} lists")
-    assert(adjFetch.fetched < totalLists / 2,
-      s"fetched ${adjFetch.fetched} of $totalLists lists")
-    // resident edges bounded by fetched lists × M
-    assert(adjFetch.residentEdges <= adjFetch.fetched.toLong * 8)
-  }
-
   test("hnsw: kwi-paged adjacency — offset-table seeks serve the graph, ids round-trip exactly") {
     // the round-7 declared serve head: neighbor pages live in a kwi
     // offset-table file (2-float exact id encoding) and arrive through
@@ -258,8 +231,10 @@ class IndexSpec extends SparkSpec {
         assert(Hnsw.decodeNeighbors(page.get._2) === ns, s"page $node:$level")
         assert(page.get._2.toSeq === Hnsw.encodeNeighbors(ns).toSeq)
       }
-      // serve through the paged head end-to-end, with the same
-      // O(walk-visited) bound as the parquet-paged variant
+      // serve through the paged head end-to-end: neighbor-list reads
+      // are the level-0 beam (≤ ef) plus the greedy descent path — a
+      // function of ef and the level count, NOT of corpus size
+      val totalLists = want.size
       val entry = hnsw.entryPoint(adjacency)
       val adjFetch = new Hnsw.CachingAdjacency({ case (node, level) =>
         pages.get(s"$node:$level")
@@ -269,6 +244,10 @@ class IndexSpec extends SparkSpec {
       val top = hnsw.serveQuery(adjFetch, vecs.get _, entry, vecs(7L), 1)
       assert(top.head._1 === 7L)
       assert(adjFetch.fetched <= 12 + 48, s"fetched ${adjFetch.fetched} lists")
+      assert(adjFetch.fetched < totalLists / 2,
+        s"fetched ${adjFetch.fetched} of $totalLists lists")
+      // resident edges bounded by fetched lists × M
+      assert(adjFetch.residentEdges <= adjFetch.fetched.toLong * 8)
     } finally pages.close()
   }
 

@@ -60,8 +60,22 @@ class KnnSpec extends SparkSpec {
       .select($"vec_id".as("query_id"), $"embedding".as("qe"))
     val rows = Knn.topKPerQuery(emb, qs, 4).collect()
     assert(rows.length === 12)
-    val rank1 = rows.filter(_.getAs[Int]("rank") == 1)
+    val rank1 = rows.filter(_.getAs[Long]("rank") == 1L)
     assert(rank1.forall(r => r.getAs[Long]("query_id") == r.getAs[Long]("vec_id")))
+  }
+
+  test("TopK.per: ties by id ASC, short groups, NaN first, same under any partitioning") {
+    // q1 has a three-way tie at 0.9 and a NaN score (Spark orders NaN
+    // above every number, so it ranks first under DESC); q2 has fewer
+    // rows than k
+    val rows = Seq((1L, 5L, 0.9), (1L, 3L, 0.9), (1L, 4L, Double.NaN), (1L, 2L, 0.5),
+      (1L, 1L, 0.9), (2L, 7L, 0.1)).toDF("query_id", "vec_id", "score")
+    def ranked(parts: Int) =
+      graft.operators.TopK.per(rows.repartition(parts), Seq($"query_id"), Knn.byScore(), 3)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getAs[Long]("rank"))).sorted.toSeq
+    val want = Seq((1L, 1L, 2L), (1L, 3L, 3L), (1L, 4L, 1L), (2L, 7L, 1L))
+    assert(ranked(1) === want)
+    assert(ranked(7) === want)
   }
 
   test("banded embedding near-dup vs the full crossJoin baseline (test-only, bounded corpus)") {

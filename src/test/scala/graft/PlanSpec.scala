@@ -1,5 +1,10 @@
 package graft
 
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.{Final, Partial, WindowExec, WindowGroupLimitExec,
+  WindowGroupLimitMode}
+
 /** Physical-plan contracts: the properties that make these operators
   * scale — top-k without a global sort, filter pushdown to the parquet
   * scan, broadcast joins for dims, column pruning, map-side partial
@@ -145,11 +150,54 @@ class PlanSpec extends SparkSpec {
     assert(!pm.contains("aggregate(zip_with"), pm)
   }
 
+  /** The plan AQE starts from, exchanges included (the adaptive node
+    * hides its tree from collect). */
+  private def initialPlan(df: org.apache.spark.sql.DataFrame): SparkPlan =
+    df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case o => o
+    }
+
+  /** A group limit in `mode` under `p` with no shuffle between. */
+  private def limitBelow(p: SparkPlan, mode: WindowGroupLimitMode): Boolean = p match {
+    case _: ShuffleExchangeExec => false
+    case w: WindowGroupLimitExec if w.mode == mode => true
+    case o => o.children.exists(limitBelow(_, mode))
+  }
+
+  /** Some shuffle's input is cut by a partial group limit: each map
+    * partition sends at most k rows per key. */
+  private def partialTopKBeforeShuffle(p: SparkPlan): Boolean =
+    p.collect { case e: ShuffleExchangeExec => e }.exists(e => limitBelow(e.child, Partial))
+
   test("multi-query knn via typed aggregate: partial top-k before the shuffle, no window") {
-    val p = plan("knn_multi_agg")
-    assert(p.contains("partial_topk") || p.contains("partial_TopK")
-      || "partial".r.findFirstIn(p).isDefined) // map-side partial aggregation present
-    assert(!p.contains("RunningWindowFunction") && !p.contains("Window "))
+    // knn_multi_agg: the partial top-k is the map-side group limit, and
+    // no window ranks a whole query group — each window sits on the
+    // final group limit, so it sees at most k rows per query
+    spark.catalog.clearCache()
+    val p = initialPlan(SparkEntry.queries("knn_multi_agg")(spark, sfDir))
+    assert(partialTopKBeforeShuffle(p), p.toString)
+    val windows = p.collect { case w: WindowExec => w }
+    assert(windows.nonEmpty && windows.forall(w => limitBelow(w.child, Final)), p.toString)
+  }
+
+  test("multi-query top-k: a partial WindowGroupLimit below the query shuffle, no typed aggregate") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec, TypedAggregateExpression}
+    def check(name: String, df: DataFrame): Unit = {
+      val p = initialPlan(df)
+      assert(partialTopKBeforeShuffle(p), s"$name:\n$p")
+      val typed = p.collect { case a: ObjectHashAggregateExec => a.aggregateExpressions }
+        .flatten.filter(_.aggregateFunction.isInstanceOf[TypedAggregateExpression])
+      assert(typed.isEmpty, s"$name:\n$p")
+    }
+    for (q <- Seq("knn_multi", "knn_multi_agg", "pq_multi_knn", "ivf_multi_knn",
+        "bq_hamming_recall")) {
+      spark.catalog.clearCache()
+      check(q, SparkEntry.queries(q)(spark, sfDir))
+    }
+    // the HNSW build's top-M prune (the serving benchmark's setup path)
+    check("hnswBuildPlan", graft.queries.IndexQueries.hnswBuildPlan(spark, sfDir))
   }
 
   test("lineitem scans never read unused money columns for count queries") {
@@ -315,9 +363,10 @@ class PlanSpec extends SparkSpec {
   }
 
   test("pq multi-query paths scan the codes parquet exactly once (no per-query union)") {
-    // the round-5 formulation unioned one ADC shortlist plan per query
-    // (q FileScans of the codes table); the batched adcTopKMulti path
-    // must keep exactly one codes scan however many queries ride on it
+    // a union of per-query ADC shortlist plans would scan the codes
+    // table q times; the batched adcTopKMulti path (explode fan-out,
+    // then one per-query top-k) must keep exactly one codes scan however
+    // many queries ride on it
     for (q <- Seq("pq_multi_knn", "pq_rerank_recall")) {
       spark.catalog.clearCache()
       // sparkPlan, not executedPlan: AQE's AdaptiveSparkPlanExec hides

@@ -14,7 +14,7 @@ class ReplayCopyLintSpec extends AnyFunSuite {
 
   /** The repeat count `src/main` may not exceed; lower it when a change
     * removes repeats. */
-  private val MaxRepeatedLines = 14
+  private val MaxRepeatedLines = 6
 
   private val Anchors = Seq(
     // the MinHash signature of TextQueries.F.sigBndCtes
