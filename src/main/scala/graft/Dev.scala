@@ -1,10 +1,14 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.unsafe.types.UTF8String
+import graft.expressions.{TextKernels, VectorKernels}
+import graft.operators.Dedup
 
 /** Dev command line over declared queries (the benchmark and
-  * correctness surfaces are Bench and Verify). Each subcommand runs in
-  * one [[Sessions.local]] session:
+  * correctness surfaces are Bench and Verify). Each subcommand but
+  * `kernels` runs in one [[Sessions.local]] session:
   *
   *   time <sfDir> <name>[,<name>...] [passes] [jsonOut]
   *     per query one cold run, then `passes` (default 3) warm runs, all
@@ -17,6 +21,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     the physical plan after execution: AQE settles join strategies
   *     and exchange reuse only while the query runs, so a claim about
   *     either needs this plan, not the one `explain` prints
+  *   kernels
+  *     ns per element of the eight native kernels on one thread, without
+  *     a session: see [[kernels]]
   *
   * Usage: runMain graft.Dev <subcommand> <args...> */
 object Dev {
@@ -24,9 +31,11 @@ object Dev {
   private val usage =
     "usage: graft.Dev time <sfDir> <name>[,<name>...] [passes] [jsonOut]\n" +
       "       graft.Dev explain <sfDir> <name>[,<name>...]\n" +
-      "       graft.Dev explain-executed <sfDir> <name>[,<name>...]"
+      "       graft.Dev explain-executed <sfDir> <name>[,<name>...]\n" +
+      "       graft.Dev kernels"
 
   def main(args: Array[String]): Unit = {
+    if (args.sameElements(Seq("kernels"))) return kernels()
     val cmd = try command(args) catch {
       case e: IllegalArgumentException =>
         System.err.println(e.getMessage)
@@ -36,7 +45,7 @@ object Dev {
     try cmd(spark) finally spark.stop()
   }
 
-  /** Parse `args` into the subcommand to run on a session; malformed
+  /** Parse `args` into a subcommand that runs on a session; malformed
     * arguments throw `IllegalArgumentException` carrying the usage. */
   def command(args: Array[String]): SparkSession => Unit = {
     def arg(i: Int): Option[String] = args.lift(i)
@@ -97,4 +106,52 @@ object Dev {
       df.collect() // run THIS QueryExecution so AQE finalizes its stages
       println(df.queryExecution.executedPlan.toString)
     }
+
+  /** Times each native kernel on 2,000 rows of 64 elements, single
+    * threaded: after a warm-up, the fastest of 5 rounds of 20 passes,
+    * printed as ns per input element. The vector kernels score every row
+    * against one query, the rows as `UnsafeArrayData` (as a scan or a
+    * kwi read delivers them) and, where the kernel has one, through the
+    * raw-array entry on the same floats; `dot` and `sqdist` take a double
+    * query, as the LSH planes and IVF centroids are. The text kernels take
+    * arrays of 64 tokens (`shingles` of the dedup width) or 64
+    * non-negative 60-bit hashes (`minhash` of the dedup length, `simhash`
+    * of 32 bits). */
+  def kernels(): Unit = {
+    val (rows, dim, rounds, passes) = (2000, 64, 5, 20)
+    val rnd = new java.util.Random(16L)
+    val floats = Array.fill(rows)(Array.fill(dim)(rnd.nextFloat() * 2f - 1f))
+    val q = Array.fill(dim)(rnd.nextFloat() * 2f - 1f)
+    val qd = Array.fill(dim)(rnd.nextDouble() * 2.0 - 1.0)
+    val (unsafe, uq, uqd) = (floats.map(ArrayData.toArrayData), ArrayData.toArrayData(q), ArrayData.toArrayData(qd))
+    val hashes = Array.fill(rows)(ArrayData.toArrayData(Array.fill(dim)(rnd.nextLong() >>> 4)))
+    val tokens = Array.fill(rows)(new GenericArrayData(
+      Array.fill[Any](dim)(UTF8String.fromString("w" + rnd.nextInt(500)))))
+    var sink = 0.0
+    /** ns per element of `score(row)` over every row. */
+    def time(score: Int => Double): Double = {
+      def pass(): Unit = { var r = 0; while (r < rows) { sink += score(r); r += 1 } }
+      (1 to 10 * passes).foreach(_ => pass())
+      (1 to rounds).map { _ =>
+        val t0 = System.nanoTime()
+        (1 to passes).foreach(_ => pass())
+        (System.nanoTime() - t0).toDouble / (passes.toLong * rows * dim)
+      }.min
+    }
+    def ns(v: Option[Double]) = v.fold("-")(x => "%.2f".formatLocal(java.util.Locale.ROOT, x))
+    def kernel(name: String, onUnsafe: Int => Double, raw: Option[Int => Double]): Unit =
+      println(s"KERNEL $name unsafe=${ns(Some(time(onUnsafe)))} raw=${ns(raw.map(time))} ns/element")
+    kernel("cosine", r => VectorKernels.cosine(unsafe(r), true, uq, true),
+      Some(r => VectorKernels.cosine(floats(r), q)))
+    kernel("dot", r => VectorKernels.dot(unsafe(r), true, uqd, false),
+      Some(r => VectorKernels.dot(floats(r), qd)))
+    kernel("sqdist", r => VectorKernels.sqdist(unsafe(r), true, uqd, false),
+      Some(r => VectorKernels.sqdist(floats(r), qd)))
+    kernel("euclidean", r => VectorKernels.euclidean(unsafe(r), true, uq, true), None)
+    kernel("manhattan", r => VectorKernels.manhattan(unsafe(r), true, uq, true), None)
+    kernel("shingles", r => TextKernels.shingles(tokens(r), Dedup.ShingleN).numElements(), None)
+    kernel("minhash", r => TextKernels.minhash(hashes(r), Dedup.MinhashH).getLong(0).toDouble, None)
+    kernel("simhash", r => TextKernels.simhash(hashes(r), 32).toDouble, None)
+    println(s"KERNEL checksum $sink")
+  }
 }

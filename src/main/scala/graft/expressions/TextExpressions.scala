@@ -32,7 +32,9 @@ object TextKernels {
   def shingles(toks: ArrayData, n: Int): ArrayData = {
     val len = toks.numElements()
     if (len < n) return new GenericArrayData(Array.empty[Any])
-    val words = Array.tabulate[UTF8String](len)(i => if (toks.isNullAt(i)) null else toks.getUTF8String(i))
+    val nulls = VectorKernels.hasNull(toks)
+    val words = Array.tabulate[UTF8String](len)(i =>
+      if (nulls && toks.isNullAt(i)) null else toks.getUTF8String(i))
     val out = new Array[Any](len - n + 1)
     val window = new Array[UTF8String](n)
     var i = 0
@@ -51,22 +53,17 @@ object TextKernels {
     * sentinel. A NULL array gives `h` NULL components. */
   def minhash(hashes: ArrayData, h: Int): ArrayData = {
     if (hashes == null) return new GenericArrayData(new Array[Any](h))
-    val len = hashes.numElements()
-    val xs = new Array[Long](len)
-    var k = 0
-    var j = 0
-    while (j < len) {
-      if (!hashes.isNullAt(j)) { xs(k) = hashes.getLong(j); k += 1 }
-      j += 1
-    }
+    val xs =
+      if (!VectorKernels.hasNull(hashes)) hashes.toLongArray()
+      else (0 until hashes.numElements()).filterNot(hashes.isNullAt).map(hashes.getLong).toArray
     val sig = new Array[Long](h)
     var i = 0
     while (i < h) {
       val a = 2L * i + 1
       val b = 7919L * i
       var m = P
-      j = 0
-      while (j < k) {
+      var j = 0
+      while (j < xs.length) {
         val v = (a * xs(j) + b) % P
         if (v < m) m = v
         j += 1
@@ -78,33 +75,32 @@ object TextKernels {
   }
 
   /** `bits`-wide SimHash: bit b is set iff more elements have bit b set
-    * than not. Bits are tested as (x mod 2^(b+1)) ≥ 2^b, so a negative
-    * hash, like a NULL element, votes against every bit. A NULL array
-    * sets no bit. */
+    * than not. Bits are defined as (x mod 2^(b+1)) ≥ 2^b, so a negative
+    * hash, like a NULL element, votes against every bit; for a
+    * non-negative x and b < 63 that test is bit b of x. So each element
+    * takes one sign test, and each bit of a positive one a shift and a
+    * mask. A NULL array sets no bit. */
   def simhash(hashes: ArrayData, bits: Int): Long = {
     if (hashes == null) return 0L
     val len = hashes.numElements()
-    val votes = new Array[Long](bits)
+    val nulls = VectorKernels.hasNull(hashes)
+    val ones = new Array[Long](bits)
     var j = 0
     while (j < len) {
-      if (hashes.isNullAt(j)) {
-        var b = 0
-        while (b < bits) { votes(b) -= 1; b += 1 }
-      } else {
+      if (!(nulls && hashes.isNullAt(j))) {
         val x = hashes.getLong(j)
-        var b = 0
-        while (b < bits) {
-          val p = 1L << b
-          votes(b) += (if (x % (p * 2) >= p) 1 else -1)
-          b += 1
+        if (x > 0L) {
+          var b = 0
+          while (b < bits) { ones(b) += (x >>> b) & 1L; b += 1 }
         }
       }
       j += 1
     }
+    // votes for minus votes against: ones − (len − ones)
     var s = 0L
     var b = 0
     while (b < bits) {
-      if (votes(b) > 0) s += 1L << b
+      if (2L * ones(b) > len) s += 1L << b
       b += 1
     }
     s

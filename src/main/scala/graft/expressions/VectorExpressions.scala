@@ -3,11 +3,12 @@ package graft.expressions
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, ExprValue}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.unsafe.Platform
 
 /** Single-pass vector kernels behind `graft_dot`, `graft_sqdist`,
   * `graft_euclidean`, `graft_manhattan` and `graft_cosine` (reference
@@ -20,42 +21,133 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * replaced (the test suite keeps those formulas as references): operands
   * of different lengths give NULL, and so does a NULL element, so a
   * wrong-dimension or incomplete vector never gets a prefix score that
-  * could displace a real neighbour from a top-k. Interpreted and
-  * generated code call the same methods here, and so does the driver:
-  * the HNSW walk, the IVF cell probe, the PQ lookup table and the LSH
-  * query signature pass their arrays wrapped by
-  * `UnsafeArrayData.fromPrimitiveArray`. The dimension rule holds there
-  * too: a stored vector of another dimension than the query's is never
-  * scored, and a query whose dimension differs from the index's fails
-  * with an `IllegalArgumentException`. */
+  * could displace a real neighbour from a top-k.
+  *
+  * NULLs are tested once per operand, before any arithmetic (an
+  * `UnsafeArrayData`'s null bitmap a word at a time, any other
+  * `ArrayData` in one pass), and the arithmetic runs in one loop per
+  * (float, double) operand pair that reads elements straight from
+  * memory: from an `UnsafeArrayData`'s bytes, from a primitive array, or
+  * from a primitive copy of any other `ArrayData`.
+  * Interpreted and generated code call the `ArrayData` entries. Driver
+  * callers (the HNSW walk, the IVF cell probe, the PQ lookup table and
+  * the LSH query signature) pass their `Array[Float]`/`Array[Double]`
+  * vectors to the raw-array entries, which run the same loops on the
+  * arrays in place and require operands of one length: the dimension
+  * rule holds there because each caller checks it first — a stored
+  * vector of another dimension than the query's is never scored, and a
+  * query whose dimension differs from the index's fails with an
+  * `IllegalArgumentException`. */
 object VectorKernels {
-
-  @inline private def at(v: ArrayData, isFloat: Boolean, i: Int): Double =
-    if (isFloat) v.getFloat(i).toDouble else v.getDouble(i)
 
   private final val Dot = 0
   private final val SqDist = 1
   private final val Manhattan = 2
 
-  /** Left-to-right Σ of one elementwise term; NULL when the lengths
+  private final val F = Platform.FLOAT_ARRAY_OFFSET.toLong
+  private final val D = Platform.DOUBLE_ARRAY_OFFSET.toLong
+
+  // element i of a float or double operand at (base, off)
+  @inline private def f(b: AnyRef, o: Long, i: Int): Double = Platform.getFloat(b, o + 4L * i).toDouble
+  @inline private def d(b: AnyRef, o: Long, i: Int): Double = Platform.getDouble(b, o + 8L * i)
+
+  /** Whether `a` holds a NULL element. */
+  private[expressions] def hasNull(a: ArrayData): Boolean = a match {
+    case u: UnsafeArrayData =>
+      val words = (u.numElements() + 63) / 64
+      var w = 0
+      while (w < words && Platform.getLong(u.getBaseObject, u.getBaseOffset + 8L + 8L * w) == 0L) w += 1
+      w < words
+    case _ =>
+      val n = a.numElements()
+      var i = 0
+      while (i < n && !a.isNullAt(i)) i += 1
+      i < n
+  }
+
+  /** The object `a`'s elements lie in: its own bytes for an
+    * `UnsafeArrayData`, else a primitive copy. */
+  private def base(a: ArrayData, isFloat: Boolean): AnyRef = a match {
+    case u: UnsafeArrayData => u.getBaseObject
+    case _ => if (isFloat) a.toFloatArray() else a.toDoubleArray()
+  }
+
+  /** The offset of element 0 in [[base]]`(a, isFloat)`. */
+  private def offset(a: ArrayData, isFloat: Boolean): Long = a match {
+    case u: UnsafeArrayData =>
+      u.getBaseOffset + UnsafeArrayData.calculateHeaderPortionInBytes(u.numElements())
+    case _ => if (isFloat) F else D
+  }
+
+  /** Left-to-right Σ of one elementwise term over `n` elements of two
+    * operands. Every term is symmetric bit for bit (x·y = y·x, and
+    * x−y = −(y−x) under round-to-nearest), so a (double, float) pair
+    * runs the (float, double) loop with the operands swapped. */
+  private def fold(term: Int, ab: AnyRef, ao: Long, fa: Boolean,
+      bb: AnyRef, bo: Long, fb: Boolean, n: Int): Double =
+    if (fa && fb) foldFF(term, ab, ao, bb, bo, n)
+    else if (fa) foldFD(term, ab, ao, bb, bo, n)
+    else if (fb) foldFD(term, bb, bo, ab, ao, n)
+    else foldDD(term, ab, ao, bb, bo, n)
+
+  private def foldFF(term: Int, a: AnyRef, ao: Long, b: AnyRef, bo: Long, n: Int): Double = {
+    var s = 0.0
+    var i = 0
+    (term: @annotation.switch) match {
+      case Dot => while (i < n) { s += f(a, ao, i) * f(b, bo, i); i += 1 }
+      case SqDist => while (i < n) { val t = f(a, ao, i) - f(b, bo, i); s += t * t; i += 1 }
+      case _ => while (i < n) { s += math.abs(f(a, ao, i) - f(b, bo, i)); i += 1 }
+    }
+    s
+  }
+
+  private def foldFD(term: Int, a: AnyRef, ao: Long, b: AnyRef, bo: Long, n: Int): Double = {
+    var s = 0.0
+    var i = 0
+    (term: @annotation.switch) match {
+      case Dot => while (i < n) { s += f(a, ao, i) * d(b, bo, i); i += 1 }
+      case SqDist => while (i < n) { val t = f(a, ao, i) - d(b, bo, i); s += t * t; i += 1 }
+      case _ => while (i < n) { s += math.abs(f(a, ao, i) - d(b, bo, i)); i += 1 }
+    }
+    s
+  }
+
+  private def foldDD(term: Int, a: AnyRef, ao: Long, b: AnyRef, bo: Long, n: Int): Double = {
+    var s = 0.0
+    var i = 0
+    (term: @annotation.switch) match {
+      case Dot => while (i < n) { s += d(a, ao, i) * d(b, bo, i); i += 1 }
+      case SqDist => while (i < n) { val t = d(a, ao, i) - d(b, bo, i); s += t * t; i += 1 }
+      case _ => while (i < n) { s += math.abs(d(a, ao, i) - d(b, bo, i)); i += 1 }
+    }
+    s
+  }
+
+  /** [[fold]] over two `ArrayData` operands; NULL when the lengths
     * differ or an element is NULL. */
   private def fold(term: Int, a: ArrayData, fa: Boolean, b: ArrayData, fb: Boolean): java.lang.Double = {
     val n = a.numElements()
-    if (n != b.numElements()) return null
-    var s = 0.0
+    if (n != b.numElements() || hasNull(a) || hasNull(b)) null
+    else fold(term, base(a, fa), offset(a, fa), fa, base(b, fb), offset(b, fb), fb, n)
+  }
+
+  /** dot/(‖a‖·‖b‖) over `n` elements of two operands with no NULL, in
+    * one pass; 0.0 when either norm is zero (src/utils.rs:9-13). Swapping
+    * the operands swaps only the two norms, so a (double, float) pair
+    * runs the (float, double) loop. */
+  private def cosine(ab: AnyRef, ao: Long, fa: Boolean, bb: AnyRef, bo: Long, fb: Boolean,
+      n: Int): Double = {
+    if (!fa && fb) return cosine(bb, bo, fb, ab, ao, fa, n)
+    var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
-    while (i < n) {
-      if (a.isNullAt(i) || b.isNullAt(i)) return null
-      val x = at(a, fa, i)
-      val y = at(b, fb, i)
-      s += ((term: @annotation.switch) match {
-        case Dot => x * y
-        case SqDist => (x - y) * (x - y)
-        case _ => math.abs(x - y)
-      })
-      i += 1
+    if (fb) while (i < n) {
+      val x = f(ab, ao, i); val y = f(bb, bo, i); dot += x * y; na += x * x; nb += y * y; i += 1
+    } else if (fa) while (i < n) {
+      val x = f(ab, ao, i); val y = d(bb, bo, i); dot += x * y; na += x * x; nb += y * y; i += 1
+    } else while (i < n) {
+      val x = d(ab, ao, i); val y = d(bb, bo, i); dot += x * y; na += x * x; nb += y * y; i += 1
     }
-    s
+    if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
   /** Σ aᵢ·bᵢ. */
@@ -76,30 +168,58 @@ object VectorKernels {
   def manhattan(a: ArrayData, fa: Boolean, b: ArrayData, fb: Boolean): java.lang.Double =
     fold(Manhattan, a, fa, b, fb)
 
-  /** dot/(‖a‖·‖b‖) in one pass over both operands. Each norm is taken
-    * over its own whole array, and the zero-norm guard (src/utils.rs:9-13)
-    * fires before the length and NULL tests, as the reference's
-    * three-valued `OR` does: a zero-norm operand gives 0.0 even against a
-    * longer vector or one with a NULL element. */
+  /** dot/(‖a‖·‖b‖). Each norm is taken over its own whole array, and
+    * the zero-norm guard (src/utils.rs:9-13) fires before the length and
+    * NULL tests, as the reference's three-valued `OR` does: a zero-norm
+    * operand gives 0.0 even against a longer vector or one with a NULL
+    * element. */
   def cosine(a: ArrayData, fa: Boolean, b: ArrayData, fb: Boolean): java.lang.Double = {
-    val la = a.numElements()
-    val lb = b.numElements()
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var nullA = false; var nullB = false
-    var i = 0
-    // past the shorter operand its element reads as 0.0, which leaves
-    // its norm unchanged; `dot` is only used when the lengths agree
-    while (i < la || i < lb) {
-      var x = 0.0; var y = 0.0
-      if (i < la) { if (a.isNullAt(i)) nullA = true else x = at(a, fa, i) }
-      if (i < lb) { if (b.isNullAt(i)) nullB = true else y = at(b, fb, i) }
-      dot += x * y; na += x * x; nb += y * y
-      i += 1
-    }
-    if ((!nullA && na == 0.0) || (!nullB && nb == 0.0)) 0.0
-    else if (nullA || nullB || la != lb) null
-    else dot / (math.sqrt(na) * math.sqrt(nb))
+    val n = a.numElements()
+    val nullA = hasNull(a)
+    val nullB = hasNull(b)
+    if (!nullA && !nullB && n == b.numElements())
+      cosine(base(a, fa), offset(a, fa), fa, base(b, fb), offset(b, fb), fb, n)
+    else if ((!nullA && zeroNorm(a, fa)) || (!nullB && zeroNorm(b, fb))) 0.0
+    else null
   }
+
+  /** Whether Σ aᵢ² = 0, summed as [[cosine]] sums a norm. */
+  private def zeroNorm(a: ArrayData, fa: Boolean): Boolean = {
+    val ab = base(a, fa)
+    val ao = offset(a, fa)
+    fold(Dot, ab, ao, fa, ab, ao, fa, a.numElements()) == 0.0
+  }
+
+  /** `a` laid out for reading in place: an `UnsafeArrayData` of its
+    * elements, or `a` itself when it is one or holds a NULL. For an
+    * operand that every row shares, such as a literal. */
+  def inPlace(a: ArrayData, isFloat: Boolean): ArrayData = a match {
+    case _: UnsafeArrayData => a
+    case _ if hasNull(a) => a
+    case _ if isFloat => UnsafeArrayData.fromPrimitiveArray(a.toFloatArray())
+    case _ => UnsafeArrayData.fromPrimitiveArray(a.toDoubleArray())
+  }
+
+  private def sameLength(a: Int, b: Int): Int = {
+    require(a == b, s"vector kernel operands of lengths $a and $b")
+    a
+  }
+
+  /** Raw-array [[dot]]. */
+  def dot(a: Array[Float], b: Array[Double]): Double =
+    foldFD(Dot, a, F, b, D, sameLength(a.length, b.length))
+
+  /** Raw-array [[sqdist]]. */
+  def sqdist(a: Array[Float], b: Array[Double]): Double =
+    foldFD(SqDist, a, F, b, D, sameLength(a.length, b.length))
+
+  /** Raw-array [[sqdist]]. */
+  def sqdist(a: Array[Double], b: Array[Double]): Double =
+    foldDD(SqDist, a, D, b, D, sameLength(a.length, b.length))
+
+  /** Raw-array [[cosine]]. */
+  def cosine(a: Array[Float], b: Array[Float]): Double =
+    cosine(a, F, true, b, F, true, sameLength(a.length, b.length))
 }
 
 /** A kernel of [[VectorKernels]] as a binary expression over two
@@ -129,12 +249,24 @@ private[expressions] trait VectorKernelCall extends BinaryExpression {
         s"$prettyName expects (array<float|double>, array<float|double>), got ($a, $b)")
     }
 
+  // a foldable operand (a query or plane literal) is laid out for the
+  // kernels once, not copied out of its boxed elements on every row
+  @transient private lazy val constLeft = constant(left)
+  @transient private lazy val constRight = constant(right)
+
+  private def constant(e: Expression): Option[ArrayData] =
+    if (!e.foldable) None
+    else Option(e.eval().asInstanceOf[ArrayData]).map(VectorKernels.inPlace(_, isFloat(e)))
+
   override def nullSafeEval(a: Any, b: Any): Any =
-    run(a.asInstanceOf[ArrayData], isFloat(left), b.asInstanceOf[ArrayData], isFloat(right))
+    run(constLeft.getOrElse(a.asInstanceOf[ArrayData]), isFloat(left),
+      constRight.getOrElse(b.asInstanceOf[ArrayData]), isFloat(right))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val a = left.genCode(ctx)
     val b = right.genCode(ctx)
+    def value(c: Option[ArrayData], v: ExprValue): String =
+      c.fold(v.toString)(ctx.addReferenceObj("vec", _, classOf[ArrayData].getName))
     val r = ctx.freshName("r")
     ev.copy(code = code"""
       ${a.code}
@@ -143,7 +275,7 @@ private[expressions] trait VectorKernelCall extends BinaryExpression {
       double ${ev.value} = 0.0;
       if (!${a.isNull} && !${b.isNull}) {
         java.lang.Double $r = graft.expressions.VectorKernels.$kernel(
-          ${a.value}, ${isFloat(left)}, ${b.value}, ${isFloat(right)});
+          ${value(constLeft, a.value)}, ${isFloat(left)}, ${value(constRight, b.value)}, ${isFloat(right)});
         if ($r != null) { ${ev.isNull} = false; ${ev.value} = $r; }
       }""")
   }

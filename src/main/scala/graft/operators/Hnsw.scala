@@ -1,9 +1,6 @@
 package graft.operators
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
 import graft.expressions.VectorKernels
 import graft.functions.VectorOps
@@ -246,8 +243,8 @@ class Hnsw(val m: Int = 16, val ef: Int = 32, val seed: Long = 42L,
     * Runs on the driver over the collected adjacency (index head);
     * vectors arrive through `fetch` — a POINT-READ source (kwi
     * IndexedReader seek, pruned parquet read, or a test map). Each
-    * distinct id is fetched at most once per query and only visited /
-    * candidate ids are ever fetched, so driver-resident vector bytes
+    * distinct id is fetched and scored at most once per query, and only
+    * visited / candidate ids are ever fetched, so driver-resident vector bytes
     * are O(ef + descent·M), independent of corpus size — the structure
     * a 100 TB serving tier needs (the reference's own entry-table seek
     * path, vector_db/src/binary_index.rs:148-160).
@@ -258,12 +255,21 @@ class Hnsw(val m: Int = 16, val ef: Int = 32, val seed: Long = 42L,
     * strictly better recall per visited node, which matters once the
     * graph is LSH-blocked and mediocre edges exist.
     *
-    * Scores come from `VectorKernels.cosine`, which gives NULL for
-    * operands of different lengths; so a stored vector whose dimension
-    * differs from the query's is treated like a missing one and is
-    * never a candidate. The entry point must have a usable vector:
-    * without one the walk has no start, and the call fails with an
-    * `IllegalArgumentException` naming the id and both dimensions.
+    * The frontier is a binary heap keyed by negated distance
+    * (1 − cosine) under `java.lang.Double.compare`, largest first: the
+    * nearest candidate is expanded next, a NaN distance before any
+    * number and −0.0 before 0.0, and among equal keys the smaller id
+    * first. The descent moves only to a neighbour whose distance is
+    * `<` the current one's, so it never moves to or from a NaN. The
+    * result ranks the visited ids by (−cosine, id) under the same
+    * compare: a NaN score ranks last but is still returned.
+    *
+    * Scores come from `VectorKernels.cosine` on the stored arrays in
+    * place. A stored vector whose dimension differs from the query's is
+    * treated like a missing one and is never a candidate. The entry
+    * point must have a usable vector: without one the walk has no start,
+    * and the call fails with an `IllegalArgumentException` naming the id
+    * and both dimensions.
     */
   def serveQuery(
       adjacency: ((Long, Int)) => Seq[Long],
@@ -272,51 +278,39 @@ class Hnsw(val m: Int = 16, val ef: Int = 32, val seed: Long = 42L,
       q: Array[Float],
       k: Int): Seq[(Long, Double)] = {
 
-    // per-query memo: ≤ one point read and one cosine per distinct id;
-    // a vector of another dimension is kept out like a missing one
-    val vecCache = mutable.Map.empty[Long, Option[Array[Float]]]
-    def vecOf(id: Long): Option[Array[Float]] =
-      vecCache.getOrElseUpdate(id, fetch(id).filter(_.length == q.length))
-    val qa = UnsafeArrayData.fromPrimitiveArray(q)
-    val simCache = mutable.Map.empty[Long, Double]
-    def sim(id: Long): Double = simCache.getOrElseUpdate(id,
-      VectorKernels.cosine(UnsafeArrayData.fromPrimitiveArray(vecOf(id).get), true, qa, true))
-    def dist(id: Long): Double = 1.0 - sim(id)
-
+    val walk = new Hnsw.Walk(fetch, q)
     var (current, level) = entry
-    require(vecOf(current).isDefined,
+    val stored = fetch(current)
+    require(stored.exists(_.length == q.length),
       s"hnsw entry point $current has no vector of the query's dimension ${q.length} " +
-        s"(stored dimension: ${fetch(current).fold("none")(_.length.toString)})")
+        s"(stored dimension: ${stored.fold("none")(_.length.toString)})")
+    var cur = walk.add(current, stored)
     // greedy descent, levels max..1 (src/index.rs:321-324)
     while (level > 0) {
       var improved = true
       while (improved) {
         improved = false
-        val ns = adjacency((current, level))
-        for (n <- ns if vecOf(n).isDefined) {
-          if (dist(n) < dist(current)) { current = n; improved = true }
+        val ns = adjacency((current, level)).iterator
+        while (ns.hasNext) {
+          val n = ns.next()
+          val i = walk.index(n)
+          if (i >= 0 && walk.dist(i) < walk.dist(cur)) { current = n; cur = i; improved = true }
         }
       }
       level -= 1
     }
-    // ef-bounded best-first expansion at level 0: always expand the
-    // closest unexpanded node (max-heap on negated distance)
-    val visited = mutable.Set[Long](current)
-    val cand = mutable.PriorityQueue[(Double, Long)](
-      (-dist(current), current))(Ordering.by(_._1))
-    while (cand.nonEmpty && visited.size < ef) {
-      val (_, u) = cand.dequeue()
-      for (n <- adjacency((u, 0))
-           if !visited.contains(n) && visited.size < ef && vecOf(n).isDefined) {
-        visited += n
-        cand.enqueue((-dist(n), n))
+    // ef-bounded best-first expansion at level 0
+    walk.visit(cur)
+    while (walk.frontier > 0 && walk.visited < ef) {
+      val ns = adjacency((walk.pop(), 0)).iterator
+      while (ns.hasNext && walk.visited < ef) {
+        // a visited id was fetched before, so the look-up fetches only new ids
+        val i = walk.index(ns.next())
+        if (i >= 0 && !walk.isVisited(i)) walk.visit(i)
       }
     }
     // exact rerank (src/index.rs:345-354)
-    visited.toSeq
-      .map(id => id -> sim(id))
-      .sortBy { case (id, s) => (-s, id) }
-      .take(k)
+    walk.top(k)
   }
 
   /** Collected-map overload — the small-corpus fast path (the map is
@@ -371,6 +365,142 @@ class Hnsw(val m: Int = 16, val ef: Int = 32, val seed: Long = 42L,
 }
 
 object Hnsw {
+
+  /** The per-query state of [[Hnsw.serveQuery]], in primitive arrays:
+    * each id seen gets a dense index through an open-addressing table,
+    * and is fetched and scored once, on first sight; the frontier is a
+    * binary heap of dense indices. */
+  private final class Walk(fetch: Long => Option[Array[Float]], q: Array[Float]) {
+    private final val NoVector: Byte = 0
+    private final val Scored: Byte = 1
+    private final val Visited: Byte = 2
+
+    // id -> 1 + dense index (0 = free slot), linear probing
+    private var keys = new Array[Long](64)
+    private var slots = new Array[Int](64)
+    // by dense index
+    private var seen = 0
+    private var ids = new Array[Long](32)
+    private var sims = new Array[Double](32)
+    private var state = new Array[Byte](32)
+    // visit order, and the frontier heap over (−distance, id)
+    private var order = new Array[Int](32)
+    private var nVisited = 0
+    private var heap = new Array[Int](32)
+    private var nFrontier = 0
+
+    def visited: Int = nVisited
+    def frontier: Int = nFrontier
+
+    private def find(id: Long): Int = {
+      val mask = keys.length - 1
+      val h = id * 0x9E3779B97F4A7C15L
+      var p = (h ^ (h >>> 32)).toInt & mask
+      while (slots(p) != 0 && keys(p) != id) p = (p + 1) & mask
+      p
+    }
+
+    /** Record `id` with its stored vector, scored when its dimension is
+      * the query's; its dense index. */
+    def add(id: Long, v: Option[Array[Float]]): Int = {
+      if (2 * (seen + 1) > keys.length) {
+        keys = new Array[Long](keys.length * 2)
+        slots = new Array[Int](keys.length)
+        var i = 0
+        while (i < seen) { val p = find(ids(i)); keys(p) = ids(i); slots(p) = i + 1; i += 1 }
+      }
+      if (seen == ids.length) {
+        ids = java.util.Arrays.copyOf(ids, seen * 2)
+        sims = java.util.Arrays.copyOf(sims, seen * 2)
+        state = java.util.Arrays.copyOf(state, seen * 2)
+      }
+      val p = find(id)
+      keys(p) = id
+      slots(p) = seen + 1
+      ids(seen) = id
+      v match {
+        case Some(a) if a.length == q.length =>
+          sims(seen) = VectorKernels.cosine(a, q)
+          state(seen) = Scored
+        case _ => state(seen) = NoVector
+      }
+      seen += 1
+      seen - 1
+    }
+
+    /** The dense index of `id`, fetched on first sight; −1 when it has
+      * no vector of the query's dimension. */
+    def index(id: Long): Int = {
+      val p = find(id)
+      val i = if (slots(p) != 0) slots(p) - 1 else add(id, fetch(id))
+      if (state(i) == NoVector) -1 else i
+    }
+
+    def dist(i: Int): Double = 1.0 - sims(i)
+
+    def isVisited(i: Int): Boolean = state(i) == Visited
+
+    // heap order: the larger −distance under Double.compare, then the smaller id
+    private def before(i: Int, j: Int): Boolean = {
+      val c = java.lang.Double.compare(-dist(i), -dist(j))
+      c > 0 || (c == 0 && ids(i) < ids(j))
+    }
+
+    /** Mark dense index `i` visited and push it on the frontier. */
+    def visit(i: Int): Unit = {
+      state(i) = Visited
+      if (nVisited == order.length) order = java.util.Arrays.copyOf(order, nVisited * 2)
+      order(nVisited) = i
+      nVisited += 1
+      if (nFrontier == heap.length) heap = java.util.Arrays.copyOf(heap, nFrontier * 2)
+      var c = nFrontier
+      nFrontier += 1
+      while (c > 0 && before(i, heap((c - 1) / 2))) { heap(c) = heap((c - 1) / 2); c = (c - 1) / 2 }
+      heap(c) = i
+    }
+
+    /** Pop the frontier's first id. */
+    def pop(): Long = {
+      val top = heap(0)
+      nFrontier -= 1
+      val last = heap(nFrontier)
+      var c = 0
+      var done = nFrontier == 0
+      while (!done) {
+        var child = 2 * c + 1
+        if (child + 1 < nFrontier && before(heap(child + 1), heap(child))) child += 1
+        if (child < nFrontier && before(heap(child), last)) { heap(c) = heap(child); c = child }
+        else done = true
+      }
+      if (nFrontier > 0) heap(c) = last
+      ids(top)
+    }
+
+    /** The `k` first visited ids by (−cosine, id) under Double.compare,
+      * with their cosines, by insertion into a bounded ranked array. */
+    def top(k: Int): Seq[(Long, Double)] = {
+      val best = new Array[Int](math.max(0, math.min(k, nVisited)))
+      var kept = 0
+      var v = 0
+      while (v < nVisited) {
+        val i = order(v)
+        var p = kept
+        while (p > 0 && ranksBefore(i, best(p - 1))) p -= 1
+        if (p < best.length) {
+          System.arraycopy(best, p, best, p + 1, math.min(kept, best.length - 1) - p)
+          best(p) = i
+          kept = math.min(kept + 1, best.length)
+        }
+        v += 1
+      }
+      best.toSeq.map(i => (ids(i), sims(i)))
+    }
+
+    private def ranksBefore(i: Int, j: Int): Boolean = {
+      val c = java.lang.Double.compare(-sims(i), -sims(j))
+      c < 0 || (c == 0 && ids(i) < ids(j))
+    }
+  }
 
   /** Bounded LRU (access-ordered LinkedHashMap): single-entry eviction
     * of the least-recently-used key, so a working set hovering near the

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
 import graft.expressions.VectorKernels
 import graft.functions.VectorOps
@@ -188,9 +187,6 @@ object Ivf {
     cents.foreach { case (cid, c) =>
       require(c.length == q.length, s"query dim ${q.length} != dim ${c.length} of cell $cid")
     }
-    val qa = UnsafeArrayData.fromPrimitiveArray(q)
-    cents.sortBy { case (cid, c) =>
-      (VectorKernels.sqdist(qa, true, UnsafeArrayData.fromPrimitiveArray(c), false).doubleValue, cid)
-    }.take(n)
+    cents.sortBy { case (cid, c) => (VectorKernels.sqdist(q, c), cid) }.take(n)
   }
 }

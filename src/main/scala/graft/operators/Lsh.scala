@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
 import graft.expressions.VectorKernels
 import graft.functions.VectorOps
@@ -58,13 +57,10 @@ class Lsh(val numPlanes: Int = 16, val seed: Long = 42L,
   /** Driver-side signature of a single query vector (the serve-time
     * `compute_hash` on the probe path), through the `graft_dot` kernel
     * of [[bucketCol]]. */
-  def bucketOf(v: Array[Float]): Long = {
-    val va = UnsafeArrayData.fromPrimitiveArray(v)
+  def bucketOf(v: Array[Float]): Long =
     planes(v.length).zipWithIndex.map { case (p, i) =>
-      if (VectorKernels.dot(va, true, UnsafeArrayData.fromPrimitiveArray(p), false) >= 0.0) 1L << i
-      else 0L
+      if (VectorKernels.dot(v, p) >= 0.0) 1L << i else 0L
     }.sum
-  }
 
   /** `vectors` with its bucket key: (idCol, vecCol, bucket). */
   private def bucketed(vectors: DataFrame, dim: Int, idCol: String, vecCol: String): DataFrame =

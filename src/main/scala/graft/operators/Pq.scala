@@ -1,8 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import graft.expressions.VectorKernels
 import graft.functions.VectorOps
@@ -141,25 +139,18 @@ class Pq(val m: Int) {
 
   /** Driver-side ADC lookup table: table(s)(j) = ‖q_s − books(s)(j)‖²
     * through `VectorKernels.sqdist`, the kernel of VectorOps.sqdist
-    * (and the fold OracleFrag.sqDist replays). */
+    * (and the fold OracleFrag.sqDist replays). A float widens to double
+    * exactly, so the table of the widened query is the float one. */
   def adcTable(q: Array[Float], books: Array[Array[Array[Double]]]): Array[Array[Double]] =
-    adc(q.length, books, isFloat = true)((from, until) =>
-      UnsafeArrayData.fromPrimitiveArray(q.slice(from, until)))
+    adcTableD(q.map(_.toDouble), books)
 
   /** Double-query variant — for residual queries (q − centroid). */
-  def adcTableD(q: Array[Double], books: Array[Array[Array[Double]]]): Array[Array[Double]] =
-    adc(q.length, books, isFloat = false)((from, until) =>
-      UnsafeArrayData.fromPrimitiveArray(q.slice(from, until)))
-
-  /** The table over the query's sub-slices, `part(from, until)`. */
-  private def adc(dim: Int, books: Array[Array[Array[Double]]], isFloat: Boolean)(
-      part: (Int, Int) => ArrayData): Array[Array[Double]] = {
+  def adcTableD(q: Array[Double], books: Array[Array[Array[Double]]]): Array[Array[Double]] = {
     val sub = books(0)(0).length
-    require(dim == m * sub, s"query dim $dim != ${m * sub}")
+    require(q.length == m * sub, s"query dim ${q.length} != ${m * sub}")
     Array.tabulate(m) { s =>
-      val qs = part(s * sub, (s + 1) * sub)
-      books(s).map(c =>
-        VectorKernels.sqdist(qs, isFloat, UnsafeArrayData.fromPrimitiveArray(c), false).doubleValue)
+      val qs = q.slice(s * sub, (s + 1) * sub)
+      books(s).map(VectorKernels.sqdist(qs, _))
     }
   }
 

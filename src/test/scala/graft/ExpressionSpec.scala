@@ -140,8 +140,21 @@ class ExpressionSpec extends SparkSpec {
       .apply(new org.apache.spark.sql.SparkSessionExtensions) // must not throw
   }
 
+  /** Runs `body` interpreted (`NO_CODEGEN`, whole-stage codegen off)
+    * or generated (`CODEGEN_ONLY`), then restores the defaults. */
+  private def evalMode[T](codegen: Boolean)(body: => T): T = {
+    val prev = spark.conf.get("spark.sql.codegen.wholeStage", "true")
+    try {
+      spark.conf.set("spark.sql.codegen.wholeStage", codegen.toString)
+      spark.conf.set("spark.sql.codegen.factoryMode", if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN")
+      body
+    } finally {
+      spark.conf.set("spark.sql.codegen.wholeStage", prev)
+      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    }
+  }
+
   test("interpreted eval path agrees with codegen path") {
-    // force interpreted evaluation by turning codegen off in a local op;
     // every kernel, with a float column and a double literal operand
     val q = emb.filter(col("vec_id") === 1).select(col("embedding").as("qe"))
     val p = typedLit((1 to 64).map(i => (i * 0.37) - 12.0))
@@ -150,19 +163,51 @@ class ExpressionSpec extends SparkSpec {
         Seq(native(col("embedding"), col("qe")).as(s"$k-q"), native(col("embedding"), p).as(s"$k-p"))
       }: _*)
       .collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
-    val prev = spark.conf.get("spark.sql.codegen.wholeStage", "true")
-    try {
-      spark.conf.set("spark.sql.codegen.wholeStage", "false")
-      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-      val interp = scores()
-      spark.conf.set("spark.sql.codegen.wholeStage", "true")
-      spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-      val gen = scores()
-      assert(interp.size == emb.count())
-      assert(interp == gen)
-    } finally {
-      spark.conf.set("spark.sql.codegen.wholeStage", prev)
-      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    val interp = evalMode(codegen = false)(scores())
+    val gen = evalMode(codegen = true)(scores())
+    assert(interp.size == emb.count())
+    assert(interp == gen)
+  }
+
+  test("graft_cosine and graft_dot pin NaN components and containsNull arrays") {
+    import spark.implicits._
+    val nan = Float.NaN
+    // containsNull = false: a NaN component poisons every sum, except
+    // that cosine's zero-norm guard fires on the other operand
+    val plain = Seq((1, Seq(nan, 1f), Seq(1f, 1f)), (2, Seq(nan, 1f), Seq(0f, 0f)),
+        (3, Seq(3f, 4f), Seq(4f, 3f)))
+      .toDF("id", "a", "b").repartition(2)
+    // containsNull = true, with and without a NULL element
+    val f = None: Option[Float]
+    val nullable = Seq((4, Seq(Some(3f), Some(4f)), Seq(Some(4f), Some(3f))),
+        (5, Seq(Some(3f), f), Seq(Some(4f), Some(3f))),
+        (6, Seq(Some(3f), f), Seq(Some(0f), Some(0f))))
+      .toDF("id", "a", "b").repartition(2)
+    assert(!plain.schema("a").dataType.asInstanceOf[org.apache.spark.sql.types.ArrayType].containsNull)
+    assert(nullable.schema("a").dataType.asInstanceOf[org.apache.spark.sql.types.ArrayType].containsNull)
+    val want: Map[Int, (Option[Double], Option[Double])] = Map(
+      1 -> (Some(Double.NaN), Some(Double.NaN)),
+      2 -> (Some(0.0), Some(Double.NaN)),
+      3 -> (Some(0.96), Some(24.0)),
+      4 -> (Some(0.96), Some(24.0)),
+      5 -> (None, None),
+      6 -> (Some(0.0), None))
+    def same(a: Option[Double], b: Option[Double]) = (a, b) match {
+      case (Some(x), Some(y)) => java.lang.Double.compare(x, y) == 0
+      case _ => a == b
+    }
+    for (codegen <- Seq(false, true)) {
+      val got = evalMode(codegen) {
+        Seq(plain, nullable).flatMap(_
+          .select(col("id"), VectorOps.cosine(col("a"), col("b")), VectorOps.dot(col("a"), col("b")))
+          .collect().map(r => r.getInt(0) ->
+            ((if (r.isNullAt(1)) None else Some(r.getDouble(1))),
+              (if (r.isNullAt(2)) None else Some(r.getDouble(2)))))).toMap
+      }
+      want.foreach { case (id, (cos, dot)) =>
+        assert(same(got(id)._1, cos) && same(got(id)._2, dot),
+          s"row $id (codegen $codegen): got ${got(id)}, pinned ($cos, $dot)")
+      }
     }
   }
 }

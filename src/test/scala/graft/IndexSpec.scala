@@ -182,6 +182,102 @@ class IndexSpec extends SparkSpec {
         e.getMessage.contains("dimension 3") && e.getMessage.contains(vecs(entry).length.toString),
         e.getMessage)
     }
+    // an entry point with no stored vector at all
+    val e = intercept[IllegalArgumentException](hnsw.serveQuery(adj, vecs, (9L, 0), q, 4))
+    assert(e.getMessage.contains("entry point 9") && e.getMessage.contains("stored dimension: none"),
+      e.getMessage)
+  }
+
+  /** A walk's (id, score bits) list and the ids it fetched, each fetch
+    * counted. */
+  private def walked(vecs: Map[Long, Array[Float]])(
+      serve: (Long => Option[Array[Float]]) => Seq[(Long, Double)]): (Seq[(Long, Long)], Seq[Long]) = {
+    val calls = Seq.newBuilder[Long]
+    val top = serve { id => calls += id; vecs.get(id) }
+    (top.map { case (id, s) => id -> java.lang.Double.doubleToRawLongBits(s) }, calls.result())
+  }
+
+  test("hnsw: the primitive-state walk equals the map-based walk, score for score and fetch for fetch") {
+    // 1.5k x 64 clustered corpus, 220 queries near the same centers
+    val rnd = new java.util.Random(20261020L)
+    val centers = Array.fill(48)(Array.fill(64)(rnd.nextGaussian()))
+    def point(): Array[Float] = {
+      val c = centers(rnd.nextInt(centers.length))
+      Array.tabulate(64)(i => (c(i) + 0.35 * rnd.nextGaussian()).toFloat)
+    }
+    val corpus = Array.fill(1500)(point())
+    val vecs = corpus.indices.map(i => i.toLong -> corpus(i)).toMap
+    val df = corpus.indices.map(i => (i.toLong, corpus(i).toSeq)).toDF("vec_id", "embedding")
+    val base = new Hnsw(m = 16, ef = 64, seed = 42L)
+    val adjacency = base.buildAdjacency(df, blocker = new Lsh(numPlanes = 6, seed = 42L)).cache()
+    val adj = base.collectAdjacency(adjacency)
+    val entry = base.entryPoint(adjacency)
+    assert(entry._2 > 0, "the graph must have upper levels for the descent")
+    val adjOf = (key: (Long, Int)) => adj.getOrElse(key, Seq.empty)
+    for (qi <- 0 until 220) {
+      val q = if (qi % 5 == 0) corpus(rnd.nextInt(corpus.length)) else point()
+      val ef = Seq(64, 12, 256)(qi % 3)
+      val k = Seq(10, 1, 100, 10)(qi % 4)
+      val hnsw = new Hnsw(m = 16, ef = ef, seed = 42L)
+      val (got, gotCalls) = walked(vecs)(hnsw.serveQuery(adjOf, _, entry, q, k))
+      val (want, wantCalls) = walked(vecs)(HnswMapWalk.serveQuery(adjOf, _, entry, q, k, ef))
+      assert(got == want, s"query $qi (ef $ef, k $k)")
+      assert(gotCalls.size == wantCalls.size, s"query $qi fetches")
+      assert(gotCalls.distinct.size == gotCalls.size, s"query $qi fetched an id twice")
+    }
+    adjacency.unpersist()
+  }
+
+  test("hnsw: NaN, zero-norm and -0.0 vectors walk as the map-based walk does") {
+    val hnsw = new Hnsw(m = 4, ef = 16)
+    val nan = Float.NaN
+    val vecs = Map(0L -> Array(1f, 0f, 0f), 1L -> Array(0.9f, 0.1f, 0.3f),
+      2L -> Array(0.2f, 1f, 0f), 3L -> Array(nan, 1f, 0f), 4L -> Array(0f, 0f, 0f),
+      5L -> Array(-0.0f, 0.5f, 1f), 6L -> Array(-0.0f, -0.0f, 0.7f))
+    val ids = vecs.keys.toSeq.sorted
+    // a level-0 clique, and a level-1 clique over {0, 3, 5}
+    val adj: Map[(Long, Int), Seq[Long]] =
+      ids.map(i => (i, 0) -> ids.filter(_ != i)).toMap ++
+        Seq(0L, 3L, 5L).map(i => (i, 1) -> Seq(0L, 3L, 5L).filter(_ != i))
+    val adjOf = (key: (Long, Int)) => adj.getOrElse(key, Seq.empty)
+    val q = Array(1f, 0.5f, 0.25f)
+    for (entry <- Seq((0L, 1), (3L, 1), (5L, 1), (4L, 0), (6L, 0)); k <- Seq(3, 7)) {
+      val (got, gotCalls) = walked(vecs)(hnsw.serveQuery(adjOf, _, entry, q, k))
+      val (want, wantCalls) = walked(vecs)(HnswMapWalk.serveQuery(adjOf, _, entry, q, k, hnsw.ef))
+      assert(got == want, s"entry $entry, k $k")
+      assert(gotCalls.size == wantCalls.size && gotCalls.distinct == gotCalls, s"entry $entry, k $k")
+    }
+    // the NaN-scored vector is a candidate, ranked last; the zero-norm one scores 0.0
+    val all = hnsw.serveQuery(adj, vecs, (0L, 1), q, 7)
+    assert(all.map(_._1).toSet == ids.toSet)
+    assert(all.last._1 == 3L && all.last._2.isNaN)
+    assert(all.find(_._1 == 4L).get._2 == 0.0)
+    // a NaN distance is expanded before any number, as Double.compare
+    // orders the negated distances: 3 leads to 5, 1 to 6, and ef leaves
+    // room for one of them
+    val chain = Map((0L, 0) -> Seq(1L, 3L), (1L, 0) -> Seq(6L), (3L, 0) -> Seq(5L))
+    val chainOf = (key: (Long, Int)) => chain.getOrElse(key, Seq.empty)
+    val narrow = new Hnsw(m = 4, ef = 4)
+    val (got, _) = walked(vecs)(narrow.serveQuery(chainOf, _, (0L, 0), q, 4))
+    val (want, _) = walked(vecs)(HnswMapWalk.serveQuery(chainOf, _, (0L, 0), q, 4, narrow.ef))
+    assert(got == want)
+    assert(got.map(_._1).toSet == Set(0L, 1L, 3L, 5L))
+  }
+
+  test("hnsw: among equal distances the walk expands the smaller id first") {
+    // 1 and 2 hold the same vector; 1 leads to 3 and 2 to 4, and ef
+    // leaves room for one of them
+    val hnsw = new Hnsw(m = 4, ef = 4)
+    val vecs = Map(0L -> Array(1f, 0f), 1L -> Array(0.6f, 0.8f), 2L -> Array(0.6f, 0.8f),
+      3L -> Array(0f, 1f), 4L -> Array(0.1f, 1f))
+    val q = Array(1f, 0.1f)
+    for (firstList <- Seq(Seq(2L, 1L), Seq(1L, 2L))) {
+      val adj = Map((0L, 0) -> firstList, (1L, 0) -> Seq(3L), (2L, 0) -> Seq(4L))
+      val top = hnsw.serveQuery(adj, vecs, (0L, 0), q, 10)
+      assert(top.map(_._1).toSet == Set(0L, 1L, 2L, 3L), s"neighbours of 0 in order $firstList")
+      // and equal scores rank the smaller id first
+      assert(top.map(_._1).take(3) == Seq(0L, 1L, 2L))
+    }
   }
 
   test("hnsw: serve is candidate-scoped — O(ef) point reads, never a corpus collect") {

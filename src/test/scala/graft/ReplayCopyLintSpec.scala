@@ -83,6 +83,25 @@ class ReplayCopyLintSpec extends AnyFunSuite {
     assert(count("list_min(list_transform(sh", "list_min(list_transform(shh") == 0)
   }
 
+  /** "file:line" of each `UnsafeArrayData.fromPrimitiveArray` outside
+    * the file that defines `object VectorKernels`. */
+  private def primitiveWraps(files: Seq[(String, String)]): Seq[String] =
+    files.filterNot(_._2.contains("object VectorKernels")).flatMap { case (name, text) =>
+      text.split("\n", -1).zipWithIndex.collect {
+        case (l, i) if l.contains("UnsafeArrayData.fromPrimitiveArray") => s"$name:${i + 1}"
+      }
+    }
+
+  test("driver code reaches the vector kernels only through their raw-array entries") {
+    // a driver caller that wraps its arrays pays a copy per scored vector
+    // and reads it back through ArrayData; VectorKernels takes the
+    // arrays in place
+    val found = primitiveWraps(sources)
+    assert(found.isEmpty, s"UnsafeArrayData.fromPrimitiveArray outside VectorKernels:\n${found.mkString("\n")}")
+    val wrap = "val qa = UnsafeArrayData.fromPrimitiveArray(q)"
+    assert(primitiveWraps(Seq("a" -> s"x\n  $wrap", "b" -> s"object VectorKernels {\n$wrap")) == Seq("a:2"))
+  }
+
   test("src/main repeats no more 6-line windows than the ratchet allows") {
     val (n, where) = repeats(sources)
     assert(n <= MaxRepeatedLines,

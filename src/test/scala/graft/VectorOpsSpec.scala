@@ -60,6 +60,12 @@ class VectorOpsSpec extends SparkSpec {
     assert(normed("zeroe1") === 0.0) // unchanged zero vector
   }
 
+  test("int8Quantize: an all-zero vector quantizes to +0.0 components") {
+    val q = pairs.filter($"name" === "zeroe1")
+      .select(VectorOps.int8Quantize($"a")).collect()(0).getSeq[Double](0)
+    assert(q.map(java.lang.Double.doubleToRawLongBits) === Seq.fill(3)(0L), s"got $q")
+  }
+
   test("dot: small·small = 14") {
     val m = evalMap(VectorOps.dot($"a", $"b"))
     assert(m("smallsmall") === 14.0)
